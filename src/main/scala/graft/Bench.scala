@@ -246,11 +246,15 @@ object Bench {
     // still schedules `cpus` tasks — the measured cause of the r16
     // scaling block's ratio<0.5 rows (events_rfm 0.45, version_compact
     // 0.46, text_unigram 0.48: 32 cores SLOWER than 8 on sub-MB
-    // shuffles). Advisory size is env-tunable because it is
-    // scale-dependent: 16m keeps compute-dense-but-small exchanges on
-    // a few tasks locally; a 100-TB deployment raises it to the guide's
-    // 256m (and gets the same bytes-first behavior). Measured A/B on
-    // the full suite in OPTIMIZATION_r17.md before adoption.
+    // shuffles). The advisory size defaults to 1m: it still coalesces
+    // the sub-MB exchanges of those rows onto 1-2 tasks, while a
+    // 30-60 MB compute-dense shuffle keeps ~32. A 16m advisory was
+    // tried first and rejected: bytes understate the compute of
+    // dedup_contain_10x's join (its pairs explode after the exchange),
+    // so 16m packed it onto ~2 tasks and the row went from 8.7 to
+    // 35.8 s (OPTIMIZATION_r17.md, "AQE advisory retune"). The size is
+    // env-tunable because it scales with data: a 100-TB deployment
+    // raises it toward the guide's 256m.
     val aqeAdvisory = sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "1m")
     val aqeParallelismFirst =
       sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false")

@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-time streaming operators over an `events`-shaped stream
@@ -325,11 +326,15 @@ object StreamingAnalytics {
   private[graft] val ChecksumConfKey =
     "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 
+  private[graft] val NoDataBatchesConfKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
   /** Run `body` (which must start AND stop its streaming query) with
-    * `spark.sql.shuffle.partitions` scoped down for spooled state sizing
-    * (and, when configured, the state-store provider applied, checkpoint
-    * checksums disabled — see [[checkpointChecksum]]); restores the
-    * prior values however the body exits. */
+    * `spark.sql.shuffle.partitions` scoped down for spooled state sizing,
+    * no-data micro-batches pinned on (the collapsed flush's eviction
+    * batch, see [[sessionizeSpooled]]) and, when configured, the
+    * state-store provider applied and checkpoint checksums disabled — see
+    * [[checkpointChecksum]]; restores the prior values however the body
+    * exits. */
   private def withSpoolPartitions[T](s: SparkSession)(body: => T): T = {
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val clogKey =
@@ -338,6 +343,7 @@ object StreamingAnalytics {
     val prevProv = s.conf.getOption(provKey)
     val prevClog = s.conf.getOption(clogKey)
     val prevCksum = s.conf.getOption(ChecksumConfKey)
+    val prevNoData = s.conf.getOption(NoDataBatchesConfKey)
     // captured ONCE: the defs read sys.props/env, and a test mutating
     // graft.stateStore while body runs must not make the finally block
     // skip or mis-restore the session conf
@@ -345,11 +351,13 @@ object StreamingAnalytics {
     val clog = changelogCheckpointing && prov.exists(_.contains("RocksDB"))
     val cksum = checkpointChecksum
     s.conf.set("spark.sql.shuffle.partitions", SpoolStatePartitions)
+    s.conf.set(NoDataBatchesConfKey, "true")
     prov.foreach(s.conf.set(provKey, _))
     if (clog) s.conf.set(clogKey, "true")
     if (!cksum) s.conf.set(ChecksumConfKey, "false")
     try body finally {
       s.conf.set("spark.sql.shuffle.partitions", prev)
+      prevNoData.fold(s.conf.unset(NoDataBatchesConfKey))(s.conf.set(NoDataBatchesConfKey, _))
       if (prov.isDefined)
         prevProv.fold(s.conf.unset(provKey))(s.conf.set(provKey, _))
       if (clog)
@@ -357,6 +365,29 @@ object StreamingAnalytics {
       if (!cksum)
         prevCksum.fold(s.conf.unset(ChecksumConfKey))(s.conf.set(ChecksumConfKey, _))
     }
+  }
+
+  /** [[withSpoolPartitions]] for a collapsed-flush runner
+    * ([[sessionizeSpooled]]'s protocol note), after checking the other
+    * assumption that protocol rests on: `stream`'s file source has no
+    * per-trigger limit, so the corpus and both sentinels land in batch 0. */
+  private def withCollapsedFlush[T](s: SparkSession, stream: Dataset[_])(body: => T): T = {
+    requireSingleBatchSource(stream)
+    withSpoolPartitions(s)(body)
+  }
+
+  /** Fails when a file source under `stream` caps what one micro-batch
+    * reads (`maxFilesPerTrigger` / `maxBytesPerTrigger`): a collapsed
+    * flush would then split the spool across batches, and rows arriving
+    * after the sentinels' watermark would be dropped as late. */
+  private[graft] def requireSingleBatchSource(stream: Dataset[_]): Unit = {
+    val limits = stream.queryExecution.logical.collect {
+      case r: StreamingRelation =>
+        r.dataSource.options.keys.filter(k =>
+          k.equalsIgnoreCase("maxFilesPerTrigger") || k.equalsIgnoreCase("maxBytesPerTrigger"))
+    }.flatten
+    require(limits.isEmpty,
+      s"collapsed flush needs every spooled file in batch 0, but the source sets ${limits.mkString(", ")}")
   }
 
   /** The first ORACLE-CHECKED streaming query: spool the bounded `events`
@@ -425,7 +456,7 @@ object StreamingAnalytics {
     // collapsed flush (see scaladoc): sentinels on disk before start
     val step = (gapMs + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = sessionize(stream, gapMs, lateness)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -487,7 +518,7 @@ object StreamingAnalytics {
     // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
     val step = (gapMs + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = stream
         .withWatermark("ts", lateness)
         .groupBy(col("user_id"),
@@ -551,7 +582,7 @@ object StreamingAnalytics {
     // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
     val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = windowedEventStats(stream, windowLen, lateness)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -629,7 +660,7 @@ object StreamingAnalytics {
     // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
     val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val agg = stream
         .withWatermark("ts", lateness)
         .groupBy(window(col("ts"), windowLen), col("event_type"))
@@ -701,6 +732,7 @@ object StreamingAnalytics {
     def startQuery() = {
       val stream = s.readStream.schema(schema).parquet(spool)
         .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      requireSingleBatchSource(stream)
       windowedEventStats(stream, windowLen, lateness)
         .select(unix_millis(col("window_start")).as("window_start_ms"),
           col("event_type"), col("n"))
@@ -790,7 +822,7 @@ object StreamingAnalytics {
     // that (output equality measured old-vs-new at sf0.1, r17).
     val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = trendingEventTypes(stream, windowLen, lateness)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -858,7 +890,7 @@ object StreamingAnalytics {
     // chained dedup→count pair finalizes per the trendingSpooled note
     val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = windowedDistinctUsers(stream, windowLen, lateness)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -927,7 +959,7 @@ object StreamingAnalytics {
     // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
     val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = windowedApproxDistinctUsers(stream, windowLen, lateness, rsd)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -999,7 +1031,7 @@ object StreamingAnalytics {
     // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
     val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = hoppingEventStats(stream, windowLen, slide, lateness)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -1070,7 +1102,7 @@ object StreamingAnalytics {
     // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
     val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val agg = anomalyWindowCounts(stream, windowLen, lateness)
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -1153,7 +1185,7 @@ object StreamingAnalytics {
     // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
     val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = enrichedSegmentStats(stream, dim, windowLen, lateness)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -1247,7 +1279,7 @@ object StreamingAnalytics {
     // under the staged protocol (each sentinel write always carried
     // both rows in one batch) and the imp_key >= 0 filter drops it
     sentinels(maxTsNanos + horizonNanos, maxTsNanos + 2 * horizonNanos)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = clickAttribution(imp, clk, joinWindow, lateness)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -1582,7 +1614,7 @@ object StreamingAnalytics {
     val name = s"graft_upsert_$runId"
     // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
     sentinels(maxTsNanos + stepNanos, maxTsNanos + 2 * stepNanos)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = upsertStream(stream, lateness, settle)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -1702,7 +1734,7 @@ object StreamingAnalytics {
     // corpus still arrives in ONE batch, so the intra-batch
     // (ts_us, event_id) sort keeps the batch-fold equivalence
     sentinels(maxTsNanos + stepNanos, maxTsNanos + 2 * stepNanos)
-    withSpoolPartitions(s) {
+    withCollapsedFlush(s, stream) {
       val q = funnelStream(stream, steps, lateness, settle)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()

@@ -11,7 +11,10 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Instance-level JSON type probe for Draft-4 validation.
+/** Instance-level JSON type probe for Draft-4 validation, used by the
+  * Column-tree reference spelling of the validator
+  * (`graft.validate.ReferenceConstraints`); the shipped kernel reads the
+  * same token kinds during its single walk of the record.
   *
   * `from_json` COERCES mismatched tokens into declared-string fields (the
   * number 123 parses into a string slot as "123", objects render to their

@@ -171,32 +171,6 @@ class KernelPropertySpec extends SparkSpec {
     }
   }
 
-  test("JsonCellIsString: string/non-string/absent over generated records") {
-    import spark.implicits._
-    def probe(json: String, path: Seq[String]): Option[Boolean] = {
-      val r = Seq(Tuple1(json)).toDF("j")
-        .select(JsonCellIsString.jsonCellIsString(col("j"), path).as("r"))
-        .collect().head
-      if (r.isNullAt(0)) None else Some(r.getBoolean(0))
-    }
-    // scalar value rendered into JSON + its expected string-ness
-    val valueGen: Gen[(String, Boolean)] = Gen.oneOf(
-      Gen.chooseNum(-100000L, 100000L).map(n => (n.toString, false)),
-      Gen.chooseNum(-1e6, 1e6).map(d => (d.toString, false)),
-      Gen.oneOf("true", "false", "null").map(v => (v, false)),
-      Gen.alphaNumStr.map(s => (s"\"$s\"", true)),
-      // digit-only STRING — the case from_json/get_json_object can't tell
-      Gen.chooseNum(0L, 999L).map(n => (s"\"$n\"", true)),
-      Gen.const(("{\"x\": 1}", false)),
-      Gen.const(("[1, 2]", false)))
-    forAll(valueGen) { case (v, isStr) =>
-      assert(probe(s"""{"a": {"b": $v}, "c": 1}""", Seq("a", "b")).contains(isStr))
-      assert(probe(s"""{"other": $v}""", Seq("a", "b")).isEmpty)    // absent
-      assert(probe(s"""{"a": 5}""", Seq("a", "b")).isEmpty)         // non-object parent
-      assert(probe("not json at all", Seq("a", "b")).isEmpty)       // invalid
-    }
-  }
-
   test("SortedJaccard: exact value for passing pairs, rejection-equivalent otherwise") {
     import org.apache.spark.sql.Column
     val tGen = Gen.oneOf(0.3, 0.5, 0.85, 0.9)

@@ -334,6 +334,42 @@ class StreamingAnalyticsSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
+  test("collapsed flush pins no-data micro-batches on, then restores the session's value") {
+    // with no-data batches off, nothing would run the eviction batch after
+    // batch 0 and every session would stay open in state
+    import org.apache.spark.sql.functions.col
+    val sf = "/root/testdata/sf0.001"
+    val gapMs = 30 * 60 * 1000L
+    spark.conf.set(NoDataBatchesConfKey, "false")
+    try {
+      val got = sessionizeSpooled(spark, sf, gapMs).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(spark.conf.get(NoDataBatchesConfKey) == "false")
+      val evs = graft.operators.Tables.events(spark, sf)
+        .select(col("user_id"), col("ts"), col("event_type"))
+        .collect().map(r => SessionEvent(r.getLong(0), r.getTimestamp(1), r.getString(2)))
+      val expected = sessionizeBatch(evs.toSeq, gapMs)
+        .map(o => (o.user_id, o.session_start.getTime, o.session_end.getTime, o.n_events))
+      assert(got.size == expected.size)
+      assert(got == expected)
+    } finally spark.conf.unset(NoDataBatchesConfKey)
+  }
+
+  test("collapsed flush rejects a file source with a per-trigger limit") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("graft-flush-guard").toString
+    val schema = StructType(Seq(StructField("ts", LongType)))
+    requireSingleBatchSource(spark.readStream.schema(schema).parquet(dir))
+    for (opt <- Seq("maxFilesPerTrigger", "maxBytesPerTrigger")) {
+      val limited = spark.readStream.schema(schema).option(opt, 1).parquet(dir)
+        .withColumn("ts", col("ts") + 1)
+      val e = intercept[IllegalArgumentException](requireSingleBatchSource(limited))
+      assert(e.getMessage.contains(opt))
+    }
+    new java.io.File(dir).delete()
+  }
+
   test("native session_window stream is bit-identical to the custom stateful stream (sf0.001)") {
     val sf = "/root/testdata/sf0.001"
     val custom = sessionizeSpooled(spark, sf).collect()

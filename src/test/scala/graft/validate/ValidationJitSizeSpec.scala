@@ -1,0 +1,116 @@
+package graft.validate
+
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import graft.SparkSpec
+import graft.model.Singer
+import graft.schema.JsonSchemaConverter
+import graft.validate.Constraints.CompiledConstraints
+
+/** HotSpot does not JIT-compile a method of more than 8,000 bytes of
+  * bytecode (`-XX:-DontCompileHugeMethods` is off by default), so a
+  * validation plan whose generated code holds such a method validates
+  * every record in the bytecode interpreter. This spec compiles the
+  * whole-stage code of the strict-mode validation plan for wide schemas
+  * and bounds the largest generated method. */
+class ValidationJitSizeSpec extends SparkSpec {
+
+  private val HugeMethodLimit = 8000
+
+  private def nullable(t: String, kw: String = ""): String =
+    s"""{"type": ["null", "$t"]${if (kw.isEmpty) "" else ", " + kw}}"""
+
+  /** The benchmark's customers stream (v2): 25 leaves, `required`,
+    * patterns, an enum, bounds and multipleOf. */
+  private val customers: String = {
+    val props = Seq(
+      "c_custkey" -> """{"type": "integer"}""",
+      "c_name" -> nullable("string", """"maxLength": 32"""),
+      "c_nationkey" -> nullable("integer", """"minimum": 0"""),
+      "c_acctbal" -> nullable("number"),
+      "c_mktsegment" -> nullable("string"),
+      "c_phone" -> nullable("string", """"pattern": "^[0-9-]+$""""),
+      "c_email" -> nullable("string", """"maxLength": 64"""),
+      "c_address" -> nullable("string"),
+      "c_city" -> nullable("string"),
+      "c_postal" -> nullable("string", """"pattern": "^[0-9]{5}$""""),
+      "c_signup" -> nullable("string", """"format": "date-time""""),
+      "c_tier" -> nullable("string", """"enum": ["bronze", "silver", "gold", "platinum"]"""),
+      "c_credit_limit" -> nullable("number", """"minimum": 0"""),
+      "c_active" -> nullable("boolean"),
+      "c_n_orders" -> nullable("integer", """"minimum": 0"""),
+      "c_last_order" -> nullable("string", """"format": "date-time""""),
+      "c_channel" -> nullable("string"),
+      "c_opt_in" -> nullable("boolean"),
+      "c_region" -> nullable("integer"),
+      "c_balance_bucket" -> nullable("integer", """"multipleOf": 100"""),
+      "c_comment" -> nullable("string", """"maxLength": 80"""),
+      "c_score" -> nullable("number"),
+      "c_birth_year" -> nullable("integer", """"minimum": 1900, "maximum": 2010"""),
+      "c_language" -> nullable("string"),
+      "c_loyalty_points" -> nullable("integer", """"minimum": 0"""))
+    props.map { case (k, v) => s""""$k": $v""" }
+      .mkString("""{"type": "object", "required": ["c_custkey"], "properties": {""", ", ", "}}")
+  }
+
+  /** 40 leaves over two nesting levels, every keyword on every leaf of
+    * its kind, `required` at each level. */
+  private val everyKeyword: String = {
+    def leaves(prefix: String): Seq[String] = (0 until 10).flatMap { i =>
+      Seq(
+        s""""${prefix}i$i": ${nullable("integer", """"minimum": 0, "maximum": 100, "exclusiveMaximum": true, "multipleOf": 3, "enum": [3, 6, 9]""")}""",
+        s""""${prefix}n$i": ${nullable("number", """"minimum": -1.5, "maximum": 1000.25, "multipleOf": 0.01""")}""",
+        s""""${prefix}s$i": ${nullable("string", """"minLength": 1, "maxLength": 8, "pattern": "^[a-z]+$", "enum": ["red", "green"]""")}""")
+    }.take(20)
+    val inner = leaves("in_").mkString(", ")
+    s"""{"type": "object", "required": ["i0", "nested"], "properties": {${leaves("").mkString(", ")},
+       | "nested": {"type": ["null", "object"], "required": ["in_i0"], "properties": {$inner}}}}"""
+      .stripMargin.replace("\n", " ")
+  }
+
+  /** The largest method, in bytes of bytecode, of the whole-stage code
+    * of validateOrThrow's plan for `schemaJson`, validated by `v`.
+    *
+    * `from_json` is a CodegenFallback expression, and an operator that
+    * evaluates one never joins a whole-stage stage: the Column spelling
+    * parsed in a projection of its own (it reads the struct many times)
+    * and compiled its `coalesce` in the stage above it, the kernel's
+    * single read lets the optimizer fold the parse into a filter that
+    * Spark compiles as a standalone predicate. So the plan here starts
+    * from an already-parsed struct column, and the validation expression
+    * is compiled the way it was in production at its largest: inlined
+    * into one whole-stage method. */
+  private def maxMethodBytes(schemaJson: String,
+                             v: (CompiledConstraints, Column, Column) => Column): Int = {
+    val node = Singer.parseJson(schemaJson)
+    val st = JsonSchemaConverter.toStructType(node)
+    val parsed = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row("{}", null)), 1),
+      StructType(Seq(StructField("rec", StringType), StructField("r", st))))
+    val plan = parsed
+      .select(v(Constraints.compile(node), col("r"), col("rec")).as("v"))
+      .filter(col("v").isNotNull).limit(1)
+      .queryExecution.executedPlan
+    val stages = plan.collect { case w: WholeStageCodegenExec => w }
+    assert(stages.exists(_.find(_.expressions.exists(_.exists(e =>
+      e.isInstanceOf[ValidateRecord] || e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Coalesce]))).isDefined),
+      s"validation is not whole-stage compiled in\n$plan")
+    stages.map(w => CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize).max
+  }
+
+  for ((name, schema) <- Seq("customers (25 leaves)" -> customers, "40 leaves, every keyword" -> everyKeyword)) {
+    test(s"validation plan for $name: every generated method is JIT-compilable") {
+      val bytes = maxMethodBytes(schema, Constraints.violation)
+      info(s"largest generated method: $bytes bytes")
+      assert(bytes < HugeMethodLimit, s"largest generated method is $bytes bytes")
+    }
+  }
+
+  test("the measurement sees the limit: the Column-tree spelling exceeds it") {
+    val bytes = maxMethodBytes(customers, ReferenceConstraints.violation)
+    info(s"largest generated method: $bytes bytes")
+    assert(bytes > HugeMethodLimit, s"largest generated method is $bytes bytes")
+  }
+}
