@@ -1,0 +1,254 @@
+package graft.pipeline
+
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import scala.util.Try
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.types.StructType
+import graft.model._
+import graft.schema.JsonSchemaConverter
+import graft.functions.FlattenColumns
+import graft.validate.Constraints
+
+/** The ingest core both delivery shapes run: [[SingerPipeline.run]] once
+  * over a whole input, [[graft.streaming.StreamingIngest]] once per
+  * micro-batch.
+  *  1. [[envelope]] tags every line with `idx` (its place in file order),
+  *     `mtype` and `stream`. The full record payload is not parsed here.
+  *  2. [[controlPlane]] answers every driver-side question with ONE
+  *     grouped aggregate whose output is O(streams + control messages):
+  *     the first unparseable line (P1), the unknown-type count (L6), the
+  *     SCHEMA/STATE messages in file order, and each stream's RECORD
+  *     extent for the order check (P4) and the state fold (P8). RECORD
+  *     lines never reach the driver.
+  *  3. [[writeEpochs]] validates every (stream, schema epoch)
+  *     concurrently, and writes only when all of them passed:
+  *     concurrently across streams, in order within one.
+  */
+object IngestCore {
+
+  /** Max unknown-type payloads echoed to stderr (the reference warns per
+    * message, __init__.py:246-251; the echo here is capped). */
+  val unknownSampleN = 5
+
+  /** A stream's RECORD lines: first and last `idx`, and how many. */
+  final case class Extent(minIdx: Long, maxIdx: Long, n: Long)
+
+  /** SCHEMA/STATE messages in `idx` order, each with its raw line, and
+    * the extent of every stream that has records. */
+  final case class ControlPlane(control: Seq[(String, ControlMessage)],
+                                extents: Map[String, Extent]) {
+    def schemas: Seq[(String, SchemaMessage)] =
+      control.collect { case (raw, m: SchemaMessage) => (raw, m) }
+    def states: Seq[StateMessage] = control.collect { case (_, m: StateMessage) => m }
+    def maxRecordIdx: Option[Long] = extents.values.map(_.maxIdx).maxOption
+  }
+
+  /** One schema's slice of a stream: its records with from < idx < until.
+    * Schema registration is positional, as in the reference, which
+    * replaces a stream's validator on every SCHEMA (__init__.py:239-245). */
+  final case class Epoch(stream: String, schema: SchemaMessage, from: Long, until: Long)
+
+  /** A file scan's lines with the hidden columns [[envelope]] orders by. */
+  def fileLines(scan: DataFrame): DataFrame = scan.select(col("value"),
+    col("_metadata.file_path").as("file"), col("_metadata.file_block_start").as("block"))
+
+  /** `idx`, `value`, `mtype`, `stream` for each line of `lines`.
+    *
+    * `idx` follows (file path, offset) order. monotonically_increasing_id
+    * alone follows it only while partition order does: true for a serial
+    * source and for one file's splits, but Spark packs the splits of
+    * several files largest first. A multi-split scan (its `file`/`block`
+    * columns from [[fileLines]]) therefore gets (the split's rank in
+    * (path, start) order) << 33 | the row's number in its partition; a
+    * split never spans partitions, so the low bits keep its line order.
+    * The split list comes from the scan's lineage (no job); the rank map
+    * ships with the tasks, one entry per split.
+    *
+    * `idx` is projected on the scan partitions. The lines then fan out to
+    * `defaultParallelism` when the scan has fewer partitions: the work per
+    * line (from_json, validation, flatten, parquet encode) far outweighs
+    * the scan, and a tap's output is often one file, one split. Inputs
+    * with enough splits are never shuffled. */
+  def envelope(lines: DataFrame): DataFrame = {
+    val parallelism = lines.sparkSession.sparkContext.defaultParallelism
+    val (partitions, splits) = DatasetBridge.scanLayout(lines)
+    val rowId = monotonically_increasing_id()
+    val idx =
+      if (splits.size <= 1) rowId
+      else {
+        require(lines.columns.contains("file"), "a multi-file scan needs IngestCore.fileLines")
+        val rank = splits.sorted.zipWithIndex.map { case (s, i) => s -> i.toLong }.toMap
+        val splitRank = udf((path: String, start: Long) => rank((path, start)))
+        shiftleft(splitRank(col("file"), col("block")), 33)
+          .bitwiseOR(rowId.bitwiseAND(lit((1L << 33) - 1)))
+      }
+    val indexed = lines.select(col("value"), idx.as("idx"))
+    val fanned = if (partitions < parallelism) indexed.repartition(parallelism) else indexed
+    fanned.select(col("idx"), col("value"),
+      get_json_object(col("value"), "$.type").as("mtype"),
+      get_json_object(col("value"), "$.stream").as("stream"))
+  }
+
+  /** The one control-plane query over an [[envelope]]. Raises the
+    * reference's error for the first unparseable line by `idx` (a line
+    * without `$.type` is invalid JSON or not a Singer message), and
+    * echoes unknown-type messages. Control rows ride along as a
+    * conditional collect_list, which skips nulls, so RECORD groups
+    * collect nothing. */
+  def controlPlane(typed: DataFrame): ControlPlane = {
+    val groups = typed.groupBy("mtype", "stream")
+      .agg(min("idx"), max("idx"), count(lit(1)),
+        min_by(col("value"), when(col("mtype").isNull, col("idx"))),
+        collect_list(when(col("mtype").isin("SCHEMA", "STATE"),
+          struct(col("idx"), col("value")))))
+      .collect()
+    // row layout: (mtype, stream, minIdx, maxIdx, n, firstUnparseable, ctrl)
+    groups.filter(_.isNullAt(0)).minByOption(_.getLong(2)).foreach { r =>
+      throw new RuntimeException(Singer.unparseableError(r.getString(5)))
+    }
+    val nUnknown = groups.filterNot(r => Set("RECORD", "SCHEMA", "STATE")(r.getString(0)))
+      .map(_.getLong(4)).sum
+    if (nUnknown > 0) echoUnknown(typed, nUnknown)
+    ControlPlane(
+      groups.toSeq.flatMap(_.getSeq[Row](6))
+        .map(r => (r.getString(1), Singer.parseControl(r.getLong(0), r.getString(1))))
+        .sortBy(_._2.idx),
+      groups.filter(_.getString(0) == "RECORD")
+        .map(r => r.getString(1) -> Extent(r.getLong(2), r.getLong(3), r.getLong(4))).toMap)
+  }
+
+  /** Echo unknown-type payloads like the reference does per message, but
+    * only the first [[unknownSampleN]] in file order (a TakeOrdered
+    * limit): a tap emitting millions of ACTIVATE_VERSIONs costs one
+    * bounded scan, never driver memory. The total stays exact. */
+  private def echoUnknown(typed: DataFrame, total: Long): Unit = {
+    val samples = typed
+      .filter(col("mtype").isNotNull && !col("mtype").isin("RECORD", "SCHEMA", "STATE"))
+      .orderBy("idx").limit(unknownSampleN).select("mtype", "value").collect()
+    samples.foreach(r => Console.err.println(
+      s"[graft] warning: Unknown message type ${r.getString(0)} in message ${r.getString(1)}"))
+    if (total > samples.length)
+      Console.err.println(s"[graft] warning: $total unknown-type " +
+        s"message(s) total; first ${samples.length} shown")
+  }
+
+  /** The RECORD lines of an [[envelope]], payload still unparsed. */
+  def records(typed: DataFrame): DataFrame = typed.filter(col("mtype") === "RECORD")
+    .select(col("idx"), col("stream"),
+      get_json_object(col("value"), "$.record").as("rec"),
+      get_json_object(col("value"), "$.time_extracted").as("time_extracted"))
+
+  /** Every stream's epochs, in (stream name, schema position) order.
+    * `baseline` is each stream's schema from before this input (the
+    * streaming registry); it governs records up to the input's first
+    * SCHEMA for the stream. Order check (reference __init__.py:224-229):
+    * a record before its stream's first schema is an error. Epochs whose
+    * bounds miss the stream's extent hold no record and are dropped. */
+  def epochs(plane: ControlPlane, baseline: Map[String, SchemaMessage]): Seq[Epoch] = {
+    val inInput = plane.schemas.map(_._2).groupBy(_.stream)
+    plane.extents.toSeq.sortBy(e => Option(e._1)).flatMap { case (stream, ext) =>
+      val starts = baseline.get(stream).map(Long.MinValue -> _).toSeq ++
+        inInput.getOrElse(stream, Nil).map(m => m.idx -> m)
+      if (starts.isEmpty || ext.minIdx < starts.head._1)
+        throw new IllegalArgumentException(Singer.recordBeforeSchemaError(stream))
+      starts.zip(starts.drop(1).map(_._1) :+ Long.MaxValue).collect {
+        case ((from, sm), until) if from < ext.maxIdx && until > ext.minIdx =>
+          Epoch(stream, sm, from, until)
+      }
+    }
+  }
+
+  /** Where a stream's parquet goes: its own folder, or the reference's
+    * key naming (__init__.py:264-271). */
+  def outputPath(outputUri: String, config: TargetConfig, stream: String,
+                 timestamp: String): String =
+    if (config.streamsInSeparateFolder) s"$outputUri/$stream"
+    else s"$outputUri/${Naming.outputKey(config, stream, timestamp)}"
+
+  /** Validate every epoch, then write them all. Phase 1 runs each
+    * epoch's inference (when `infer_extra_fields`) and its validation,
+    * all concurrently. Validation parses with the declared schema, which
+    * holds every field a constraint names. Phase 2 starts only if every
+    * epoch passed, so a bad record anywhere writes nothing; of several
+    * failures the first in (stream, epoch) order is raised, inference
+    * before validation. Phase 2 writes streams concurrently, each
+    * stream's epochs in order: the first replaces earlier output when
+    * `overwrite`, the rest append their (possibly differently shaped)
+    * files alongside, which parquet readers merge by footer schema
+    * (§1.4). `inline_validation` validates inside the write instead: one
+    * pass less over the records, but a violation aborts mid-write and
+    * partial output can exist (the reference has the same hazard across
+    * its flushed batches, §3.2). */
+  def writeEpochs(spark: SparkSession, records: DataFrame, epochs: Seq[Epoch],
+                  config: TargetConfig, outputUri: String, timestamp: String,
+                  overwrite: Boolean): Unit = {
+    val slices = epochs.map(e => e -> records.filter(col("stream") === e.stream &&
+      col("idx") > e.from && col("idx") < e.until))
+    // Two tasks per epoch, inference then validation, both yielding the
+    // schema to write with; `.get` raises the first failure in that order.
+    val schemas = concurrently(spark, slices.flatMap { case (e, recs) =>
+      val declared = JsonSchemaConverter.toStructType(e.schema.schema, config.decimalForMultipleOf)
+      Seq(() => // Union-schema passthrough (§1.4): record-only fields survive.
+            if (!config.inferExtraFields) declared
+            else JsonSchemaConverter.mergeSchemas(declared,
+              JsonSchemaConverter.inferExtra(spark, recs, config.inferSampleRows)),
+          () => { validate(recs, e, declared, config); declared })
+    }).map(_.get).grouped(2).map(_.head).toSeq
+    val (codec, _) = config.compressionCodecAndExt
+    val ready = slices.zip(schemas)
+    concurrently(spark, epochs.map(_.stream).distinct.map(s => () =>
+      ready.filter(_._1._1.stream == s).zipWithIndex.foreach { case (((e, recs), schema), i) =>
+        var writer = flatten(recs, e, schema, config, timestamp).write
+          .mode(if (overwrite && i == 0) "overwrite" else "append").option("compression", codec)
+        if (config.fileSize > 0) writer = writer.option("maxRecordsPerFile", config.fileSize)
+        writer.parquet(outputPath(outputUri, config, s, timestamp))
+      })).foreach(_.get)
+  }
+
+  private def failure(e: Epoch) = s"Record validation failed for stream ${e.stream}: "
+
+  /** Two-pass strict validation of one epoch: raise its first violation. */
+  private def validate(recs: DataFrame, e: Epoch, declared: StructType,
+                       config: TargetConfig): Unit =
+    if (config.strictValidation && !config.inlineValidation)
+      Constraints.firstViolation(
+        recs.select(col("idx"), col("rec"), from_json(col("rec"), declared).as("r")),
+        Constraints.compile(e.schema.schema), col("r"), col("rec"))
+        .foreach(v => throw new IllegalArgumentException(failure(e) + v))
+
+  /** One epoch's records as the flat rows to write. */
+  private def flatten(recs: DataFrame, e: Epoch, schema: StructType,
+                      config: TargetConfig, timestamp: String): DataFrame = {
+    var parsed = recs.select(col("rec"), col("time_extracted"), from_json(col("rec"), schema).as("r"))
+    if (config.strictValidation && config.inlineValidation) {
+      val v = Constraints.violation(Constraints.compile(e.schema.schema), col("r"), col("rec"))
+      parsed = parsed.filter(when(v.isNotNull,
+        raise_error(concat(lit(failure(e)), v)).cast("boolean")).otherwise(lit(true)))
+    }
+    // L1 metadata columns (reference legacy __init__.py:85-88):
+    // _sdc_extracted_at from the envelope, _sdc_batched_at = batch time.
+    val metaCols: Seq[Column] =
+      if (config.addMetadataColumns)
+        Seq(col("time_extracted").as("_sdc_extracted_at"), lit(timestamp).as("_sdc_batched_at"))
+      else Seq.empty
+    parsed.select(FlattenColumns.columns(col("r"), schema) ++ metaCols: _*)
+  }
+
+  /** Run `tasks` concurrently and return their outcomes in task order.
+    * The pool lives for this call only, so threads never accumulate
+    * across micro-batches, and each task gets the caller's session and
+    * local properties as captured at its submission, so its jobs carry
+    * the caller's job group, streaming batch id and SQL execution. */
+  private def concurrently[T](spark: SparkSession, tasks: Seq[() => T]): Seq[Try[T]] = {
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(
+      tasks.size.min(spark.sparkContext.defaultParallelism).max(1), (r: Runnable) => {
+        val t = new Thread(r, "graft-ingest"); t.setDaemon(true); threads.add(t); t
+      })
+    try tasks.map(t => DatasetBridge.withThreadLocalCaptured(spark, pool)(Try(t())))
+      .map(_.get())
+    finally { pool.shutdownNow(); threads.forEach(_.join()) }
+  }
+}

@@ -1,28 +1,23 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 import graft.model._
-import graft.schema.JsonSchemaConverter
-import graft.functions.FlattenColumns
-import graft.validate.Constraints
 
 /** The engine's core: the reference's whole dataflow
   * (`stdin → parse → validate → flatten → partition-by-stream →
-  * micro-batch → parquet → S3`, SURVEY.md §0) re-expressed as one Spark
-  * batch job per stream.
+  * micro-batch → parquet → S3`, SURVEY.md §0) re-expressed as one
+  * [[IngestCore]] pass over the whole input: one control-plane
+  * aggregate, then every stream's schema epochs validated concurrently
+  * and written once all passed.
   *
   * Scale design (SURVEY.md §3.2 mapping):
   *  - RECORD lines never touch the driver: they flow scan → `from_json` →
-  *    constraint predicates → flatten select-list → parquet sink, all
-  *    codegen'd and partition-parallel. At 100 TB the input splits across
-  *    executors like any text scan.
+  *    validation kernel → flatten select-list → parquet sink, all
+  *    partition-parallel. At 100 TB the input splits across executors
+  *    like any text scan.
   *  - SCHEMA/STATE are control-plane (a handful of lines per run,
-  *    reference corpus has 13); only those are collected, preserving file
-  *    order via `monotonically_increasing_id` (monotone in file offset for
-  *    ordered text splits).
+  *    reference corpus has 13); only those are collected, in file order.
   *  - The order constraint (record-before-schema → error, reference
   *    __init__.py:224-229) and the state fold (P8) need only per-stream
   *    `min(idx)` / global `max(idx)` — O(1)-output aggregates.
@@ -34,13 +29,10 @@ import graft.validate.Constraints
   * Documented divergences from the reference (all SURVEY.md §7.4): actual
   * compression instead of rename-only (S9), no crash on missing prefix
   * (S8) or zero records (X4), one parquet directory per stream instead of
-  * many change-triggered small files (X2).
+  * many change-triggered small files (X2), and nothing written when any
+  * record is invalid (the reference has flushed earlier batches).
   */
 object SingerPipeline {
-
-  /** Max unknown-type payloads echoed to stderr (reference warns per
-    * message, __init__.py:246-251; the echo here is capped — see run). */
-  val unknownSampleN = 5
 
   final case class StreamOutput(stream: String, path: String, rows: Long)
   final case class IngestResult(
@@ -48,210 +40,32 @@ object SingerPipeline {
       outputs: Seq[StreamOutput],
       keyProperties: Map[String, Seq[String]])
 
-  /** Run the batch pipeline over a newline-delimited Singer message file
-    * (local path, hdfs:// or s3a://) writing one parquet dataset per
-    * stream under `outputUri`. */
+  /** Run the batch pipeline over newline-delimited Singer messages (a
+    * file or a directory of files read in name order; local path,
+    * hdfs:// or s3a://) writing one parquet dataset per stream under
+    * `outputUri`. */
   def run(spark: SparkSession,
           inputPath: String,
           outputUri: String,
           config: TargetConfig = TargetConfig(),
           clock: () => String = Naming.defaultTimestamp _): IngestResult = {
-    import spark.implicits._
-
-    val raw = spark.read.textFile(inputPath).toDF("value")
-      .withColumn("idx", monotonically_increasing_id())
-    // Compute-bound-expansion rule (the dedup_substr / Profiling
-    // precedent): downstream work per line (from_json of the record
-    // payload, constraint predicates, flatten, parquet encode) is far
-    // heavier than the text scan, so parallelism must track CORES, not
-    // input splits. A tap's output often arrives as ONE spooled file —
-    // one split — which would run the whole pipeline as a single task.
-    // idx is projected BELOW the exchange (on the ordered scan
-    // partitions), so its file-order monotonicity survives the
-    // round-robin; every consumer is order-independent given idx.
-    // When the input already has >= defaultParallelism splits (any real
-    // multi-file corpus — and any 100 TB one), this is a no-op: no
-    // shuffle of raw input bytes is ever added at scale.
-    val scanParts = raw.rdd.getNumPartitions
-    val lines =
-      if (scanParts < spark.sparkContext.defaultParallelism)
-        raw.repartition(spark.sparkContext.defaultParallelism)
-      else raw
-
-    // Envelope dispatch (P2) via codegen'd JSON path extraction — the full
-    // record payload is NOT parsed here.
-    val typed = lines.select(
-      col("idx"), col("value"),
-      get_json_object(col("value"), "$.type").as("mtype"),
-      get_json_object(col("value"), "$.stream").as("stream"))
-
-    // ONE pre-pass over all lines covers: the strict parse check (P1 — a
-    // line without $.type is invalid JSON / not a Singer message),
-    // unknown-type accounting (reference warns per unknown message,
-    // __init__.py:246-251), AND the per-stream record extents used by the
-    // order check (P4) and state fold (P8). Output is O(streams), so the
-    // collect is control-plane-sized at any input scale.
-    // Control rows (SCHEMA/STATE) ride along as a conditional
-    // collect_list — collect_list skips nulls, so the RECORD groups
-    // collect nothing and the output stays O(streams + control messages).
-    val prepass = typed.groupBy("mtype", "stream")
-      .agg(min("idx").as("minIdx"), max("idx").as("maxIdx"),
-           count(lit(1)).as("n"),
-           min(when(col("mtype").isNull, col("value"))).as("sample"),
-           collect_list(when(col("mtype").isin("SCHEMA", "STATE"),
-             struct(col("idx"), col("value")))).as("ctrl"))
-      .collect()
-    // row layout: (mtype, stream, minIdx, maxIdx, n, sample, ctrl)
-    prepass.find(_.isNullAt(0)).foreach { r =>
-      throw new RuntimeException(Singer.unparseableError(r.getString(5)))
-    }
-    val nUnknown = prepass.filter(r => !r.isNullAt(0) &&
-      !Set("RECORD", "SCHEMA", "STATE").contains(r.getString(0))).map(_.getLong(4)).sum
-    if (nUnknown > 0) {
-      // Echo the payloads like the reference does per unknown message
-      // (__init__.py:246-251), but bounded: the first `unknownSampleN` in
-      // file order via a TakeOrdered limit — a rogue tap emitting millions
-      // of ACTIVATE_VERSIONs costs one bounded extra scan in this warning
-      // path, never driver memory. The aggregate count is always exact.
-      val samples = typed
-        .filter(col("mtype").isNotNull &&
-          !col("mtype").isin("RECORD", "SCHEMA", "STATE"))
-        .orderBy("idx").limit(SingerPipeline.unknownSampleN)
-        .select(col("mtype"), col("value")).collect()
-      samples.foreach(r => Console.err.println(
-        s"[graft] warning: Unknown message type ${r.getString(0)} " +
-          s"in message ${r.getString(1)}"))
-      if (nUnknown > samples.length)
-        Console.err.println(s"[graft] warning: $nUnknown unknown-type " +
-          s"message(s) total; first ${samples.length} shown")
-    }
-
-    // Control plane → driver, in file order.
-    val control = prepass.toSeq
-      .flatMap(_.getSeq[org.apache.spark.sql.Row](6))
-      .map(r => Singer.parseControl(r.getLong(0), r.getString(1)))
-      .sortBy(_.idx)
-
-    // Schema re-registration is POSITIONAL, matching the reference, which
-    // overwrites the stream's validator on every SCHEMA message
-    // (__init__.py:239-245) — that is how Singer taps do schema evolution.
-    // Records between two SCHEMA messages are shaped/validated by the
-    // earlier one; records after a re-emit by the new one. Each (schema,
-    // record-range) pair is an "epoch" written in its own pass below.
-    val schemasByStream: Map[String, Seq[SchemaMessage]] =
-      control.collect { case s: SchemaMessage => s }
-        .groupBy(_.stream).view.mapValues(_.sortBy(_.idx).toSeq).toMap
-    val states = control.collect { case s: StateMessage => s }.toSeq
-
-    val records = typed.filter(col("mtype") === "RECORD")
-      .select(col("idx"), col("stream"),
-              get_json_object(col("value"), "$.record").as("rec"),
-              get_json_object(col("value"), "$.time_extracted").as("time_extracted"))
-    // Persist the parsed records only when several streams will each
-    // filter the same scan. For the single-stream case, measured at
-    // sf0.1: caching costs more than the (cheap, codegen'd) text
-    // re-scans the extent/validate/write passes perform — so don't.
-    val multiStream = schemasByStream.size > 1 ||
-      schemasByStream.values.exists(_.size > 1)
-    if (multiStream) records.persist(StorageLevel.MEMORY_AND_DISK)
+    // The control-plane aggregate fills this cache with the run's one
+    // input scan; inference, validation and the writes then read it,
+    // concurrently, instead of each re-scanning the input.
+    val typed = IngestCore.envelope(IngestCore.fileLines(spark.read.text(inputPath)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // Per-stream record extents, already computed in the pre-pass.
-      val extents = prepass
-        .filter(r => !r.isNullAt(0) && r.getString(0) == "RECORD")
-        .map(r => r.getString(1) -> (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-
-      extents.foreach { case (stream, (minIdx, _, _)) =>
-        schemasByStream.get(stream) match {
-          case None => throw new IllegalArgumentException(Singer.recordBeforeSchemaError(stream))
-          case Some(sms) if minIdx < sms.head.idx =>
-            throw new IllegalArgumentException(Singer.recordBeforeSchemaError(stream))
-          case _ => ()
-        }
-      }
-
-      val maxRecordIdx = extents.values.map(_._2).maxOption
-      val emittedState = StateFold.emittedState(states, maxRecordIdx)
-        .map(Singer.toJsonString)
-
-      val (codec, ext) = config.compressionCodecAndExt
+      val plane = IngestCore.controlPlane(typed)
+      val epochs = IngestCore.epochs(plane, baseline = Map.empty)
       val timestamp = clock()
-
-      val outputs = schemasByStream.keys.toSeq.sorted.flatMap { stream =>
-        if (!extents.contains(stream)) None // zero-record stream: no file (fixes X4 crash)
-        else {
-          val sms = schemasByStream(stream)
-          // Epoch bounds: each schema governs records up to the next
-          // re-registration (positional last-wins, see above). The single-
-          // schema case is one epoch spanning everything — today's plan,
-          // unchanged.
-          val ends = sms.map(_.idx).drop(1) :+ Long.MaxValue
-          val path =
-            if (config.streamsInSeparateFolder) s"$outputUri/$stream"
-            else s"$outputUri/${Naming.outputKey(config, stream, timestamp)}"
-
-          sms.zip(ends).zipWithIndex.foreach { case ((sm, end), epoch) =>
-            val declared = JsonSchemaConverter.toStructType(sm.schema,
-              config.decimalForMultipleOf)
-            val streamRecs = records.filter(col("stream") === stream &&
-              col("idx") > sm.idx && col("idx") < end)
-
-            // Union-schema passthrough (§1.4): find record-only fields.
-            val schema: StructType =
-              if (config.inferExtraFields) {
-                val inferred = JsonSchemaConverter.inferExtra(spark, streamRecs,
-                  config.inferSampleRows)
-                JsonSchemaConverter.mergeSchemas(declared, inferred)
-              } else declared
-
-            var parsed = streamRecs.select(col("idx"), col("rec"), col("time_extracted"),
-              from_json(col("rec"), schema).as("r"))
-
-            if (config.strictValidation) {
-              val constraints = Constraints.compile(sm.schema)
-              if (config.inlineValidation) {
-                // Fused validation: the guard evaluates during the write
-                // scan itself — one less full pass over the records, the
-                // right trade at 100 TB. Cost: a violating record aborts
-                // MID-write, so partial output can exist (the reference has
-                // the same hazard across its already-flushed batches,
-                // §3.2); default stays the clean two-pass abort.
-                val v = Constraints.violation(constraints, col("r"), col("rec"))
-                parsed = parsed.filter(
-                  when(v.isNotNull, raise_error(concat(
-                    lit(s"Record validation failed for stream $stream: "), v))
-                    .cast("boolean"))
-                  .otherwise(lit(true)))
-              } else {
-                Constraints.validateOrThrow(parsed, constraints, col("r"), col("rec"), stream)
-              }
-            }
-
-            // L1 metadata columns (reference legacy __init__.py:85-88):
-            // _sdc_extracted_at from the envelope, _sdc_batched_at = batch time.
-            val metaCols: Seq[Column] =
-              if (config.addMetadataColumns)
-                Seq(col("time_extracted").as("_sdc_extracted_at"),
-                    lit(timestamp).as("_sdc_batched_at"))
-              else Seq.empty
-            val flat = parsed.select(
-              FlattenColumns.columns(col("r"), schema) ++ metaCols: _*)
-
-            // First epoch replaces any previous run's output; later epochs
-            // append their (possibly differently-shaped) files alongside —
-            // parquet readers merge by footer schema, same as the
-            // reference's per-batch inferred files (§1.4).
-            var writer = flat.write.mode(if (epoch == 0) "overwrite" else "append")
-              .option("compression", codec)
-            if (config.fileSize > 0) writer = writer.option("maxRecordsPerFile", config.fileSize)
-            writer.parquet(path)
-          }
-          Some(StreamOutput(stream, path, extents(stream)._3))
-        }
-      }
-
-      IngestResult(emittedState, outputs,
-        schemasByStream.view.mapValues(_.last.keyProperties).toMap)
-    } finally if (multiStream) { records.unpersist(); () }
+      IngestCore.writeEpochs(spark, IngestCore.records(typed), epochs, config, outputUri,
+        timestamp, overwrite = true)
+      IngestResult(
+        StateFold.emittedState(plane.states, plane.maxRecordIdx).map(Singer.toJsonString),
+        epochs.map(_.stream).distinct.map(s => StreamOutput(s,
+          IngestCore.outputPath(outputUri, config, s, timestamp), plane.extents(s).n)),
+        plane.schemas.map(_._2).groupBy(_.stream).view.mapValues(_.last.keyProperties).toMap)
+    } finally { typed.unpersist(); () }
   }
 
   /** State emission (S10, reference __init__.py:26-31): one JSON line to

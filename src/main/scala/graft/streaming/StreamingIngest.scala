@@ -2,19 +2,19 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model._
-import graft.schema.JsonSchemaConverter
-import graft.functions.FlattenColumns
-import graft.validate.Constraints
+import graft.pipeline.IngestCore
 
 /** Structured-Streaming variant of the Singer ingest (SURVEY.md §7.1 #7):
-  * `readStream.text(dir)` → `foreachBatch` running the same
-  * dispatch/validate/flatten core per micro-batch, appending per-stream
+  * `readStream.text(dir)` (or live stdin) → `foreachBatch` running the
+  * batch pipeline's [[IngestCore]] per micro-batch, appending per-stream
   * parquet and emitting the state bookmark after every committed batch —
   * the streaming analogue of the reference's unbounded stdin loop, with
-  * Spark's checkpointing replacing its ad-hoc resume bookkeeping.
+  * Spark's checkpointing replacing its ad-hoc resume bookkeeping. Per
+  * micro-batch: one checkpoint of the envelope, one control-plane
+  * aggregate, then every epoch validated concurrently and appended only
+  * once all of them passed, so a failing batch appends nothing.
   *
   * Cross-batch state (the schema registry and last bookmark) lives on the
   * driver, exactly like the reference's `schemas`/`state` dicts — SCHEMA
@@ -64,150 +64,52 @@ final class StreamingIngest(
     if (sawRecordAfterState) None else lastState.get()
 
   /** Process one micro-batch of raw Singer lines (also usable directly
-    * for testing without a streaming query). */
+    * for testing without a streaming query): the [[IngestCore]] pass of
+    * the batch pipeline, against the registry instead of an empty one.
+    * `lines` has a `value` column, and `file`/`block` from
+    * [[IngestCore.fileLines]] when it reads several files. */
   def processBatch(lines: DataFrame, batchId: Long): Unit = {
-    import lines.sparkSession.implicits._
-    // Arrival order is captured FIRST, on the batch's ORIGINAL
-    // partitioning (monotonically_increasing_id is nondeterministic, so
-    // Catalyst never moves it across the exchange below — idx semantics
-    // are bit-identical to the pre-r16 single-projection spelling for
-    // both the file-spool and live sources). THEN the batch fans out
-    // and materializes once: foreachBatch re-executes the source scan
-    // per downstream action, and the live pipe source is one serial
-    // partition by nature, so without this every control-plane collect
-    // and per-epoch write below re-parsed the whole batch
-    // single-threaded (measured 12 s/batch at sf0.1 on the live row —
-    // vs ~4 s for the whole spool pipeline; the "parallelism happens
-    // DOWNSTREAM" contract in StdinStreamSource's scaladoc is exactly
-    // this exchange).
-    val typed = lines
-      .select(col("value"), monotonically_increasing_id().as("idx"))
-      .repartition(lines.sparkSession.sparkContext.defaultParallelism)
-      .select(
-        col("value"),
-        col("idx"),
-        get_json_object(col("value"), "$.type").as("mtype"),
-        get_json_object(col("value"), "$.stream").as("stream"))
-      .localCheckpoint()
-
-    typed.filter(col("mtype").isNull).select("value").limit(1).collect()
-      .foreach(r => throw new RuntimeException(Singer.unparseableError(r.getString(0))))
-
-    val controlRaw = typed.filter(col("mtype").isin("SCHEMA", "STATE"))
-      .select("idx", "value").collect()
-      .map(r => (r.getString(1), Singer.parseControl(r.getLong(0), r.getString(1))))
-      .sortBy(_._2.idx)
-    val newSchemas = controlRaw.collect { case (raw, m: SchemaMessage) => (raw, m) }
-    val latestInBatch = newSchemas.groupBy(_._2.stream).view
-      .mapValues(_.maxBy(_._2.idx)).toMap
-    val baseline = schemas.get() // registry as of the previous batch
-    val inBatchByStream = newSchemas.map(_._2).groupBy(_.stream).view
-      .mapValues(_.sortBy(_.idx).toSeq).toMap
-    val states = controlRaw.collect { case (_, m: StateMessage) => m }
-
-    val records = typed.filter(col("mtype") === "RECORD")
-      .select(col("idx"), col("stream"),
-        get_json_object(col("value"), "$.record").as("rec"),
-        get_json_object(col("value"), "$.time_extracted").as("time_extracted"))
-
-    val present = records.select("stream").distinct().as[String].collect().sorted
-
-    // Epochs per stream: the registry schema (if any) governs records up
-    // to the batch's first in-batch SCHEMA; each in-batch SCHEMA governs
-    // from its own position to the next — same positional semantics as
-    // the batch pipeline.
-    def epochsFor(stream: String): Seq[(Long, SchemaMessage)] =
-      baseline.get(stream).map(m => (Long.MinValue, m)).toSeq ++
-        inBatchByStream.getOrElse(stream, Seq.empty).map(m => (m.idx, m))
-
-    // ALL order checks run BEFORE any schema is persisted or registered:
-    // a batch that fails the record-before-SCHEMA check must fail
-    // identically when the restarted query retries it — persisting first
-    // would make the protocol error vanish on the second attempt (the
-    // record would silently take the schema that arrived after it).
-    present.foreach { stream =>
-      val epochs = epochsFor(stream)
-      if (epochs.isEmpty)
-        throw new IllegalArgumentException(Singer.recordBeforeSchemaError(stream))
-      // In-batch order check (reference __init__.py:224-229): with no
-      // prior registration, a record preceding the batch's first SCHEMA
-      // is an error — same strictness as the batch path.
-      if (!baseline.contains(stream)) {
-        val minRec = records.filter(col("stream") === stream)
-          .agg(min("idx")).collect().head
-        if (!minRec.isNullAt(0) && minRec.getLong(0) < epochs.head._1)
-          throw new IllegalArgumentException(Singer.recordBeforeSchemaError(stream))
-      }
-    }
-
-    // Config parity with the batch path (SingerPipeline.run): the
-    // reference's naming (__init__.py:264-271), §1.4 extra-field
-    // passthrough, and L1 metadata columns apply to EVERY write, not just
-    // batch-mode ones. One timestamp per micro-batch — under the default
-    // naming each batch lands in its own timestamped key, the streaming
-    // analogue of the reference's one-file-per-batch output.
-    val timestamp = clock()
-    val (codec, _) = config.compressionCodecAndExt
-    present.foreach { stream =>
-      val epochs = epochsFor(stream)
-      val streamRecs = records.filter(col("stream") === stream)
-      val ends = epochs.map(_._1).drop(1) :+ Long.MaxValue
-      val path =
-        if (config.streamsInSeparateFolder) s"$outputUri/$stream"
-        else s"$outputUri/${Naming.outputKey(config, stream, timestamp)}"
-      epochs.zip(ends).foreach { case ((start, sm), end) =>
-        val declared = JsonSchemaConverter.toStructType(sm.schema,
-          config.decimalForMultipleOf)
-        val epochRecs = streamRecs.filter(col("idx") > start && col("idx") < end)
-        // Union-schema passthrough (§1.4), same as the batch path: record-
-        // only fields survive. Costs one inference pass per epoch per
-        // MICRO-BATCH — on the streaming hot path that is per-trigger
-        // read amplification; latency-sensitive deployments should set
-        // infer_extra_fields=false or bound it via infer_sample_rows.
-        val schema =
-          if (config.inferExtraFields) {
-            val inferred = JsonSchemaConverter.inferExtra(spark, epochRecs,
-              config.inferSampleRows)
-            JsonSchemaConverter.mergeSchemas(declared, inferred)
-          } else declared
-        val parsed = epochRecs
-          .select(col("rec"), col("time_extracted"), from_json(col("rec"), schema).as("r"))
-        if (config.strictValidation)
-          Constraints.validateOrThrow(parsed, Constraints.compile(sm.schema),
-            col("r"), col("rec"), stream)
-        // L1 metadata columns, mirroring SingerPipeline: extracted-at from
-        // the envelope, batched-at = this micro-batch's timestamp.
-        val metaCols: Seq[org.apache.spark.sql.Column] =
-          if (config.addMetadataColumns)
-            Seq(col("time_extracted").as("_sdc_extracted_at"),
-                lit(timestamp).as("_sdc_batched_at"))
-          else Seq.empty
-        var writer = parsed.select(FlattenColumns.columns(col("r"), schema) ++ metaCols: _*)
-          .write.mode("append")
-          .option("compression", codec)
-        if (config.fileSize > 0) writer = writer.option("maxRecordsPerFile", config.fileSize)
-        writer.parquet(path)
-      }
-    }
+    // The envelope (arrival order captured on the batch's ORIGINAL
+    // partitioning, then the fan-out exchange) materializes once:
+    // foreachBatch re-executes the source scan per downstream action, and
+    // the live pipe source is one serial partition by nature, so without
+    // this every control-plane collect and per-epoch write re-parsed the
+    // whole batch single-threaded (measured 12 s/batch at sf0.1 on the
+    // live row; the "parallelism happens DOWNSTREAM" contract in
+    // StdinStreamSource's scaladoc is exactly this exchange).
+    val typed = IngestCore.envelope(lines).localCheckpoint()
+    val plane = IngestCore.controlPlane(typed)
+    // The order check runs against the registry as of the previous batch,
+    // BEFORE any schema is persisted or registered: a batch that fails it
+    // must fail identically when the restarted query retries it.
+    val epochs = IngestCore.epochs(plane, schemas.get())
+    // One timestamp per micro-batch: under the default naming each batch
+    // lands in its own timestamped key, the streaming analogue of the
+    // reference's one-file-per-batch output. Config parity with the batch
+    // path: naming, §1.4 passthrough and L1 metadata apply here too.
+    // Passthrough costs one inference pass per epoch per MICRO-BATCH;
+    // latency-sensitive deployments should set infer_extra_fields=false
+    // or bound it via infer_sample_rows.
+    IngestCore.writeEpochs(spark, IngestCore.records(typed), epochs, config, outputUri,
+      clock(), overwrite = false)
 
     // Last-wins registration, matching the reference's overwrite-on-every-
     // SCHEMA (__init__.py:239-245): the registry (and its on-disk persist)
-    // holds the LATEST schema per stream. Registered only AFTER the write
-    // loop: a batch that fails mid-write is retried by the restarted query
+    // holds the LATEST schema per stream. Registered only AFTER the
+    // writes: a batch that fails is retried by the restarted query
     // against the SAME baseline, so pre-SCHEMA records re-parse under the
-    // schema that actually governed them (persisting first would reshape
-    // them under the batch's later schema on retry). Append-mode epoch
-    // files already written by the failed attempt can duplicate on retry —
-    // the trade the reference makes in the opposite direction (it LOSES
-    // everything since its last state on a crash).
-    latestInBatch.foreach { case (stream, (raw, _)) => persistSchema(raw, stream) }
-    schemas.updateAndGet(reg => reg ++ latestInBatch.map { case (k, (_, m)) => k -> m })
+    // schema that actually governed them. A batch that fails validation
+    // has written nothing; only a write that fails midway can leave
+    // append-mode files that the retry duplicates — the trade the
+    // reference makes in the opposite direction (it LOSES everything
+    // since its last state on a crash).
+    val latest = plane.schemas.groupBy(_._2.stream).view.mapValues(_.last).toMap
+    latest.foreach { case (stream, (raw, _)) => persistSchema(raw, stream) }
+    schemas.updateAndGet(reg => reg ++ latest.map { case (k, (_, m)) => k -> m })
 
     // P8 fold across the batch: any record after the batch's last STATE
     // nullifies; a batch with records and no trailing STATE nullifies too.
-    val maxRecIdx = records.agg(max("idx")).collect().head
-    val recIdx = if (maxRecIdx.isNullAt(0)) None else Some(maxRecIdx.getLong(0))
-    (states.lastOption, recIdx) match {
+    (plane.states.lastOption, plane.maxRecordIdx) match {
       case (Some(st), r) =>
         lastState.set(Some(Singer.toJsonString(st.value)))
         sawRecordAfterState = r.exists(_ > st.idx)
@@ -235,7 +137,7 @@ final class StreamingIngest(
   /** Start the streaming query over a directory of Singer message files. */
   def start(inputDir: String, checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startWithCkptConf(spark.readStream.text(inputDir).toDF("value")
+    startWithCkptConf(IngestCore.fileLines(spark.readStream.text(inputDir))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)

@@ -126,15 +126,12 @@ object Constraints {
     ColumnBridge.column(ValidateRecord(
       ColumnBridge.expression(root), ColumnBridge.expression(raw), cc))
 
-  /** Strict mode (reference behavior): abort the job on the first invalid
-    * record. Runs as one distributed scan; only a single violating row (if
-    * any) is ever collected to the driver. */
-  def validateOrThrow(df: DataFrame, cc: CompiledConstraints,
-                      root: Column, raw: Column, stream: String): Unit = {
-    val bad = df.select(violation(cc, root, raw).as("v"))
-      .filter(col("v").isNotNull).limit(1).collect()
-    if (bad.nonEmpty)
-      throw new IllegalArgumentException(
-        s"Record validation failed for stream $stream: ${bad.head.getString(0)}")
-  }
+  /** Strict mode (reference behavior): the violation of the lowest-`idx`
+    * record of `df`, the record the reference's line loop aborts at. One
+    * TakeOrderedAndProject job; at most one message reaches the driver. */
+  def firstViolation(df: DataFrame, cc: CompiledConstraints,
+                     root: Column, raw: Column): Option[String] =
+    df.select(col("idx"), violation(cc, root, raw).as("v"))
+      .filter(col("v").isNotNull).orderBy("idx").limit(1).select("v")
+      .collect().headOption.map(_.getString(0))
 }

@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
+import java.util.concurrent.{CompletableFuture, ExecutorService}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileScanRDD}
 
 /** Access bridge for constructing DataFrames from custom logical plans
   * (`Dataset.ofRows` is `private[sql]`) — the [[ColumnBridge]] sibling
@@ -27,4 +31,25 @@ object DatasetBridge {
   def sessionExpression(s: SparkSession, c: org.apache.spark.sql.Column)
   : org.apache.spark.sql.catalyst.expressions.Expression =
     s.asInstanceOf[CSparkSession].expression(c)
+
+  /** A DataFrame's partition count, and the file splits it scans as
+    * (`_metadata.file_path`, `_metadata.file_block_start`) pairs, read
+    * from the FileScanRDD in its lineage (none for a non-file source).
+    * Planning only, no job. */
+  def scanLayout(df: DataFrame): (Int, Seq[(String, Long)]) = {
+    val path = FileFormat.BASE_METADATA_EXTRACTORS(FileFormat.FILE_PATH)
+    def walk(rdd: RDD[_]): Seq[(String, Long)] = rdd match {
+      case f: FileScanRDD => f.filePartitions.flatMap(_.files.map(pf => (path(pf).toString, pf.start)))
+      case r => r.dependencies.flatMap(d => walk(d.rdd))
+    }
+    val rdd = df.asInstanceOf[CDataset[_]].queryExecution.toRdd
+    (rdd.getNumPartitions, walk(rdd))
+  }
+
+  /** Run `body` on `pool` with the caller's active session and
+    * SparkContext local properties (job group, streaming batch id, SQL
+    * execution id) captured now, at submission. */
+  def withThreadLocalCaptured[T](s: SparkSession, pool: ExecutorService)(body: => T)
+  : CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(s.asInstanceOf[CSparkSession], pool)(body)
 }

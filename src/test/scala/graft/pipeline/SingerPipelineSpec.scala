@@ -95,8 +95,8 @@ class SingerPipelineSpec extends SparkSpec {
     }
     val err = buf.toString("UTF-8")
     val echoed = err.linesIterator.count(_.contains("Unknown message type BOGUS_TYPE"))
-    assert(echoed == SingerPipeline.unknownSampleN)
-    assert(err.contains(s"8 unknown-type message(s) total; first ${SingerPipeline.unknownSampleN} shown"))
+    assert(echoed == IngestCore.unknownSampleN)
+    assert(err.contains(s"8 unknown-type message(s) total; first ${IngestCore.unknownSampleN} shown"))
     // the first-in-file-order sample, not an arbitrary subset
     assert(err.contains(""""n": 1"""))
   }
@@ -223,5 +223,71 @@ class SingerPipelineSpec extends SparkSpec {
       TargetConfig(streamsInSeparateFolder = true), clock = () => "T3")
     assert(res.outputs.map(_.path).toSet ==
       Set(s"$out/alpha", s"$out/beta", s"$out/gamma"))
+  }
+
+  test("the first bad line in file order is reported: violations and unparseable lines") {
+    // Every record violates maxLength with its own text; the reference
+    // aborts at the first, so the message must name record 1.
+    val violating = Seq(schemaMsg("alpha")) ++ (1 to 30).map(i =>
+      f"""{"type": "RECORD", "stream": "alpha", "record": {"pk": $i, "v_str": "too-long-value-number-$i%02d", "v_int": 1}}""")
+    val e = intercept[IllegalArgumentException] {
+      SingerPipeline.run(spark, writeCorpus(violating), outDir(), TargetConfig())
+    }
+    assert(e.getMessage.contains("too-long-value-number-01"), e.getMessage)
+    // The earlier unparseable line sorts after the later one.
+    val unparseable = Seq(schemaMsg("alpha"), "zzz not json", "aaa not json")
+    val u = intercept[RuntimeException] {
+      SingerPipeline.run(spark, writeCorpus(unparseable), outDir(), TargetConfig())
+    }
+    assert(u.getMessage == "Unable to parse:\nzzz not json")
+  }
+
+  test("an invalid record in any stream writes nothing: earlier output untouched") {
+    val out = outDir()
+    val valid = Seq(schemaMsg("alpha"), schemaMsg("beta"),
+      """{"type": "RECORD", "stream": "alpha", "record": {"pk": 1, "v_str": "a", "v_int": 1}}""",
+      """{"type": "RECORD", "stream": "beta", "record": {"pk": 1, "v_str": "b", "v_int": 1}}""")
+    SingerPipeline.run(spark, writeCorpus(valid), out, TargetConfig(), clock = () => "P")
+    def files(): Map[String, (Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(java.nio.file.Paths.get(out)).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString -> (Files.size(f), Files.getLastModifiedTime(f).toMillis)).toMap
+    }
+    val before = files()
+    assert(before.keys.exists(_.contains("alpha-P.parquet")))
+    // beta sorts after alpha: a sequential validate-then-write loop
+    // would already have replaced alpha's files when beta fails.
+    val invalid = valid :+
+      """{"type": "RECORD", "stream": "beta", "record": {"pk": 2, "v_str": "this string is far too long for maxLength", "v_int": 1}}"""
+    val e = intercept[IllegalArgumentException] {
+      SingerPipeline.run(spark, writeCorpus(invalid), out, TargetConfig(), clock = () => "P")
+    }
+    assert(e.getMessage.startsWith("Record validation failed for stream beta"))
+    assert(files() == before)
+    // Both streams invalid: the first in stream order is reported.
+    val both = invalid :+
+      """{"type": "RECORD", "stream": "alpha", "record": {"pk": 2, "v_str": "1", "v_int": "not-an-int"}}"""
+    val b = intercept[IllegalArgumentException] {
+      SingerPipeline.run(spark, writeCorpus(both), out, TargetConfig(), clock = () => "P")
+    }
+    assert(b.getMessage.startsWith("Record validation failed for stream alpha"))
+    assert(files() == before)
+  }
+
+  test("a multi-file directory is read in file-name order (SCHEMA in the smallest, first file)") {
+    val dir = Files.createTempDirectory("graft-in")
+    def rec(i: Int) =
+      s"""{"type": "RECORD", "stream": "alpha", "record": {"pk": $i, "v_str": "s$i", "v_int": $i}}"""
+    // Spark packs files into partitions largest first: b, c, then a.
+    Files.writeString(dir.resolve("a.jsonl"), schemaMsg("alpha") + "\n")
+    Files.writeString(dir.resolve("b.jsonl"), (1 to 60).map(rec).mkString("\n") + "\n")
+    Files.writeString(dir.resolve("c.jsonl"), ((61 to 80).map(rec) :+
+      """{"type": "STATE", "value": {"bookmarks": {"alpha": 80}}}""").mkString("\n"))
+    val out = outDir()
+    val res = SingerPipeline.run(spark, dir.toString, out,
+      TargetConfig(streamsInSeparateFolder = true))
+    assert(res.outputs.map(o => (o.stream, o.rows)) == Seq(("alpha", 80L)))
+    assert(spark.read.parquet(s"$out/alpha").count() == 80)
+    assert(res.state.contains("""{"bookmarks":{"alpha":80}}"""))
   }
 }

@@ -234,4 +234,65 @@ class StreamingIngestSpec extends SparkSpec {
     assert(e.getMessage.contains("nope") ||
       Option(e.getCause).exists(_.getMessage.contains("nope")))
   }
+
+  private def lines(ls: String*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(ls, 1).toDF("value")
+  }
+
+  private def rec(stream: String, pk: Int, v: String = "ok") =
+    s"""{"type": "RECORD", "stream": "$stream", "record": {"pk": $pk, "v": "$v"}}"""
+
+  test("streaming: chunk files of different sizes are read in name order (SCHEMA in the smallest, first chunk)") {
+    val in = Files.createTempDirectory("stream-in10")
+    val out = Files.createTempDirectory("stream-out10").toString
+    val cp = Files.createTempDirectory("stream-cp10").toString
+    // Spark packs files into partitions largest first: chunk 1, 2, then 0.
+    Files.writeString(in.resolve("chunk-00000000.jsonl"), schemaLine + "\n")
+    Files.writeString(in.resolve("chunk-00000001.jsonl"),
+      (1 to 60).map(rec("s1", _)).mkString("\n") + "\n")
+    Files.writeString(in.resolve("chunk-00000002.jsonl"), ((61 to 80).map(rec("s1", _)) :+
+      """{"type": "STATE", "value": {"bookmarks": {"s1": 80}}}""").mkString("\n"))
+    val ingest = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
+    ingest.start(in.toString, cp).awaitTermination()
+    assert(spark.read.parquet(s"$out/s1").count() == 80)
+    assert(ingest.emittedState.contains("""{"bookmarks":{"s1":80}}"""))
+  }
+
+  test("streaming: unknown-type messages are echoed like the batch path (L6 parity)") {
+    val ingest = new StreamingIngest(spark, Files.createTempDirectory("stream-out11").toString,
+      TargetConfig(streamsInSeparateFolder = true))
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withErr(new java.io.PrintStream(buf, true, "UTF-8")) {
+      ingest.processBatch(lines(schemaLine,
+        """{"type": "ACTIVATE_VERSION", "stream": "s1", "version": 7}""",
+        rec("s1", 1),
+        """{"type": "ACTIVATE_VERSION", "stream": "s1", "version": 8}"""), 0)
+    }
+    val err = buf.toString("UTF-8")
+    assert(err.linesIterator.count(_.contains("Unknown message type ACTIVATE_VERSION")) == 2)
+    assert(err.contains(""""version": 7""") && err.contains(""""version": 8"""))
+  }
+
+  test("streaming: a micro-batch with an invalid record appends nothing to any stream") {
+    val out = Files.createTempDirectory("stream-out12").toString
+    val ingest = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
+    val batch = lines(schemaLine, schemaLine.replace("\"s1\"", "\"s2\""),
+      rec("s1", 1), rec("s2", 1), rec("s2", 2, "far too long for maxLength"))
+    // Twice: the restarted query's retry of the batch must not duplicate rows.
+    (0 to 1).foreach { _ =>
+      val e = intercept[IllegalArgumentException](ingest.processBatch(batch, 0))
+      assert(e.getMessage.startsWith("Record validation failed for stream s2"))
+    }
+    assert(!new java.io.File(s"$out/s1").exists && !new java.io.File(s"$out/s2").exists)
+  }
+
+  test("streaming: the first unparseable line of a batch is reported") {
+    val ingest = new StreamingIngest(spark, Files.createTempDirectory("stream-out13").toString)
+    // Eight unparseable lines; the first also sorts last.
+    val bad = (1 to 8).map(i => s"${('z' - i + 1).toChar} not json, line $i")
+    val e = intercept[RuntimeException](ingest.processBatch(
+      lines(schemaLine +: bad.flatMap(b => Seq(rec("s1", b.length), b)): _*), 0))
+    assert(e.getMessage == "Unable to parse:\nz not json, line 1")
+  }
 }

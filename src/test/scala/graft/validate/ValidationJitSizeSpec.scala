@@ -72,7 +72,8 @@ class ValidationJitSizeSpec extends SparkSpec {
   }
 
   /** The largest method, in bytes of bytecode, of the whole-stage code
-    * of validateOrThrow's plan for `schemaJson`, validated by `v`.
+    * of the strict-validation plan (`Constraints.firstViolation`) for
+    * `schemaJson`, validated by `v`.
     *
     * `from_json` is a CodegenFallback expression, and an operator that
     * evaluates one never joins a whole-stage stage: the Column spelling
