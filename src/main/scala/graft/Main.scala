@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.model.TargetConfig
 import graft.pipeline.SingerPipeline
-import graft.streaming.{StdinSpooler, StreamingIngest}
+import graft.streaming.{StdinSpooler, StdinStream, StreamingIngest}
 import graft.sources.S3Conf
 
 /** CLI entry point with the reference's UX (reference __init__.py:334-358,
@@ -132,13 +132,7 @@ object Main {
     }).toString)
     val ingest = new StreamingIngest(spark, output, config)
     val query = ingest.startLive(checkpoint, Trigger.ProcessingTime("500 milliseconds"))
-    // Same wait discipline as the spooled path: EOF *or* query death.
-    while (!graft.streaming.StdinStream.eofReached && query.isActive)
-      query.awaitTermination(500)
-    if (query.isActive) {
-      query.processAllAvailable() // tap closed the pipe: drain the buffer
-      query.stop()
-    } else query.awaitTermination() // died: surface the real failure
+    StreamingIngest.drainAtEof(query, StdinStream.eofReached, pollMs = 500)
   }
 
   /** Stream mode: consume the pipe incrementally — parquet and bookmarks
@@ -175,15 +169,7 @@ object Main {
       Trigger.ProcessingTime("500 milliseconds"))
     spooler match {
       case Some(s) =>
-        // Wait for EOF *or* query death — blocking on EOF alone hangs the
-        // process forever when the query fails mid-pipe (and the tap keeps
-        // producing). awaitTermination throws the streaming error.
-        while (!s.eofReached && query.isActive)
-          query.awaitTermination(500)
-        if (query.isActive) {
-          query.processAllAvailable()  // tap closed the pipe: drain chunks
-          query.stop()
-        } else query.awaitTermination() // died: surface the real failure
+        StreamingIngest.drainAtEof(query, s.eofReached, pollMs = 500)
         s.rethrowIfFailed()
       case None => query.awaitTermination()
     }

@@ -572,7 +572,7 @@ object SparkEntry {
     // Data-layout family: write the z-ordered (Morton-clustered) lineitem
     // copy, then answer a 2-D band aggregate over it. The hash match vs
     // the oracle's raw-table scan proves layout never changes results —
-    // it only changes what the scan skips (tools/MeasureZOrder).
+    // it only changes what the scan skips (BASELINE.md r12).
     "layout_zorder" -> ((s, d) => Layout.zorderQuery(s, d)),
     // Hilbert-curve layout twin: same write-then-band shape, better
     // row-group locality (the pruning delta is measured, not oracled).

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   * literal. At k = nlist that generated code grows ∝ k (JIT gives up past
   * the method-size limit, and every literal element access unboxes), so
   * the assignment pass cost scaled with GENERATED CODE SIZE, not flops:
-  * the r14 IvfCostModel sweep measured fresh builds 0.7 → 11.0 s from
+  * the r14 IVF cost-model sweep measured fresh builds 0.7 → 11.0 s from
   * nlist 32 → 128 on n=20k where the flop count only doubles
-  * (tools/MeasureAutoAnn re-measured 10.4 s at nlist=128 pre-fix).
+  * (re-measured 10.4 s at nlist=128 pre-fix; BASELINE.md r14).
   *
   * This expression holds the codebook as one primitive `double[][]`
   * reference and emits one NESTED LOOP — code size constant in nlist,

@@ -21,11 +21,4 @@ object VectorFunctions {
 
   /** Cosine similarity of two double-array columns. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** L2-normalize a double-array column (precompute once, then cosine is
-    * just a dot product — the at-scale pattern for repeated comparisons). */
-  def l2Normalize(a: Column): Column = {
-    val n = norm(a)
-    transform(a, x => x / n)
-  }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * dimension at once, which is what makes parquet row-group min/max
   * pruning effective for 2-D range predicates — a single-column sort
   * clusters only its own column and leaves the other dimension's
-  * min/max spanning the whole domain (measured: tools/MeasureZOrder).
+  * min/max spanning the whole domain (measured: BASELINE.md r12).
   *
   * The bit spread is the classic mask-shift cascade (public-domain
   * bit-twiddling; cf. the "Interleave bits by Binary Magic Numbers"
@@ -121,7 +121,7 @@ object ZOrderOps {
   * every cell of each quadrant before leaving it (consecutive d values
   * are ALWAYS grid neighbors — pinned in LayoutSpec), which tightens
   * per-row-group min/max boxes and prunes more groups for the same 2-D
-  * band (measured: tools/MeasureZOrder). Classic iterative xy→d with
+  * band (measured: BASELINE.md r12). Classic iterative xy→d with
   * quadrant rotations, `order` fixed levels, emitted as a plain loop by
   * `doGenCode` so layout writes stay in WholeStageCodegen. */
 case class HilbertValue(left: Expression, right: Expression, order: Int)

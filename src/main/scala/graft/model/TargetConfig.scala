@@ -50,7 +50,6 @@ final case class TargetConfig(
     encryptionType: Option[String] = None,
     encryptionKey: Option[String] = None,
     decimalForMultipleOf: Boolean = false,
-    inlineValidation: Boolean = false,
     tempDir: Option[String] = None) {
 
   /** Parquet codec + the reference's filename-extension map (S9,
@@ -112,7 +111,6 @@ object TargetConfig {
     encryptionKey = m.get("encryption_key"),
     decimalForMultipleOf = m.getOrElse("decimal_for_multiple_of", "false").toBoolean,
     strictValidation = m.getOrElse("strict_validation", "true").toBoolean,
-    inlineValidation = m.getOrElse("inline_validation", "false").toBoolean,
     inferExtraFields = m.getOrElse("infer_extra_fields", "true").toBoolean,
     inferSampleRows = m.getOrElse("infer_sample_rows", "-1").toLong,
     tempDir = m.get("temp_dir"))

@@ -172,12 +172,11 @@ object Dedup {
     * positional overlap bound (Xiao et al. WWW'08) pruning candidates in
     * O(1) before the merge walk. Identical output to the rarest-first
     * spelling ([[jaccardPairsRarestFirstUnsorted]], both exact and
-    * spec-pinned equal to brute); head-to-head in
-    * [[graft.tools.ProfileJaccardPos]]: positional wins or ties at EVERY
-    * scale across two runs — 2.07x at sf0.01, 1.01x at sf0.1, 1.25x at
-    * 10x, 2.55x at 20x (BASELINE.md r12) — rarest-first's candidate
-    * reduction never repays its two extra keyed shuffles on these
-    * corpora. */
+    * spec-pinned equal to brute); head-to-head (BASELINE.md r12):
+    * positional wins or ties at EVERY scale across two runs — 2.07x at
+    * sf0.01, 1.01x at sf0.1, 1.25x at 10x, 2.55x at 20x — rarest-first's
+    * candidate reduction never repays its two extra keyed shuffles on
+    * these corpora. */
   private[graft] def jaccardPairsUnsorted(s: SparkSession, dir: String,
                                           threshold: Double): DataFrame =
     jaccardPairsFromSets(hashedTokenSets(s, dir), threshold,
@@ -457,8 +456,8 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
 
   /** The artifact-path pair set without the presentation sort — also the
-    * plan-audit surface (tools/ProfileIncrArtifact asserts the corpus
-    * side is ONE bucketed scan with no Exchange/HashAggregate above it). */
+    * plan-audit surface (BASELINE.md r7: the corpus side is ONE bucketed
+    * scan with no Exchange/HashAggregate above it). */
   private[graft] def incrementalPairsArtifactUnsorted(
       s: SparkSession, dir: String, threshold: Double = 0.85,
       mod: Int = 10): DataFrame = {
@@ -517,10 +516,9 @@ object Dedup {
 
   /** The ONE definition of the shingle-jaccard pair plan at an EXPLICIT
     * width — consumed by [[shinglePairsAutoUnsorted]] (which derives the
-    * width), the fingerprint gate's sequence-level truth and
-    * tools/GateMargins (both pinned at the manual width 3), so
-    * threshold/prefix-order tuning cannot drift between operator, gate
-    * and calibration tool. */
+    * width) and the fingerprint gate's sequence-level truth (pinned at
+    * the manual width 3), so threshold/prefix-order tuning cannot drift
+    * between operator and gate. */
   private[graft] def shinglePairsUnsorted(s: SparkSession, dir: String,
                                           threshold: Double = 0.9,
                                           width: Int = 3): DataFrame =
@@ -632,7 +630,7 @@ object Dedup {
     *     background (measured on the registered corpora: width 2 reads
     *     ~3× all-pairs — WORSE than brute — width 3 reads ~0.1×).
     *     Doc-sampling at rate p scales both sides ~p², so the verdict
-    *     is sampling-rate invariant (the prefixOrderingStats argument).
+    *     is sampling-rate invariant (the prefixOrderingStatsOn argument).
     *   - ARGMIN (recall): among eligible widths, the SMALLEST — every
     *     token edit destroys up to w shingles, so one-substitution
     *     self-jaccard falls monotonically with w (measured grid in
@@ -814,11 +812,6 @@ object Dedup {
       .select(col("doc_id"), minhashSignature(col("toks"), k).as("sig"))
   }
 
-  /** Wide-column view of [[minhashSignatureArrays]] (doc_id, h0..h{k-1}). */
-  def minhashSignatures(s: SparkSession, dir: String, k: Int = 64): DataFrame =
-    minhashSignatureArrays(s, dir, k).select(
-      col("doc_id") +: (0 until k).map(i => element_at(col("sig"), i + 1).as(s"h$i")): _*)
-
   /** MinHash + LSH banding near-dup: signatures → b bands of r rows →
     * band-hash equi-join for candidates → signature-estimated Jaccard
     * (matching components / k) filter. Candidates only ever meet through
@@ -876,13 +869,13 @@ object Dedup {
     * pick the one generating the FEWEST sampled candidates (ties →
     * larger r, the sharper S-curve). Recall needs no sampling — it is
     * arithmetic in (t, b, r); the candidate consequence is sampled
-    * exactly like [[prefixOrderingStats]]: one bounded minhash job over
+    * exactly like [[prefixOrderingStatsOn]]: one bounded minhash job over
     * a ≤[[AutoSampleDocs]] hash-mod doc sample, then per-geometry
     * bucket counting driver-side (Σ over bands of Σ buckets C(n,2) —
     * the RAW match stream, the term the band join's cost tracks; the
     * exactly-once retention dedups it downstream but pays it first).
     * Doc-sampling at rate p scales every geometry's count ~p², so the
-    * argmin is sampling-rate invariant (the prefixOrderingStats
+    * argmin is sampling-rate invariant (the prefixOrderingStatsOn
     * argument). Memoized per (dir, k, threshold) — same contract as
     * [[choosePrefixPlan]]: a stale memo repeats a decision, and at the
     * registered t=0.9 the decision IS the r14 fixture constant (8, 8),
@@ -929,11 +922,20 @@ object Dedup {
   private[this] val bandDecisions =
     new java.util.concurrent.ConcurrentHashMap[(String, Int, Double), BandPlan]()
 
-  /** [[minhashPairsVerified]] with the ENGINE-CHOSEN band geometry —
-    * what the registered row serves. At the registered t=0.9 the
-    * decision lands on the r14 constants (b=8, r=8), so the output is
-    * bit-identical (spec-pinned); the manual `bands` parameter on the
-    * explicit spellings stays as the override. */
+  /** MinHash-band candidates + EXACT jaccard verify, with the
+    * ENGINE-CHOSEN band geometry — what the registered row serves. The
+    * LSH banding prunes pair enumeration (same candidate scheme as
+    * [[minhashPairs]]), then the codegen merge walk computes TRUE
+    * jaccard on candidates only — precision 1.0 by construction, recall
+    * = the banding collision probability 1-(1-j^r)^b (0.988 theoretical
+    * at j = 0.9, r = b = 8; measured 0.986 at sf0.01 under the kernel
+    * hash family). This is the "LSH-accelerated exact" flavor a
+    * curation pipeline wants when estimator noise (k=64 sampling gives
+    * ±~0.06 on est_jaccard) would leak borderline pairs both ways. At
+    * the registered t=0.9 the geometry decision lands on the r14
+    * constants (b=8, r=8), so the output is bit-identical
+    * (spec-pinned); [[minhashPairsVerifiedUnsorted]] keeps the manual
+    * `bands` parameter as the override. */
   def minhashPairsVerifiedAuto(s: SparkSession, dir: String, k: Int = 64,
                                threshold: Double = 0.9): DataFrame = {
     val g = chooseBandGeometry(s, dir, k, threshold)
@@ -948,21 +950,6 @@ object Dedup {
     val g = chooseBandGeometry(s, dir, k, threshold)
     minhashPairsVerifiedUnsorted(s, dir, k, g.bands, threshold)
   }
-
-  /** MinHash-band candidates + EXACT jaccard verify: the LSH banding
-    * prunes pair enumeration (same candidate scheme as [[minhashPairs]]),
-    * then the codegen merge walk computes TRUE jaccard on candidates only
-    * — precision 1.0 by construction, recall = the banding collision
-    * probability 1-(1-j^r)^b (0.988 theoretical at j = 0.9, r = b = 8;
-    * measured 0.986 at sf0.01 under the kernel hash family). This is
-    * the "LSH-accelerated exact" flavor a curation pipeline wants when
-    * estimator noise (k=64 sampling gives ±~0.06 on est_jaccard) would
-    * leak borderline pairs both ways. */
-  def minhashPairsVerified(s: SparkSession, dir: String, k: Int = 64,
-                           bands: Int = 8, threshold: Double = 0.9): DataFrame =
-    minhashPairsVerifiedUnsorted(s, dir, k, bands, threshold)
-      .localCheckpoint() // sort sampling must not re-run the verify join
-      .orderBy("doc_a", "doc_b")
 
   /** Banded LSH candidate pairs, each generated EXACTLY ONCE: the join
     * keeps a band match only when it is the FIRST band where the two
@@ -1658,14 +1645,8 @@ object Dedup {
     * hash is MurmurHash3 rather than the join's xxhash64: the estimate
     * only needs A uniform order (prefix membership statistics are
     * hash-choice-invariant in distribution), and a JVM-local hash keeps
-    * this free of any SQL evaluation. */
-  private[graft] def prefixOrderingStats(
-      s: SparkSession, dir: String, threshold: Double,
-      sampleDocs: Long = AutoSampleDocs): (Double, Double) =
-    prefixOrderingStatsOn(documents(s, dir), threshold, sampleDocs)
-
-  /** [[prefixOrderingStats]] over an EXPLICIT (doc_id, text) relation —
-    * the gate-fixture entry point. */
+    * this free of any SQL evaluation. Takes an EXPLICIT (doc_id, text)
+    * relation, so the corpus and the gate fixtures share it. */
   private[graft] def prefixOrderingStatsOn(
       allDocs: DataFrame, threshold: Double,
       sampleDocs: Long = AutoSampleDocs): (Double, Double) = {
@@ -1704,7 +1685,7 @@ object Dedup {
 
   /** Decision ratio for the auto prefix ordering: pick the df-ordered
     * (rarest-first) plan when hash-order prefixes would generate more
-    * than this many times the candidates (see [[prefixOrderingStats]]:
+    * than this many times the candidates (see [[prefixOrderingStatsOn]]:
     * measured regimes read ~1 vs ~160-400). */
   private[graft] val AutoPrefixRatio = 8.0
 
@@ -1827,10 +1808,10 @@ object Dedup {
   }
 
   /** The saturation statistic + outlier-fence cap, computed
-    * unconditionally — stage 2/3 of [[choosePrefixPlanOn]] and the
-    * measurement tools' entry point ([[graft.tools.MeasureCap]] prices
-    * the cap on corpora the decision tree would NOT cap, to keep the
-    * no-op claim measured). tailDf from one linear agg (count + HLL
+    * unconditionally — stage 2/3 of [[choosePrefixPlanOn]], and what
+    * [[graft.tools.ScaleProbe]] and the specs read directly (the cap on
+    * corpora the decision tree would NOT cap is priced in BASELINE.md
+    * r15). tailDf from one linear agg (count + HLL
     * distinct over exploded distinct tokens); maxDf = the median-multiple fence
     * [[CapMedianRatio]] × median(per-doc prefLen-th-smallest df) —
     * EXACT `percentile`, not approx: its aggregation buffer is one
@@ -2000,10 +1981,16 @@ object Dedup {
     containmentPairsFromSets(sets, threshold)
   }
 
+  /** Max prefix-distinct tokens the semi filter will broadcast: 4M
+    * longs ≈ 32 MB framed — comfortably under driver/executor budgets
+    * at any deployment size; a corpus whose prefix-distinct set
+    * exceeds it skips the filter rather than risk the broadcast. */
+  private[graft] val SemiBroadcastCap = 4000000L
+
   /** The carry pipeline over ANY element-hashed set relation shaped
     * (doc_id, toks: sorted distinct array<long>, sz) — word token sets
-    * for the registered row, the inline 10x corpus for the scale row. */
-  /** The carry join with the container side SEMI-FILTERED against the
+    * for the registered row, the inline 10x corpus for the scale row.
+    * The carry join with the container side SEMI-FILTERED against the
     * broadcast distinct prefix-token set before its exchange (guide
     * §3.2, r17): a posting row whose token appears in NO document's
     * prefix can never meet the prefix equi-join, so dropping it
@@ -2013,33 +2000,16 @@ object Dedup {
     * regimes, because under the global HASH order every doc's prefix
     * is its prefLen SMALLEST hashes — the distinct prefix set
     * concentrates on the globally-smallest-hash tokens rather than
-    * sampling the vocabulary uniformly (tools/MeasureContainSemi:
-    * sf0.1 registered corpus 40.1%% of posting rows survive, 9.71 →
-    * 8.51 s; zipf10 shared-vocab 14.2%% survive, 26.9 → 22.7 s; row
+    * sampling the vocabulary uniformly (OPTIMIZATION_r17.md §5:
+    * sf0.1 registered corpus 40.1% of posting rows survive, 9.71 →
+    * 8.51 s; zipf10 shared-vocab 14.2% survive, 26.9 → 22.7 s; row
     * counts asserted equal). Engagement is guarded by a BOUNDED count
     * of the prefix-distinct relation ([[SemiBroadcastCap]]): past the
     * cap the broadcast would be the new risk, so the plan falls back
     * to the plain carry join — the guard job is `limit(cap+1).count`,
     * never a full aggregate. */
   private[graft] def containmentPairsFromSets(sets: DataFrame,
-                                              threshold: Double): DataFrame =
-    containmentPairsFromSetsImpl(sets, threshold, semiFilter = true)
-
-  /** The r16-and-earlier spelling with no semi filter — kept as the
-    * A/B twin MeasureContainSemi measures and the fallback shape. */
-  private[graft] def containmentPairsFromSetsNoSemi(sets: DataFrame,
-                                                    threshold: Double): DataFrame =
-    containmentPairsFromSetsImpl(sets, threshold, semiFilter = false)
-
-  /** Max prefix-distinct tokens the semi filter will broadcast: 4M
-    * longs ≈ 32 MB framed — comfortably under driver/executor budgets
-    * at any deployment size; a corpus whose prefix-distinct set
-    * exceeds it skips the filter rather than risk the broadcast. */
-  private[graft] val SemiBroadcastCap = 4000000L
-
-  private def containmentPairsFromSetsImpl(sets: DataFrame,
-                                           threshold: Double,
-                                           semiFilter: Boolean): DataFrame = {
+                                              threshold: Double): DataFrame = {
     import graft.functions.ArrayOps.{sortedFirstCommon, sortedIntersectCount}
     val prefLen = (col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast("int")
     val small = sets.select(col("doc_id").as("id_a"), col("toks").as("ta"),
@@ -2048,15 +2018,12 @@ object Dedup {
         posexplode(col("pref")).as(Seq("qa", "ptok")))
     val bigAll = sets.select(col("doc_id").as("id_b"), col("toks").as("tb"),
         col("sz").as("sb"), posexplode(col("toks")).as(Seq("qb", "tok")))
+    val prefToks = sets.select(
+      explode(slice(col("toks"), lit(1), prefLen)).as("tok")).distinct()
     val big =
-      if (!semiFilter) bigAll
-      else {
-        val prefToks = sets.select(
-          explode(slice(col("toks"), lit(1), prefLen)).as("tok")).distinct()
-        if (prefToks.limit((SemiBroadcastCap + 1).toInt).count() > SemiBroadcastCap)
-          bigAll
-        else bigAll.join(broadcast(prefToks), Seq("tok"), "left_semi")
-      }
+      if (prefToks.limit((SemiBroadcastCap + 1).toInt).count() > SemiBroadcastCap)
+        bigAll
+      else bigAll.join(broadcast(prefToks), Seq("tok"), "left_semi")
     val dirOk = col("sa") < col("sb") ||
       (col("sa") === col("sb") && col("id_a") < col("id_b"))
     val bound = lit(1) + least(col("sa") - col("qa") - 1,
@@ -2241,11 +2208,11 @@ object Dedup {
   }
 
   /** Deterministic shared-vocabulary Zipfian document fixture — the
-    * in-memory twin of `tools/ContainZipf.buildZipf` (which writes this
-    * relation to parquet for the A/B probe cells; both call sites share
-    * this one construction so the gate and the probe always measure the
-    * same corpus). Seed-free, SQL-expressible (the DuckDB oracle can
-    * replay it literal-for-literal): doc i of nDocs has
+    * in-memory twin of [[graft.tools.ContainZipf.buildZipf]] (which
+    * writes this relation to parquet for the scale probe and the specs;
+    * both share this one construction so the gate and the probe always
+    * measure the same corpus). Seed-free, SQL-expressible (the DuckDB
+    * oracle can replay it literal-for-literal): doc i of nDocs has
     * sz = 40 + (i·2654435761 mod 81) tokens; token r is word
     * w = ⌊exp(u·ln V)⌋+1 with u = ((i·1099087573 + r·40503) mod 10⁶)/10⁶
     * — the inverse-CDF map of the Zipf-1 law. Every 10th doc gets a

@@ -153,7 +153,8 @@ object DocPipeline {
     * function of doc_id, so the result is partition-independent and
     * exactly SQL-expressible (the oracle recomputes all seven stages).
     *
-    * Plan shape (ExplainPipeline audits it): the quality gate's
+    * Plan shape (`graft.Explain doc_pipeline` prints it; BASELINE.md r6
+    * records the audit): the quality gate's
     * per-row kernels run inside the corpus scan (pushed down — later
     * shuffles carry only survivors); Catalyst plans the chain as one
     * query — the only materializations are TWO-BRANCH REUSES, not stage

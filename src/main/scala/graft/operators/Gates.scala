@@ -16,10 +16,11 @@ import graft.functions.CodebookOps.codebookDots
   * Bounds are CORPUS-CALIBRATED: measured on the synthetic testdata
   * (deterministic operators — seeded hyperplanes + xxhash64 — so the
   * measured recall is a fixed property of the dataset, not a flaky
-  * sample) with a safety margin; `tools/GateMargins` is the measuring
-  * tool. Recall is a data property, so a different corpus can legitimately
-  * sit below a bound while the operator is healthy — each bound can be
-  * overridden per dataset via environment (GRAFT_MINHASH_RECALL_BOUND,
+  * sample) with a safety margin; BASELINE.md records each measurement
+  * next to its row. Recall is a data property, so a different corpus
+  * can legitimately sit below a bound while the operator is healthy —
+  * each bound can be overridden per dataset via environment
+  * (GRAFT_MINHASH_RECALL_BOUND,
   * GRAFT_ANN_RECALL_BOUND, GRAFT_FP_OVERLAP_BOUND) without recompiling.
   * Where theory gives a floor it is noted next to the default (e.g.
   * minhash banding recall 1-(1-t^r)^b = 0.988 at t=0.9, r=b=8).
@@ -182,7 +183,7 @@ object Gates {
     * operator over [[Similarity.clusteredCorpus]] — a deterministic
     * mixture-of-32 fixture both engines can generate bit-identically —
     * probing nprobe=4 of nlist=16 lists (25% coverage). Measured on
-    * this fixture (tools/MeasureRecallClustered, BASELINE.md): recall
+    * this fixture (BASELINE.md r11, partial-probe ANN): recall
     * is 1.0 at nprobe=1 — each query's own cluster fits one list, the
     * regime real embedding corpora live in — so the 0.95 bound leaves
     * margin while a uniform corpus at this coverage would sit near
@@ -210,7 +211,7 @@ object Gates {
   }
 
   /** RESIDUAL-PQ gate on the clustered fixture (judge r13 brief #7):
-    * the r8 measurement (tools/MeasureRecallClustered, BASELINE.md)
+    * the r8 measurement (BASELINE.md r8, residual IVF-PQ win regime)
     * showed residual encoding buys +0.08–0.13 recall at every rerank
     * depth on CLUSTERED embeddings — tight cells make the residual
     * spread much smaller than the vector spread — but no oracle row
@@ -237,8 +238,9 @@ object Gates {
     // rule at fixture size spelled by hand; now the planner derives
     // them — sqrtNlist(2000)=32 and the sample calibration lands
     // nprobe=1 on the 32-planted-cluster fixture (recall 1.0 at
-    // nprobe=1, the IvfCostModel sweep's own finding). rerank=2000
-    // still covers any skew, so residual==raw equality is unaffected.
+    // nprobe=1, the r14 IVF cost-model sweep's own finding,
+    // BASELINE.md). rerank=2000 still covers any skew, so residual==raw
+    // equality is unaffected.
     // derived rerank deliberately UNUSED here: the equality pin needs
     // FULL rerank (2000 ≥ any candidate pool) so both encodings
     // collapse onto exact cosine over the probed lists
@@ -490,7 +492,7 @@ object Gates {
   /** GRAPH-ANN (NSW-family beam search) recall gate — multi-entry
     * navigation over the directed-kNN artifact + express overlay.
     * Measured 1.0 at sf0.01 (beam=16, rounds=4, 8 entries) and 1.0 /
-    * 0.996 on the clustered fixture (tools/MeasureRecall sweep;
+    * 0.996 on the clustered fixture (BASELINE.md r12 ann_graph sweep;
     * single-entry without the express overlay reads 0.14 there — the
     * navigability story BASELINE.md r12 records). The gate starts far
     * from every query by construction, so it prices navigation, not
@@ -511,7 +513,7 @@ object Gates {
     * sf0.01 on the uniform-direction corpus (worst case for any
     * quantizer): 1.0 at rerank=64, 0.96 at rerank=32; the coarser
     * m=8 × 16 codebook (32×) needs rerank=128 for 0.92
-    * (tools/MeasureRecall sweep; see [[Similarity.pqTopK]]). */
+    * (BASELINE.md r6 recall sweep; see [[Similarity.pqTopK]]). */
   def annPqGate(s: SparkSession, dir: String): DataFrame =
     annGate(s, dir, Similarity.pqTopK(s, dir),
       recallBound = envBound("GRAFT_ANN_RECALL_BOUND", 0.85))
@@ -585,7 +587,7 @@ object Gates {
   /** IVF-PQ (IVFADC) recall gate — coarse-list pruning + ADC scoring +
     * exact re-rank. Measured 0.96 at sf0.01 (nprobe=12, rerank=64):
     * exactly the IVF probe recall, i.e. the PQ stage loses nothing the
-    * re-rank can't recover (tools/MeasureRecall sweep). */
+    * re-rank can't recover (BASELINE.md r6 recall sweep). */
   def annIvfPqGate(s: SparkSession, dir: String): DataFrame =
     annGate(s, dir, Similarity.ivfPqTopK(s, dir),
       recallBound = envBound("GRAFT_ANN_RECALL_BOUND", 0.85))
@@ -597,7 +599,7 @@ object Gates {
     * (b) no list exceeds `maxShare` of the corpus — balance is what makes
     * the nprobe/nlist probe fraction an honest scan-cost bound at 100 TB
     * (measured max share 0.082 at sf0.01, 0.071 at sf0.1, vs the 0.0625
-    * perfect-balance mean; tools/MeasureRecall); (c) the trained codebook
+    * perfect-balance mean; BASELINE.md r6); (c) the trained codebook
     * quantizes at least as well as the untrained first-nlist-vectors
     * stand-in (mean cosine to assigned centroid, `quant_gain_ok`).
     * n_vectors is recomputed by the oracle; the booleans are pinned. */

@@ -58,13 +58,13 @@ object Graph {
     * a query could possibly score in — measured rates in BASELINE.md. */
   private[graft] def knnDirected(s: SparkSession, dir: String, k: Int,
                                  nlist: Int = AutoNlist): DataFrame =
-    knnBuild(s, dir, k, nlist)._3.select("src", "dst")
+    knnBuild(s, dir, k, nlist).select("src", "dst")
 
   /** Sentinel: derive nlist from the corpus size at build time. */
   private[graft] val AutoNlist = -1
 
   /** Corpus-derived nlist for the EXACT branch-and-bound build — the
-    * r17 MeasureKnnNlist sweep (plans/r17/knn_nlist_sweep.txt) replaces
+    * r17 nlist sweep (plans/r17/knn_nlist_sweep.txt) replaces
     * the flat 16 the r15 note defended: phase-1's same-list self-join
     * (Σ|list|² ≈ N²/nlist candidate dots) is the only nlist-SENSITIVE
     * term and dominates at scale (10x: p1 11.5 s at nlist=16 → 1.8 s at
@@ -84,10 +84,6 @@ object Graph {
   private def corpusCount(s: SparkSession, dir: String): Long =
     corpusCountMemo.computeIfAbsent(dir, _ => Similarity.corpus(s, dir).count())
 
-  /** The build's three stages, exposed so tools/ProfileKnnBound can count
-    * probe survival (the prune rate BASELINE.md records) without
-    * duplicating any plan logic: (phase-1 top-k, surviving probes, final
-    * edges). */
   /** Spherical triangle-inequality bound: an upper bound on cos(q, x)
     * for any member x of a list whose query-centroid cosine is `qc` and
     * whose radius-as-cosine is `mc` (= min member-own-centroid cosine).
@@ -100,8 +96,10 @@ object Graph {
         sqrt(greatest(lit(0.0), lit(1.0) - qc * qc)) *
         sqrt(greatest(lit(0.0), lit(1.0) - mc * mc)))
 
+  /** Directed exact top-k edges (src, dst, cosine) over the corpus at
+    * `dir`. */
   private[graft] def knnBuild(s: SparkSession, dir: String, k: Int,
-                              nlist: Int = AutoNlist): (DataFrame, DataFrame, DataFrame) =
+                              nlist: Int = AutoNlist): DataFrame =
     knnBuildFrom(Similarity.corpus(s, dir), k,
       if (nlist == AutoNlist) autoNlist(corpusCount(s, dir)) else nlist)
 
@@ -109,8 +107,8 @@ object Graph {
     * optionally restricting the QUERY side to `queryPred` (the member
     * side is always the full relation): the incremental maintenance path
     * uses this to compute exact top-k for just the increment's vectors
-    * over settled ∪ increment without paying the settled queries. */
-  /** nlist is the caller's (the dir-keyed entry points resolve
+    * over settled ∪ increment without paying the settled queries.
+    * nlist is the caller's (the dir-keyed entry points resolve
     * [[AutoNlist]] through [[autoNlist]] — see its scaladoc for the r17
     * measured curve that retired the r15 flat-16 argument: the N^1.5
     * probe-ROW growth the flat default guarded against is real but
@@ -119,7 +117,7 @@ object Graph {
     * nlist-invariant by construction). */
   private[graft] def knnBuildFrom(all: DataFrame, k: Int, nlist: Int = 16,
                                   queryPred: org.apache.spark.sql.Column = lit(true))
-      : (DataFrame, DataFrame, DataFrame) = {
+      : DataFrame = {
     val cents = Similarity.centroids(all, nlist)
     val centDots = codebookDots(col("v"), col("nrm"), cents)
     // The single-block scan would otherwise run every downstream join in
@@ -182,11 +180,10 @@ object Graph {
 
     // cosine retained: the incremental maintenance path persists it (the
     // settled artifact's τ column); knnDirected projects it away.
-    val knn = p1top.select("src", "dst", "cosine").unionByName(p2)
+    p1top.select("src", "dst", "cosine").unionByName(p2)
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select("src", "dst", "cosine")
-    (p1top, probes, knn)
   }
 
   /** The round-6 all-pairs build: corpus × broadcast(corpus) product.
@@ -541,16 +538,7 @@ object Graph {
     * to fresh by `graphArtifactGate`. */
   private[graft] def knnIncrMaintained(s: SparkSession, dir: String,
                                        k: Int = 5,
-                                       nlist: Int = AutoNlist): DataFrame =
-    knnIncrBuild(s, dir, k, nlist)._3
-
-  /** The maintenance pass's three relations, exposed so
-    * tools/ProfileKnnBound can count τ-prune survival (the measured
-    * basis for the tracks-batch-size claim) without duplicating plan
-    * logic: (settled table, update candidates, maintained top-k). */
-  private[graft] def knnIncrBuild(s: SparkSession, dir: String,
-                                  k: Int = 5, nlistArg: Int = AutoNlist)
-      : (DataFrame, DataFrame, DataFrame) = {
+                                       nlistArg: Int = AutoNlist): DataFrame = {
     // one derived granularity for settled build + increment IVF: both
     // structures only drive pruning, never values (see [[autoNlist]])
     val nlist =
@@ -562,14 +550,14 @@ object Graph {
     // Settled state, persisted once per (corpus, k, nlist).
     val aName = s"graft_knn_settled_${Artifacts.key(s"$dir|$k|$nlist")}"
     Artifacts.ensure(s, Seq(aName)) {
-      knnBuildFrom(settled, k, nlist)._3.write.mode("overwrite")
+      knnBuildFrom(settled, k, nlist).write.mode("overwrite")
         .option("path", s"$edgeRoot/$aName").saveAsTable(aName)
     }
     val a = s.table(aName)
 
     // (2) increment queries over the full corpus — exact.
     val newTop = knnBuildFrom(all, k, nlist,
-      queryPred = col("vec_id") % 10 === 0)._3
+      queryPred = col("vec_id") % 10 === 0)
 
     // (3) settled queries vs increment members, τ-pruned.
     val tau = a.groupBy("src").agg(min(col("cosine")).as("tmin"),
@@ -605,12 +593,11 @@ object Graph {
       .select("src", "dst", "cosine")
 
     val w = Window.partitionBy("src").orderBy(col("cosine").desc, col("dst"))
-    val maintained = a.select("src", "dst", "cosine")
+    a.select("src", "dst", "cosine")
       .unionByName(newTop).unionByName(updates)
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select("src", "dst")
-    (a, updates, maintained)
   }
 
   /** Mutual u<v edges derived from the MAINTAINED directed set — what a

@@ -120,7 +120,7 @@ object IngestQueries {
     if (!Files.exists(Paths.get(corpus))) generateEventsCorpus(s, dir, corpus)
     val out = s"$base/out"
     SingerPipeline.run(s, corpus, out,
-      TargetConfig(inferExtraFields = false, inlineValidation = true),
+      TargetConfig(inferExtraFields = false),
       clock = () => "RT")
     s.read.parquet(s"$out/events-RT.parquet")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -134,8 +134,8 @@ object IngestQueries {
     * closing the one runtime surface no oracle row exercised (the
     * file-spool path carries the other 18 stream rows; the live source
     * had only unit pins). A feeder thread streams the corpus file into
-    * a pipe and closes it; the wait loop is `Main.runLive`'s exact
-    * EOF-or-death discipline (`Main.scala` — poll
+    * a pipe and closes it; the wait is `Main.runLive`'s
+    * [[graft.streaming.StreamingIngest.drainAtEof]] (poll
     * `StdinStream.eofReached`, drain, stop). Fresh output + checkpoint
     * dirs per invocation: a pipe cannot replay across runs, the
     * source's own documented contract. The rows landed must match the
@@ -163,7 +163,7 @@ object IngestQueries {
     graft.streaming.StdinStream.inputFactory = () => pipeIn
     try {
       val ingest = new graft.streaming.StreamingIngest(s, out,
-        TargetConfig(inferExtraFields = false, inlineValidation = true),
+        TargetConfig(inferExtraFields = false),
         clock = () => "RT")
       // Batch GRAIN discipline: the live source batches whatever
       // arrived since the last trigger, and each micro-batch pays a
@@ -203,12 +203,8 @@ object IngestQueries {
       // the tap closes, outside any batch.
       val query = ingest.startLive(cp,
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-      while (!graft.streaming.StdinStream.eofReached && query.isActive)
-        query.awaitTermination(100)
-      if (query.isActive) {
-        query.processAllAvailable() // tap closed the pipe: drain the buffer
-        query.stop()
-      } else query.awaitTermination() // died: surface the real failure
+      graft.streaming.StreamingIngest.drainAtEof(query,
+        graft.streaming.StdinStream.eofReached, pollMs = 100)
       feeder.join(10000)
     } finally {
       graft.streaming.StdinStream.inputFactory = () => System.in

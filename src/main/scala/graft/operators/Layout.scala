@@ -18,7 +18,8 @@ import graft.functions.ZOrderOps
   * value ([[graft.functions.ZValue]]) clusters BOTH keys at once: each
   * row group covers a small square of the (partkey, suppkey) plane, so a
   * band predicate on either — or both — dimensions prunes most groups
-  * (tools/MeasureZOrder quantifies the effect on this corpus).
+  * (BASELINE.md r12, "Hilbert layout vs Z-order", measures the effect on
+  * this corpus).
   *
   * This is the batch sibling of [[Bucketing]]: bucketing pre-pays the
   * JOIN shuffle at write time; z-ordering pre-pays SCAN selectivity at
@@ -59,7 +60,7 @@ object Layout {
     * 10-bit suppkey domain puts the top 5 curve bits on partkey alone,
     * so row-group-sized curve cells never subdivide suppkey below its
     * top bit and the 2-D pruning collapses to a partkey sort (measured:
-    * 12% of rows read vs 2.9% with scaling, tools/MeasureZOrder). The
+    * 12% of rows read vs 2.9% with scaling, r12). The
     * scale bounds come from one 1-row min/max aggregate (control-plane);
     * for skewed key distributions the same slot takes rank-bucket
     * boundaries instead of an affine map — the curve only needs SOME
@@ -101,7 +102,7 @@ object Layout {
     * never takes the Morton curve's power-of-two diagonal jumps, so
     * equal-length curve segments cover tighter (x, y) boxes → tighter
     * per-row-group min/max stats → more groups pruned for the same
-    * band (tools/MeasureZOrder prints both side by side). */
+    * band (BASELINE.md r12: 3.4% vs 5.6% of rows read on the 2-D band). */
   def writeHilbert(s: SparkSession, dir: String, out: String,
                    nFiles: Int = 8): Unit = {
     val r = Tables.lineitem(s, dir)
@@ -124,18 +125,6 @@ object Layout {
       .option("parquet.block.size", RowGroupBytes.toLong)
       .parquet(out)
   }
-
-  /** Comparison layout: same row-group size, clustered by l_partkey
-    * alone — what a single-key sort gives the second dimension (nothing).
-    * Used by tools/MeasureZOrder, not by the registered query. */
-  def writeSingleSorted(s: SparkSession, dir: String, out: String,
-                        nFiles: Int = 8): Unit =
-    Tables.lineitem(s, dir)
-      .repartitionByRange(nFiles, col("l_partkey"))
-      .sortWithinPartitions("l_partkey")
-      .write.mode("overwrite")
-      .option("parquet.block.size", RowGroupBytes.toLong)
-      .parquet(out)
 
   /** The self-selected 2-D band: the middle ~10% of each key domain,
     * bounds derived with integer arithmetic from the key maxima so the
@@ -164,7 +153,7 @@ object Layout {
   /** The registered Hilbert query — same write-then-band shape and the
     * SAME oracle SQL as [[zorderQuery]] (layout independence is the
     * pin; the pruning DIFFERENCE between the curves is measured, not
-    * oracled — tools/MeasureZOrder, BASELINE.md r12). */
+    * oracled — BASELINE.md r12). */
   def hilbertQuery(s: SparkSession, dir: String): DataFrame = {
     val out = s"$sessionLayoutDir/lineitem_h"
     writeHilbert(s, dir, out)

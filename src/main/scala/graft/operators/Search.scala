@@ -419,7 +419,7 @@ object Search {
     * BATCH size, not the corpus — the asymptotic win is the settled
     * corpus's tokenize + window + aggregate never being re-paid, the
     * same argument as [[Dedup.incrementalPairsArtifact]] and
-    * Graph.knnIncrBuild. */
+    * [[Graph.knnIncrMaintained]]. */
   def incrementalIndex(s: SparkSession, dir: String, cap: Int = 64,
                        mod: Int = 10): DataFrame = {
     val settled = s.table(settledIndexArtifact(s, dir, cap, mod))

@@ -167,7 +167,7 @@ object Similarity {
     * truth: OperatorsSpec pins this output EQUAL to [[hardNegatives]]
     * on the test corpora.
     *
-    * Default coverage is MEASURED, not assumed (tools/MeasureHardNeg):
+    * Default coverage is MEASURED, not assumed (BASELINE.md r10):
     * this corpus's near-uniform directions are the worst case for a
     * space partitioner, and mining is head-sensitive (pos = rank 1,
     * negs = the first `nNeg` under the near-dup ceiling), so partial
@@ -266,7 +266,7 @@ object Similarity {
     * then pick the fewest SAMPLED raw band collisions (the same
     * hyperplanes the operator uses, signatures computed driver-side
     * over the sample; the sampling rate scales every geometry's count
-    * ~p² so the argmin is rate-invariant — the prefixOrderingStats
+    * ~p² so the argmin is rate-invariant — the prefixOrderingStatsOn
     * argument). `targetRecall` defaults to 0.85 — the ANN family's
     * OWN gate bound (GRAFT_ANN_RECALL_BOUND), not a free constant:
     * the decision derives the cheapest geometry whose closed-form
@@ -520,9 +520,9 @@ object Similarity {
     // below the probe join re-evaluates downstream (array_position +
     // array_max alone reference it twice), so fresh-build serve time
     // grew ∝ nlist regardless of coverage (measured 19.6 s at
-    // nlist=64/n=20k where nlist=8 read 0.65 s — the IvfCostModel
-    // sweep). This relation IS the stored index table; at 100 TB it is
-    // the persisted artifact, never a per-query recompute.
+    // nlist=64/n=20k where nlist=8 read 0.65 s — the r14 IVF cost-model
+    // sweep, BASELINE.md). This relation IS the stored index table; at
+    // 100 TB it is the persisted artifact, never a per-query recompute.
     val assigned = all
       .withColumn("cd", centDots)
       .withColumn("list_id", expr("array_position(cd, array_max(cd)) - 1"))
@@ -556,8 +556,8 @@ object Similarity {
     *   - DISPATCH: brute force when the index cannot pay for itself on
     *     a FRESH one-shot batch, by the cost model itself. Per corpus
     *     row, fresh IVF costs `nlist` dots (the assignment pass —
-    *     measured ∝ N·nlist, tools/IvfCostModel: 0.7/6.2/11.0 s at
-    *     nlist 32/64/128 on n=20k) plus `Q·nprobe/nlist` probed-scan
+    *     measured ∝ N·nlist, BASELINE.md r14 IVF cost model:
+    *     0.7/6.2/11.0 s at nlist 32/64/128 on n=20k) plus `Q·nprobe/nlist` probed-scan
     *     dots, vs brute's `Q` — both ∝ N, so the decision ratio
     *     `(nlist + Q·nprobe/nlist) / Q` is corpus-size-INDEPENDENT.
     *     Brute wins structurally when Q < nlist (a batch smaller than
@@ -575,7 +575,7 @@ object Similarity {
     *     decision and always indexes; this planner prices the fresh
     *     path it dispatches.
     *   - `nlist` — the √N-class point (largest power of two ≤ √n,
-    *     clamped to [8, 65536]): the IvfCostModel rule — it tracks
+    *     clamped to [8, 65536]): the √N rule — it tracks
     *     natural cluster-granularity growth (n=20k: √N = 141 ≈ the 128
     *     planted clusters, recall 1.0 at nprobe=1), keeps served
     *     per-query work at N/√N·nprobe rows, and keeps the build one
@@ -590,14 +590,14 @@ object Similarity {
     *     the same recall-tracks-coverage law). At 100 TB the sample
     *     stays `sampleCap` rows, so the decision cost is
     *     corpus-size-independent: one count, one bounded TakeOrdered
-    *     collect, driver arithmetic — the prefixOrderingStats
+    *     collect, driver arithmetic — the prefixOrderingStatsOn
     *     precedent. */
   final case class AutoAnnPlan(n: Long, decision: String, nlist: Int,
                                nprobe: Int,
                                cents: Array[Seq[Double]])
 
-  /** The IvfCostModel √N rule: largest power of two ≤ √n, clamped to
-    * [8, 65536]. */
+  /** The √N rule (BASELINE.md r14 IVF cost model): largest power of two
+    * ≤ √n, clamped to [8, 65536]. */
   private[graft] def sqrtNlist(n: Long): Int = {
     val r = math.sqrt(n.toDouble)
     var p = 8
@@ -688,8 +688,8 @@ object Similarity {
     * [[annAutoPlanOn]] there is no brute dispatch — the serve regime
     * always indexes (a persisted artifact exists precisely because the
     * corpus outlives query batches); what the planner decides is WITH
-    * WHAT granularity: nlist at the √N point ([[sqrtNlist]] — the
-    * IvfCostModel rule), nprobe calibrated on the training sample to
+    * WHAT granularity: nlist at the √N point ([[sqrtNlist]]), nprobe
+    * calibrated on the training sample to
     * `targetRecall`. A corpus of only zero-norm vectors calibrates to
     * full probe (nprobe = nlist) — every cosine is degenerate there and
     * coverage is the only honest answer. Memoized per `keyTag` (the
@@ -879,7 +879,7 @@ object Similarity {
     * Residual buys accuracy when nlist is large enough that cells are
     * tight; at nlist=16 on THIS near-uniform corpus the residual spread
     * is nearly the vector spread, and raw codes keep the encode cheaper
-    * (tools/MeasureRecall sweeps both at nlist=16/64 — BASELINE.md).
+    * (BASELINE.md r7 sweeps both at nlist=16/64).
     * The re-rank stage absorbs the difference (measured recall at
     * sf0.01: 0.96 at nprobe=12/rerank=64, raw). */
   def ivfPqTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,

@@ -512,12 +512,6 @@ object Tokenizer {
                vocabCap: Int = 4096): DataFrame =
     statsUnder(s, dir, learnMerges(s, dir, nMerges, vocabCap))
 
-  /** [[bpeStats]] under the DISTRIBUTED trainer's table — real merge
-    * depth over the uncapped vocabulary; the apply side is unchanged. */
-  def bpeStatsDistributed(s: SparkSession, dir: String,
-                          nMerges: Int = 256): DataFrame =
-    statsUnder(s, dir, learnMergesDistributed(s, dir, nMerges))
-
   /** [[bpeStats]] under the INCREMENTAL-DELTA trainer's table — the
     * production-depth trainer; merge sequence spec-pinned equal to the
     * re-segmenting trainers, so the stats are identical and the row

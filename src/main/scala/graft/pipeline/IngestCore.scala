@@ -177,10 +177,7 @@ object IngestCore {
     * stream's epochs in order: the first replaces earlier output when
     * `overwrite`, the rest append their (possibly differently shaped)
     * files alongside, which parquet readers merge by footer schema
-    * (§1.4). `inline_validation` validates inside the write instead: one
-    * pass less over the records, but a violation aborts mid-write and
-    * partial output can exist (the reference has the same hazard across
-    * its flushed batches, §3.2). */
+    * (§1.4). */
   def writeEpochs(spark: SparkSession, records: DataFrame, epochs: Seq[Epoch],
                   config: TargetConfig, outputUri: String, timestamp: String,
                   overwrite: Boolean): Unit = {
@@ -199,34 +196,28 @@ object IngestCore {
     val (codec, _) = config.compressionCodecAndExt
     val ready = slices.zip(schemas)
     concurrently(spark, epochs.map(_.stream).distinct.map(s => () =>
-      ready.filter(_._1._1.stream == s).zipWithIndex.foreach { case (((e, recs), schema), i) =>
-        var writer = flatten(recs, e, schema, config, timestamp).write
+      ready.filter(_._1._1.stream == s).zipWithIndex.foreach { case (((_, recs), schema), i) =>
+        var writer = flatten(recs, schema, config, timestamp).write
           .mode(if (overwrite && i == 0) "overwrite" else "append").option("compression", codec)
         if (config.fileSize > 0) writer = writer.option("maxRecordsPerFile", config.fileSize)
         writer.parquet(outputPath(outputUri, config, s, timestamp))
       })).foreach(_.get)
   }
 
-  private def failure(e: Epoch) = s"Record validation failed for stream ${e.stream}: "
-
-  /** Two-pass strict validation of one epoch: raise its first violation. */
+  /** Strict validation of one epoch: raise its first violation. */
   private def validate(recs: DataFrame, e: Epoch, declared: StructType,
                        config: TargetConfig): Unit =
-    if (config.strictValidation && !config.inlineValidation)
+    if (config.strictValidation)
       Constraints.firstViolation(
         recs.select(col("idx"), col("rec"), from_json(col("rec"), declared).as("r")),
         Constraints.compile(e.schema.schema), col("r"), col("rec"))
-        .foreach(v => throw new IllegalArgumentException(failure(e) + v))
+        .foreach(v => throw new IllegalArgumentException(
+          s"Record validation failed for stream ${e.stream}: $v"))
 
   /** One epoch's records as the flat rows to write. */
-  private def flatten(recs: DataFrame, e: Epoch, schema: StructType,
+  private def flatten(recs: DataFrame, schema: StructType,
                       config: TargetConfig, timestamp: String): DataFrame = {
-    var parsed = recs.select(col("rec"), col("time_extracted"), from_json(col("rec"), schema).as("r"))
-    if (config.strictValidation && config.inlineValidation) {
-      val v = Constraints.violation(Constraints.compile(e.schema.schema), col("r"), col("rec"))
-      parsed = parsed.filter(when(v.isNotNull,
-        raise_error(concat(lit(failure(e)), v)).cast("boolean")).otherwise(lit(true)))
-    }
+    val parsed = recs.select(col("rec"), col("time_extracted"), from_json(col("rec"), schema).as("r"))
     // L1 metadata columns (reference legacy __init__.py:85-88):
     // _sdc_extracted_at from the envelope, _sdc_batched_at = batch time.
     val metaCols: Seq[Column] =

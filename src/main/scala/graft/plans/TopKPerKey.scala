@@ -34,7 +34,7 @@ import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge}
   * window spelling has for a deterministic answer. Rank attachment, if
   * wanted, is a window over the k·keys survivors only.
   *
-  * ADJUDICATED HONESTLY (tools/ProfileTopK, sf0.1 orders, 150k rows,
+  * ADJUDICATED HONESTLY (BASELINE.md r8, sf0.1 orders, 150k rows,
   * top-3 per customer): Spark 3.5+ already ships the shuffle half of
   * this idea as WindowGroupLimit — a `rank <= k` filter over a window
   * is rewritten into a partial group-limit BELOW the exchange, and the

@@ -250,7 +250,8 @@ object StreamingAnalytics {
     * queries pay per-microbatch state-store commit I/O PER SHUFFLE
     * PARTITION — a stream-stream join keeps four stores per partition,
     * so a 32-partition session spends ~3 s/batch on store commits alone
-    * for kilobyte-scale state (measured, tools/ProfileStream). Shard
+    * for kilobyte-scale state (measured in r9; BASELINE.md r9 records
+    * the per-microbatch commit overhead at kilobyte state). Shard
     * count should track state VOLUME, not core count: the bounded spool
     * corpora need few shards; a production deployment with millions of
     * live keys raises the session conf instead. The spooled runners set
@@ -1063,21 +1064,6 @@ object StreamingAnalytics {
     * Output per closed window: count, trailing sum, how many trailing
     * windows existed, and the spike flag (first three windows can never
     * flag — n_trail < 3). */
-  /** The STREAMING half of [[anomalySpooled]] — the watermarked tumbling
-    * count aggregate whose state is the live per-(window, type) counter
-    * set. Split out so [[graft.tools.StreamScaleProbe]] can drive it
-    * with chunked feeds and read the state-store curves (the trailing
-    * spike comparison is batch post-processing over the FINALIZED
-    * window table — volume-collapsed, no stream state). */
-  private[graft] def anomalyWindowCounts(stream: DataFrame,
-      windowLen: String = "1 hour",
-      lateness: String = "10 minutes"): DataFrame =
-    stream.withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"),
-        col("event_type"), col("n"))
-
   def anomalySpooled(s: SparkSession, dir: String,
                      windowLen: String = "1 hour",
                      lateness: String = "10 minutes"): DataFrame = {
@@ -1103,7 +1089,15 @@ object StreamingAnalytics {
     val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
     sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
     withCollapsedFlush(s, stream) {
-      val agg = anomalyWindowCounts(stream, windowLen, lateness)
+      // The streaming half: a watermarked tumbling count whose state is
+      // the live per-(window, type) counter set. The trailing spike
+      // comparison below is batch post-processing over the FINALIZED
+      // window table — volume-collapsed, no stream state.
+      val agg = stream.withWatermark("ts", lateness)
+        .groupBy(window(col("ts"), windowLen), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("window_start"),
+          col("event_type"), col("n"))
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
       try q.processAllAvailable() finally q.stop()

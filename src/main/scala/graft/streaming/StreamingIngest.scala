@@ -160,6 +160,21 @@ final class StreamingIngest(
         .start())
 }
 
+object StreamingIngest {
+  /** Wait for the tap to close its pipe (`eof`) or for `query` to die,
+    * polling every `pollMs`. At EOF, drain what arrived and stop the
+    * query. On death, rethrow the query's error at once: waiting on EOF
+    * alone would hang when the query fails mid-pipe while the tap keeps
+    * producing. */
+  def drainAtEof(query: StreamingQuery, eof: => Boolean, pollMs: Long): Unit = {
+    while (!eof && query.isActive) query.awaitTermination(pollMs)
+    if (query.isActive) {
+      query.processAllAvailable()
+      query.stop()
+    } else query.awaitTermination()
+  }
+}
+
 private object Bookmarks {
   /** Bookmark emission per committed batch (reference emits once at EOF;
     * a streaming target emits after every commit). */

@@ -1,12 +1,11 @@
 package graft.tools
 
 /** Shared fresh-child-JVM runner for the measurement harnesses
-  * ([[graft.Bench]] adjudication, [[ScaleProbe]], [[StreamScaleProbe]]).
+  * ([[graft.Bench]] adjudication, [[ScaleProbe]]).
   * One implementation of the spawn/drain/timeout protocol so a fix in
   * the protocol (e.g. the r11 hung-child deadlock, where stdout was
   * drained to EOF on the calling thread BEFORE waitFor, so a hung child
-  * blocked forever and the timeout never fired) lands everywhere at
-  * once instead of drifting across three hand-rolled copies.
+  * blocked forever and the timeout never fired) lands in both at once.
   *
   * Protocol: child gets this JVM's classpath and its `--add-opens` /
   * `-Xmx` / `-XX` / `-D` flags; both pipes drain on daemon threads;

@@ -1,9 +1,8 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Shared-vocabulary Zipfian stress corpus + A/B runner for the
+/** Shared-vocabulary Zipfian stress corpus for the
   * containment join (judge r13 brief #3). The Caesar scale corpora are
   * content-DISJOINT by construction (per-copy alphabet bijections), so
   * two costs of [[graft.operators.Dedup.containmentPairsUnsorted]] were
@@ -31,25 +30,17 @@ import org.apache.spark.sql.functions._
   *     the Caesar model's "more data, new language each time" is the
   *     easy regime.
   *
-  * Run:   sbt "runMain graft.tools.ContainZipf"
-  * Env:   SPARK_GRAFT_ZIPF_N (base docs, default 2000),
-  *        SPARK_GRAFT_ZIPF_V (vocab, default 50000),
-  *        SPARK_GRAFT_ZIPF_POINTS (multipliers, default "1,10"),
-  *        SPARK_GRAFT_ZIPF_OPS (default carry,rejoin cells).
-  * Cells run in fresh child JVMs ([[ScaleProbe.spawnCell]]) — same
-  * honesty protocol as the three-point probe. */
+  * [[ScaleProbe]] and the operator specs write it with [[buildZipf]]. */
 object ContainZipf {
 
-  /** Build the corpus at `mult`× the base doc count under `out`
+  /** Build the corpus of `nDocs` base documents under `out`
     * (documents.parquet only — the containment join reads nothing
     * else). Idempotent per dir, SELF-VERIFYING (judge r14 What's-wrong
     * #1 / ADVICE r13 #2): an existing corpus is reused only when its
     * row count matches nDocs + nDocs/10 (base docs + planted partners),
-    * so a rerun with a different SPARK_GRAFT_ZIPF_N can never silently
-    * time A/B cells against a stale corpus. A vocab-only change at the
-    * same nDocs is count-invisible, which is why main() ALSO encodes
-    * (n, vocab) into the dir name — this check is the belt to that
-    * suspender for direct callers. */
+    * so a rerun with a different doc count never silently reads a
+    * stale corpus. A vocab-only change at the same nDocs is
+    * count-invisible: give each vocab its own dir. */
   def buildZipf(s: SparkSession, out: String, nDocs: Long, vocab: Int,
                 stopEvery: Int = 0): Unit = {
     val outDir = java.nio.file.Paths.get(out)
@@ -68,66 +59,5 @@ object ContainZipf {
     // measure.
     graft.operators.Dedup.zipfDocs(s, nDocs, vocab, stopEvery)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
-  }
-
-  def main(args: Array[String]): Unit = {
-    val n = sys.env.getOrElse("SPARK_GRAFT_ZIPF_N", "2000").toLong
-    val vocab = sys.env.getOrElse("SPARK_GRAFT_ZIPF_V", "50000").toInt
-    // boilerplate-doc regime (df-cap cells): every STOP-th base doc
-    // draws from the top-100 words only
-    val stop = sys.env.getOrElse("SPARK_GRAFT_ZIPF_STOP", "0").toInt
-    val points = sys.env.getOrElse("SPARK_GRAFT_ZIPF_POINTS", "1,10")
-      .split(",").map(_.trim.toInt).toSeq
-    val ops = sys.env.getOrElse("SPARK_GRAFT_ZIPF_OPS",
-      "dedup_contain_carry,dedup_contain_rejoin").split(",").map(_.trim).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val dirs = points.map { m =>
-      // dir name encodes n and vocab, not just the multiplier: reruns
-      // with a different SPARK_GRAFT_ZIPF_N/V must not silently reuse a
-      // stale corpus (the idempotence check is dir-existence only)
-      val out = (if (n == 2000L && vocab == 50000) s"target/zipf$m"
-                 else s"target/zipf${m}_n${n}_v$vocab") +
-        (if (stop > 0) s"_s$stop" else "")
-      buildZipf(spark, out, n * m, vocab, stop)
-      // corpus shape telemetry: docs + candidate-stream volume at this
-      // scale (Σ over join tokens of df_prefA·df — the term the Caesar
-      // corpora never stress); plain SQL, no operator code
-      m -> out
-    }
-    dirs.foreach { case (m, d) =>
-      val docs = spark.read.parquet(s"$d/documents.parquet").count()
-      System.err.println(s"[zipf] ${m}x: $docs docs at $d")
-    }
-    val rows = ops.map { op =>
-      val ts = dirs.map { case (m, d) => m -> ScaleProbe.spawnCell(op, d) }
-      val legs = ts.sliding(2).collect { case Seq((ka, ta), (kb, tb)) =>
-        math.log(tb / ta) / math.log(kb.toDouble / ka) }.toSeq
-      System.err.println(f"[zipf] $op%-22s " +
-        ts.map { case (k, t) => f"${k}x $t%7.2f s" }.mkString("  ") +
-        "   exp " + legs.map(e => f"$e%5.2f").mkString(" -> "))
-      (op, ts, legs)
-    }
-    def ms(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val json = rows.map { case (o, ts, legs) =>
-      s""""$o":{"sec":[${ts.map(t => ms(t._2)).mkString(",")}],""" +
-        s""""exp":[${legs.map(ms).mkString(",")}]}""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"zipf_contain","n":$n,"vocab":$vocab,""" +
-      s""""points":[${points.mkString(",")}],"rows":$json}""")
-    println("| spelling | " + points.map(p => s"${p}x (s)").mkString(" | ") +
-      " | " + points.sliding(2).map { case Seq(a, b) => s"exp $a->$b" }
-        .mkString(" | ") + " |")
-    rows.foreach { case (o, ts, legs) =>
-      println(s"| $o | " + ts.map(t => f"${t._2}%.2f").mkString(" | ") +
-        " | " + legs.map(e => f"$e%.2f").mkString(" | ") + " |") }
-    spark.stop()
   }
 }

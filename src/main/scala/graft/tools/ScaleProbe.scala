@@ -229,8 +229,8 @@ object ScaleProbe {
     * inflation pathology reproduced inside the probe itself. Exponents
     * fitted across scales are only honest when every cell pays the same
     * fixed costs, so the standalone mode gives each cell its own JVM. */
-  private[tools] def spawnCell(op: String, dir: String,
-                               timeoutSec: Long = 1200): Double =
+  private def spawnCell(op: String, dir: String,
+                        timeoutSec: Long = 1200): Double =
     ChildJvm.runForLine("graft.tools.ScaleProbe",
       env = Map("SPARK_GRAFT_SCALE_CELL" -> op, "SPARK_GRAFT_SF_DIR" -> dir),
       dropEnv = Seq("SPARK_GRAFT_SCALE_STANDALONE"),

@@ -30,13 +30,12 @@ class ConfigSpec extends AnyFunSuite {
     val c = TargetConfig.fromMap(Map(
       "temp_dir" -> "/tmp/stage",
       "strict_validation" -> "false",
-      "inline_validation" -> "true",
       "infer_extra_fields" -> "false"))
     assert(c.tempDir.contains("/tmp/stage"))
-    assert(!c.strictValidation && c.inlineValidation && !c.inferExtraFields)
+    assert(!c.strictValidation && !c.inferExtraFields)
     // defaults when absent
     val d = TargetConfig.fromMap(Map.empty)
-    assert(d.tempDir.isEmpty && d.strictValidation && !d.inlineValidation && d.inferExtraFields)
+    assert(d.tempDir.isEmpty && d.strictValidation && d.inferExtraFields)
   }
   test("compression extension map incl. unknown->none (reference __init__.py:190-204)") {
     assert(TargetConfig(compression = Some("gzip")).compressionCodecAndExt == ("gzip", ".gz"))

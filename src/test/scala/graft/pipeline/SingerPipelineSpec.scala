@@ -140,26 +140,6 @@ class SingerPipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("v_str") && e.getMessage.contains("too long"))
   }
 
-  test("inline validation aborts on violation during the write pass") {
-    val lines = Seq(
-      schemaMsg("alpha"),
-      """{"type": "RECORD", "stream": "alpha", "record": {"pk": 1, "v_str": "this string is far too long for maxLength", "v_int": 1}}""")
-    val e = intercept[Exception] {
-      SingerPipeline.run(spark, writeCorpus(lines), outDir(),
-        TargetConfig(inlineValidation = true))
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(m => m.contains("v_str") && m.contains("too long")))
-  }
-
-  test("inline validation passes clean data through unchanged") {
-    val out = outDir()
-    SingerPipeline.run(spark, writeCorpus(corpus), out,
-      TargetConfig(inlineValidation = true), clock = () => "TI")
-    assert(spark.read.parquet(s"$out/beta-TI.parquet").count() == 2)
-  }
-
   test("type violation detected (string where integer declared)") {
     val lines = Seq(
       schemaMsg("alpha"),

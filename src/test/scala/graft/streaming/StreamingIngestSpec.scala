@@ -1,6 +1,12 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryException
 import graft.SparkSpec
 import graft.model.TargetConfig
 
@@ -294,5 +300,41 @@ class StreamingIngestSpec extends SparkSpec {
     val e = intercept[RuntimeException](ingest.processBatch(
       lines(schemaLine +: bad.flatMap(b => Seq(rec("s1", b.length), b)): _*), 0))
     assert(e.getMessage == "Unable to parse:\nz not json, line 1")
+  }
+
+  test("drainAtEof: at EOF it drains every pending row, then stops the query") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Int]
+    val seen = new ConcurrentLinkedQueue[Int]()
+    val q = input.toDF().writeStream
+      .foreachBatch((df: DataFrame, _: Long) => df.collect().foreach(r => seen.add(r.getInt(0))))
+      .start()
+    try {
+      // The tap's last lines land together with EOF, on the third poll.
+      var polls = 0
+      def eof = { polls += 1; if (polls == 3) input.addData(1 to 100); polls == 3 }
+      StreamingIngest.drainAtEof(q, eof, pollMs = 10)
+      assert(polls == 3) // waited for EOF, then read the flag no more
+      assert(!q.isActive && seen.size == 100)
+    } finally q.stop()
+  }
+
+  test("drainAtEof: a query that dies before EOF raises its error without waiting") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Int]
+    val q = input.toDF().writeStream
+      .foreachBatch((_: DataFrame, _: Long) => throw new IllegalStateException("sink down"))
+      .start()
+    try {
+      input.addData(1)
+      // EOF never comes: only the query's death can end the wait.
+      val drain = Future(StreamingIngest.drainAtEof(q, eof = false, pollMs = 10))(ExecutionContext.global)
+      val e = intercept[StreamingQueryException](Await.result(drain, 2.minutes))
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+      assert(messages(e).exists(_.contains("sink down")))
+    } finally q.stop()
   }
 }
