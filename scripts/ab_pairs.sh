@@ -1,0 +1,102 @@
+#!/usr/bin/env bash
+# A/B pairs of one benchmark workload: a parent revision against HEAD.
+#
+#   scripts/ab_pairs.sh <parent-rev> <workload> <seed>...
+#
+# Exports the committed files of <parent-rev> and of HEAD into two fresh
+# directories under ${TMPDIR:-/tmp} (git archive: the tree a benchmark
+# checkout sees, nothing uncommitted, no worktree registered in the repo),
+# then for every seed runs
+#
+#   python3 perfbench/run.py --workload W --seed S --seconds 10
+#
+# once in each tree, alternating which side goes first from seed to seed.
+# Each tree builds itself with sbt on its first run (offline, like the
+# benchmark). Prints one row per seed, then the median and IQR of
+# latency_s and setup_s per side and how many seeds HEAD won on latency_s.
+# Per-run logs and the result lines stay in the printed work directory.
+set -euo pipefail
+
+if [ $# -lt 3 ]; then
+  echo "usage: $0 <parent-rev> <workload> <seed>..." >&2
+  exit 2
+fi
+parent_rev=$1 workload=$2
+shift 2
+
+repo=$(git rev-parse --show-toplevel)
+work=$(mktemp -d "${TMPDIR:-/tmp}/ab_pairs.XXXXXX")
+for side in parent head; do
+  rev=$parent_rev
+  [ "$side" = head ] && rev=HEAD
+  mkdir -p "$work/$side"
+  git -C "$repo" archive "$(git -C "$repo" rev-parse --verify "$rev^{commit}")" | tar -x -C "$work/$side"
+done
+echo "# work directory: $work (parent $(git -C "$repo" rev-parse --short "$parent_rev"), head $(git -C "$repo" rev-parse --short HEAD))" >&2
+
+run() { # side seed -> appends "side seed json" to results
+  local side=$1 seed=$2 out
+  out="$work/$side.$seed.log"
+  (cd "$work/$side" && python3 perfbench/run.py --workload "$workload" --seed "$seed" --seconds 10) \
+    > "$out" 2>&1 || true
+  printf '%s %s %s\n' "$side" "$seed" "$(tail -n 1 "$out")" >> "$work/results"
+}
+
+i=0
+for seed in "$@"; do
+  if [ $((i % 2)) -eq 0 ]; then order="parent head"; else order="head parent"; fi
+  for side in $order; do
+    echo "# seed $seed: $side" >&2
+    run "$side" "$seed"
+  done
+  echo "$seed ${order%% *}" >> "$work/first"
+  i=$((i + 1))
+done
+
+python3 - "$work" "$workload" <<'EOF'
+import json, statistics, sys
+
+work, workload = sys.argv[1], sys.argv[2]
+first = dict(l.split() for l in open(work + "/first"))
+res = {}
+for line in open(work + "/results"):
+    side, seed, payload = line.rstrip("\n").split(" ", 2)
+    try:
+        res[(side, seed)] = json.loads(payload)
+    except ValueError:
+        res[(side, seed)] = {"correct": False, "metrics": {}}
+
+def metric(side, seed, name):
+    m = res[(side, seed)].get("metrics", {}).get(name)
+    return m.get("value") if isinstance(m, dict) else m
+
+def fmt(v):
+    return "-" if v is None else "%.3f" % v
+
+print("workload %s" % workload)
+print("%-6s %-6s %10s %10s %10s %10s %8s" % (
+    "seed", "first", "lat_par", "lat_head", "set_par", "set_head", "correct"))
+wins = pairs = 0
+for seed in first:
+    lp, lh = metric("parent", seed, "latency_s"), metric("head", seed, "latency_s")
+    ok = all(res[(s, seed)].get("correct") is True and not res[(s, seed)].get("failed")
+             for s in ("parent", "head"))
+    if lp is not None and lh is not None:
+        pairs += 1
+        wins += lh < lp
+    print("%-6s %-6s %10s %10s %10s %10s %8s" % (
+        seed, first[seed], fmt(lp), fmt(lh), fmt(metric("parent", seed, "setup_s")),
+        fmt(metric("head", seed, "setup_s")), "yes" if ok else "NO"))
+
+def summary(side, name):
+    xs = sorted(v for v in (metric(side, s, name) for s in first) if v is not None)
+    if not xs:
+        return "-"
+    q = statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
+    return "median %.3f IQR %.3f [%.3f, %.3f] n=%d" % (statistics.median(xs), q[2] - q[0], q[0], q[2], len(xs))
+
+for name in ("latency_s", "setup_s"):
+    for side in ("parent", "head"):
+        print("%-9s %-6s %s" % (name, side, summary(side, name)))
+print("head wins on latency_s: %d of %d pairs" % (wins, pairs))
+EOF

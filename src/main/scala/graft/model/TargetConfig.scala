@@ -17,15 +17,15 @@ package graft.model
   *                        (L1); when false, `_sdc_*` record fields still pass through
   *                        (active-code parity, FIXTURES.md §1)
   * @param inferExtraFields record fields absent from the declared schema survive to
-  *                        the output (reference §1.4 union-schema behavior). Costs
-  *                        one extra json-inference pass over the records per epoch
-  *                        — and per micro-batch on the streaming path, where
-  *                        latency-sensitive deployments should set
-  *                        infer_extra_fields=false or bound it with inferSampleRows
-  * @param inferSampleRows bound the §1.4 inference scan to the first N records per
-  *                        epoch (> 0); fields first appearing after row N are not
-  *                        passed through. <= 0 (default) scans all records — exact
-  *                        reference parity
+  *                        the output (reference §1.4 union-schema behavior). The
+  *                        inference rides in the one phase-1 query of each run or
+  *                        micro-batch, beside validation: it adds no query, but
+  *                        parses every record once more
+  * @param inferSampleRows bound the §1.4 inference to the first N records by line
+  *                        order per epoch (> 0): later records are not parsed for
+  *                        it, and fields first appearing after record N are not
+  *                        passed through. <= 0 (default) infers from all records —
+  *                        exact reference parity
   * @param strictValidation abort on the first JSON-Schema violation (reference P5)
   * @param tempDir         local spool/staging directory (L7, reference
   *                        __init__.py:46-50,91): batch stdin spool files, stream-mode

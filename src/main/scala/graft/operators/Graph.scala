@@ -74,15 +74,24 @@ object Graph {
     * edge sets bit-identical at every swept nlist (the build is exact
     * by construction; nlist only moves cost). [[Similarity.sqrtNlist]]
     * is the shared power-of-two rule; the 16 floor keeps tiny corpora
-    * on the long-pinned geometry. One memoized count() per corpus dir
-    * (immutable snapshots — the Dedup.choosePrefixPlan convention). */
+    * on the long-pinned geometry. One memoized count() per corpus
+    * snapshot ([[corpusCount]]). */
   private[graft] def autoNlist(n: Long): Int =
     math.max(16, Similarity.sqrtNlist(n))
 
   private[this] val corpusCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def corpusCount(s: SparkSession, dir: String): Long =
-    corpusCountMemo.computeIfAbsent(dir, _ => Similarity.corpus(s, dir).count())
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, Long, Long)]), java.lang.Long]()
+
+  /** The corpus size at `dir`, counted once per snapshot: the memo key
+    * holds the embeddings files' names, sizes and modification times, so
+    * a corpus rewritten in place is counted again. */
+  private[graft] def corpusCount(s: SparkSession, dir: String): Long = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
+    val files = path.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(path, true)
+    val listing = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+    corpusCountMemo.computeIfAbsent((dir, listing), _ => Similarity.corpus(s, dir).count())
+  }
 
   /** Spherical triangle-inequality bound: an upper bound on cos(q, x)
     * for any member x of a list whose query-centroid cosine is `qc` and

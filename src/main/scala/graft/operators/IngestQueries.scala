@@ -144,7 +144,8 @@ object IngestQueries {
     *
     * Scale shape: stdin is inherently serial (the reference's single
     * reader loop), so the pipe feed is the honest 1-partition ingress;
-    * parse/validate/flatten/write still fan out per micro-batch. */
+    * parse/validate/flatten/write spread over as many tasks as AQE sizes
+    * each micro-batch's rebalance to. */
   def liveIngestRoundTrip(s: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val base = sys.props("java.io.tmpdir") + s"/graft_singer_${CorpusVersion}_$tag"

@@ -5,11 +5,12 @@ import scala.util.Try
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import graft.model._
 import graft.schema.JsonSchemaConverter
 import graft.functions.FlattenColumns
-import graft.validate.Constraints
+import graft.validate.{Constraints, RecordValidator}
 
 /** The ingest core both delivery shapes run: [[SingerPipeline.run]] once
   * over a whole input, [[graft.streaming.StreamingIngest]] once per
@@ -22,9 +23,10 @@ import graft.validate.Constraints
   *     SCHEMA/STATE messages in file order, and each stream's RECORD
   *     extent for the order check (P4) and the state fold (P8). RECORD
   *     lines never reach the driver.
-  *  3. [[writeEpochs]] validates every (stream, schema epoch)
-  *     concurrently, and writes only when all of them passed:
-  *     concurrently across streams, in order within one.
+  *  3. [[writeEpochs]] checks every (stream, schema epoch) in ONE
+  *     phase-1 query (validation and inference), and writes only when
+  *     all of them passed: concurrently across streams, in order within
+  *     one.
   */
 object IngestCore {
 
@@ -66,11 +68,15 @@ object IngestCore {
     * The split list comes from the scan's lineage (no job); the rank map
     * ships with the tasks, one entry per split.
     *
-    * `idx` is projected on the scan partitions. The lines then fan out to
-    * `defaultParallelism` when the scan has fewer partitions: the work per
-    * line (from_json, validation, flatten, parquet encode) far outweighs
-    * the scan, and a tap's output is often one file, one split. Inputs
-    * with enough splits are never shuffled. */
+    * `idx` is projected on the scan partitions. A scan with fewer
+    * partitions than `defaultParallelism` then gets a REBALANCE hint: the
+    * work per line (from_json, validation, inference, flatten, parquet
+    * encode) far outweighs the scan, and a tap's output is often one
+    * file, one split. AQE sizes the rebalanced partitions from the
+    * shuffled bytes, so a sub-MB micro-batch runs every later job as one
+    * task and lands one file per stream, while a multi-MB input still
+    * spreads over `defaultParallelism`. Inputs with enough splits are
+    * never shuffled. */
   def envelope(lines: DataFrame): DataFrame = {
     val parallelism = lines.sparkSession.sparkContext.defaultParallelism
     val (partitions, splits) = DatasetBridge.scanLayout(lines)
@@ -85,7 +91,7 @@ object IngestCore {
           .bitwiseOR(rowId.bitwiseAND(lit((1L << 33) - 1)))
       }
     val indexed = lines.select(col("value"), idx.as("idx"))
-    val fanned = if (partitions < parallelism) indexed.repartition(parallelism) else indexed
+    val fanned = if (partitions < parallelism) indexed.hint("rebalance") else indexed
     fanned.select(col("idx"), col("value"),
       get_json_object(col("value"), "$.type").as("mtype"),
       get_json_object(col("value"), "$.stream").as("stream"))
@@ -167,52 +173,102 @@ object IngestCore {
     if (config.streamsInSeparateFolder) s"$outputUri/$stream"
     else s"$outputUri/${Naming.outputKey(config, stream, timestamp)}"
 
-  /** Validate every epoch, then write them all. Phase 1 runs each
-    * epoch's inference (when `infer_extra_fields`) and its validation,
-    * all concurrently. Validation parses with the declared schema, which
-    * holds every field a constraint names. Phase 2 starts only if every
-    * epoch passed, so a bad record anywhere writes nothing; of several
-    * failures the first in (stream, epoch) order is raised, inference
-    * before validation. Phase 2 writes streams concurrently, each
-    * stream's epochs in order: the first replaces earlier output when
-    * `overwrite`, the rest append their (possibly differently shaped)
-    * files alongside, which parquet readers merge by footer schema
-    * (§1.4). */
+  /** Validate every epoch, then write them all. Phase 1 is ONE grouped
+    * query over the run's records ([[phaseOne]]): per epoch, the
+    * lowest-`idx` violation and the inferred record schema. Phase 2
+    * starts only if every epoch passed, so a bad record anywhere writes
+    * nothing; of several failures the first in (stream, epoch) order is
+    * raised, inference before validation. Phase 2 writes streams
+    * concurrently, each stream's epochs in order: the first replaces
+    * earlier output when `overwrite`, the rest append their (possibly
+    * differently shaped) files alongside, which parquet readers merge by
+    * footer schema (§1.4). */
   def writeEpochs(spark: SparkSession, records: DataFrame, epochs: Seq[Epoch],
                   config: TargetConfig, outputUri: String, timestamp: String,
                   overwrite: Boolean): Unit = {
-    val slices = epochs.map(e => e -> records.filter(col("stream") === e.stream &&
-      col("idx") > e.from && col("idx") < e.until))
-    // Two tasks per epoch, inference then validation, both yielding the
-    // schema to write with; `.get` raises the first failure in that order.
-    val schemas = concurrently(spark, slices.flatMap { case (e, recs) =>
-      val declared = JsonSchemaConverter.toStructType(e.schema.schema, config.decimalForMultipleOf)
-      Seq(() => // Union-schema passthrough (§1.4): record-only fields survive.
-            if (!config.inferExtraFields) declared
-            else JsonSchemaConverter.mergeSchemas(declared,
-              JsonSchemaConverter.inferExtra(spark, recs, config.inferSampleRows)),
-          () => { validate(recs, e, declared, config); declared })
-    }).map(_.get).grouped(2).map(_.head).toSeq
+    val declared = epochs.map(e =>
+      JsonSchemaConverter.toStructType(e.schema.schema, config.decimalForMultipleOf))
+    val checks = phaseOne(records, epochs, declared, config)
+      .fold(Map.empty[Int, Row])(_.collect().map(r => r.getInt(0) -> r).toMap)
+    val schemas = epochs.indices.map { i =>
+      val row = checks.get(i)
+      // Union-schema passthrough (§1.4): record-only fields survive.
+      val schema = if (!config.inferExtraFields) declared(i)
+        else JsonSchemaConverter.mergeSchemas(declared(i), row.fold(StructType(Nil))(r =>
+          JsonSchemaConverter.inferredSchema(r.getAs[String]("inferred"))))
+      if (config.strictValidation) {
+        uncompiled(records, epochs(i), declared(i)).foreach(e => throw e)
+        row.flatMap(r => Option(r.getAs[String]("violation"))).foreach(v =>
+          throw new IllegalArgumentException(
+            s"Record validation failed for stream ${epochs(i).stream}: $v"))
+      }
+      schema
+    }
     val (codec, _) = config.compressionCodecAndExt
-    val ready = slices.zip(schemas)
+    val ready = epochs.zip(schemas)
     concurrently(spark, epochs.map(_.stream).distinct.map(s => () =>
-      ready.filter(_._1._1.stream == s).zipWithIndex.foreach { case (((_, recs), schema), i) =>
-        var writer = flatten(recs, schema, config, timestamp).write
+      ready.filter(_._1.stream == s).zipWithIndex.foreach { case ((e, schema), i) =>
+        var writer = flatten(slice(records, e), schema, config, timestamp).write
           .mode(if (overwrite && i == 0) "overwrite" else "append").option("compression", codec)
         if (config.fileSize > 0) writer = writer.option("maxRecordsPerFile", config.fileSize)
         writer.parquet(outputPath(outputUri, config, s, timestamp))
       })).foreach(_.get)
   }
 
-  /** Strict validation of one epoch: raise its first violation. */
-  private def validate(recs: DataFrame, e: Epoch, declared: StructType,
-                       config: TargetConfig): Unit =
-    if (config.strictValidation)
-      Constraints.firstViolation(
-        recs.select(col("idx"), col("rec"), from_json(col("rec"), declared).as("r")),
-        Constraints.compile(e.schema.schema), col("r"), col("rec"))
-        .foreach(v => throw new IllegalArgumentException(
-          s"Record validation failed for stream ${e.stream}: $v"))
+  private def inEpoch(e: Epoch): Column =
+    col("stream") === e.stream && col("idx") > e.from && col("idx") < e.until
+
+  /** An epoch's records. */
+  private def slice(records: DataFrame, e: Epoch): DataFrame = records.filter(inEpoch(e))
+
+  /** Phase 1 of [[writeEpochs]], one row per epoch holding records:
+    * `epoch` (its position in `epochs`), and, as `config` asks for them,
+    * `violation` (strict validation: [[Constraints.firstViolation]] over
+    * [[Constraints.violation]], each record parsed by ONE `from_json`,
+    * its epoch's) and `inferred` (`infer_extra_fields`:
+    * [[JsonSchemaConverter.inferRecords]] over the epoch's records,
+    * bounded by `infer_sample_rows`). An epoch whose validator does not
+    * compile against its struct is left out of the validation;
+    * [[uncompiled]] raises its error. None when there is nothing to
+    * compute: no epoch, or neither inference nor strict validation. */
+  private[graft] def phaseOne(records: DataFrame, epochs: Seq[Epoch], declared: Seq[StructType],
+                              config: TargetConfig): Option[DataFrame] = {
+    // CASE WHEN cond(i) THEN value(i) ... for i in `is`, in order.
+    def firstOf(is: Seq[Int])(cond: Int => Column, value: Int => Column): Column =
+      is.tail.foldLeft(when(cond(is.head), value(is.head)))((c, i) => c.when(cond(i), value(i)))
+    val validated =
+      if (config.strictValidation) epochs.indices.filter(i => compiles(epochs(i), declared(i)))
+      else Nil
+    val aggs =
+      (if (validated.nonEmpty)
+        Seq(Constraints.firstViolation(col("v"), col("idx")).as("violation")) else Nil) ++
+      (if (config.inferExtraFields && epochs.nonEmpty)
+        Seq(JsonSchemaConverter.inferRecords(col("rec"), col("idx"), config.inferSampleRows)
+          .as("inferred")) else Nil)
+    if (aggs.isEmpty) None
+    else {
+      val tagged = records.select(col("idx"), col("rec"),
+        firstOf(epochs.indices)(i => inEpoch(epochs(i)), lit(_)).as("epoch"))
+      val checked = if (validated.isEmpty) tagged
+        else tagged.withColumn("v",
+          firstOf(validated)(col("epoch") === _, i => violation(epochs(i), declared(i))))
+      Some(checked.groupBy("epoch").agg(aggs.head, aggs.tail: _*))
+    }
+  }
+
+  private def violation(e: Epoch, declared: StructType): Column =
+    Constraints.violation(Constraints.compile(e.schema.schema),
+      from_json(col("rec"), declared), col("rec"))
+
+  private def compiles(e: Epoch, declared: StructType): Boolean =
+    RecordValidator.compile(Constraints.compile(e.schema.schema), declared,
+      SQLConf.get.ansiEnabled, SQLConf.get.sessionLocalTimeZone).isRight
+
+  /** The analysis error of an epoch whose validator does not compile:
+    * the error its own validation query raises. */
+  private def uncompiled(records: DataFrame, e: Epoch, declared: StructType): Option[Throwable] =
+    if (compiles(e, declared)) None
+    else Try(records.select(violation(e, declared))).failed.toOption
 
   /** One epoch's records as the flat rows to write. */
   private def flatten(recs: DataFrame, schema: StructType,

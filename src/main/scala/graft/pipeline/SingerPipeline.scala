@@ -8,8 +8,8 @@ import graft.model._
   * (`stdin → parse → validate → flatten → partition-by-stream →
   * micro-batch → parquet → S3`, SURVEY.md §0) re-expressed as one
   * [[IngestCore]] pass over the whole input: one control-plane
-  * aggregate, then every stream's schema epochs validated concurrently
-  * and written once all passed.
+  * aggregate, one phase-1 query that validates and infers every
+  * stream's schema epochs, then the epochs written once all passed.
   *
   * Scale design (SURVEY.md §3.2 mapping):
   *  - RECORD lines never touch the driver: they flow scan → `from_json` →
@@ -50,7 +50,7 @@ object SingerPipeline {
           config: TargetConfig = TargetConfig(),
           clock: () => String = Naming.defaultTimestamp _): IngestResult = {
     // The control-plane aggregate fills this cache with the run's one
-    // input scan; inference, validation and the writes then read it,
+    // input scan; the phase-1 query and the writes then read it,
     // concurrently, instead of each re-scanning the input.
     val typed = IngestCore.envelope(IngestCore.fileLines(spark.read.text(inputPath)))
       .persist(StorageLevel.MEMORY_AND_DISK)

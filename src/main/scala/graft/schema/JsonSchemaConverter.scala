@@ -1,7 +1,23 @@
 package graft.schema
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, CharConversionException,
+  ObjectInputStream, ObjectOutputStream}
+import java.nio.charset.MalformedInputException
+import java.util.{Comparator, HashMap => JHashMap, PriorityQueue}
+import com.fasterxml.jackson.core.{JsonFactory, JsonProcessingException}
 import com.fasterxml.jackson.databind.JsonNode
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExprUtils, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JsonInferSchema}
+import org.apache.spark.sql.catalyst.json.graftbridge.JsonBridge
+import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.catalyst.util.PermissiveMode
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** JSON Schema (Draft 4 subset: `type` unions, `properties`, `items`,
@@ -70,34 +86,27 @@ object JsonSchemaConverter {
       else Seq(newKey)
     }
 
-  /** §1.4 union-schema inference input: the epoch's raw record strings,
-    * null payloads excluded (a RECORD without a `record` key is a protocol
-    * error flagged by validation — it must not surface as an opaque JSON-
-    * inference crash). `sampleRows > 0` bounds the inference scan to the
-    * first N records — a knob for the streaming hot path, where full-scan
-    * inference doubles the per-trigger read; fields first appearing after
-    * row N are NOT passed through. The default (<= 0) scans everything:
-    * exact parity with the reference, which unions EVERY record's fields
-    * into the batch schema (§1.4). */
-  def inferExtra(spark: org.apache.spark.sql.SparkSession,
-                 recs: org.apache.spark.sql.DataFrame,
-                 sampleRows: Long): StructType = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val nonNull = recs.filter(col("rec").isNotNull)
-    // The bounded sample is the FIRST `sampleRows` records by arrival
-    // (`idx` — the Singer line order both ingest paths carry): a bare
-    // limit() took whichever partition answered first, which was only
-    // prefix-deterministic while batches arrived as one serial
-    // partition; since the r16 fan-out exchange the prefix must be
-    // spelled (TakeOrderedAndProject — top-n per partition + merge, no
-    // full sort). Relations without idx keep the unordered limit.
-    val bounded =
-      if (sampleRows <= 0) nonNull
-      else if (recs.columns.contains("idx"))
-        nonNull.orderBy(col("idx")).limit(sampleRows.toInt)
-      else nonNull.limit(sampleRows.toInt)
-    spark.read.json(bounded.select("rec").as[String]).schema
+  /** §1.4 union-schema inference as an aggregate: the record schema
+    * `spark.read.json` infers from `rec` (a record's JSON text), null
+    * payloads excluded (a RECORD without a `record` key is a protocol
+    * error flagged by validation). `sampleRows > 0` bounds the inference
+    * to the first N records by `idx` (the Singer line order both ingest
+    * paths carry): a knob for the streaming hot path; fields first
+    * appearing after record N are NOT passed through. The default (<= 0)
+    * reads every record: exact parity with the reference, which unions
+    * EVERY record's fields into the batch schema (§1.4). Evaluates to the
+    * schema's JSON; [[inferredSchema]] reads it back. */
+  def inferRecords(rec: Column, idx: Column, sampleRows: Long): Column =
+    ColumnBridge.column(InferRecordSchema(ColumnBridge.expression(rec),
+      ColumnBridge.expression(idx), sampleRows).toAggregateExpression())
+
+  /** The schema an [[inferRecords]] value spells, checked the way
+    * `spark.read.json` checks an inferred schema: a corrupt-record field
+    * that is not a nullable string is an error. */
+  def inferredSchema(json: String): StructType = {
+    val st = DataType.fromJson(json).asInstanceOf[StructType]
+    ExprUtils.verifyColumnNameOfCorruptRecord(st, SQLConf.get.columnNameOfCorruptRecord)
+    st
   }
 
   /** Merge an inferred record schema into the declared one: declared leaf
@@ -113,5 +122,123 @@ object JsonSchemaConverter {
       }
     }
     StructType(merged ++ extras.map(_.copy(nullable = true)))
+  }
+}
+
+/** The schema inference of `spark.read.json` over a Dataset of JSON
+  * strings, as one aggregate, so that inference can share a grouped scan
+  * with validation. It is built from the same public pieces: per record
+  * `JsonInferSchema.inferField` (a parse error or a non-object root
+  * yields the corrupt-record field, as in PERMISSIVE mode), the types
+  * merged with `compatibleRootType`, the root folded into an empty struct
+  * and `canonicalizeType` applied last.
+  *
+  * With `sampleRows > 0` only the records with the `sampleRows` lowest
+  * `idx` count: the buffer keeps those records' types (a record past a
+  * full sample is not parsed), interned so records of one shape share
+  * one type instance. Unbounded, it keeps the running merge only.
+  *
+  * `timeZoneId` and `corruptColumn` are the session's at construction,
+  * the inputs of the `JSONOptions` that `spark.read.json` builds. */
+case class InferRecordSchema(
+    rec: Expression,
+    idx: Expression,
+    sampleRows: Long,
+    timeZoneId: String = SQLConf.get.sessionLocalTimeZone,
+    corruptColumn: String = SQLConf.get.columnNameOfCorruptRecord,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[InferRecordSchema.Sample] with BinaryLike[Expression] {
+  import InferRecordSchema.Sample
+
+  override def left: Expression = rec
+  override def right: Expression = idx
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = false
+  override def prettyName: String = "infer_record_schema"
+
+  @transient private lazy val options = new JSONOptions(Map.empty[String, String], timeZoneId, corruptColumn)
+  @transient private lazy val inferrer = new JsonInferSchema(options)
+  @transient private lazy val factory: JsonFactory = options.buildJsonFactory()
+  @transient private lazy val merger = JsonInferSchema.compatibleRootType(corruptColumn, PermissiveMode)
+  @transient private lazy val corrupt: DataType =
+    StructType(Seq(StructField(corruptColumn, StringType, nullable = true)))
+
+  private def inferOne(json: UTF8String): DataType = {
+    val p = CreateJacksonParser.utf8String(factory, json)
+    try { p.nextToken(); inferrer.inferField(p) }
+    catch {
+      case _: RuntimeException | _: JsonProcessingException | _: MalformedInputException |
+           _: CharConversionException => corrupt
+    } finally p.close()
+  }
+
+  override def createAggregationBuffer(): Sample = new Sample(sampleRows, merger)
+
+  override def update(buffer: Sample, input: InternalRow): Sample = {
+    val json = rec.eval(input).asInstanceOf[UTF8String]
+    if (json != null) {
+      val i = idx.eval(input).asInstanceOf[Long]
+      if (buffer.wants(i)) buffer.add(i, inferOne(json))
+    }
+    buffer
+  }
+
+  override def merge(buffer: Sample, input: Sample): Sample = {
+    if (input.merged != null) buffer.add(0L, input.merged)
+    input.kept.forEach(e => if (buffer.wants(e._1)) buffer.add(e._1, e._2))
+    buffer
+  }
+
+  override def eval(buffer: Sample): Any = {
+    val types = Option(buffer.merged).iterator ++ buffer.kept.asScala.iterator.map(_._2)
+    val root = types.reduceOption(merger).fold[DataType](StructType(Nil))(merger(StructType(Nil), _))
+    val st = JsonBridge.canonicalizeType(inferrer, root, options).collectFirst { case s: StructType => s }
+    UTF8String.fromString(st.getOrElse(StructType(Nil)).json)
+  }
+
+  override def serialize(buffer: Sample): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new ObjectOutputStream(bytes)
+    out.writeObject(buffer.merged)
+    out.writeInt(buffer.kept.size)
+    buffer.kept.forEach { e => out.writeLong(e._1); out.writeObject(e._2) }
+    out.close()
+    bytes.toByteArray
+  }
+
+  override def deserialize(bytes: Array[Byte]): Sample = {
+    val in = new ObjectInputStream(new ByteArrayInputStream(bytes))
+    val s = new Sample(sampleRows, merger)
+    s.merged = in.readObject().asInstanceOf[DataType]
+    (0 until in.readInt()).foreach(_ => s.add(in.readLong(), in.readObject().asInstanceOf[DataType]))
+    s
+  }
+
+  override def withNewMutableAggBufferOffset(n: Int): InferRecordSchema = copy(mutableAggBufferOffset = n)
+  override def withNewInputAggBufferOffset(n: Int): InferRecordSchema = copy(inputAggBufferOffset = n)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): InferRecordSchema =
+    copy(rec = l, idx = r)
+}
+
+object InferRecordSchema {
+  private val ByIdxDescending: Comparator[(Long, DataType)] = (a, b) => java.lang.Long.compare(b._1, a._1)
+
+  /** Unbounded: `merged`, the running merge. Bounded: `kept`, the types
+    * of the `bound` lowest-`idx` records seen, in a max-heap on `idx`. */
+  final class Sample(bound: Long, merger: (DataType, DataType) => DataType) {
+    var merged: DataType = _
+    val kept = new PriorityQueue[(Long, DataType)](ByIdxDescending)
+    private val interned = new JHashMap[DataType, DataType]()
+
+    def wants(i: Long): Boolean = bound <= 0 || kept.size < bound || i < kept.peek._1
+
+    /** Count record `i` of type `t` (`i` is unused when unbounded). */
+    def add(i: Long, t: DataType): Unit =
+      if (bound <= 0) merged = if (merged == null) t else merger(merged, t)
+      else {
+        kept.add((i, interned.computeIfAbsent(t, _ => t)))
+        if (kept.size > bound) kept.poll()
+      }
   }
 }

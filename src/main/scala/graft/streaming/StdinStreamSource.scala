@@ -31,9 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * durable replay, and this source is the zero-copy live alternative.
   *
   * One input partition per batch: stdin is inherently a serial stream,
-  * so the parallelism happens DOWNSTREAM (parse/validate/write fan out
-  * over the cluster after the first exchange), exactly like the
-  * reference's single reader loop feeding its consumer process.
+  * exactly like the reference's single reader loop feeding its consumer
+  * process. Any parallelism is DOWNSTREAM: the ingest envelope
+  * rebalances the batch, and AQE sizes that exchange from its bytes, so
+  * a small batch stays one task and a large one spreads over the
+  * cluster ([[graft.pipeline.IngestCore.envelope]]).
   *
   * `StdinStream.inputFactory` injects the stream (tests feed a pipe;
   * production leaves it at `System.in`).

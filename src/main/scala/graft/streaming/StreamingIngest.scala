@@ -13,8 +13,9 @@ import graft.pipeline.IngestCore
   * the streaming analogue of the reference's unbounded stdin loop, with
   * Spark's checkpointing replacing its ad-hoc resume bookkeeping. Per
   * micro-batch: one checkpoint of the envelope, one control-plane
-  * aggregate, then every epoch validated concurrently and appended only
-  * once all of them passed, so a failing batch appends nothing.
+  * aggregate, one phase-1 query that validates (and infers) every epoch,
+  * then the epochs appended only once all of them passed, so a failing
+  * batch appends nothing.
   *
   * Cross-batch state (the schema registry and last bookmark) lives on the
   * driver, exactly like the reference's `schemas`/`state` dicts — SCHEMA
@@ -70,13 +71,12 @@ final class StreamingIngest(
     * [[IngestCore.fileLines]] when it reads several files. */
   def processBatch(lines: DataFrame, batchId: Long): Unit = {
     // The envelope (arrival order captured on the batch's ORIGINAL
-    // partitioning, then the fan-out exchange) materializes once:
-    // foreachBatch re-executes the source scan per downstream action, and
-    // the live pipe source is one serial partition by nature, so without
-    // this every control-plane collect and per-epoch write re-parsed the
-    // whole batch single-threaded (measured 12 s/batch at sf0.1 on the
-    // live row; the "parallelism happens DOWNSTREAM" contract in
-    // StdinStreamSource's scaladoc is exactly this exchange).
+    // partitioning, then the rebalance exchange) materializes once:
+    // foreachBatch re-executes the source scan per downstream action, so
+    // without this the control-plane, phase-1 and write queries would
+    // each re-read and re-tag the batch. AQE sizes the rebalance from the
+    // batch's bytes (StdinStreamSource's "parallelism is DOWNSTREAM"):
+    // a live page stays one partition, a large spooled chunk spreads.
     val typed = IngestCore.envelope(lines).localCheckpoint()
     val plane = IngestCore.controlPlane(typed)
     // The order check runs against the registry as of the previous batch,
@@ -87,9 +87,8 @@ final class StreamingIngest(
     // lands in its own timestamped key, the streaming analogue of the
     // reference's one-file-per-batch output. Config parity with the batch
     // path: naming, §1.4 passthrough and L1 metadata apply here too.
-    // Passthrough costs one inference pass per epoch per MICRO-BATCH;
-    // latency-sensitive deployments should set infer_extra_fields=false
-    // or bound it via infer_sample_rows.
+    // Passthrough infers inside the batch's one phase-1 query (one more
+    // parse per record); infer_sample_rows bounds it per epoch.
     IngestCore.writeEpochs(spark, IngestCore.records(typed), epochs, config, outputUri,
       clock(), overwrite = false)
 

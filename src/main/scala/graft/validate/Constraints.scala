@@ -1,7 +1,7 @@
 package graft.validate
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.schema.JsonSchemaConverter.typeNames
@@ -126,12 +126,10 @@ object Constraints {
     ColumnBridge.column(ValidateRecord(
       ColumnBridge.expression(root), ColumnBridge.expression(raw), cc))
 
-  /** Strict mode (reference behavior): the violation of the lowest-`idx`
-    * record of `df`, the record the reference's line loop aborts at. One
-    * TakeOrderedAndProject job; at most one message reaches the driver. */
-  def firstViolation(df: DataFrame, cc: CompiledConstraints,
-                     root: Column, raw: Column): Option[String] =
-    df.select(col("idx"), violation(cc, root, raw).as("v"))
-      .filter(col("v").isNotNull).orderBy("idx").limit(1).select("v")
-      .collect().headOption.map(_.getString(0))
+  /** Strict mode (reference behavior), as an aggregate: of the rows it
+    * sees, the violation `v` (a [[violation]] column) of the lowest-`idx`
+    * violating record, the record the reference's line loop aborts at;
+    * null when every row is valid. Grouped by epoch, it checks every
+    * epoch of a run in one query. */
+  def firstViolation(v: Column, idx: Column): Column = min_by(v, when(v.isNotNull, idx))
 }

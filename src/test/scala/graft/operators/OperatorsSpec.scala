@@ -2966,4 +2966,15 @@ class OperatorsSpec extends SparkSpec {
     val dot4 = mic(3).zip(sv).map { case (a, b) => a * b }.sum
     assert(lab0.head._4 == dot4)
   }
+
+  test("kNN corpus count: a corpus rewritten in place is counted again") {
+    val dir = Files.createTempDirectory("corpus-count").toString
+    def write(n: Long): Unit = spark.range(n)
+      .select(col("id").as("vec_id"), array(lit(1.0), lit(0.0)).as("embedding"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    write(5)
+    assert(Graph.corpusCount(spark, dir) == 5)
+    write(7)
+    assert(Graph.corpusCount(spark, dir) == 7)
+  }
 }

@@ -140,6 +140,47 @@ class SingerPipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("v_str") && e.getMessage.contains("too long"))
   }
 
+  test("every epoch is validated against its own schema, across streams and re-emits") {
+    val strict = schemaMsg("alpha").replace("\"maxLength\": 16", "\"maxLength\": 2")
+    def rec(stream: String, v: String) =
+      s"""{"type": "RECORD", "stream": "$stream", "record": {"pk": 1, "v_str": "$v", "v_int": 1}}"""
+    def run(lines: String*) =
+      SingerPipeline.run(spark, writeCorpus(lines), outDir(), TargetConfig())
+    // beta's stricter schema governs beta's record, not alpha's looser one
+    val other = intercept[IllegalArgumentException](run(
+      schemaMsg("alpha"), rec("alpha", "abcdef"), strict.replace("alpha", "beta"), rec("beta", "abcdef")))
+    assert(other.getMessage.contains("stream beta") && other.getMessage.contains("too long"), other)
+    // a re-emitted stricter schema governs only the records after it
+    run(schemaMsg("alpha"), rec("alpha", "abcdef"), strict, rec("alpha", "ab"))
+    val later = intercept[IllegalArgumentException](run(
+      schemaMsg("alpha"), rec("alpha", "abcdef"), strict, rec("alpha", "abcdef")))
+    assert(later.getMessage.contains("too long"), later)
+  }
+
+  test("of several failures the first in (stream, epoch) order is raised, inference before validation") {
+    // enum on an array leaf: the validator cannot compile (an analysis error).
+    val uncompilable = schemaMsg("beta",
+      """, "tags": {"type": ["null", "array"], "items": {"type": "integer"}, "enum": [[1]]}""")
+    val tooLong = """{"type": "RECORD", "stream": "alpha", "record": {"pk": 1, "v_str": "this string is far too long for maxLength", "v_int": 1}}"""
+    val beta = """{"type": "RECORD", "stream": "beta", "record": {"pk": 2, "tags": [1]}}"""
+    def failure(lines: String*): Throwable = {
+      val out = outDir()
+      val e = intercept[Exception](SingerPipeline.run(spark, writeCorpus(lines), out, TargetConfig()))
+      assert(Files.list(java.nio.file.Paths.get(out)).count() == 0, "a failed run wrote output")
+      e
+    }
+    val first = failure(schemaMsg("alpha"), uncompilable, beta, tooLong)
+    assert(first.isInstanceOf[IllegalArgumentException] && first.getMessage.contains("too long"), first)
+    val compile = failure(schemaMsg("alpha"), uncompilable, beta)
+    assert(compile.isInstanceOf[org.apache.spark.sql.AnalysisException], compile)
+    // A corrupt-record field that is not a string fails inference, which
+    // is reported before the same epoch's violation.
+    val inference = failure(schemaMsg("alpha"), tooLong,
+      """{"type": "RECORD", "stream": "alpha", "record": {"pk": 3, "_corrupt_record": 5}}""")
+    assert(inference.isInstanceOf[org.apache.spark.sql.AnalysisException] &&
+      inference.getMessage.contains("_corrupt_record"), inference)
+  }
+
   test("type violation detected (string where integer declared)") {
     val lines = Seq(
       schemaMsg("alpha"),

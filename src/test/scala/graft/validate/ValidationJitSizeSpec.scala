@@ -1,12 +1,15 @@
 package graft.validate
 
 import org.apache.spark.sql.{Column, Row}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeFormatter,
+  CodeGenerator, CodegenContext, GenerateUnsafeProjection}
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.SparkSpec
-import graft.model.Singer
+import graft.model.{Singer, TargetConfig}
+import graft.pipeline.IngestCore
 import graft.schema.JsonSchemaConverter
 import graft.validate.Constraints.CompiledConstraints
 
@@ -72,7 +75,7 @@ class ValidationJitSizeSpec extends SparkSpec {
   }
 
   /** The largest method, in bytes of bytecode, of the whole-stage code
-    * of the strict-validation plan (`Constraints.firstViolation`) for
+    * of a strict-validation plan (first violating row) for
     * `schemaJson`, validated by `v`.
     *
     * `from_json` is a CodegenFallback expression, and an operator that
@@ -113,5 +116,70 @@ class ValidationJitSizeSpec extends SparkSpec {
     val bytes = maxMethodBytes(customers, ReferenceConstraints.violation)
     info(s"largest generated method: $bytes bytes")
     assert(bytes > HugeMethodLimit, s"largest generated method is $bytes bytes")
+  }
+
+  /** The largest method of the code Spark generates for `exprs` as a
+    * standalone projection over `input`: `GenerateUnsafeProjection`'s
+    * class, as `ProjectExec` compiles it outside whole-stage codegen. */
+  private def projectionMethodBytes(plan: ProjectExec): Int = {
+    val ctx = new CodegenContext
+    val bound = plan.projectList.map(e => BindReferences.bindReference(e: Expression, plan.child.output))
+    val eval = GenerateUnsafeProjection.createCode(ctx, bound, conf.subexpressionEliminationEnabled)
+    val body =
+      s"""public java.lang.Object generate(Object[] references) {
+         |  return new SpecificUnsafeProjection(references);
+         |}
+         |class SpecificUnsafeProjection extends ${classOf[UnsafeProjection].getName} {
+         |  private Object[] references;
+         |  ${ctx.declareMutableStates()}
+         |  public SpecificUnsafeProjection(Object[] references) {
+         |    this.references = references;
+         |    ${ctx.initMutableStates()}
+         |  }
+         |  public void initialize(int partitionIndex) { ${ctx.initPartition()} }
+         |  public java.lang.Object apply(java.lang.Object row) { return apply((InternalRow) row); }
+         |  public UnsafeRow apply(InternalRow ${ctx.INPUT_ROW}) {
+         |    ${eval.code}
+         |    return ${eval.value};
+         |  }
+         |  ${ctx.declareAddedFunctions()}
+         |}""".stripMargin
+    CodeGenerator.compile(CodeFormatter.stripOverlappingComments(
+      new CodeAndComment(body, ctx.getPlaceHolderToComments())))._2.maxMethodCodeSize
+  }
+
+  private def conf = spark.sessionState.conf
+
+  /** Whole-stage stages and the projections outside them, with their
+    * largest generated method. */
+  private def generated(plan: SparkPlan): Seq[(SparkPlan, Int)] = plan match {
+    case w: WholeStageCodegenExec => Seq(w -> CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize)
+    case p: ProjectExec => (p -> projectionMethodBytes(p)) +: generated(p.child)
+    case other => other.children.flatMap(generated)
+  }
+
+  test("fused phase-1 plan over a 20-epoch batch: every generated method is JIT-compilable") {
+    import spark.implicits._
+    // Four streams, five schema epochs each, the two wide schemas in turn.
+    val lines = (0 until 20).flatMap { k =>
+      val s = s"s${k % 4}"
+      Seq(s"""{"type": "SCHEMA", "stream": "$s", "schema": ${if (k % 2 == 0) customers else everyKeyword}, "key_properties": []}""",
+        s"""{"type": "RECORD", "stream": "$s", "record": {"c_custkey": $k, "i0": 3, "nested": {"in_i0": 3}}}""")
+    }
+    val typed = IngestCore.envelope(spark.sparkContext.parallelize(lines, 1).toDF("value")).localCheckpoint()
+    val epochs = IngestCore.epochs(IngestCore.controlPlane(typed), Map.empty)
+    assert(epochs.size == 20)
+    val declared = epochs.map(e => JsonSchemaConverter.toStructType(e.schema.schema))
+    val key = "spark.sql.adaptive.enabled"
+    val aqe = conf.getConfString(key)
+    spark.conf.set(key, "false") // the plan as compiled, not AQE's initial plan
+    val plan = try IngestCore.phaseOne(IngestCore.records(typed), epochs, declared, TargetConfig())
+      .get.queryExecution.executedPlan finally spark.conf.set(key, aqe)
+    val sizes = generated(plan)
+    assert(sizes.exists(_._1.exists(_.expressions.exists(_.exists(_.isInstanceOf[ValidateRecord])))),
+      s"no measured node validates in\n$plan")
+    info(sizes.map { case (p, b) => s"${p.nodeName} $b" }.mkString("largest method per node: ", ", ", ""))
+    val bytes = sizes.map(_._2).max
+    assert(bytes < HugeMethodLimit, s"largest generated method is $bytes bytes")
   }
 }
