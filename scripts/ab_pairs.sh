@@ -14,6 +14,8 @@
 # Each tree builds itself with sbt on its first run (offline, like the
 # benchmark). Prints one row per seed, then the median and IQR of
 # latency_s and setup_s per side and how many seeds HEAD won on latency_s.
+# A pair where either run is not correct or has a failed operation is left
+# out of the wins and the medians; the summary says how many were.
 # Per-run logs and the result lines stay in the printed work directory.
 set -euo pipefail
 
@@ -77,11 +79,14 @@ print("workload %s" % workload)
 print("%-6s %-6s %10s %10s %10s %10s %8s" % (
     "seed", "first", "lat_par", "lat_head", "set_par", "set_head", "correct"))
 wins = pairs = 0
+kept = []
 for seed in first:
     lp, lh = metric("parent", seed, "latency_s"), metric("head", seed, "latency_s")
     ok = all(res[(s, seed)].get("correct") is True and not res[(s, seed)].get("failed")
              for s in ("parent", "head"))
-    if lp is not None and lh is not None:
+    if ok:
+        kept.append(seed)
+    if ok and lp is not None and lh is not None:
         pairs += 1
         wins += lh < lp
     print("%-6s %-6s %10s %10s %10s %10s %8s" % (
@@ -89,7 +94,7 @@ for seed in first:
         fmt(metric("head", seed, "setup_s")), "yes" if ok else "NO"))
 
 def summary(side, name):
-    xs = sorted(v for v in (metric(side, s, name) for s in first) if v is not None)
+    xs = sorted(v for v in (metric(side, s, name) for s in kept) if v is not None)
     if not xs:
         return "-"
     q = statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
@@ -99,4 +104,6 @@ for name in ("latency_s", "setup_s"):
     for side in ("parent", "head"):
         print("%-9s %-6s %s" % (name, side, summary(side, name)))
 print("head wins on latency_s: %d of %d pairs" % (wins, pairs))
+print("pairs left out (a run not correct or with failed operations): %d of %d"
+      % (len(first) - len(kept), len(first)))
 EOF

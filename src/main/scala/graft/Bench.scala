@@ -237,38 +237,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // r17 (guide §2.2/§2.6/§9): let AQE size post-shuffle partitions by
-    // BYTES instead of pinning every exchange to the core count.
-    // `parallelismFirst=true` (the Spark default) makes AQE coalesce no
-    // further than default parallelism, so at sf0.1 every tiny exchange
-    // still schedules `cpus` tasks — the measured cause of the r16
-    // scaling block's ratio<0.5 rows (events_rfm 0.45, version_compact
-    // 0.46, text_unigram 0.48: 32 cores SLOWER than 8 on sub-MB
-    // shuffles). The advisory size defaults to 1m: it still coalesces
-    // the sub-MB exchanges of those rows onto 1-2 tasks, while a
-    // 30-60 MB compute-dense shuffle keeps ~32. A 16m advisory was
-    // tried first and rejected: bytes understate the compute of
-    // dedup_contain_10x's join (its pairs explode after the exchange),
-    // so 16m packed it onto ~2 tasks and the row went from 8.7 to
-    // 35.8 s (OPTIMIZATION_r17.md, "AQE advisory retune"). The size is
-    // env-tunable because it scales with data: a 100-TB deployment
-    // raises it toward the guide's 256m.
-    val aqeAdvisory = sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "1m")
-    val aqeParallelismFirst =
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        aqeParallelismFirst)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", aqeAdvisory)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {

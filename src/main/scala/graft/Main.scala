@@ -14,24 +14,23 @@ import graft.sources.S3Conf
   * write per-stream Parquet to the bucket/prefix, emit the final state
   * bookmark to stdout.
   *
-  * Two consumption modes:
-  *  - `--mode batch` (default): spool all of stdin, then one batch job —
-  *    right for bounded extracts and for pointing `--input` at a landing
-  *    zone.
-  *  - `--mode stream`: LIVE consumption of an unbounded pipe — stdin is
-  *    chunk-spooled into a watch directory ([[StdinSpooler]]) while a
-  *    Structured Streaming query ([[StreamingIngest]]) appends per-stream
-  *    parquet and emits a state bookmark after every committed micro-batch,
-  *    long before EOF. This matches the reference's incremental loop
-  *    (__init__.py:215) and adds crash-resume via the file-source
-  *    checkpoint. With `--input <dir>` the directory itself is watched and
-  *    stdin is not read.
-  *  - `--mode live`: the same incremental loop with NO spool files — raw
-  *    stdin through the DSv2 micro-batch source
+  * Three consumption modes (`--mode`; any other value is a usage error):
+  *  - `batch` (default): spool all of stdin, then one batch job — right
+  *    for bounded extracts and for pointing `--input` at a landing zone.
+  *  - `stream`: incremental consumption — a Structured Streaming query
+  *    ([[StreamingIngest]]) appends per-stream parquet and emits a state
+  *    bookmark after every committed micro-batch, long before EOF, like
+  *    the reference's incremental loop (__init__.py:215). Fed from stdin,
+  *    the pipe is chunk-spooled ([[StdinSpooler]]) into a per-run watch
+  *    directory with a per-run checkpoint, so a restarted run resumes
+  *    nothing. Durable replay needs `--input <landing dir>`: that
+  *    directory is watched (stdin is not read) and the checkpoint is the
+  *    stable `<output>/_graft_checkpoint`, so a re-run resumes it.
+  *  - `live`: the same incremental loop with NO spool files — raw stdin
+  *    through the DSv2 micro-batch source
   *    ([[graft.streaming.StdinStreamProvider]]). Zero-copy, but a pipe
   *    cannot replay across a process restart (the source refuses a gap
-  *    rather than hiding it); crash-durable deployments use
-  *    `--mode stream`.
+  *    rather than hiding it).
   *
   * Divergences (documented, SURVEY.md §7.4): `--output` allows a local/
   * hdfs URI instead of S3 (the reference requires a bucket); compression
@@ -40,10 +39,42 @@ import graft.sources.S3Conf
   * Usage: some-tap | sbt "runMain graft.Main --config config.json"
   */
 object Main {
+  private val Usage =
+    "usage: graft.Main [--config <config.json>] [--output <uri>] " +
+      "[--mode batch|stream|live] [--input <path>] [--checkpoint <dir>]"
+  private val Flags = Set("config", "output", "mode", "input", "checkpoint")
+  private val Modes = Set("batch", "stream", "live")
+
+  /** The command line as flag -> value, with `mode` defaulted to batch;
+    * or the error for an unknown flag, a flag without a value, a repeated
+    * flag or a mode outside batch|stream|live. */
+  private[graft] def parseArgs(args: Seq[String]): Either[String, Map[String, String]] = {
+    @annotation.tailrec
+    def loop(rest: List[String], acc: Map[String, String]): Either[String, Map[String, String]] =
+      rest match {
+        case Nil => Right(acc)
+        case flag :: _ if !flag.startsWith("--") || !Flags(flag.drop(2)) =>
+          Left(s"unknown argument: $flag")
+        case flag :: _ if acc.contains(flag.drop(2)) => Left(s"$flag given twice")
+        case flag :: value :: tail if !value.startsWith("--") =>
+          loop(tail, acc + (flag.drop(2) -> value))
+        case flag :: _ => Left(s"$flag needs a value")
+      }
+    loop(args.toList, Map.empty).flatMap { opts =>
+      val mode = opts.getOrElse("mode", "batch")
+      if (Modes(mode)) Right(opts + ("mode" -> mode))
+      else Left(s"unknown mode: $mode (expected batch, stream or live)")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val opts = parseArgs(args.toSeq) match {
+      case Right(o) => o
+      case Left(err) =>
+        System.err.println(s"graft.Main: $err")
+        System.err.println(Usage)
+        sys.exit(2)
+    }
 
     val config: TargetConfig = opts.get("config") match {
       case Some(path) =>
@@ -64,22 +95,11 @@ object Main {
         S3Conf.outputUri(config)
     }
 
-    var builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-target")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // L7 temp_dir (reference __init__.py:46-50,91): shuffle/spill scratch
-    // space follows the configured staging directory too.
-    config.tempDir.foreach(d => builder = builder.config("spark.local.dir", d))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(config.tempDir)
     S3Conf(spark, config)
 
     try {
-      opts.getOrElse("mode", "batch") match {
+      opts("mode") match {
         case "stream" => runStream(spark, opts, output, config)
         case "live"   => runLive(spark, opts, output, config)
         case _        => runBatch(spark, opts, output, config)

@@ -20,12 +20,9 @@ package graft.model
   *                        the output (reference §1.4 union-schema behavior). The
   *                        inference rides in the one phase-1 query of each run or
   *                        micro-batch, beside validation: it adds no query, but
-  *                        parses every record once more
-  * @param inferSampleRows bound the §1.4 inference to the first N records by line
-  *                        order per epoch (> 0): later records are not parsed for
-  *                        it, and fields first appearing after record N are not
-  *                        passed through. <= 0 (default) infers from all records —
-  *                        exact reference parity
+  *                        parses every record once more. Every record of the
+  *                        epoch counts (reference parity: it unions every
+  *                        record's fields)
   * @param strictValidation abort on the first JSON-Schema violation (reference P5)
   * @param tempDir         local spool/staging directory (L7, reference
   *                        __init__.py:46-50,91): batch stdin spool files, stream-mode
@@ -40,7 +37,6 @@ final case class TargetConfig(
     streamsInSeparateFolder: Boolean = false,
     addMetadataColumns: Boolean = false,
     inferExtraFields: Boolean = true,
-    inferSampleRows: Long = -1L,
     strictValidation: Boolean = true,
     awsAccessKeyId: Option[String] = None,
     awsSecretAccessKey: Option[String] = None,
@@ -112,7 +108,6 @@ object TargetConfig {
     decimalForMultipleOf = m.getOrElse("decimal_for_multiple_of", "false").toBoolean,
     strictValidation = m.getOrElse("strict_validation", "true").toBoolean,
     inferExtraFields = m.getOrElse("infer_extra_fields", "true").toBoolean,
-    inferSampleRows = m.getOrElse("infer_sample_rows", "-1").toLong,
     tempDir = m.get("temp_dir"))
 }
 

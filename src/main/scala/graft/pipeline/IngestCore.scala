@@ -226,11 +226,11 @@ object IngestCore {
     * `violation` (strict validation: [[Constraints.firstViolation]] over
     * [[Constraints.violation]], each record parsed by ONE `from_json`,
     * its epoch's) and `inferred` (`infer_extra_fields`:
-    * [[JsonSchemaConverter.inferRecords]] over the epoch's records,
-    * bounded by `infer_sample_rows`). An epoch whose validator does not
-    * compile against its struct is left out of the validation;
-    * [[uncompiled]] raises its error. None when there is nothing to
-    * compute: no epoch, or neither inference nor strict validation. */
+    * [[JsonSchemaConverter.inferRecords]] over the epoch's records). An
+    * epoch whose validator does not compile against its struct is left
+    * out of the validation; [[uncompiled]] raises its error. None when
+    * there is nothing to compute: no epoch, or neither inference nor
+    * strict validation. */
   private[graft] def phaseOne(records: DataFrame, epochs: Seq[Epoch], declared: Seq[StructType],
                               config: TargetConfig): Option[DataFrame] = {
     // CASE WHEN cond(i) THEN value(i) ... for i in `is`, in order.
@@ -243,8 +243,7 @@ object IngestCore {
       (if (validated.nonEmpty)
         Seq(Constraints.firstViolation(col("v"), col("idx")).as("violation")) else Nil) ++
       (if (config.inferExtraFields && epochs.nonEmpty)
-        Seq(JsonSchemaConverter.inferRecords(col("rec"), col("idx"), config.inferSampleRows)
-          .as("inferred")) else Nil)
+        Seq(JsonSchemaConverter.inferRecords(col("rec")).as("inferred")) else Nil)
     if (aggs.isEmpty) None
     else {
       val tagged = records.select(col("idx"), col("rec"),

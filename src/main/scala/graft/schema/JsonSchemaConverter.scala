@@ -3,7 +3,6 @@ package graft.schema
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, CharConversionException,
   ObjectInputStream, ObjectOutputStream}
 import java.nio.charset.MalformedInputException
-import java.util.{Comparator, HashMap => JHashMap, PriorityQueue}
 import com.fasterxml.jackson.core.{JsonFactory, JsonProcessingException}
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.Column
@@ -12,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{ExprUtils, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JsonInferSchema}
 import org.apache.spark.sql.catalyst.json.graftbridge.JsonBridge
-import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.PermissiveMode
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
@@ -89,16 +88,11 @@ object JsonSchemaConverter {
   /** §1.4 union-schema inference as an aggregate: the record schema
     * `spark.read.json` infers from `rec` (a record's JSON text), null
     * payloads excluded (a RECORD without a `record` key is a protocol
-    * error flagged by validation). `sampleRows > 0` bounds the inference
-    * to the first N records by `idx` (the Singer line order both ingest
-    * paths carry): a knob for the streaming hot path; fields first
-    * appearing after record N are NOT passed through. The default (<= 0)
-    * reads every record: exact parity with the reference, which unions
-    * EVERY record's fields into the batch schema (§1.4). Evaluates to the
-    * schema's JSON; [[inferredSchema]] reads it back. */
-  def inferRecords(rec: Column, idx: Column, sampleRows: Long): Column =
-    ColumnBridge.column(InferRecordSchema(ColumnBridge.expression(rec),
-      ColumnBridge.expression(idx), sampleRows).toAggregateExpression())
+    * error flagged by validation). Every record counts, as the reference
+    * unions EVERY record's fields into the batch schema (§1.4). Evaluates
+    * to the schema's JSON; [[inferredSchema]] reads it back. */
+  def inferRecords(rec: Column): Column =
+    ColumnBridge.column(InferRecordSchema(ColumnBridge.expression(rec)).toAggregateExpression())
 
   /** The schema an [[inferRecords]] value spells, checked the way
     * `spark.read.json` checks an inferred schema: a corrupt-record field
@@ -131,28 +125,20 @@ object JsonSchemaConverter {
   * `JsonInferSchema.inferField` (a parse error or a non-object root
   * yields the corrupt-record field, as in PERMISSIVE mode), the types
   * merged with `compatibleRootType`, the root folded into an empty struct
-  * and `canonicalizeType` applied last.
-  *
-  * With `sampleRows > 0` only the records with the `sampleRows` lowest
-  * `idx` count: the buffer keeps those records' types (a record past a
-  * full sample is not parsed), interned so records of one shape share
-  * one type instance. Unbounded, it keeps the running merge only.
+  * and `canonicalizeType` applied last. The buffer is the running merge
+  * of the records seen, None before the first.
   *
   * `timeZoneId` and `corruptColumn` are the session's at construction,
   * the inputs of the `JSONOptions` that `spark.read.json` builds. */
 case class InferRecordSchema(
     rec: Expression,
-    idx: Expression,
-    sampleRows: Long,
     timeZoneId: String = SQLConf.get.sessionLocalTimeZone,
     corruptColumn: String = SQLConf.get.columnNameOfCorruptRecord,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[InferRecordSchema.Sample] with BinaryLike[Expression] {
-  import InferRecordSchema.Sample
+    extends TypedImperativeAggregate[Option[DataType]] with UnaryLike[Expression] {
 
-  override def left: Expression = rec
-  override def right: Expression = idx
+  override def child: Expression = rec
   override def dataType: DataType = StringType
   override def nullable: Boolean = false
   override def prettyName: String = "infer_record_schema"
@@ -173,72 +159,37 @@ case class InferRecordSchema(
     } finally p.close()
   }
 
-  override def createAggregationBuffer(): Sample = new Sample(sampleRows, merger)
+  override def createAggregationBuffer(): Option[DataType] = None
 
-  override def update(buffer: Sample, input: InternalRow): Sample = {
+  private def add(buffer: Option[DataType], t: DataType): Option[DataType] =
+    Some(buffer.fold(t)(merger(_, t)))
+
+  override def update(buffer: Option[DataType], input: InternalRow): Option[DataType] = {
     val json = rec.eval(input).asInstanceOf[UTF8String]
-    if (json != null) {
-      val i = idx.eval(input).asInstanceOf[Long]
-      if (buffer.wants(i)) buffer.add(i, inferOne(json))
-    }
-    buffer
+    if (json == null) buffer else add(buffer, inferOne(json))
   }
 
-  override def merge(buffer: Sample, input: Sample): Sample = {
-    if (input.merged != null) buffer.add(0L, input.merged)
-    input.kept.forEach(e => if (buffer.wants(e._1)) buffer.add(e._1, e._2))
-    buffer
-  }
+  override def merge(buffer: Option[DataType], input: Option[DataType]): Option[DataType] =
+    input.fold(buffer)(add(buffer, _))
 
-  override def eval(buffer: Sample): Any = {
-    val types = Option(buffer.merged).iterator ++ buffer.kept.asScala.iterator.map(_._2)
-    val root = types.reduceOption(merger).fold[DataType](StructType(Nil))(merger(StructType(Nil), _))
+  override def eval(buffer: Option[DataType]): Any = {
+    val root = buffer.fold[DataType](StructType(Nil))(merger(StructType(Nil), _))
     val st = JsonBridge.canonicalizeType(inferrer, root, options).collectFirst { case s: StructType => s }
     UTF8String.fromString(st.getOrElse(StructType(Nil)).json)
   }
 
-  override def serialize(buffer: Sample): Array[Byte] = {
+  override def serialize(buffer: Option[DataType]): Array[Byte] = {
     val bytes = new ByteArrayOutputStream()
     val out = new ObjectOutputStream(bytes)
-    out.writeObject(buffer.merged)
-    out.writeInt(buffer.kept.size)
-    buffer.kept.forEach { e => out.writeLong(e._1); out.writeObject(e._2) }
+    out.writeObject(buffer.orNull)
     out.close()
     bytes.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): Sample = {
-    val in = new ObjectInputStream(new ByteArrayInputStream(bytes))
-    val s = new Sample(sampleRows, merger)
-    s.merged = in.readObject().asInstanceOf[DataType]
-    (0 until in.readInt()).foreach(_ => s.add(in.readLong(), in.readObject().asInstanceOf[DataType]))
-    s
-  }
+  override def deserialize(bytes: Array[Byte]): Option[DataType] =
+    Option(new ObjectInputStream(new ByteArrayInputStream(bytes)).readObject().asInstanceOf[DataType])
 
   override def withNewMutableAggBufferOffset(n: Int): InferRecordSchema = copy(mutableAggBufferOffset = n)
   override def withNewInputAggBufferOffset(n: Int): InferRecordSchema = copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): InferRecordSchema =
-    copy(rec = l, idx = r)
-}
-
-object InferRecordSchema {
-  private val ByIdxDescending: Comparator[(Long, DataType)] = (a, b) => java.lang.Long.compare(b._1, a._1)
-
-  /** Unbounded: `merged`, the running merge. Bounded: `kept`, the types
-    * of the `bound` lowest-`idx` records seen, in a max-heap on `idx`. */
-  final class Sample(bound: Long, merger: (DataType, DataType) => DataType) {
-    var merged: DataType = _
-    val kept = new PriorityQueue[(Long, DataType)](ByIdxDescending)
-    private val interned = new JHashMap[DataType, DataType]()
-
-    def wants(i: Long): Boolean = bound <= 0 || kept.size < bound || i < kept.peek._1
-
-    /** Count record `i` of type `t` (`i` is unused when unbounded). */
-    def add(i: Long, t: DataType): Unit =
-      if (bound <= 0) merged = if (merged == null) t else merger(merged, t)
-      else {
-        kept.add((i, interned.computeIfAbsent(t, _ => t)))
-        if (kept.size > bound) kept.poll()
-      }
-  }
+  override protected def withNewChildInternal(c: Expression): InferRecordSchema = copy(rec = c)
 }

@@ -14,13 +14,14 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   * batch at EOF, and temp disk is bounded by the source checkpoint's
   * retention rather than the whole run.
   *
-  * Why a spool and not a DSv2 `MicroBatchStream` over raw stdin: Spark's
-  * micro-batch contract is that a source can REPLAY any offset range after
-  * a crash, and a pipe cannot be re-read — a raw-stdin source would lose
-  * whatever the failed batch had consumed. The chunk files ARE the durable
-  * offsets: the file source's checkpoint + the spool directory give exact
-  * resume, which is strictly stronger than the reference (a crashed
-  * reference run loses everything since its last emitted state).
+  * What the spool buys is within a run: the chunk files are the file
+  * source's offsets, so a failed micro-batch re-reads exactly its own
+  * lines. It does not make a stdin-fed run resumable: `graft.Main` gives
+  * each `--mode stream` run its own spool directory and its own
+  * checkpoint, and the pipe cannot be re-read, so a restarted run resumes
+  * nothing. Durable replay needs `--mode stream --input <landing dir>`:
+  * the tap writes the landing directory, which is watched directly, and
+  * the checkpoint is the stable `<output>/_graft_checkpoint`.
   */
 final class StdinSpooler(in: InputStream, watchDir: Path,
                          maxLines: Int = 10000, maxIntervalMs: Long = 1000) {

@@ -26,9 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * needs for task retries). ACROSS a crash a pipe cannot be re-read:
   * planInputPartitions throws on an evicted range instead of silently
   * resuming with a gap. That restart gap is the reference's own behavior
-  * (a crashed run loses everything since its last state); the spooled
-  * path ([[StdinSpooler]] + file source) remains the deployment with
-  * durable replay, and this source is the zero-copy live alternative.
+  * (a crashed run loses everything since its last state), and a
+  * stdin-fed `--mode stream` run has it too (per-run spool and
+  * checkpoint). Durable replay needs `--mode stream --input <landing
+  * dir>`, whose checkpoint is the stable `<output>/_graft_checkpoint`.
   *
   * One input partition per batch: stdin is inherently a serial stream,
   * exactly like the reference's single reader loop feeding its consumer
@@ -118,8 +119,9 @@ final class StdinMicroBatchStream(in: InputStream) extends MicroBatchStream {
       if (s < evicted)
         throw new IllegalStateException(
           s"stdin cannot replay committed offsets ($s < $evicted): a pipe is " +
-            "not re-readable across restarts — use the StdinSpooler file-source " +
-            "deployment when crash recovery must re-deliver")
+            "not re-readable across restarts — when crash recovery must " +
+            "re-deliver, land the tap's output in a directory and run " +
+            "--mode stream --input <that dir>")
       val lines = new Array[String]((e - s).toInt)
       var i = 0
       while (i < lines.length) {

@@ -302,40 +302,14 @@ object StreamingAnalytics {
       .orElse(sys.env.get("SPARK_GRAFT_STATE_STORE_CHANGELOG"))
       .exists(_.equalsIgnoreCase("true"))
 
-  /** Checkpoint-file CHECKSUMS off for graft's streaming executions
-    * unless `SPARK_GRAFT_CKPT_CHECKSUM=true` (env or
-    * `graft.ckptChecksum` sys prop) re-enables them — r16 optimization
-    * finding (guide §1/§7.3): Spark 4.1's
-    * `ChecksumCheckpointFileManager` (default-on
-    * `spark.sql.streaming.checkpoint.fileChecksum.enabled`) creates a
-    * private thread pool per manager instance and stopped queries never
-    * release them — a 12-row stream subset leaked 480
-    * `ChecksumCheckpo...` threads (measured via /proc/<pid>/task), the
-    * full 217-row bench idled at ~700 threads, and the per-job
-    * scheduling probe read ~30-50 ms vs ~10 ms in a fresh JVM — which
-    * tripled iterative driver-loop rows (text_bpe_dist 9.6 s in-suite
-    * vs 3.3 s standalone). Each checkpoint write also pays a paired
-    * .crc file + pool round-trip per batch. graft's spooled rows are
-    * bounded one-shot replays with throwaway checkpoints, so checksum
-    * verification buys nothing here; deployments that keep long-lived
-    * checkpoints on storage they distrust can flip it back on. */
-  private[graft] def checkpointChecksum: Boolean =
-    sys.props.get("graft.ckptChecksum")
-      .orElse(sys.env.get("SPARK_GRAFT_CKPT_CHECKSUM"))
-      .exists(_.equalsIgnoreCase("true"))
-
-  private[graft] val ChecksumConfKey =
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-
   private[graft] val NoDataBatchesConfKey = "spark.sql.streaming.noDataMicroBatches.enabled"
 
   /** Run `body` (which must start AND stop its streaming query) with
     * `spark.sql.shuffle.partitions` scoped down for spooled state sizing,
     * no-data micro-batches pinned on (the collapsed flush's eviction
     * batch, see [[sessionizeSpooled]]) and, when configured, the
-    * state-store provider applied and checkpoint checksums disabled — see
-    * [[checkpointChecksum]]; restores the prior values however the body
-    * exits. */
+    * state-store provider applied; restores the prior values however the
+    * body exits. */
   private def withSpoolPartitions[T](s: SparkSession)(body: => T): T = {
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val clogKey =
@@ -343,19 +317,16 @@ object StreamingAnalytics {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevProv = s.conf.getOption(provKey)
     val prevClog = s.conf.getOption(clogKey)
-    val prevCksum = s.conf.getOption(ChecksumConfKey)
     val prevNoData = s.conf.getOption(NoDataBatchesConfKey)
     // captured ONCE: the defs read sys.props/env, and a test mutating
     // graft.stateStore while body runs must not make the finally block
     // skip or mis-restore the session conf
     val prov = stateStoreProvider
     val clog = changelogCheckpointing && prov.exists(_.contains("RocksDB"))
-    val cksum = checkpointChecksum
     s.conf.set("spark.sql.shuffle.partitions", SpoolStatePartitions)
     s.conf.set(NoDataBatchesConfKey, "true")
     prov.foreach(s.conf.set(provKey, _))
     if (clog) s.conf.set(clogKey, "true")
-    if (!cksum) s.conf.set(ChecksumConfKey, "false")
     try body finally {
       s.conf.set("spark.sql.shuffle.partitions", prev)
       prevNoData.fold(s.conf.unset(NoDataBatchesConfKey))(s.conf.set(NoDataBatchesConfKey, _))
@@ -363,8 +334,6 @@ object StreamingAnalytics {
         prevProv.fold(s.conf.unset(provKey))(s.conf.set(provKey, _))
       if (clog)
         prevClog.fold(s.conf.unset(clogKey))(s.conf.set(clogKey, _))
-      if (!cksum)
-        prevCksum.fold(s.conf.unset(ChecksumConfKey))(s.conf.set(ChecksumConfKey, _))
     }
   }
 

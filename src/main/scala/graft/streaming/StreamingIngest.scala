@@ -88,7 +88,7 @@ final class StreamingIngest(
     // reference's one-file-per-batch output. Config parity with the batch
     // path: naming, §1.4 passthrough and L1 metadata apply here too.
     // Passthrough infers inside the batch's one phase-1 query (one more
-    // parse per record); infer_sample_rows bounds it per epoch.
+    // parse per record).
     IngestCore.writeEpochs(spark, IngestCore.records(typed), epochs, config, outputUri,
       clock(), overwrite = false)
 
@@ -118,30 +118,15 @@ final class StreamingIngest(
     Bookmarks.emit(emittedState, batchId)
   }
 
-  /** Start `q` with checkpoint-file checksums scoped off (unless
-    * re-enabled — [[StreamingAnalytics.checkpointChecksum]]'s r16
-    * thread-leak finding applies to the ingest checkpoints too). The
-    * restore after `.start()` is safe: `startQuery` clones the session
-    * state synchronously inside start, so the running query keeps the
-    * conf it started with. */
-  private def startWithCkptConf(q: => StreamingQuery): StreamingQuery = {
-    val key = StreamingAnalytics.ChecksumConfKey
-    val prev = spark.conf.getOption(key)
-    val cksum = StreamingAnalytics.checkpointChecksum
-    if (!cksum) spark.conf.set(key, "false")
-    try q finally if (!cksum)
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   /** Start the streaming query over a directory of Singer message files. */
   def start(inputDir: String, checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startWithCkptConf(IngestCore.fileLines(spark.readStream.text(inputDir))
+    IngestCore.fileLines(spark.readStream.text(inputDir))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch((df: DataFrame, id: Long) => processBatch(df, id))
-      .start())
+      .start()
 
   /** Start the streaming query over LIVE stdin via the DSv2
     * [[StdinMicroBatchStream]] — the unbounded `tap | target` pipe with
@@ -149,14 +134,13 @@ final class StreamingIngest(
     * documented at [[StdinStream]]. */
   def startLive(checkpointDir: String,
                 trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    startWithCkptConf(
-      spark.readStream.format(classOf[StdinStreamProvider].getName).load()
-        .toDF("value")
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch((df: DataFrame, id: Long) => processBatch(df, id))
-        .start())
+    spark.readStream.format(classOf[StdinStreamProvider].getName).load()
+      .toDF("value")
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch((df: DataFrame, id: Long) => processBatch(df, id))
+      .start()
 }
 
 object StreamingIngest {

@@ -253,21 +253,7 @@ object ScaleProbe {
     // setup, codegen, 32-task floors) have already amortized.
     val points = sys.env.getOrElse("SPARK_GRAFT_SCALE_POINTS", "10")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bytes-first AQE partition sizing — the Bench.scala r17 conf,
-      // mirrored here so the 10x lane measures the same engine shape
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     // CELL MODE: one (operator, dir) measurement in this (fresh) JVM —
     // the child side of the standalone probe. `SPARK_GRAFT_SF_DIR` IS the

@@ -13,7 +13,7 @@ import graft.pipeline.IngestCore
   * `spark.read.json` spelling ([[ReferenceInference.inferExtra]]), both
   * merged into the declared schema with `mergeSchemas`: over generated
   * multi-stream, multi-epoch inputs, every epoch must get the same schema
-  * or raise the same error, with the sample unbounded and bounded. */
+  * or raise the same error. */
 class InferenceDifferentialSpec extends SparkSpec {
 
   private val schemaJson =
@@ -78,36 +78,36 @@ class InferenceDifferentialSpec extends SparkSpec {
   private def outcome(f: => StructType): Either[String, StructType] =
     Try(f).toEither.left.map(e => s"${e.getClass.getName}: ${e.getMessage}")
 
-  for (sampleRows <- Seq(-1L, 1L, 3L)) {
-    test(s"fused inference equals spark.read.json per epoch (infer_sample_rows = $sampleRows)") {
-      import spark.implicits._
-      var compared, errors = 0
-      (1 to 12).foreach { seed =>
-        val lines = input(new Random(seed * 31 + sampleRows))
-        // As many partitions as cores: no rebalance, so partial buffers merge.
-        val typed = IngestCore.envelope(spark.sparkContext
-          .parallelize(lines, spark.sparkContext.defaultParallelism).toDF("value"))
-          .localCheckpoint()
-        val records = IngestCore.records(typed)
-        val epochs = IngestCore.epochs(IngestCore.controlPlane(typed), Map.empty)
-        val declared = epochs.map(e => JsonSchemaConverter.toStructType(e.schema.schema))
-        val config = TargetConfig(strictValidation = false, inferSampleRows = sampleRows)
-        val fused = IngestCore.phaseOne(records, epochs, declared, config).get.collect()
-          .map(r => r.getInt(0) -> r.getAs[String]("inferred")).toMap
-        epochs.zip(declared).zipWithIndex.foreach { case ((e, d), i) =>
-          val slice: DataFrame = records.filter(col("stream") === e.stream &&
-            col("idx") > e.from && col("idx") < e.until)
-          val want = outcome(JsonSchemaConverter.mergeSchemas(d,
-            ReferenceInference.inferExtra(spark, slice, sampleRows)))
-          val got = outcome(JsonSchemaConverter.mergeSchemas(d,
-            JsonSchemaConverter.inferredSchema(fused.getOrElse(i, StructType(Nil).json))))
-          assert(got == want, s"seed $seed, epoch $i of ${epochs.size}:\n${lines.mkString("\n")}")
-          compared += 1
-          if (want.isLeft) errors += 1
-        }
+  // The title names `infer_sample_rows = -1`, the unbounded inference that
+  // is now the only one, so the test keeps its id.
+  test("fused inference equals spark.read.json per epoch (infer_sample_rows = -1)") {
+    import spark.implicits._
+    var compared, errors = 0
+    (1 to 12).foreach { seed =>
+      val lines = input(new Random(seed * 31 - 1))
+      // As many partitions as cores: no rebalance, so partial buffers merge.
+      val typed = IngestCore.envelope(spark.sparkContext
+        .parallelize(lines, spark.sparkContext.defaultParallelism).toDF("value"))
+        .localCheckpoint()
+      val records = IngestCore.records(typed)
+      val epochs = IngestCore.epochs(IngestCore.controlPlane(typed), Map.empty)
+      val declared = epochs.map(e => JsonSchemaConverter.toStructType(e.schema.schema))
+      val config = TargetConfig(strictValidation = false)
+      val fused = IngestCore.phaseOne(records, epochs, declared, config).get.collect()
+        .map(r => r.getInt(0) -> r.getAs[String]("inferred")).toMap
+      epochs.zip(declared).zipWithIndex.foreach { case ((e, d), i) =>
+        val slice: DataFrame = records.filter(col("stream") === e.stream &&
+          col("idx") > e.from && col("idx") < e.until)
+        val want = outcome(JsonSchemaConverter.mergeSchemas(d,
+          ReferenceInference.inferExtra(spark, slice)))
+        val got = outcome(JsonSchemaConverter.mergeSchemas(d,
+          JsonSchemaConverter.inferredSchema(fused.getOrElse(i, StructType(Nil).json))))
+        assert(got == want, s"seed $seed, epoch $i of ${epochs.size}:\n${lines.mkString("\n")}")
+        compared += 1
+        if (want.isLeft) errors += 1
       }
-      info(s"$compared epochs compared, $errors of them errors")
-      assert(errors > 0, "no generated epoch exercised an inference error")
     }
+    info(s"$compared epochs compared, $errors of them errors")
+    assert(errors > 0, "no generated epoch exercised an inference error")
   }
 }

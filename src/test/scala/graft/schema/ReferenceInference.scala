@@ -8,19 +8,13 @@ import org.apache.spark.sql.types.StructType
   * `spark.read.json` query over one epoch's records. It is the executable
   * definition that [[JsonSchemaConverter.inferRecords]] must reproduce;
   * `InferenceDifferentialSpec` compares the two. It is not the shipped
-  * spelling because it costs a query (two with the bound) per epoch,
-  * where the aggregate shares one grouped scan with validation. */
+  * spelling because it costs a query per epoch, where the aggregate
+  * shares one grouped scan with validation. */
 object ReferenceInference {
 
-  /** The schema of `recs`' non-null `rec` strings. `sampleRows > 0`
-    * bounds the input to the first N of them by `idx`
-    * (TakeOrderedAndProject: top-n per partition + merge, no full sort). */
-  def inferExtra(spark: SparkSession, recs: DataFrame, sampleRows: Long): StructType = {
+  /** The schema of `recs`' non-null `rec` strings. */
+  def inferExtra(spark: SparkSession, recs: DataFrame): StructType = {
     import spark.implicits._
-    val nonNull = recs.filter(col("rec").isNotNull)
-    val bounded =
-      if (sampleRows <= 0) nonNull
-      else nonNull.orderBy(col("idx")).limit(sampleRows.toInt)
-    spark.read.json(bounded.select("rec").as[String]).schema
+    spark.read.json(recs.filter(col("rec").isNotNull).select("rec").as[String]).schema
   }
 }

@@ -134,23 +134,6 @@ class StreamingIngestSpec extends SparkSpec {
     assert(row.getAs[String]("undeclared") == "kept")
   }
 
-  test("streaming: infer_sample_rows bounds the inference scan (documented trade)") {
-    val in = Files.createTempDirectory("stream-in8")
-    val out = Files.createTempDirectory("stream-out8").toString
-    val cp = Files.createTempDirectory("stream-cp8").toString
-    val ingest = new StreamingIngest(spark, out,
-      TargetConfig(streamsInSeparateFolder = true, inferSampleRows = 1L))
-    Files.writeString(in.resolve("b1.jsonl"), Seq(
-      schemaLine,
-      """{"type": "RECORD", "stream": "s1", "record": {"pk": 1, "v": "a", "early": "seen"}}""",
-      """{"type": "RECORD", "stream": "s1", "record": {"pk": 2, "v": "b", "late": "missed"}}""").mkString("\n"))
-    ingest.start(in.toString, cp).awaitTermination()
-    val df = spark.read.parquet(s"$out/s1")
-    // field in the sampled prefix passes through; one past the bound does not
-    assert(df.columns.contains("early") && !df.columns.contains("late"))
-    assert(df.count() == 2) // declared fields of ALL records still written
-  }
-
   test("streaming: RECORD without a 'record' key is a Singer protocol error") {
     val in = Files.createTempDirectory("stream-in9")
     val out = Files.createTempDirectory("stream-out9").toString
