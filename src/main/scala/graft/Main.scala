@@ -1,8 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.TargetConfig
 import graft.pipeline.SingerPipeline
 import graft.streaming.{StdinSpooler, StdinStream, StreamingIngest}
@@ -31,6 +32,12 @@ import graft.sources.S3Conf
   *    ([[graft.streaming.StdinStreamProvider]]). Zero-copy, but a pipe
   *    cannot replay across a process restart (the source refuses a gap
   *    rather than hiding it).
+  *
+  * Per-run temp files (the batch stdin spool, the stream-mode spool and
+  * any per-run checkpoint) live in a per-run directory under `temp_dir`,
+  * deleted once the run succeeds; a failed run keeps it, and a failed
+  * batch run names its spool file on stderr. A `--checkpoint` or
+  * `--input` from the command line is never deleted.
   *
   * Divergences (documented, SURVEY.md §7.4): `--output` allows a local/
   * hdfs URI instead of S3 (the reference requires a bucket); compression
@@ -107,36 +114,47 @@ object Main {
     } finally spark.stop()
   }
 
-  /** Spool/staging root: `temp_dir` from config (L7) or the system default. */
-  private def tempRoot(config: TargetConfig): Option[java.nio.file.Path] =
-    config.tempDir.map { d =>
-      val p = Paths.get(d)
-      Files.createDirectories(p)
-      p
+  /** Runs `body` over a fresh per-run directory under `temp_dir` (L7)
+    * or the system default, and deletes the directory once `body`
+    * returns; a run that throws keeps it. */
+  private def withRunDir[T](config: TargetConfig, prefix: String)(body: Path => T): T = {
+    val dir = config.tempDir match {
+      case Some(root) => Files.createTempDirectory(Files.createDirectories(Paths.get(root)), prefix)
+      case None => Files.createTempDirectory(prefix)
     }
+    val result = body(dir)
+    FileUtils.deleteQuietly(dir.toFile)
+    result
+  }
 
   /** Batch mode: spool stdin to a file so the input is splittable/
     * re-scannable (the batch pipeline makes several passes; a 100 TB
-    * deployment points --input at the durable landing zone instead). */
+    * deployment points --input at the durable landing zone instead). A
+    * failed run keeps the spool file and names it on stderr, so the run
+    * can be repeated with `--input`. */
   private def runBatch(spark: SparkSession, opts: Map[String, String],
                        output: String, config: TargetConfig): Unit = {
-    val input = opts.get("input") match {
-      case Some(p) => p
-      case None =>
-        val tmp = tempRoot(config) match {
-          case Some(root) => Files.createTempFile(root, "singer-stdin", ".jsonl")
-          case None => Files.createTempFile("singer-stdin", ".jsonl")
-        }
-        Files.copy(System.in, tmp, StandardCopyOption.REPLACE_EXISTING)
-        if (Files.size(tmp) == 0L)
+    def ingest(input: String): Unit = {
+      val result = SingerPipeline.run(spark, input, output, config)
+      result.outputs.foreach(o =>
+        System.err.println(s"[graft] wrote ${o.rows} rows -> ${o.path}"))
+      SingerPipeline.emitState(result.state)
+    }
+    opts.get("input") match {
+      case Some(input) => ingest(input)
+      case None => withRunDir(config, "singer-stdin") { dir =>
+        val spool = dir.resolve("stdin.jsonl")
+        Files.copy(System.in, spool)
+        if (Files.size(spool) == 0L)
           System.err.println("[graft] warning: 0 bytes read from stdin — " +
             "is the tap connected? (zero-message input is not an error)")
-        tmp.toString
+        try ingest(spool.toString) catch { case e: Throwable =>
+          System.err.println(s"[graft] run failed; stdin is kept at $spool " +
+            "(repeat the run with --input <that file>)")
+          throw e
+        }
+      }
     }
-    val result = SingerPipeline.run(spark, input, output, config)
-    result.outputs.foreach(o =>
-      System.err.println(s"[graft] wrote ${o.rows} rows -> ${o.path}"))
-    SingerPipeline.emitState(result.state)
   }
 
   /** Live mode: raw stdin through the DSv2 source — no spool directory,
@@ -146,52 +164,49 @@ object Main {
     * trip the source's evicted-offset guard. */
   private def runLive(spark: SparkSession, opts: Map[String, String],
                       output: String, config: TargetConfig): Unit = {
-    val checkpoint = opts.getOrElse("checkpoint", (tempRoot(config) match {
-      case Some(root) => Files.createTempDirectory(root, "graft-live-ckpt")
-      case None => Files.createTempDirectory("graft-live-ckpt")
-    }).toString)
-    val ingest = new StreamingIngest(spark, output, config)
-    val query = ingest.startLive(checkpoint, Trigger.ProcessingTime("500 milliseconds"))
-    StreamingIngest.drainAtEof(query, StdinStream.eofReached, pollMs = 500)
+    def run(checkpoint: String): Unit = {
+      val query = new StreamingIngest(spark, output, config)
+        .startLive(checkpoint, Trigger.ProcessingTime("500 milliseconds"))
+      StreamingIngest.drainAtEof(query, StdinStream.eofReached, pollMs = 500)
+    }
+    opts.get("checkpoint") match {
+      case Some(checkpoint) => run(checkpoint)
+      case None => withRunDir(config, "graft-live-ckpt")(dir => run(dir.toString))
+    }
   }
 
   /** Stream mode: consume the pipe incrementally — parquet and bookmarks
     * appear per micro-batch while the tap is still producing. */
   private def runStream(spark: SparkSession, opts: Map[String, String],
                         output: String, config: TargetConfig): Unit = {
-    def tmpDir(prefix: String): java.nio.file.Path = tempRoot(config) match {
-      case Some(root) => Files.createTempDirectory(root, prefix)
-      case None => Files.createTempDirectory(prefix)
-    }
-    val (watchDir, spooler) = opts.get("input") match {
-      case Some(dir) => (dir, None) // watch an existing landing directory
-      case None =>
-        val d = tmpDir("graft-stdin-spool")
+    def run(watchDir: String, checkpoint: String): StreamingQuery =
+      new StreamingIngest(spark, output, config)
+        .start(watchDir, checkpoint, Trigger.ProcessingTime("500 milliseconds"))
+    opts.get("input") match {
+      // Watch an existing landing directory, by default with a STABLE
+      // checkpoint under the output so a re-run after a crash resumes
+      // instead of re-ingesting every landing file into the append-mode
+      // output (duplicating all rows).
+      case Some(dir) =>
+        run(dir, opts.getOrElse("checkpoint", s"$output/_graft_checkpoint"))
+          .awaitTermination()
+      // Stdin: a per-run spool directory and, by default, a per-run
+      // checkpoint next to it (a pipe is not replayable across process
+      // restarts anyway).
+      case None => withRunDir(config, "graft-stdin-stream") { dir =>
         // file_size is the OUTPUT records-per-file knob; reused here only
         // as a rough spool granularity hint, clamped into int range (an
         // unchecked .toInt of a >2^31 Long flips negative and crashes the
         // spooler's require at launch).
         val spoolLines =
           if (config.fileSize > 0) config.fileSize.min(1000000L).toInt else 10000
-        val s = new StdinSpooler(System.in, d, maxLines = spoolLines).start()
-        (d.toString, Some(s))
-    }
-    // Watch-dir mode defaults to a STABLE checkpoint under the output so a
-    // re-run after a crash resumes instead of re-ingesting every landing
-    // file into the append-mode output (duplicating all rows). Stdin-spool
-    // mode keeps a per-run checkpoint: its spool dir is per-run and a pipe
-    // is not replayable across process restarts anyway.
-    val checkpoint = opts.getOrElse("checkpoint",
-      if (spooler.isEmpty) s"$output/_graft_checkpoint"
-      else tmpDir("graft-stdin-ckpt").toString)
-    val ingest = new StreamingIngest(spark, output, config)
-    val query = ingest.start(watchDir, checkpoint,
-      Trigger.ProcessingTime("500 milliseconds"))
-    spooler match {
-      case Some(s) =>
-        StreamingIngest.drainAtEof(query, s.eofReached, pollMs = 500)
-        s.rethrowIfFailed()
-      case None => query.awaitTermination()
+        val spoolDir = Files.createDirectory(dir.resolve("spool"))
+        val spooler = new StdinSpooler(System.in, spoolDir, maxLines = spoolLines).start()
+        val query = run(spoolDir.toString,
+          opts.getOrElse("checkpoint", dir.resolve("checkpoint").toString))
+        StreamingIngest.drainAtEof(query, spooler.eofReached, pollMs = 500)
+        spooler.rethrowIfFailed()
+      }
     }
   }
 }

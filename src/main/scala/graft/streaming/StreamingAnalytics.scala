@@ -1,10 +1,14 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path}
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 /** Event-time streaming operators over an `events`-shaped stream
   * (event_id, ts, user_id, event_type, value): watermarked tumbling-window
@@ -244,7 +248,7 @@ object StreamingAnalytics {
         })
   }
 
-  private val spoolRuns = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val memorySinks = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** State shards for the SPOOLED (bounded-corpus) executions. Stateful
     * queries pay per-microbatch state-store commit I/O PER SHUFFLE
@@ -252,15 +256,11 @@ object StreamingAnalytics {
     * so a 32-partition session spends ~3 s/batch on store commits alone
     * for kilobyte-scale state (measured in r9; BASELINE.md r9 records
     * the per-microbatch commit overhead at kilobyte state). Shard
-    * count should track state VOLUME, not core count: the bounded spool
-    * corpora need few shards; a production deployment with millions of
-    * live keys raises the session conf instead. The spooled runners set
-    * this for the query's lifetime (the count is fixed at query start)
-    * and restore the session conf after. */
-  private val SpoolStatePartitions =
-    sys.props.get("graft.spoolStatePartitions")
-      .orElse(sys.env.get("SPARK_GRAFT_SPOOL_STATE_PARTITIONS"))
-      .filter(_.nonEmpty).getOrElse("8")
+    * count should track state VOLUME, not core count, and the bounded
+    * spool corpora need few shards. The spooled runners set this for the
+    * query's lifetime (the count is fixed at query start) and restore
+    * the session conf after. */
+  private val SpoolStatePartitions = 8
 
   /** State-store provider for every spooled execution, from
     * `SPARK_GRAFT_STATE_STORE`: unset → Spark's default in-memory
@@ -307,7 +307,7 @@ object StreamingAnalytics {
   /** Run `body` (which must start AND stop its streaming query) with
     * `spark.sql.shuffle.partitions` scoped down for spooled state sizing,
     * no-data micro-batches pinned on (the collapsed flush's eviction
-    * batch, see [[sessionizeSpooled]]) and, when configured, the
+    * batch, see [[replaySpooled]]) and, when configured, the
     * state-store provider applied; restores the prior values however the
     * body exits. */
   private def withSpoolPartitions[T](s: SparkSession)(body: => T): T = {
@@ -323,7 +323,7 @@ object StreamingAnalytics {
     // skip or mis-restore the session conf
     val prov = stateStoreProvider
     val clog = changelogCheckpointing && prov.exists(_.contains("RocksDB"))
-    s.conf.set("spark.sql.shuffle.partitions", SpoolStatePartitions)
+    s.conf.set("spark.sql.shuffle.partitions", SpoolStatePartitions.toString)
     s.conf.set(NoDataBatchesConfKey, "true")
     prov.foreach(s.conf.set(provKey, _))
     if (clog) s.conf.set(clogKey, "true")
@@ -335,15 +335,6 @@ object StreamingAnalytics {
       if (clog)
         prevClog.fold(s.conf.unset(clogKey))(s.conf.set(clogKey, _))
     }
-  }
-
-  /** [[withSpoolPartitions]] for a collapsed-flush runner
-    * ([[sessionizeSpooled]]'s protocol note), after checking the other
-    * assumption that protocol rests on: `stream`'s file source has no
-    * per-trigger limit, so the corpus and both sentinels land in batch 0. */
-  private def withCollapsedFlush[T](s: SparkSession, stream: Dataset[_])(body: => T): T = {
-    requireSingleBatchSource(stream)
-    withSpoolPartitions(s)(body)
   }
 
   /** Fails when a file source under `stream` caps what one micro-batch
@@ -360,34 +351,116 @@ object StreamingAnalytics {
       s"collapsed flush needs every spooled file in batch 0, but the source sets ${limits.mkString(", ")}")
   }
 
+  /** Runs `body` over a fresh spool directory and deletes it however
+    * `body` exits. */
+  private def withSpool[T](body: Path => T): T = {
+    val spool = Files.createTempDirectory("graft-spool-")
+    try body(spool) finally FileUtils.deleteQuietly(spool.toFile)
+  }
+
+  /** `ts` and `cols` of the `events` table: an events-fed row's corpus. */
+  private def events(s: SparkSession, dir: String, cols: String*): DataFrame =
+    graft.operators.Tables.events(s, dir).select("ts", cols: _*)
+
+  /** Appends `corpus` to `spool` with `ts` as epoch-nanos longs, the
+    * spool's wire format whatever timestamp shape the parquet at rest
+    * holds ([[graft.operators.Tables.events]] owns that shape: nanos in
+    * rounds 1-6, µs NTZ after the round-7 regeneration). */
+  private def spoolNanos(corpus: DataFrame, spool: String): Unit =
+    corpus.withColumn("ts", unix_micros(col("ts")) * 1000L)
+      .coalesce(1).write.mode("append").parquet(spool)
+
+  /** Appends the two far-future sentinel timestamps, `maxTsNanos` plus
+    * one and two steps of `horizonMs` + 1 h, each with the non-`ts`
+    * values of every row in `sentinel`. */
+  private def spoolSentinels(s: SparkSession, spool: String, schema: StructType,
+                             maxTsNanos: Long, horizonMs: Long,
+                             sentinel: Seq[Map[String, Any]]): Unit = {
+    val step = (horizonMs + 60 * 60 * 1000L) * 1000000L
+    val rows = for (t <- Seq(maxTsNanos + step, maxTsNanos + 2 * step); r <- sentinel)
+      yield Row.fromSeq(schema.fieldNames.toSeq.map(c => if (c == "ts") t else r(c)))
+    s.createDataFrame(rows.asJava, schema)
+      .coalesce(1).write.mode("append").parquet(spool)
+  }
+
+  /** The spool as a file stream with `ts` back as a µs timestamp. */
+  private def spooledStream(s: SparkSession, spool: String, schema: StructType): DataFrame =
+    s.readStream.schema(schema).parquet(spool)
+      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+
+  /** Runs `query` into a memory sink under [[withSpoolPartitions]],
+    * `drive` (one `processAllAvailable` unless given) feeding it, and
+    * returns `post` of what it emitted, checkpointed; the sink's view is
+    * dropped however this exits. */
+  private def drainToMemory(s: SparkSession, query: => Dataset[_],
+                            drive: StreamingQuery => Unit = _.processAllAvailable())(
+                            post: DataFrame => DataFrame): DataFrame = {
+    val name = s"graft_spool_${memorySinks.incrementAndGet()}"
+    try {
+      withSpoolPartitions(s) {
+        val q = query.toDF().writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Append()).start()
+        try drive(q) finally q.stop()
+      }
+      post(s.table(name)).localCheckpoint()
+    } finally { s.catalog.dropTempView(name); () }
+  }
+
+  /** The COLLAPSED-FLUSH replay behind every events-fed oracle row: spool
+    * `corpus` (a `ts` timestamp column plus the row's own columns), run
+    * `query` over it as a REAL Structured-Streaming execution (file
+    * source → watermark → stateful operator → memory sink) and return
+    * `post` of what it emitted. `post` also gets the corpus's max event
+    * time in epoch ms, for rows whose sentinel output shares the real
+    * rows' keys. Each row states only its corpus, its sentinel's non-`ts`
+    * values (`sentinel`, one map per row written at each sentinel time),
+    * its horizon (window or gap/settle, plus lateness) and its query.
+    *
+    * Protocol (r17 COLLAPSED — guide §1.2/§5, driver-side fixed cost):
+    * the corpus AND the two far-future sentinel times are all on disk
+    * BEFORE the query starts, so batch 0 processes everything under the
+    * origin watermark (nothing is late-dropped — the batch-N watermark
+    * is computed from batch N−1, and there is no batch −1), and the
+    * engine's watermark-advance no-data batch then fires every real
+    * window close or timeout (sentinel ts ≥ max ts + horizon + 1 h ⇒
+    * the post-batch-0 watermark passes every real event's horizon).
+    * `processAllAvailable` only returns after that eviction batch —
+    * MicroBatchExecution keeps constructing batches while
+    * `lastExecutionRequiresAnotherBatch` — so the memory table is
+    * complete; a chained stateful pair (trending, distinct) gets its
+    * second no-data batch the same way. Two batches total where the
+    * staged r7–r16 protocol (corpus → PAA → sentinel → PAA → sentinel →
+    * PAA) paid six, each with per-batch planning + offset/commit-log +
+    * state-commit fixed cost; output is BIT-IDENTICAL (same rows into
+    * the same stateful fold, same final watermark — equality measured
+    * old-vs-new at sf0.1 and oracle-pinned at sf0.01/0.001, r17). No
+    * data-plane collect anywhere: the corpus streams from parquet files;
+    * the only driver values are max(ts) (one aggregate row over the
+    * spool) and the memory sink the protocol itself defines. */
+  private def replaySpooled(s: SparkSession, corpus: DataFrame, horizonMs: Long,
+                            sentinel: Map[String, Any]*)(
+                            query: DataFrame => Dataset[_])(
+                            post: (DataFrame, Long) => DataFrame): DataFrame =
+    withSpool { dir =>
+      val spool = dir.toString
+      spoolNanos(corpus, spool)
+      val spooled = s.read.parquet(spool)
+      val maxTsNanos = spooled.agg(max(col("ts"))).head().getLong(0)
+      spoolSentinels(s, spool, spooled.schema, maxTsNanos, horizonMs, sentinel)
+      val stream = spooledStream(s, spool, spooled.schema)
+      requireSingleBatchSource(stream)
+      drainToMemory(s, query(stream))(post(_, maxTsNanos / 1000000L))
+    }
+
   /** The first ORACLE-CHECKED streaming query: spool the bounded `events`
     * table through a REAL Structured-Streaming execution of [[sessionize]]
     * (file source → watermark → flatMapGroupsWithState → memory sink) and
     * return every closed session. Against a bounded corpus the stream's
     * output must equal batch gap sessionization — gaps-and-islands SQL
     * DuckDB can run — which is what finally puts a CORRECTNESS row on the
-    * streaming family instead of unit pins alone.
-    *
-    * Flush protocol (r17 COLLAPSED — guide §1.2/§5, driver-side fixed
-    * cost): the corpus AND the two far-future sentinel rows (user_id −1,
-    * filtered from the output) are all on disk BEFORE the query starts,
-    * so batch 0 processes everything under the origin watermark (nothing
-    * is late-dropped — the batch-N watermark is computed from batch N−1,
-    * and there is no batch −1), and the engine's watermark-advance
-    * no-data batch then fires every real timeout (sentinel ts ≥ maxTs +
-    * gap + lateness + 1 h ⇒ the post-batch-0 watermark exceeds every
-    * real lastSeen + gap). `processAllAvailable` only returns after that
-    * eviction batch — MicroBatchExecution keeps constructing batches
-    * while `lastExecutionRequiresAnotherBatch` — so the memory table is
-    * complete. Two batches total where the staged r7–r16 protocol
-    * (corpus → PAA → sentinel → PAA → sentinel → PAA) paid six, each
-    * with per-batch planning + offset/commit-log + state-commit fixed
-    * cost; output is BIT-IDENTICAL (same rows into the same stateful
-    * fold, same final watermark — equality measured old-vs-new at
-    * sf0.1 and oracle-pinned at sf0.01/0.001, r17). No data-plane
-    * collect anywhere: the corpus streams from parquet files; the only
-    * driver values are max(ts) (one aggregate row) and the
-    * session-count-sized memory sink the protocol itself defines.
+    * streaming family instead of unit pins alone. The collapsed flush
+    * ([[replaySpooled]]) closes every session: the sentinel rows (user_id
+    * −1) are filtered from the output.
     *
     * Output is in epoch MILLISECONDS on both sides ([[sessionize]]'s gap
     * arithmetic runs on Timestamp.getTime, i.e. ms floors, and the oracle
@@ -397,56 +470,20 @@ object StreamingAnalytics {
                         gapMs: Long = 30 * 60 * 1000L,
                         lateness: String = "10 minutes"): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-spool-$runId")
-    // Spool through the [[Tables.events]] loader (which owns the at-rest
-    // timestamp shape — nanos in rounds 1-6, µs NTZ after the round-7
-    // regeneration) rather than copying the raw files: the spool's wire
-    // format is pinned to nanos longs regardless of what parquet holds.
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("user_id"),
-        col("event_type"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, -1L, "sentinel"))
-        .toDF("ts", "user_id", "event_type")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("user_id", LongType),
-      StructField("event_type", StringType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[SessionEvent]
-    val name = s"graft_sessions_$runId"
-    // collapsed flush (see scaladoc): sentinels on disk before start
-    val step = (gapMs + latenessMs + 60 * 60 * 1000L) * 1000000L
-    sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withCollapsedFlush(s, stream) {
-      val q = sessionize(stream, gapMs, lateness)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = s.table(name)
-      .filter(col("user_id") >= 0)
+    replaySpooled(s, events(s, dir, "user_id", "event_type"), gapMs + intervalMs(lateness),
+        Map("user_id" -> -1L, "event_type" -> "sentinel"))(
+      stream => sessionize(stream.as[SessionEvent], gapMs, lateness))(
+      (out, _) => sessionRows(out))
+  }
+
+  /** A session sink's real rows, bounds in epoch ms, in oracle order. */
+  private def sessionRows(out: DataFrame): DataFrame =
+    out.filter(col("user_id") >= 0)
       .select(col("user_id"),
         unix_millis(col("session_start")).as("session_start_ms"),
         unix_millis(col("session_end")).as("session_end_ms"),
         col("n_events"))
       .orderBy("user_id", "session_start_ms")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-    }
-    del(tmp.toFile)
-    out
-  }
 
   /** [[sessionizeSpooled]] through Spark's NATIVE streaming
     * `session_window` aggregate — the built-in path
@@ -465,57 +502,17 @@ object StreamingAnalytics {
     * every real session. */
   def sessionizeNativeSpooled(s: SparkSession, dir: String,
                               gapMs: Long = 30 * 60 * 1000L,
-                              lateness: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-nsesspool-$runId")
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("user_id"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, -1L)).toDF("ts", "user_id")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("user_id", LongType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      .select(col("user_id"), col("ts"))
-    val name = s"graft_nsessions_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
-    val step = (gapMs + latenessMs + 60 * 60 * 1000L) * 1000000L
-    sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withCollapsedFlush(s, stream) {
-      val q = stream
-        .withWatermark("ts", lateness)
+                              lateness: String = "10 minutes"): DataFrame =
+    replaySpooled(s, events(s, dir, "user_id"), gapMs + intervalMs(lateness),
+        Map("user_id" -> -1L))(
+      _.withWatermark("ts", lateness)
         .groupBy(col("user_id"),
           session_window(col("ts"), s"$gapMs milliseconds"))
         .agg(min(col("ts")).as("session_start"),
           max(col("ts")).as("session_end"),
           count(lit(1)).as("n_events"))
-        .select("user_id", "session_start", "session_end", "n_events")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = s.table(name)
-      .filter(col("user_id") >= 0)
-      .select(col("user_id"),
-        unix_millis(col("session_start")).as("session_start_ms"),
-        unix_millis(col("session_end")).as("session_end_ms"),
-        col("n_events"))
-      .orderBy("user_id", "session_start_ms")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-    }
-    del(tmp.toFile)
-    out
-  }
+        .select("user_id", "session_start", "session_end", "n_events"))(
+      (out, _) => sessionRows(out))
 
   /** ORACLE-CHECKED streaming windowed stats: the watermarked
     * tumbling-window aggregate ([[windowedEventStats]], the family's
@@ -527,47 +524,15 @@ object StreamingAnalytics {
     * [[qualityMonitorSpooled]]; the sum stays on the live operator. */
   def windowStatsSpooled(s: SparkSession, dir: String,
                          windowLen: String = "1 hour",
-                         lateness: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-wstatspool-$runId")
-    // Nanos-long spool via the loader (see [[sessionizeSpooled]]).
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("event_type"),
-        col("value"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, "sentinel", 0.0)).toDF("ts", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val name = s"graft_wstats_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
-    val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
-    sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withCollapsedFlush(s, stream) {
-      val q = windowedEventStats(stream, windowLen, lateness)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = s.table(name)
-      .filter(col("event_type") =!= "sentinel")
-      .select(unix_millis(col("window_start")).as("window_start_ms"),
-        col("event_type"), col("n"))
-      .orderBy("window_start_ms", "event_type")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
-  }
+                         lateness: String = "10 minutes"): DataFrame =
+    replaySpooled(s, events(s, dir, "event_type", "value"),
+        intervalMs(windowLen) + intervalMs(lateness),
+        Map("event_type" -> "sentinel", "value" -> 0.0))(
+      windowedEventStats(_, windowLen, lateness))(
+      (out, _) => out.filter(col("event_type") =!= "sentinel")
+        .select(unix_millis(col("window_start")).as("window_start_ms"),
+          col("event_type"), col("n"))
+        .orderBy("window_start_ms", "event_type"))
 
   /** STREAMING OHLC — [[graft.operators.EventAnalytics.downsampleOhlc]]'s
     * streaming twin, proving batch/stream parity on the retention rollup
@@ -583,8 +548,7 @@ object StreamingAnalytics {
   def ohlcSpooled(s: SparkSession, dir: String,
                   windowLen: String = "1 hour",
                   lateness: String = "10 minutes"): DataFrame =
-    ohlcSpooledFrom(s, graft.operators.Tables.events(s, dir)
-        .select(col("ts"), col("event_id"), col("event_type"), col("value")),
+    ohlcSpooledFrom(s, events(s, dir, "event_id", "event_type", "value"),
       windowLen, lateness)
 
   /** [[ohlcSpooled]] at 10x — the stream family's first ABOVE-sf0.1
@@ -593,46 +557,20 @@ object StreamingAnalytics {
     * event corpus ([[graft.operators.EventAnalytics.events10x]] —
     * copies 192 h apart, epoch-µs arithmetic the DuckDB oracle replays
     * exactly) spooled through the SAME watermarked streaming execution
-    * and hash-matched against the batch-derived oracle. localCheckpoint:
-    * the scaled construction feeds the spool write AND the max-ts read. */
+    * and hash-matched against the batch-derived oracle. The scaled
+    * construction is read once, by the spool write. */
   def ohlcSpooled10x(s: SparkSession, dir: String): DataFrame =
-    ohlcSpooledFrom(s,
-      graft.operators.EventAnalytics.events10x(s, dir).localCheckpoint(),
+    ohlcSpooledFrom(s, graft.operators.EventAnalytics.events10x(s, dir),
       windowLen = "1 hour", lateness = "10 minutes")
 
   /** The spooled-OHLC execution over an EXPLICIT (ts, event_id,
     * event_type, value) relation — shared by the registered row and its
     * 10x scale twin. */
-  private[graft] def ohlcSpooledFrom(s: SparkSession, ev: DataFrame,
-                  windowLen: String,
-                  lateness: String): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-ohlcspool-$runId")
-    ev.select((unix_micros(col("ts")) * 1000L).as("ts"), col("event_id"),
-        col("event_type"), col("value"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = ev
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, -1L, "sentinel", 0.0))
-        .toDF("ts", "event_id", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("event_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val name = s"graft_ohlc_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
-    val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
-    sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withCollapsedFlush(s, stream) {
-      val agg = stream
-        .withWatermark("ts", lateness)
+  private def ohlcSpooledFrom(s: SparkSession, ev: DataFrame,
+                              windowLen: String, lateness: String): DataFrame =
+    replaySpooled(s, ev, intervalMs(windowLen) + intervalMs(lateness),
+        Map("event_id" -> -1L, "event_type" -> "sentinel", "value" -> 0.0))(
+      _.withWatermark("ts", lateness)
         .groupBy(window(col("ts"), windowLen), col("event_type"))
         .agg(count(lit(1)).as("n"),
           min_by(col("value"), struct(col("ts"), col("event_id"))).as("open"),
@@ -642,22 +580,12 @@ object StreamingAnalytics {
           sum(round(col("value") * 100).cast("long")).as("sum_cents"))
         .select(col("window.start").as("window_start"), col("event_type"),
           col("n"), col("open"), col("high"), col("low"), col("close"),
-          col("sum_cents"))
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = s.table(name)
-      .filter(col("event_type") =!= "sentinel")
-      .select(unix_millis(col("window_start")).as("window_start_ms"),
-        col("event_type"), col("n"), col("open"), col("high"), col("low"),
-        col("close"), col("sum_cents"))
-      .orderBy("window_start_ms", "event_type")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
-  }
+          col("sum_cents")))(
+      (out, _) => out.filter(col("event_type") =!= "sentinel")
+        .select(unix_millis(col("window_start")).as("window_start_ms"),
+          col("event_type"), col("n"), col("open"), col("high"), col("low"),
+          col("close"), col("sum_cents"))
+        .orderBy("window_start_ms", "event_type"))
 
   /** CRASH-RECOVERY twin of [[windowStatsSpooled]], as an oracle row:
     * the same watermarked tumbling-window aggregate, executed as TWO
@@ -678,30 +606,15 @@ object StreamingAnalytics {
     * late-dropped and the batch equivalence is exact. */
   def windowStatsRecovered(s: SparkSession, dir: String,
                            windowLen: String = "1 hour",
-                           lateness: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-recovspool-$runId")
+                           lateness: String = "10 minutes"): DataFrame = withSpool { tmp =>
     val (spool, ckpt, sink) = (s"$tmp/in", s"$tmp/ckpt", s"$tmp/out")
-    val ev = graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("event_type"),
-        col("value"))
-    val bounds = graft.operators.Tables.events(s, dir)
-      .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
-    val maxTsNanos = bounds.getLong(1) * 1000L
-    val splitNanos = bounds.getLong(0) * 1000L +
-      (maxTsNanos - bounds.getLong(0) * 1000L) / 2
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, "sentinel", 0.0)).toDF("ts", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(spool)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    def startQuery() = {
-      val stream = s.readStream.schema(schema).parquet(spool)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    val ev = events(s, dir, "event_type", "value")
+    val tsNanos = unix_micros(col("ts")) * 1000L
+    val bounds = ev.agg(min(tsNanos), max(tsNanos)).head()
+    val (minTsNanos, maxTsNanos) = (bounds.getLong(0), bounds.getLong(1))
+    val splitNanos = minTsNanos + (maxTsNanos - minTsNanos) / 2
+    def startQuery(schema: StructType) = {
+      val stream = spooledStream(s, spool, schema)
       requireSingleBatchSource(stream)
       windowedEventStats(stream, windowLen, lateness)
         .select(unix_millis(col("window_start")).as("window_start_ms"),
@@ -711,28 +624,26 @@ object StreamingAnalytics {
         .outputMode(OutputMode.Append()).start()
     }
     withSpoolPartitions(s) {
-      ev.filter(col("ts") <= splitNanos).coalesce(1)
-        .write.mode("append").parquet(spool)
-      val q1 = startQuery()
+      spoolNanos(ev.filter(tsNanos <= splitNanos), spool)
+      val schema = s.read.parquet(spool).schema
+      val q1 = startQuery(schema)
       try q1.processAllAvailable() finally q1.stop() // wave 1, then "crash"
-      // resume incarnation takes the collapsed flush
-      // ([[sessionizeSpooled]] r17 protocol note): wave 2 + both
-      // sentinels are on disk before q2 starts, so its first batch
-      // recovers state + processes everything and the watermark-advance
-      // batch flushes; the crash/recover split itself is untouched
-      ev.filter(col("ts") > splitNanos).coalesce(1)
-        .write.mode("append").parquet(spool)
-      val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
-      sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-      val q2 = startQuery() // resume: same checkpoint, same sink
+      // resume incarnation takes the collapsed flush ([[replaySpooled]]):
+      // wave 2 + both sentinels are on disk before q2 starts, so its
+      // first batch recovers state + processes everything and the
+      // watermark-advance batch flushes; the crash/recover split itself
+      // is untouched
+      spoolNanos(ev.filter(tsNanos > splitNanos), spool)
+      spoolSentinels(s, spool, schema, maxTsNanos,
+        intervalMs(windowLen) + intervalMs(lateness),
+        Seq(Map("event_type" -> "sentinel", "value" -> 0.0)))
+      val q2 = startQuery(schema) // resume: same checkpoint, same sink
       try q2.processAllAvailable() finally q2.stop()
     }
-    val out = s.read.parquet(sink)
+    s.read.parquet(sink)
       .filter(col("event_type") =!= "sentinel")
       .orderBy("window_start_ms", "event_type")
       .localCheckpoint()
-    deleteRecursively(tmp)
-    out
   }
 
   /** Per-window TRENDING item — the top event type of each window — via
@@ -763,51 +674,15 @@ object StreamingAnalytics {
     * dropping them afterwards cannot change any real champion. */
   def trendingSpooled(s: SparkSession, dir: String,
                       windowLen: String = "1 hour",
-                      lateness: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-trendspool-$runId")
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("event_type"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, "sentinel")).toDF("ts", "event_type")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("event_type", StringType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val name = s"graft_trending_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note). The
-    // chained stateful pair still finalizes fully: op-1 emits its
-    // windows in the watermark-advance no-data batch, op-2 consumes
-    // them IN that batch under the delayed (previous-batch) watermark
-    // and a second no-data batch finalizes op-2 —
-    // `lastExecutionRequiresAnotherBatch` keeps constructing batches
-    // until no operator needs one, and processAllAvailable waits for
-    // that (output equality measured old-vs-new at sf0.1, r17).
-    val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
-    sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withCollapsedFlush(s, stream) {
-      val q = trendingEventTypes(stream, windowLen, lateness)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = s.table(name)
-      .filter(col("top_type") =!= "sentinel")
-      .select(unix_millis(col("window_start")).as("window_start_ms"),
-        col("top_type"), col("top_n"))
-      .orderBy("window_start_ms")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
-  }
+                      lateness: String = "10 minutes"): DataFrame =
+    replaySpooled(s, events(s, dir, "event_type"),
+        intervalMs(windowLen) + intervalMs(lateness),
+        Map("event_type" -> "sentinel"))(
+      trendingEventTypes(_, windowLen, lateness))(
+      (out, _) => out.filter(col("top_type") =!= "sentinel")
+        .select(unix_millis(col("window_start")).as("window_start_ms"),
+          col("top_type"), col("top_n"))
+        .orderBy("window_start_ms"))
 
   /** EXACT per-window distinct-user counts on an unbounded stream — the
     * dedup-then-count idiom: streaming aggregation cannot run
@@ -837,45 +712,15 @@ object StreamingAnalytics {
     * selected by window_start ≤ max real ts instead of by key. */
   def distinctSpooled(s: SparkSession, dir: String,
                       windowLen: String = "1 hour",
-                      lateness: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-distspool-$runId")
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("user_id"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, -1L)).toDF("ts", "user_id")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("user_id", LongType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val name = s"graft_dist_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note); the
-    // chained dedup→count pair finalizes per the trendingSpooled note
-    val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
-    sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withCollapsedFlush(s, stream) {
-      val q = windowedDistinctUsers(stream, windowLen, lateness)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = s.table(name)
-      .select(unix_millis(col("window_start")).as("window_start_ms"),
-        col("n_users"))
-      .filter(col("window_start_ms") <= maxTsNanos / 1000000L)
-      .orderBy("window_start_ms")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
-  }
+                      lateness: String = "10 minutes"): DataFrame =
+    replaySpooled(s, events(s, dir, "user_id"),
+        intervalMs(windowLen) + intervalMs(lateness), Map("user_id" -> -1L))(
+      windowedDistinctUsers(_, windowLen, lateness))(
+      (out, maxTsMs) => out
+        .select(unix_millis(col("window_start")).as("window_start_ms"),
+          col("n_users"))
+        .filter(col("window_start_ms") <= maxTsMs)
+        .orderBy("window_start_ms"))
 
   /** APPROXIMATE streaming distinct — [[windowedDistinctUsers]]' 100-TB
     * sibling: per-window HLL++ (`approx_count_distinct`) instead of the
@@ -908,40 +753,13 @@ object StreamingAnalytics {
                          windowLen: String = "1 hour",
                          lateness: String = "10 minutes",
                          rsd: Double = 0.02): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-hllspool-$runId")
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("user_id"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, -1L)).toDF("ts", "user_id")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("user_id", LongType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val name = s"graft_hll_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
-    val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
-    sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withCollapsedFlush(s, stream) {
-      val q = windowedApproxDistinctUsers(stream, windowLen, lateness, rsd)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val approx = s.table(name)
-      .select(unix_millis(col("window_start")).as("window_start_ms"),
-        col("n_approx"))
-      .filter(col("window_start_ms") <= maxTsNanos / 1000000L)
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
+    val approx = replaySpooled(s, events(s, dir, "user_id"),
+        intervalMs(windowLen) + intervalMs(lateness), Map("user_id" -> -1L))(
+      windowedApproxDistinctUsers(_, windowLen, lateness, rsd))(
+      (out, maxTsMs) => out
+        .select(unix_millis(col("window_start")).as("window_start_ms"),
+          col("n_approx"))
+        .filter(col("window_start_ms") <= maxTsMs))
     val exact = graft.operators.Tables.events(s, dir)
       .groupBy(window(col("ts"), windowLen))
       .agg(countDistinct(col("user_id")).as("n_users"))
@@ -979,44 +797,15 @@ object StreamingAnalytics {
   def hoppingSpooled(s: SparkSession, dir: String,
                      windowLen: String = "1 hour",
                      slide: String = "30 minutes",
-                     lateness: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-hopspool-$runId")
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("event_type"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, "sentinel")).toDF("ts", "event_type")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("event_type", StringType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val name = s"graft_hop_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
-    val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
-    sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withCollapsedFlush(s, stream) {
-      val q = hoppingEventStats(stream, windowLen, slide, lateness)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = s.table(name)
-      .filter(col("event_type") =!= "sentinel")
-      .select(unix_millis(col("window_start")).as("window_start_ms"),
-        col("event_type"), col("n"))
-      .orderBy("window_start_ms", "event_type")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
-  }
+                     lateness: String = "10 minutes"): DataFrame =
+    replaySpooled(s, events(s, dir, "event_type"),
+        intervalMs(windowLen) + intervalMs(lateness),
+        Map("event_type" -> "sentinel"))(
+      hoppingEventStats(_, windowLen, slide, lateness))(
+      (out, _) => out.filter(col("event_type") =!= "sentinel")
+        .select(unix_millis(col("window_start")).as("window_start_ms"),
+          col("event_type"), col("n"))
+        .orderBy("window_start_ms", "event_type"))
 
   /** STREAMING VOLUME-SPIKE detection — the ops-side monitor every event
     * pipeline runs on its own firehose: exact tumbling-window event
@@ -1036,56 +825,28 @@ object StreamingAnalytics {
   def anomalySpooled(s: SparkSession, dir: String,
                      windowLen: String = "1 hour",
                      lateness: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-anomspool-$runId")
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("event_type"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, "sentinel")).toDF("ts", "event_type")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("event_type", StringType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val name = s"graft_anom_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
-    val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
-    sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withCollapsedFlush(s, stream) {
+    val wTrail = org.apache.spark.sql.expressions.Window
+      .orderBy("window_start_ms").rowsBetween(-3, -1)
+    replaySpooled(s, events(s, dir, "event_type"),
+        intervalMs(windowLen) + intervalMs(lateness),
+        Map("event_type" -> "sentinel"))(
       // The streaming half: a watermarked tumbling count whose state is
       // the live per-(window, type) counter set. The trailing spike
       // comparison below is batch post-processing over the FINALIZED
       // window table — volume-collapsed, no stream state.
-      val agg = stream.withWatermark("ts", lateness)
+      _.withWatermark("ts", lateness)
         .groupBy(window(col("ts"), windowLen), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("window_start"),
-          col("event_type"), col("n"))
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val wTrail = org.apache.spark.sql.expressions.Window
-      .orderBy("window_start_ms").rowsBetween(-3, -1)
-    val out = s.table(name)
-      .filter(col("event_type") =!= "sentinel")
-      .groupBy(unix_millis(col("window_start")).as("window_start_ms"))
-      .agg(sum("n").as("n_events"))
-      .withColumn("trail_sum", coalesce(sum("n_events").over(wTrail), lit(0L)))
-      .withColumn("n_trail", count(lit(1)).over(wTrail))
-      .withColumn("is_spike",
-        col("n_trail") === 3L && col("n_events") * 3 > col("trail_sum") * 2)
-      .orderBy("window_start_ms")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
+          col("event_type"), col("n")))(
+      (out, _) => out.filter(col("event_type") =!= "sentinel")
+        .groupBy(unix_millis(col("window_start")).as("window_start_ms"))
+        .agg(sum("n").as("n_events"))
+        .withColumn("trail_sum", coalesce(sum("n_events").over(wTrail), lit(0L)))
+        .withColumn("n_trail", count(lit(1)).over(wTrail))
+        .withColumn("is_spike",
+          col("n_trail") === 3L && col("n_events") * 3 > col("trail_sum") * 2)
+        .orderBy("window_start_ms"))
   }
 
   /** Stream-static enrichment join — the canonical "join the firehose to
@@ -1125,43 +886,15 @@ object StreamingAnalytics {
   def enrichSpooled(s: SparkSession, dir: String,
                     windowLen: String = "1 hour",
                     lateness: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-enrichspool-$runId")
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("user_id"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val latenessMs = intervalMs(lateness)
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, -1L)).toDF("ts", "user_id")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("user_id", LongType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
     val dim = graft.operators.Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val name = s"graft_enrich_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
-    val step = (intervalMs(windowLen) + latenessMs + 60 * 60 * 1000L) * 1000000L
-    sentinels(maxTsNanos + step, maxTsNanos + 2 * step)
-    withCollapsedFlush(s, stream) {
-      val q = enrichedSegmentStats(stream, dim, windowLen, lateness)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = s.table(name)
-      .select(unix_millis(col("window_start")).as("window_start_ms"),
-        col("c_mktsegment"), col("n"))
-      .orderBy("window_start_ms", "c_mktsegment")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
+    replaySpooled(s, events(s, dir, "user_id"),
+        intervalMs(windowLen) + intervalMs(lateness), Map("user_id" -> -1L))(
+      enrichedSegmentStats(_, dim, windowLen, lateness))(
+      (out, _) => out
+        .select(unix_millis(col("window_start")).as("window_start_ms"),
+          col("c_mktsegment"), col("n"))
+        .orderBy("window_start_ms", "c_mktsegment"))
   }
 
   /** Batch-mode check of the same sessionization logic (identical fold,
@@ -1200,81 +933,45 @@ object StreamingAnalytics {
     * stream_sessions precedent). */
   def clickAttributionSpooled(s: SparkSession, dir: String,
                               joinWindow: String = "10 minutes",
-                              lateness: String = "5 minutes"): DataFrame = {
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-attrspool-$runId")
+                              lateness: String = "5 minutes"): DataFrame =
     // Spool ONLY the two streams the operator consumes: its contract is
     // an impression stream and a click stream — routing the other 60% of
     // event types through source + join state just to drop them inside
-    // the stream would test nothing and triple the state volume.
-    graft.operators.Tables.events(s, dir)
-      .filter(col("event_type").isin("view", "click"))
-      .select(unix_micros(col("ts")).as("us"), col("user_id"),
-        col("event_type"), col("event_id"))
-      .select((col("us") * 1000L).as("ts"), col("user_id"),
-        col("event_type"), col("event_id"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val horizonNanos =
-      (intervalMs(joinWindow) + intervalMs(lateness) + 60 * 60 * 1000L) * 1000000L
-    def sentinels(tsNanos: Long*): Unit = {
-      import s.implicits._
-      tsNanos.flatMap(t => Seq((t, -1L, "view", -1L), (t, -1L, "click", -2L)))
-        .toDF("ts", "user_id", "event_type", "event_id")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    }
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("user_id", LongType),
-      StructField("event_type", StringType), StructField("event_id", LongType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    val imp = stream.filter(col("event_type") === "view")
-      .select(col("event_id").as("imp_id"), col("user_id").as("imp_key"),
-        col("ts").as("imp_ts"))
-    val clk = stream.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_key"),
-        col("ts").as("click_ts"))
-    val name = s"graft_attr_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note); the
-    // same-ts sentinel view/click pair self-matches exactly as it did
-    // under the staged protocol (each sentinel write always carried
-    // both rows in one batch) and the imp_key >= 0 filter drops it
-    sentinels(maxTsNanos + horizonNanos, maxTsNanos + 2 * horizonNanos)
-    withCollapsedFlush(s, stream) {
-      val q = clickAttribution(imp, clk, joinWindow, lateness)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = s.table(name)
-      .filter(col("imp_key") >= 0)
+    // the stream would test nothing and triple the state volume. The
+    // same-ts sentinel view/click pair self-matches (both rows land in
+    // the one batch) and the imp_key >= 0 filter drops it.
+    replaySpooled(s,
+        events(s, dir, "user_id", "event_type", "event_id")
+          .filter(col("event_type").isin("view", "click")),
+        intervalMs(joinWindow) + intervalMs(lateness),
+        Map("user_id" -> -1L, "event_type" -> "view", "event_id" -> -1L),
+        Map("user_id" -> -1L, "event_type" -> "click", "event_id" -> -2L)) { stream =>
+      val imp = stream.filter(col("event_type") === "view")
+        .select(col("event_id").as("imp_id"), col("user_id").as("imp_key"),
+          col("ts").as("imp_ts"))
+      val clk = stream.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id").as("click_key"),
+          col("ts").as("click_ts"))
+      clickAttribution(imp, clk, joinWindow, lateness)
+    }((out, _) => out.filter(col("imp_key") >= 0)
       .select(col("imp_key").as("user_id"), col("imp_id"), col("click_id"),
         unix_millis(col("imp_ts")).as("imp_ms"),
         unix_millis(col("click_ts")).as("click_ms"))
-      .orderBy("user_id", "imp_id", "click_id")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
-  }
+      .orderBy("user_id", "imp_id", "click_id"))
 
-  /** Spool `documents` into per-wave parquet files with a SYNTHETIC
-    * event time (`tsMsExpr`, integer arithmetic over doc_id so any engine
-    * reproduces it), one wave per `waveExpr` value — the bounded-corpus
-    * arrival schedule that lets a real Structured-Streaming execution be
-    * oracle-checked. `maxFilesPerTrigger=1` on the reader turns each wave
-    * file into its own micro-batch, so cross-batch state is genuinely
-    * exercised (the coalesce(1)-per-wave writes are test-harness
-    * machinery, not a production path — a live deployment reads the
-    * actual stream). Returns the spool dir; callers delete it. */
-  private def spoolDocuments(s: SparkSession, dir: String, waves: Int,
+  /** Spool `documents` into per-wave parquet files under `spool` with a
+    * SYNTHETIC event time (`tsMsExpr`, integer arithmetic over doc_id so
+    * any engine reproduces it), one wave per `waveExpr` value — the
+    * bounded-corpus arrival schedule that lets a real Structured-Streaming
+    * execution be oracle-checked. `maxFilesPerTrigger=1` on the reader
+    * turns each wave file into its own micro-batch, so cross-batch state
+    * is genuinely exercised (the coalesce(1)-per-wave writes are
+    * test-harness machinery, not a production path — a live deployment
+    * reads the actual stream). */
+  private def spoolDocuments(s: SparkSession, dir: String, spool: Path, waves: Int,
                              waveExpr: org.apache.spark.sql.Column,
                              tsMsExpr: org.apache.spark.sql.Column,
-                             docLimit: Long = Long.MaxValue): java.nio.file.Path = {
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-docspool-$runId")
+                             docLimit: Long = Long.MaxValue): Unit = {
     val docs = graft.operators.Tables.documents(s, dir)
       .filter(col("doc_id") < docLimit)
       .select(col("doc_id"), col("text"), col("source"),
@@ -1283,42 +980,29 @@ object StreamingAnalytics {
     // with an explicitly stamped, strictly increasing mtime: the file
     // source orders micro-batches by modification time, and wave order is
     // a CORRECTNESS input for watermark progression (an out-of-order
-    // hour-wave would be late-dropped), not a nicety.
-    val epoch0 = java.nio.file.Files.getLastModifiedTime(tmp).toMillis
+    // hour-wave would be late-dropped), not a nicety. The file source
+    // skips the '_'-prefixed stage directory.
+    val epoch0 = Files.getLastModifiedTime(spool).toMillis
+    val stage = spool.resolve("_stage")
     (0 until waves).foreach { w =>
-      val stage = java.nio.file.Files.createTempDirectory(s"graft-docspool-stage-$runId")
       docs.filter(col("wave") === w).drop("wave")
         .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(stage).iterator().asScala
+      Files.list(stage).iterator().asScala
         .filter(_.toString.endsWith(".parquet")).zipWithIndex.foreach { case (p, i) =>
-          val dst = tmp.resolve(f"wave_${w}%04d_$i.parquet")
-          java.nio.file.Files.move(p, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
+          val dst = spool.resolve(f"wave_${w}%04d_$i.parquet")
+          Files.move(p, dst)
+          Files.setLastModifiedTime(dst,
             java.nio.file.attribute.FileTime.fromMillis(epoch0 + w * 1000L)): Unit
         }
-      deleteRecursively(stage)
     }
-    tmp
+    FileUtils.deleteQuietly(stage.toFile)
   }
 
-  private def docStream(s: SparkSession, tmp: java.nio.file.Path): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("source", StringType), StructField("ts_ms", LongType)))
-    s.readStream.schema(schema)
+  private def docStream(s: SparkSession, spool: Path): DataFrame =
+    s.readStream.schema(s.read.parquet(spool.toString).schema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(tmp.toString)
+      .parquet(spool.toString)
       .withColumn("ts", timestamp_millis(col("ts_ms")))
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-    }
-    del(p.toFile)
-  }
 
   /** ORACLE-CHECKED streaming near-dup: spool the corpus through a REAL
     * execution of [[nearDupStream]] (file source, one wave per
@@ -1351,30 +1035,22 @@ object StreamingAnalytics {
   def nearDupSpooled(s: SparkSession, dir: String, waves: Int = 4,
                      threshold: Double = 0.9,
                      docLimit: Long = 2000L): DataFrame = {
-    val runId = spoolRuns.incrementAndGet()
-    // wave = doc_id mod waves: arrival order ≠ doc_id order, which is the
-    // point — canonicalization, not spool layout, must give determinism
-    val tmp = spoolDocuments(s, dir, waves,
-      pmod(col("doc_id"), lit(waves)),
-      lit(86400000L) + pmod(col("doc_id"), lit(waves)) * 60000L,
-      docLimit = docLimit)
-    val name = s"graft_neardup_$runId"
-    // horizon "7 days" ≫ the spool's 4-minute spread: nothing is ever
-    // late or evicted, so the streamed set must match full-corpus batch
-    withSpoolPartitions(s) {
-      val q = nearDupStream(docStream(s, tmp).select(col("doc_id"), col("ts"), col("text")),
-          threshold = threshold, lateness = "7 days")
-        .toDF().writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
+    val streamed = withSpool { spool =>
+      // wave = doc_id mod waves: arrival order ≠ doc_id order, which is the
+      // point — canonicalization, not spool layout, must give determinism
+      spoolDocuments(s, dir, spool, waves,
+        pmod(col("doc_id"), lit(waves)),
+        lit(86400000L) + pmod(col("doc_id"), lit(waves)) * 60000L,
+        docLimit = docLimit)
+      // horizon "7 days" ≫ the spool's 4-minute spread: nothing is ever
+      // late or evicted, so the streamed set must match full-corpus batch
+      drainToMemory(s, nearDupStream(
+          docStream(s, spool).select(col("doc_id"), col("ts"), col("text")),
+          threshold = threshold, lateness = "7 days"))(
+        _.select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+          greatest(col("doc_a"), col("doc_b")).as("doc_b"),
+          lit(1).as("in_stream")))
     }
-    val streamed = s.table(name)
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"),
-        lit(1).as("in_stream"))
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
     val batch = graft.operators.Dedup.minhashPairs(s, dir, threshold = threshold,
         maxDocId = docLimit)
       .select(col("doc_a"), col("doc_b"), lit(1).as("in_batch"))
@@ -1402,29 +1078,19 @@ object StreamingAnalytics {
     * not on watermark close. State is one 8-byte key per distinct hash
     * within the horizon — the 100-TB knob is the horizon, argued at
     * [[dedupStream]]. */
-  def dedupSpooled(s: SparkSession, dir: String, waves: Int = 4): DataFrame = {
-    val runId = spoolRuns.incrementAndGet()
-    val hashRank = row_number().over(
-      org.apache.spark.sql.expressions.Window
-        .partitionBy(xxhash64(col("text"))).orderBy("doc_id"))
-    val waveCol = least(hashRank, lit(waves)) - 1
-    val tmp = spoolDocuments(s, dir, waves, waveCol,
-      lit(86400000L) + (least(hashRank, lit(waves)) - 1) * 60000L)
-    val name = s"graft_dedup_$runId"
-    withSpoolPartitions(s) {
-      val q = dedupStream(
-          docStream(s, tmp).select(col("doc_id"), col("ts"), col("text")),
-          lateness = "7 days")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
+  def dedupSpooled(s: SparkSession, dir: String, waves: Int = 4): DataFrame =
+    withSpool { spool =>
+      val hashRank = row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(xxhash64(col("text"))).orderBy("doc_id"))
+      val waveCol = least(hashRank, lit(waves)) - 1
+      spoolDocuments(s, dir, spool, waves, waveCol,
+        lit(86400000L) + (least(hashRank, lit(waves)) - 1) * 60000L)
+      drainToMemory(s, dedupStream(
+          docStream(s, spool).select(col("doc_id"), col("ts"), col("text")),
+          lateness = "7 days"))(
+        _.select(col("doc_id")).orderBy("doc_id"))
     }
-    val out = s.table(name).select(col("doc_id"))
-      .orderBy("doc_id").localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
-  }
 
   /** ORACLE-CHECKED streaming quality monitor: spool the corpus with a
     * deterministic event schedule (doc d arrives at minute `d mod 180`,
@@ -1436,52 +1102,43 @@ object StreamingAnalytics {
     * columns are double SUMS whose order is engine-dependent, so the
     * spooled projection drops them (they stay on the live operator).
     *
-    * Same two-sentinel flush protocol as [[sessionizeSpooled]]: the first
-    * far-future row advances the watermark past every real window, the
-    * second triggers the batch that emits them. */
+    * The staged two-sentinel flush, kept here because the waves are
+    * separate micro-batches: the first far-future row advances the
+    * watermark past every real window, the second triggers the batch
+    * that emits them. */
   def qualityMonitorSpooled(s: SparkSession, dir: String,
-                            lateness: String = "10 minutes"): DataFrame = {
-    val runId = spoolRuns.incrementAndGet()
-    val minutes = 180
-    val base = 86400000L
-    // hour-ordered waves: wave w holds minutes [60w, 60w+60) so event
-    // time only moves forward across micro-batches — watermark
-    // progression is real, yet nothing is ever late inside the horizon
-    val tmp = spoolDocuments(s, dir, waves = 3,
-      pmod(col("doc_id"), lit(minutes)).divide(60).cast("int"),
-      lit(base) + pmod(col("doc_id"), lit(minutes)) * 60000L)
-    val latenessMs = intervalMs(lateness)
-    val maxTsMs = base + (minutes - 1) * 60000L
-    def sentinel(tsMs: Long): Unit = {
-      import s.implicits._
-      Seq((-1L, "x", "sentinel", tsMs)).toDF("doc_id", "text", "source", "ts_ms")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
+                            lateness: String = "10 minutes"): DataFrame =
+    withSpool { spool =>
+      val minutes = 180
+      val base = 86400000L
+      // hour-ordered waves: wave w holds minutes [60w, 60w+60) so event
+      // time only moves forward across micro-batches — watermark
+      // progression is real, yet nothing is ever late inside the horizon
+      spoolDocuments(s, dir, spool, waves = 3,
+        pmod(col("doc_id"), lit(minutes)).divide(60).cast("int"),
+        lit(base) + pmod(col("doc_id"), lit(minutes)) * 60000L)
+      val latenessMs = intervalMs(lateness)
+      val maxTsMs = base + (minutes - 1) * 60000L
+      def sentinel(tsMs: Long): Unit = {
+        import s.implicits._
+        Seq((-1L, "x", "sentinel", tsMs)).toDF("doc_id", "text", "source", "ts_ms")
+          .coalesce(1).write.mode("append").parquet(spool.toString)
+      }
+      drainToMemory(s,
+        qualityMonitorStream(docStream(s, spool), windowLen = "1 hour", lateness = lateness),
+        drive = q => {
+          q.processAllAvailable() // the three real hour-waves
+          val t1 = maxTsMs + latenessMs + 2 * 60 * 60 * 1000L
+          sentinel(t1)
+          q.processAllAvailable() // watermark → past every real window end
+          sentinel(t1 + latenessMs + 2 * 60 * 60 * 1000L)
+          q.processAllAvailable() // emits them
+        })(
+        _.filter(col("source") =!= "sentinel")
+          .select(unix_millis(col("window_start")).as("window_start_ms"),
+            col("source"), col("n_docs"), col("n_dropped"), col("drop_rate"))
+          .orderBy("window_start_ms", "source"))
     }
-    val name = s"graft_quality_$runId"
-    withSpoolPartitions(s) {
-      val q = qualityMonitorStream(docStream(s, tmp), windowLen = "1 hour",
-          lateness = lateness)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable() // the three real hour-waves
-        val t1 = maxTsMs + latenessMs + 2 * 60 * 60 * 1000L
-        sentinel(t1)
-        q.processAllAvailable() // watermark → past every real window end
-        sentinel(t1 + latenessMs + 2 * 60 * 60 * 1000L)
-        q.processAllAvailable() // emits them
-      } finally q.stop()
-    }
-    val out = s.table(name)
-      .filter(col("source") =!= "sentinel")
-      .select(unix_millis(col("window_start")).as("window_start_ms"),
-        col("source"), col("n_docs"), col("n_dropped"), col("drop_rate"))
-      .orderBy("window_start_ms", "source")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
-  }
 
   final case class UpsertEvent(user_id: Long, ts: Timestamp, ts_us: Long,
                                event_id: Long, event_type: String,
@@ -1542,56 +1199,21 @@ object StreamingAnalytics {
     * compacted record. Output carries the event-time in µs (the stream's
     * own comparison precision — parquet's nanos truncate identically in
     * both engines) and the record payload verbatim (`value` passes
-    * through untouched, so the double is bit-exact). Two-sentinel flush
-    * protocol and layout per [[sessionizeSpooled]]. */
+    * through untouched, so the double is bit-exact). Collapsed flush per
+    * [[replaySpooled]]. */
   def upsertSpooled(s: SparkSession, dir: String,
                     lateness: String = "10 minutes",
                     settle: String = "30 minutes"): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-upspool-$runId")
-    // Nanos-long spool via the loader (see [[sessionizeSpooled]]).
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("user_id"),
-        col("event_id"), col("event_type"), col("value"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val stepNanos =
-      (intervalMs(settle) + intervalMs(lateness) + 60 * 60 * 1000L) * 1000000L
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, -1L, -1L, "sentinel", 0.0))
-        .toDF("ts", "user_id", "event_id", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("user_id", LongType),
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts_us", expr("ts div 1000"))
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .select(col("user_id"), col("ts"), col("ts_us"), col("event_id"),
-        col("event_type"), col("value"))
-      .as[UpsertEvent]
-    val name = s"graft_upsert_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note)
-    sentinels(maxTsNanos + stepNanos, maxTsNanos + 2 * stepNanos)
-    withCollapsedFlush(s, stream) {
-      val q = upsertStream(stream, lateness, settle)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = s.table(name)
-      .filter(col("user_id") >= 0)
-      .select(col("user_id"), col("last_us"), col("last_event_id"),
-        col("last_type"), col("last_value"))
-      .orderBy("user_id")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
+    replaySpooled(s, events(s, dir, "user_id", "event_id", "event_type", "value"),
+        intervalMs(settle) + intervalMs(lateness),
+        Map("user_id" -> -1L, "event_id" -> -1L, "event_type" -> "sentinel", "value" -> 0.0))(
+      stream => upsertStream(
+        stream.withColumn("ts_us", unix_micros(col("ts"))).as[UpsertEvent], lateness, settle))(
+      (out, _) => out.filter(col("user_id") >= 0)
+        .select(col("user_id"), col("last_us"), col("last_event_id"),
+          col("last_type"), col("last_value"))
+        .orderBy("user_id"))
   }
 
   final case class FunnelEvent(user_id: Long, ts: Timestamp, ts_us: Long,
@@ -1667,58 +1289,26 @@ object StreamingAnalytics {
                     lateness: String = "10 minutes",
                     settle: String = "30 minutes"): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.types._
-    val runId = spoolRuns.incrementAndGet()
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-funspool-$runId")
-    // Nanos-long spool via the loader (see [[sessionizeSpooled]]).
-    graft.operators.Tables.events(s, dir)
-      .select((unix_micros(col("ts")) * 1000L).as("ts"), col("user_id"),
-        col("event_id"), col("event_type"))
-      .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val maxTsNanos = graft.operators.Tables.events(s, dir)
-      .agg(max(unix_micros(col("ts")))).head().getLong(0) * 1000L
-    val stepNanos =
-      (intervalMs(settle) + intervalMs(lateness) + 60 * 60 * 1000L) * 1000000L
-    def sentinels(tsNanos: Long*): Unit =
-      tsNanos.map((_, -1L, -1L, "sentinel"))
-        .toDF("ts", "user_id", "event_id", "event_type")
-        .coalesce(1).write.mode("append").parquet(tmp.toString)
-    val schema = StructType(Seq(
-      StructField("ts", LongType), StructField("user_id", LongType),
-      StructField("event_id", LongType), StructField("event_type", StringType)))
-    val stream = s.readStream.schema(schema).parquet(tmp.toString)
-      .withColumn("ts_us", expr("ts div 1000"))
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .select(col("user_id"), col("ts"), col("ts_us"), col("event_id"),
-        col("event_type"))
-      .as[FunnelEvent]
-    val name = s"graft_funnel_$runId"
-    // collapsed flush ([[sessionizeSpooled]] r17 protocol note); the
-    // corpus still arrives in ONE batch, so the intra-batch
-    // (ts_us, event_id) sort keeps the batch-fold equivalence
-    sentinels(maxTsNanos + stepNanos, maxTsNanos + 2 * stepNanos)
-    withCollapsedFlush(s, stream) {
-      val q = funnelStream(stream, steps, lateness, settle)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
+    // the corpus arrives in ONE batch ([[replaySpooled]]), so the
+    // intra-batch (ts_us, event_id) sort keeps the batch-fold equivalence
+    replaySpooled(s, events(s, dir, "user_id", "event_id", "event_type"),
+        intervalMs(settle) + intervalMs(lateness),
+        Map("user_id" -> -1L, "event_id" -> -1L, "event_type" -> "sentinel"))(
+      stream => funnelStream(
+        stream.withColumn("ts_us", unix_micros(col("ts"))).as[FunnelEvent],
+        steps, lateness, settle)) { (out, _) =>
+      val totals = out.filter(col("user_id") >= 0).agg(
+        sum(when(col("steps_completed") >= 1, 1L).otherwise(0L)).as("c0"),
+        steps.indices.tail.map(i =>
+          sum(when(col("steps_completed") >= i + 1, 1L).otherwise(0L))
+            .as(s"c$i")): _*)
+      val rows = steps.zipWithIndex.map { case (st, i) =>
+        struct(lit(i + 1).cast("long").as("step_no"), lit(st).as("step"),
+          col(s"c$i").cast("long").as("n_users"))
+      }
+      totals.select(explode(array(rows: _*)).as("r"))
+        .select(col("r.step_no"), col("r.step"), col("r.n_users"))
+        .orderBy("step_no")
     }
-    val perUser = s.table(name).filter(col("user_id") >= 0)
-    val totals = perUser.agg(
-      sum(when(col("steps_completed") >= 1, 1L).otherwise(0L)).as("c0"),
-      steps.indices.tail.map(i =>
-        sum(when(col("steps_completed") >= i + 1, 1L).otherwise(0L))
-          .as(s"c$i")): _*)
-    val rows = steps.zipWithIndex.map { case (st, i) =>
-      struct(lit(i + 1).cast("long").as("step_no"), lit(st).as("step"),
-        col(s"c$i").cast("long").as("n_users"))
-    }
-    val out = totals.select(explode(array(rows: _*)).as("r"))
-      .select(col("r.step_no"), col("r.step"), col("r.n_users"))
-      .orderBy("step_no")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    deleteRecursively(tmp)
-    out
   }
 }

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model._
-import graft.pipeline.IngestCore
+import graft.pipeline.{IngestCore, SingerPipeline}
 
 /** Structured-Streaming variant of the Singer ingest (SURVEY.md §7.1 #7):
   * `readStream.text(dir)` (or live stdin) → `foreachBatch` running the
@@ -25,6 +25,12 @@ import graft.pipeline.IngestCore
   * the Hadoop FS API, so it works for local paths and s3a:// alike) and
   * reloaded on construction — a resumed query must not fail on records
   * whose SCHEMA arrived before the restart.
+  *
+  * Build `spark` with [[graft.GraftSession]]: it turns Spark 4.1's
+  * checkpoint-file checksums off. Left on, every started query creates a
+  * `ChecksumCheckpointFileManager` thread pool that is never released
+  * when the query stops, so a long-lived session leaks one pool per query
+  * (the r16 finding quoted at `GraftSession.checkpointChecksum`).
   */
 final class StreamingIngest(
     spark: SparkSession,
@@ -58,18 +64,18 @@ final class StreamingIngest(
 
   // Driver-side registries (control-plane, tiny).
   private val schemas = new AtomicReference(loadRegistry())
-  private val lastState = new AtomicReference[Option[String]](None)
-  @volatile private var sawRecordAfterState = false
+  private val state = new AtomicReference[Option[String]](None)
 
-  def emittedState: Option[String] =
-    if (sawRecordAfterState) None else lastState.get()
+  /** The bookmark as of the last committed batch: the reference's P8
+    * fold ([[StateFold]]) carried across batches. */
+  def emittedState: Option[String] = state.get()
 
   /** Process one micro-batch of raw Singer lines (also usable directly
     * for testing without a streaming query): the [[IngestCore]] pass of
     * the batch pipeline, against the registry instead of an empty one.
     * `lines` has a `value` column, and `file`/`block` from
     * [[IngestCore.fileLines]] when it reads several files. */
-  def processBatch(lines: DataFrame, batchId: Long): Unit = {
+  def processBatch(lines: DataFrame): Unit = {
     // The envelope (arrival order captured on the batch's ORIGINAL
     // partitioning, then the rebalance exchange) materializes once:
     // foreachBatch re-executes the source scan per downstream action, so
@@ -106,16 +112,13 @@ final class StreamingIngest(
     latest.foreach { case (stream, (raw, _)) => persistSchema(raw, stream) }
     schemas.updateAndGet(reg => reg ++ latest.map { case (k, (_, m)) => k -> m })
 
-    // P8 fold across the batch: any record after the batch's last STATE
-    // nullifies; a batch with records and no trailing STATE nullifies too.
-    (plane.states.lastOption, plane.maxRecordIdx) match {
-      case (Some(st), r) =>
-        lastState.set(Some(Singer.toJsonString(st.value)))
-        sawRecordAfterState = r.exists(_ > st.idx)
-      case (None, Some(_)) => sawRecordAfterState = true
-      case (None, None) => ()
-    }
-    Bookmarks.emit(emittedState, batchId)
+    // P8 fold across batches: a batch with a STATE or a RECORD decides
+    // the bookmark on its own (a record after its last STATE, or records
+    // and no STATE, clear it); a batch with neither keeps the previous.
+    if (plane.states.nonEmpty || plane.maxRecordIdx.nonEmpty)
+      state.set(StateFold.emittedState(plane.states, plane.maxRecordIdx)
+        .map(Singer.toJsonString))
+    SingerPipeline.emitState(state.get())
   }
 
   /** Start the streaming query over a directory of Singer message files. */
@@ -125,7 +128,7 @@ final class StreamingIngest(
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch((df: DataFrame, id: Long) => processBatch(df, id))
+      .foreachBatch((df: DataFrame, _: Long) => processBatch(df))
       .start()
 
   /** Start the streaming query over LIVE stdin via the DSv2
@@ -139,7 +142,7 @@ final class StreamingIngest(
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch((df: DataFrame, id: Long) => processBatch(df, id))
+      .foreachBatch((df: DataFrame, _: Long) => processBatch(df))
       .start()
 }
 
@@ -156,11 +159,4 @@ object StreamingIngest {
       query.stop()
     } else query.awaitTermination()
   }
-}
-
-private object Bookmarks {
-  /** Bookmark emission per committed batch (reference emits once at EOF;
-    * a streaming target emits after every commit). */
-  def emit(state: Option[String], batchId: Long): Unit =
-    state.foreach(s => Console.out.println(s))
 }

@@ -100,8 +100,8 @@ class IngestCoreSpec extends SparkSpec {
   test("one warm micro-batch of two streams runs at most 8 jobs and 5 queries, all in the caller's job group") {
     val ingest = new StreamingIngest(spark, Files.createTempDirectory("core-live").toString,
       TargetConfig(streamsInSeparateFolder = true))
-    ingest.processBatch(twoStreamBatch(0), 0) // registers the schemas, warms the JIT
-    val (jobs, queries) = traced(ingest.processBatch(twoStreamBatch(100), 1))
+    ingest.processBatch(twoStreamBatch(0)) // registers the schemas, warms the JIT
+    val (jobs, queries) = traced(ingest.processBatch(twoStreamBatch(100)))
     info(s"${jobs.size} jobs, ${queries.size} queries: ${queries.map(_.kind).mkString(", ")}")
     assert(jobs.size <= 8, s"${jobs.size} jobs")
     assert(queries.size <= 5, queries)
@@ -111,8 +111,8 @@ class IngestCoreSpec extends SparkSpec {
   test("after the control plane, a run or a micro-batch executes one phase-1 query plus one write per epoch") {
     val ingest = new StreamingIngest(spark, Files.createTempDirectory("core-passes").toString,
       TargetConfig(streamsInSeparateFolder = true))
-    ingest.processBatch(twoStreamBatch(0), 0)
-    val live = traced(ingest.processBatch(twoStreamBatch(100), 1))._2.map(_.kind)
+    ingest.processBatch(twoStreamBatch(0))
+    val live = traced(ingest.processBatch(twoStreamBatch(100)))._2.map(_.kind)
     assert(live.dropWhile(_ != "control plane").tail == "phase-1" +: Seq.fill(2)("write"), live)
     // Three streams; beta re-emits its schema, so four epochs.
     val f = Files.createTempFile("core-passes", ".jsonl")
@@ -126,9 +126,9 @@ class IngestCoreSpec extends SparkSpec {
   test("a warm micro-batch of about 200 lines runs every job as one task and lands one file per stream") {
     val out = Files.createTempDirectory("core-size-live")
     val ingest = new StreamingIngest(spark, out.toString, TargetConfig(streamsInSeparateFolder = true))
-    ingest.processBatch(twoStreamBatch(0, 100), 0)
+    ingest.processBatch(twoStreamBatch(0, 100))
     val before = Seq("s1", "s2").map(s => parquetFiles(out.resolve(s)))
-    val (jobs, _) = traced(ingest.processBatch(twoStreamBatch(1000, 100), 1))
+    val (jobs, _) = traced(ingest.processBatch(twoStreamBatch(1000, 100)))
     info(jobs.map(_.stageTasks.mkString("+")).mkString("tasks per job: ", ", ", ""))
     assert(jobs.nonEmpty && jobs.forall(_.stageTasks.forall(_ == 1)), jobs)
     Seq("s1", "s2").zip(before).foreach { case (s, b) =>
@@ -196,11 +196,11 @@ class IngestCoreSpec extends SparkSpec {
   test("concurrent epochs leave no threads behind: 20 micro-batches, flat thread count") {
     val ingest = new StreamingIngest(spark, Files.createTempDirectory("core-threads").toString,
       TargetConfig(streamsInSeparateFolder = true))
-    ingest.processBatch(twoStreamBatch(0), 0)
-    ingest.processBatch(twoStreamBatch(100), 1)
+    ingest.processBatch(twoStreamBatch(0))
+    ingest.processBatch(twoStreamBatch(100))
     val before = ownThreads()
     (2 until 22).foreach { b =>
-      ingest.processBatch(twoStreamBatch(100 * b), b)
+      ingest.processBatch(twoStreamBatch(100 * b))
       assert(!ownThreads().contains("graft-ingest"), s"a pool thread outlived batch $b")
     }
     val after = ownThreads()

@@ -256,7 +256,7 @@ class StreamingIngestSpec extends SparkSpec {
       ingest.processBatch(lines(schemaLine,
         """{"type": "ACTIVATE_VERSION", "stream": "s1", "version": 7}""",
         rec("s1", 1),
-        """{"type": "ACTIVATE_VERSION", "stream": "s1", "version": 8}"""), 0)
+        """{"type": "ACTIVATE_VERSION", "stream": "s1", "version": 8}"""))
     }
     val err = buf.toString("UTF-8")
     assert(err.linesIterator.count(_.contains("Unknown message type ACTIVATE_VERSION")) == 2)
@@ -270,7 +270,7 @@ class StreamingIngestSpec extends SparkSpec {
       rec("s1", 1), rec("s2", 1), rec("s2", 2, "far too long for maxLength"))
     // Twice: the restarted query's retry of the batch must not duplicate rows.
     (0 to 1).foreach { _ =>
-      val e = intercept[IllegalArgumentException](ingest.processBatch(batch, 0))
+      val e = intercept[IllegalArgumentException](ingest.processBatch(batch))
       assert(e.getMessage.startsWith("Record validation failed for stream s2"))
     }
     assert(!new java.io.File(s"$out/s1").exists && !new java.io.File(s"$out/s2").exists)
@@ -281,8 +281,57 @@ class StreamingIngestSpec extends SparkSpec {
     // Eight unparseable lines; the first also sorts last.
     val bad = (1 to 8).map(i => s"${('z' - i + 1).toChar} not json, line $i")
     val e = intercept[RuntimeException](ingest.processBatch(
-      lines(schemaLine +: bad.flatMap(b => Seq(rec("s1", b.length), b)): _*), 0))
+      lines(schemaLine +: bad.flatMap(b => Seq(rec("s1", b.length), b)): _*)))
     assert(e.getMessage == "Unable to parse:\nz not json, line 1")
+  }
+
+  test("streaming: the bookmark folds across batches (records clear it, an empty batch keeps it)") {
+    val ingest = new StreamingIngest(spark, Files.createTempDirectory("stream-out14").toString,
+      TargetConfig(streamsInSeparateFolder = true))
+    def state(n: Int) = s"""{"type": "STATE", "value": {"bookmarks": {"s1": $n}}}"""
+    val out = new java.io.ByteArrayOutputStream()
+    def batch(ls: String*): Option[String] = {
+      Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+        ingest.processBatch(lines(ls: _*))
+      }
+      ingest.emittedState
+    }
+    assert(batch(schemaLine, rec("s1", 1), state(1)).contains("""{"bookmarks":{"s1":1}}"""))
+    assert(batch(rec("s1", 2)).isEmpty) // records after the last STATE clear it
+    assert(batch().isEmpty)             // a batch with neither keeps it cleared
+    assert(batch(state(2)).contains("""{"bookmarks":{"s1":2}}"""))
+    // stdout carries exactly the bookmark of each batch that has one
+    assert(out.toString("UTF-8").linesIterator.toSeq ==
+      Seq("""{"bookmarks":{"s1":1}}""", """{"bookmarks":{"s1":2}}"""))
+  }
+
+  test("live stdin: a read error after some lines fails drainAtEof instead of passing for EOF") {
+    val out = Files.createTempDirectory("live-out2").toString
+    val cp = Files.createTempDirectory("live-cp2").toString
+    // Two lines, then the pipe breaks.
+    val failing = new java.io.InputStream {
+      private val head = new java.io.ByteArrayInputStream(
+        (Seq(schemaLine, rec("s1", 1)).mkString("\n") + "\n").getBytes("UTF-8"))
+      override def read(): Int = {
+        val b = head.read()
+        if (b >= 0) b else throw new java.io.IOException("pipe broke")
+      }
+    }
+    StdinStream.inputFactory = () => failing
+    // eof is process-wide and a previous live stream may have left it set;
+    // the new source resets it only once its query builds the source.
+    StdinStream.eof = false
+    try {
+      val q = new StreamingIngest(spark, out, TargetConfig()).startLive(cp)
+      try {
+        val drain = Future(StreamingIngest.drainAtEof(q, StdinStream.eofReached, pollMs = 10))(
+          ExecutionContext.global)
+        val e = intercept[Exception](Await.result(drain, 2.minutes))
+        def messages(t: Throwable): Seq[String] =
+          Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+        assert(messages(e).exists(_.contains("pipe broke")))
+      } finally q.stop()
+    } finally StdinStream.inputFactory = () => System.in
   }
 
   test("drainAtEof: at EOF it drains every pending row, then stops the query") {
