@@ -13,7 +13,10 @@
 # once in each tree, alternating which side goes first from seed to seed.
 # Each tree builds itself with sbt on its first run (offline, like the
 # benchmark). Prints one row per seed, then the median and IQR of
-# latency_s and setup_s per side and how many seeds HEAD won on latency_s.
+# latency_s and setup_s per side, how many seeds HEAD won on latency_s,
+# and for each of the two metrics HEAD's median move relative to the
+# parent's median next to that metric's bound in BENCHMARK.json (a
+# relative worsening the benchmark rejects; the file is only read).
 # A pair where either run is not correct or has a failed operation is left
 # out of the wins and the medians; the summary says how many were.
 # Per-run logs and the result lines stay in the printed work directory.
@@ -55,10 +58,11 @@ for seed in "$@"; do
   i=$((i + 1))
 done
 
-python3 - "$work" "$workload" <<'EOF'
+python3 - "$work" "$workload" "$repo/BENCHMARK.json" <<'EOF'
 import json, statistics, sys
 
-work, workload = sys.argv[1], sys.argv[2]
+work, workload, benchmark = sys.argv[1], sys.argv[2], sys.argv[3]
+bounds = {m["name"]: m.get("bound") for m in json.load(open(benchmark)).get("end_to_end", [])}
 first = dict(l.split() for l in open(work + "/first"))
 res = {}
 for line in open(work + "/results"):
@@ -93,8 +97,11 @@ for seed in first:
         seed, first[seed], fmt(lp), fmt(lh), fmt(metric("parent", seed, "setup_s")),
         fmt(metric("head", seed, "setup_s")), "yes" if ok else "NO"))
 
+def values(side, name):
+    return sorted(v for v in (metric(side, s, name) for s in kept) if v is not None)
+
 def summary(side, name):
-    xs = sorted(v for v in (metric(side, s, name) for s in kept) if v is not None)
+    xs = values(side, name)
     if not xs:
         return "-"
     q = statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
@@ -104,6 +111,15 @@ for name in ("latency_s", "setup_s"):
     for side in ("parent", "head"):
         print("%-9s %-6s %s" % (name, side, summary(side, name)))
 print("head wins on latency_s: %d of %d pairs" % (wins, pairs))
+# The move is signed: negative is lower (better for both metrics).
+for name in ("latency_s", "setup_s"):
+    par, head = values("parent", name), values("head", name)
+    bound = bounds.get(name)
+    move = ("%+.1f%%" % (100.0 * (statistics.median(head) / statistics.median(par) - 1))
+            if par and head and statistics.median(par) else "-")
+    print("%-9s head median move vs parent: %8s   bound %s" % (
+        name, move, "-" if bound is None else "%.2f (worse by more than %+.1f%% is rejected)"
+        % (bound, 100.0 * bound)))
 print("pairs left out (a run not correct or with failed operations): %d of %d"
       % (len(first) - len(kept), len(first)))
 EOF

@@ -179,20 +179,21 @@ object Main {
     * appear per micro-batch while the tap is still producing. */
   private def runStream(spark: SparkSession, opts: Map[String, String],
                         output: String, config: TargetConfig): Unit = {
-    def run(watchDir: String, checkpoint: String): StreamingQuery =
-      new StreamingIngest(spark, output, config)
-        .start(watchDir, checkpoint, Trigger.ProcessingTime("500 milliseconds"))
+    def run(watchDir: String, checkpoint: String, spooled: Boolean): StreamingQuery =
+      new StreamingIngest(spark, output, config).start(watchDir, checkpoint,
+        Trigger.ProcessingTime("500 milliseconds"), deleteCommitted = spooled)
     opts.get("input") match {
       // Watch an existing landing directory, by default with a STABLE
       // checkpoint under the output so a re-run after a crash resumes
       // instead of re-ingesting every landing file into the append-mode
       // output (duplicating all rows).
       case Some(dir) =>
-        run(dir, opts.getOrElse("checkpoint", s"$output/_graft_checkpoint"))
+        run(dir, opts.getOrElse("checkpoint", s"$output/_graft_checkpoint"), spooled = false)
           .awaitTermination()
       // Stdin: a per-run spool directory and, by default, a per-run
       // checkpoint next to it (a pipe is not replayable across process
-      // restarts anyway).
+      // restarts anyway). The spool is ours, so the file source deletes
+      // each batch's chunk files once the batch commits.
       case None => withRunDir(config, "graft-stdin-stream") { dir =>
         // file_size is the OUTPUT records-per-file knob; reused here only
         // as a rough spool granularity hint, clamped into int range (an
@@ -203,7 +204,7 @@ object Main {
         val spoolDir = Files.createDirectory(dir.resolve("spool"))
         val spooler = new StdinSpooler(System.in, spoolDir, maxLines = spoolLines).start()
         val query = run(spoolDir.toString,
-          opts.getOrElse("checkpoint", dir.resolve("checkpoint").toString))
+          opts.getOrElse("checkpoint", dir.resolve("checkpoint").toString), spooled = true)
         StreamingIngest.drainAtEof(query, spooler.eofReached, pollMs = 500)
         spooler.rethrowIfFailed()
       }

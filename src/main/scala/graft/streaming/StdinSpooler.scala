@@ -11,9 +11,11 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   * + same-filesystem rename) in a Spark file-streaming watch directory
   * consumed by [[StreamingIngest]]. A long-running tap therefore gets
   * per-batch parquet output and state bookmarks continuously, not one big
-  * batch at EOF. Chunk files are not removed once read (nothing sets the
-  * file source's `cleanSource`), so temp disk grows with the whole run;
-  * `graft.Main` deletes the spool directory when the run succeeds.
+  * batch at EOF. `graft.Main` starts the file source over its own spool
+  * with `cleanSource=delete` ([[StreamingIngest.start]]'s
+  * `deleteCommitted`), so each chunk file is deleted once its batch
+  * commits and temp disk holds only the chunks not yet committed; the
+  * spool directory itself goes when the run succeeds.
   *
   * What the spool buys is within a run: the chunk files are the file
   * source's offsets, so a failed micro-batch re-reads exactly its own

@@ -3,11 +3,13 @@ package graft.streaming
 import java.io.{BufferedReader, InputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util
+import java.util.OptionalLong
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{HasPartitionStatistics, InputPartition, PartitionReader,
+  PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -33,10 +35,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One input partition per batch: stdin is inherently a serial stream,
   * exactly like the reference's single reader loop feeding its consumer
-  * process. Any parallelism is DOWNSTREAM: the ingest envelope
-  * rebalances the batch, and AQE sizes that exchange from its bytes, so
-  * a small batch stays one task and a large one spreads over the
-  * cluster ([[graft.pipeline.IngestCore.envelope]]).
+  * process. The partition reports its bytes ([[StdinPartition]]), and
+  * the ingest envelope plans from them
+  * ([[graft.pipeline.IngestCore.envelope]]): a batch no larger than the
+  * session's advisory partition size stays one partition, so every
+  * query over it is one task and one stage with no exchange; a larger
+  * one is rebalanced, and AQE spreads it over the cluster.
   *
   * `StdinStream.inputFactory` injects the stream (tests feed a pipe;
   * production leaves it at `System.in`).
@@ -48,9 +52,11 @@ object StdinStream {
 
   /** True once the CURRENT stream's input hit EOF (or failed) — the
     * driver loop in [[graft.Main]] polls this to know when the tap
-    * closed the pipe (a pipe-fed query otherwise idles forever). Reset
-    * when a new stream starts; stdin is one serial pipe, so at most one
-    * live stream exists at a time. */
+    * closed the pipe (a pipe-fed query otherwise idles forever).
+    * [[StreamingIngest.startLive]] clears it before it starts a query, so
+    * a caller polling right after it never reads an earlier stream's
+    * EOF; stdin is one serial pipe, so at most one live stream exists at
+    * a time. */
   @volatile private[streaming] var eof = false
   def eofReached: Boolean = eof
 }
@@ -87,7 +93,6 @@ final class StdinMicroBatchStream(in: InputStream) extends MicroBatchStream {
   private var evicted = 0L
   @volatile private var failure: Throwable = _
 
-  StdinStream.eof = false
   private val reader = new Thread(() => {
     try {
       val br = new BufferedReader(new InputStreamReader(in, UTF_8))
@@ -134,8 +139,8 @@ final class StdinMicroBatchStream(in: InputStream) extends MicroBatchStream {
     new StdinReaderFactory
 
   override def commit(end: Offset): Unit = synchronized {
-    val upTo = end.asInstanceOf[StdinOffset].n
-    while (evicted < upTo && !buf.isEmpty) { buf.remove(0); evicted += 1 }
+    val k = (end.asInstanceOf[StdinOffset].n - evicted).min(buf.size.toLong).toInt
+    if (k > 0) { buf.subList(0, k).clear(); evicted += k }
   }
 
   override def stop(): Unit =
@@ -143,8 +148,15 @@ final class StdinMicroBatchStream(in: InputStream) extends MicroBatchStream {
 }
 
 /** The batch's lines ship inside the partition (driver → the one task),
-  * mirroring how the reference hands parsed lines to its consumer. */
-final case class StdinPartition(lines: Array[String]) extends InputPartition
+  * mirroring how the reference hands parsed lines to its consumer. It
+  * reports their UTF-8 bytes, newlines included, as a file of the same
+  * lines would measure: the ingest envelope sizes its plan from them. */
+final case class StdinPartition(lines: Array[String]) extends HasPartitionStatistics {
+  override def sizeInBytes(): OptionalLong =
+    OptionalLong.of(lines.foldLeft(0L)((n, l) => n + l.getBytes(UTF_8).length + 1))
+  override def numRows(): OptionalLong = OptionalLong.of(lines.length.toLong)
+  override def filesCount(): OptionalLong = OptionalLong.empty()
+}
 
 final class StdinReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model._
 import graft.pipeline.{IngestCore, SingerPipeline}
@@ -11,20 +12,28 @@ import graft.pipeline.{IngestCore, SingerPipeline}
   * batch pipeline's [[IngestCore]] per micro-batch, appending per-stream
   * parquet and emitting the state bookmark after every committed batch —
   * the streaming analogue of the reference's unbounded stdin loop, with
-  * Spark's checkpointing replacing its ad-hoc resume bookkeeping. Per
-  * micro-batch: one checkpoint of the envelope, one control-plane
-  * aggregate, one phase-1 query that validates (and infers) every epoch,
-  * then the epochs appended only once all of them passed, so a failing
-  * batch appends nothing.
+  * Spark's checkpointing replacing its ad-hoc resume bookkeeping.
+  *
+  * Per micro-batch: one control-plane aggregate that also runs phase 1
+  * (validation and inference) for every stream the registry already
+  * holds, one phase-1 query only for the epochs a SCHEMA in the batch
+  * opened, then the epochs appended only once all of them passed, so a
+  * failing batch appends nothing. The envelope is checkpointed lazily:
+  * the batch's first query reads the source once and fills the
+  * checkpoint, the later ones read the checkpoint. A warm live page (one
+  * partition under the advisory size, no SCHEMA) is thus one fused query
+  * and one write per stream, each one task in one stage.
   *
   * Cross-batch state (the schema registry and last bookmark) lives on the
   * driver, exactly like the reference's `schemas`/`state` dicts — SCHEMA
-  * and STATE are control-plane; RECORD data stays distributed. Because a
-  * Singer tap only re-sends SCHEMA at ITS restart, not at the target's,
-  * the registry is also persisted under `{outputUri}/_graft_registry/` (via
-  * the Hadoop FS API, so it works for local paths and s3a:// alike) and
-  * reloaded on construction — a resumed query must not fail on records
-  * whose SCHEMA arrived before the restart.
+  * and STATE are control-plane; RECORD data stays distributed. Each
+  * registered schema is compiled ([[IngestCore.compile]]) once, when it is
+  * registered. Because a Singer tap only re-sends SCHEMA at ITS restart,
+  * not at the target's, the registry is also persisted under
+  * `{outputUri}/_graft_registry/` (via the Hadoop FS API, so it works for
+  * local paths and s3a:// alike) and reloaded on construction — a resumed
+  * query must not fail on records whose SCHEMA arrived before the
+  * restart.
   *
   * Build `spark` with [[graft.GraftSession]]: it turns Spark 4.1's
   * checkpoint-file checksums off. Left on, every started query creates a
@@ -43,7 +52,7 @@ final class StreamingIngest(
   private def fs = new Path(outputUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def registryDir = new Path(outputUri, "_graft_registry")
 
-  private def loadRegistry(): Map[String, SchemaMessage] = {
+  private def loadRegistry(): Map[String, IngestCore.Compiled] = {
     val f = fs
     if (!f.exists(registryDir)) Map.empty
     else f.listStatus(registryDir).toSeq
@@ -52,7 +61,7 @@ final class StreamingIngest(
         val in = f.open(st.getPath)
         val line = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
         Singer.parseControl(-1L, line).asInstanceOf[SchemaMessage]
-      }.map(m => m.stream -> m).toMap
+      }.map(m => m.stream -> IngestCore.compile(m, config)).toMap
   }
 
   private def persistSchema(rawLine: String, stream: String): Unit = {
@@ -76,41 +85,45 @@ final class StreamingIngest(
     * `lines` has a `value` column, and `file`/`block` from
     * [[IngestCore.fileLines]] when it reads several files. */
   def processBatch(lines: DataFrame): Unit = {
-    // The envelope (arrival order captured on the batch's ORIGINAL
-    // partitioning, then the rebalance exchange) materializes once:
-    // foreachBatch re-executes the source scan per downstream action, so
-    // without this the control-plane, phase-1 and write queries would
-    // each re-read and re-tag the batch. AQE sizes the rebalance from the
-    // batch's bytes (StdinStreamSource's "parallelism is DOWNSTREAM"):
-    // a live page stays one partition, a large spooled chunk spreads.
-    val typed = IngestCore.envelope(lines).localCheckpoint()
-    val plane = IngestCore.controlPlane(typed)
+    // Arrival order is captured on the batch's ORIGINAL partitioning, and
+    // the envelope is sized to the batch's bytes (IngestCore.envelope): a
+    // live page stays one partition with no exchange, a large spooled
+    // chunk is rebalanced. foreachBatch re-executes the source scan per
+    // downstream action, so the envelope is checkpointed: lazily, filled
+    // by the control-plane query's one job, which therefore reads the
+    // source exactly once, and read by the later queries.
+    val typed = DatasetBridge.lazyLocalCheckpoint(IngestCore.envelope(lines))
     // The order check runs against the registry as of the previous batch,
     // BEFORE any schema is persisted or registered: a batch that fails it
-    // must fail identically when the restarted query retries it.
-    val epochs = IngestCore.epochs(plane, schemas.get())
+    // must fail identically when the restarted query retries it. The
+    // control plane also checks, in the same query, each registered
+    // stream's records against its registered schema.
+    val registry = schemas.get()
+    val plane = IngestCore.controlPlane(typed, registry, config)
+    val epochs = IngestCore.epochs(plane, registry.view.mapValues(_.message).toMap)
     // One timestamp per micro-batch: under the default naming each batch
     // lands in its own timestamped key, the streaming analogue of the
     // reference's one-file-per-batch output. Config parity with the batch
     // path: naming, §1.4 passthrough and L1 metadata apply here too.
-    // Passthrough infers inside the batch's one phase-1 query (one more
-    // parse per record).
+    // Epochs the control plane checked join no phase-1 query; one opened
+    // by a SCHEMA in this batch is checked by the phase-1 query.
     IngestCore.writeEpochs(spark, IngestCore.records(typed), epochs, config, outputUri,
-      clock(), overwrite = false)
+      clock(), overwrite = false, registry, plane.baselineChecks)
 
     // Last-wins registration, matching the reference's overwrite-on-every-
     // SCHEMA (__init__.py:239-245): the registry (and its on-disk persist)
-    // holds the LATEST schema per stream. Registered only AFTER the
-    // writes: a batch that fails is retried by the restarted query
-    // against the SAME baseline, so pre-SCHEMA records re-parse under the
-    // schema that actually governed them. A batch that fails validation
-    // has written nothing; only a write that fails midway can leave
-    // append-mode files that the retry duplicates — the trade the
-    // reference makes in the opposite direction (it LOSES everything
-    // since its last state on a crash).
+    // holds the LATEST schema per stream, compiled once here. Registered
+    // only AFTER the writes: a batch that fails is retried by the
+    // restarted query against the SAME baseline, so pre-SCHEMA records
+    // re-parse under the schema that actually governed them. A batch that
+    // fails validation has written nothing; only a write that fails
+    // midway can leave append-mode files that the retry duplicates — the
+    // trade the reference makes in the opposite direction (it LOSES
+    // everything since its last state on a crash).
     val latest = plane.schemas.groupBy(_._2.stream).view.mapValues(_.last).toMap
     latest.foreach { case (stream, (raw, _)) => persistSchema(raw, stream) }
-    schemas.updateAndGet(reg => reg ++ latest.map { case (k, (_, m)) => k -> m })
+    schemas.updateAndGet(reg =>
+      reg ++ latest.map { case (k, (_, m)) => k -> IngestCore.compile(m, config) })
 
     // P8 fold across batches: a batch with a STATE or a RECORD decides
     // the bookmark on its own (a record after its last STATE, or records
@@ -121,22 +134,32 @@ final class StreamingIngest(
     SingerPipeline.emitState(state.get())
   }
 
-  /** Start the streaming query over a directory of Singer message files. */
+  /** Start the streaming query over a directory of Singer message files.
+    * `deleteCommitted` makes the file source delete each batch's files
+    * once the batch commits (`cleanSource=delete`): only for a directory
+    * the engine spooled itself, never for a caller's landing directory. */
   def start(inputDir: String, checkpointDir: String,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    IngestCore.fileLines(spark.readStream.text(inputDir))
+            trigger: Trigger = Trigger.AvailableNow(),
+            deleteCommitted: Boolean = false): StreamingQuery = {
+    val reader = spark.readStream
+    if (deleteCommitted) reader.option("cleanSource", "delete")
+    IngestCore.fileLines(reader.text(inputDir))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch((df: DataFrame, _: Long) => processBatch(df))
       .start()
+  }
 
   /** Start the streaming query over LIVE stdin via the DSv2
     * [[StdinMicroBatchStream]] — the unbounded `tap | target` pipe with
     * no pre-spool. Same per-micro-batch core; replay/restart semantics
-    * documented at [[StdinStream]]. */
+    * documented at [[StdinStream]]. Clears [[StdinStream.eofReached]]
+    * before the query starts, so a caller that polls it from here on
+    * sees this stream's EOF, not an earlier one's. */
   def startLive(checkpointDir: String,
-                trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
+                trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
+    StdinStream.eof = false
     spark.readStream.format(classOf[StdinStreamProvider].getName).load()
       .toDF("value")
       .writeStream
@@ -144,6 +167,7 @@ final class StreamingIngest(
       .trigger(trigger)
       .foreachBatch((df: DataFrame, _: Long) => processBatch(df))
       .start()
+  }
 }
 
 object StreamingIngest {

@@ -5,8 +5,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.connector.read.HasPartitionStatistics
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileScanRDD}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceRDD, DataSourceRDDPartition}
 
 /** Access bridge for constructing DataFrames from custom logical plans
   * (`Dataset.ofRows` is `private[sql]`) — the [[ColumnBridge]] sibling
@@ -32,18 +34,52 @@ object DatasetBridge {
   : org.apache.spark.sql.catalyst.expressions.Expression =
     s.asInstanceOf[CSparkSession].expression(c)
 
-  /** A DataFrame's partition count, and the file splits it scans as
-    * (`_metadata.file_path`, `_metadata.file_block_start`) pairs, read
-    * from the FileScanRDD in its lineage (none for a non-file source).
-    * Planning only, no job. */
-  def scanLayout(df: DataFrame): (Int, Seq[(String, Long)]) = {
+  /** A scan as [[scanLayout]] reads it from the lineage: its partition
+    * count, its file splits as (`_metadata.file_path`,
+    * `_metadata.file_block_start`) pairs (none for a non-file source), and
+    * its input bytes when every source in the lineage knows them: the
+    * file split lengths, or the sizes a DSv2 input partition reports
+    * through `HasPartitionStatistics`. */
+  final case class ScanLayout(partitions: Int, splits: Seq[(String, Long)], bytes: Option[Long])
+
+  /** The [[ScanLayout]] of a DataFrame, read from the FileScanRDD and
+    * DataSourceRDD in its lineage. Planning only, no job. */
+  def scanLayout(df: DataFrame): ScanLayout = {
     val path = FileFormat.BASE_METADATA_EXTRACTORS(FileFormat.FILE_PATH)
-    def walk(rdd: RDD[_]): Seq[(String, Long)] = rdd match {
-      case f: FileScanRDD => f.filePartitions.flatMap(_.files.map(pf => (path(pf).toString, pf.start)))
+    // Each source RDD's splits, and its bytes when it knows them.
+    def walk(rdd: RDD[_]): Seq[(Seq[(String, Long)], Option[Long])] = rdd match {
+      case f: FileScanRDD =>
+        val files = f.filePartitions.flatMap(_.files)
+        Seq((files.map(pf => (path(pf).toString, pf.start)), Some(files.map(_.length).sum)))
+      case d: DataSourceRDD =>
+        val sizes = d.partitions.toSeq.flatMap {
+          case p: DataSourceRDDPartition => p.inputPartitions.map {
+            case s: HasPartitionStatistics if s.sizeInBytes.isPresent => Some(s.sizeInBytes.getAsLong)
+            case _ => None
+          }
+          case _ => Seq(None)
+        }
+        Seq((Nil, if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None))
+      case r if r.dependencies.isEmpty => Seq((Nil, None))
       case r => r.dependencies.flatMap(d => walk(d.rdd))
     }
     val rdd = df.asInstanceOf[CDataset[_]].queryExecution.toRdd
-    (rdd.getNumPartitions, walk(rdd))
+    val sources = walk(rdd)
+    val bytes = sources.map(_._2)
+    ScanLayout(rdd.getNumPartitions, sources.flatMap(_._1),
+      if (bytes.forall(_.isDefined)) Some(bytes.flatten.sum) else None)
+  }
+
+  /** `df.localCheckpoint(eager = false)` without the SQL execution
+    * `Dataset.checkpoint` wraps around planning: the lineage is marked for
+    * a local checkpoint, and the first job that reads the returned
+    * DataFrame computes it once, inside that job's own query. The plan is
+    * executed now, so an exchange in it runs its map stage here. */
+  def lazyLocalCheckpoint(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[CDataset[_]]
+    val rdd = ds.queryExecution.toRdd.map(_.copy())
+    rdd.localCheckpoint()
+    CDataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
   }
 
   /** Run `body` on `pool` with the caller's active session and

@@ -28,15 +28,20 @@ class IngestCoreSpec extends SparkSpec {
   private def record(stream: String, pk: Int) =
     s"""{"type": "RECORD", "stream": "$stream", "record": {"pk": $pk, "v": "r$pk"}}"""
 
+  /** `lines` as a micro-batch: one file, read as one split, so the
+    * envelope sees its bytes, as it sees a live page's. */
+  private def batchOf(lines: Seq[String]): DataFrame = {
+    val f = Files.createTempFile("core-batch", ".jsonl")
+    Files.writeString(f, lines.mkString("", "\n", "\n"))
+    spark.read.text(f.toString)
+  }
+
   /** Two streams, one schema epoch each, `n` records each, closed by a
     * STATE: the shape of a live page. */
-  private def twoStreamBatch(from: Int, n: Int = 50): DataFrame = {
-    import spark.implicits._
-    val lines = (if (from == 0) Seq(schema("s1"), schema("s2")) else Nil) ++
+  private def twoStreamBatch(from: Int, n: Int = 50): DataFrame =
+    batchOf((if (from == 0) Seq(schema("s1"), schema("s2")) else Nil) ++
       (from until from + n).flatMap(i => Seq(record("s1", i), record("s2", i))) :+
-      s"""{"type": "STATE", "value": {"page": $from}}"""
-    spark.sparkContext.parallelize(lines, 1).toDF("value")
-  }
+      s"""{"type": "STATE", "value": {"page": $from}}""")
 
   /** One job: its group, SQL execution and the task count of each stage
     * it ran (AQE's skipped stages run none). */
@@ -46,12 +51,15 @@ class IngestCoreSpec extends SparkSpec {
   private final case class Query(execution: Long, kind: String)
 
   /** What a query is, read from its plan: the control-plane aggregate,
-    * the phase-1 query, a write, or "other". */
-  private def kindOf(plan: String): String =
-    if (plan.contains("infer_record_schema") || plan.contains("validate_record")) "phase-1"
-    else if (plan.contains("collect_list")) "control plane"
+    * the control plane fused with phase 1, the phase-1 query, a write, or
+    * "other". */
+  private def kindOf(plan: String): String = {
+    val phaseOne = plan.contains("infer_record_schema") || plan.contains("validate_record")
+    if (plan.contains("collect_list")) if (phaseOne) "fused" else "control plane"
+    else if (phaseOne) "phase-1"
     else if (plan.contains("InsertIntoHadoopFsRelationCommand")) "write"
     else "other"
+  }
 
   /** Every job and every query (SQL execution) `body` starts, in order. */
   private def traced(body: => Unit): (Seq[Job], Seq[Query]) = {
@@ -93,27 +101,27 @@ class IngestCoreSpec extends SparkSpec {
     if (!Files.exists(dir)) Set.empty
     else Files.list(dir).iterator().asScala.filter(_.toString.endsWith(".parquet")).toSet
 
-  // Two for the envelope checkpoint (the rebalance exchange, then the
-  // checkpoint), two for the control-plane aggregate, two for the one
-  // phase-1 query, one write per stream. Queries: the checkpoint, the
-  // control plane, phase 1 and the two writes.
-  test("one warm micro-batch of two streams runs at most 8 jobs and 5 queries, all in the caller's job group") {
+  // The envelope is one partition planned as SinglePartition and is
+  // checkpointed lazily, so every query is one job of one stage: the
+  // control plane fused with phase 1 (it also fills the checkpoint), then
+  // one write per stream.
+  test("one warm micro-batch of two streams runs at most 3 jobs and 3 queries, all in the caller's job group") {
     val ingest = new StreamingIngest(spark, Files.createTempDirectory("core-live").toString,
       TargetConfig(streamsInSeparateFolder = true))
     ingest.processBatch(twoStreamBatch(0)) // registers the schemas, warms the JIT
     val (jobs, queries) = traced(ingest.processBatch(twoStreamBatch(100)))
     info(s"${jobs.size} jobs, ${queries.size} queries: ${queries.map(_.kind).mkString(", ")}")
-    assert(jobs.size <= 8, s"${jobs.size} jobs")
-    assert(queries.size <= 5, queries)
+    assert(jobs.size <= 3, s"${jobs.size} jobs")
+    assert(queries.size <= 3, queries)
     assert(jobs.forall(_.group == "ingest-core-spec"), jobs)
   }
 
-  test("after the control plane, a run or a micro-batch executes one phase-1 query plus one write per epoch") {
+  test("a warm micro-batch runs one fused query then one write per stream; a run, after the control plane, one phase-1 query plus one write per epoch") {
     val ingest = new StreamingIngest(spark, Files.createTempDirectory("core-passes").toString,
       TargetConfig(streamsInSeparateFolder = true))
     ingest.processBatch(twoStreamBatch(0))
     val live = traced(ingest.processBatch(twoStreamBatch(100)))._2.map(_.kind)
-    assert(live.dropWhile(_ != "control plane").tail == "phase-1" +: Seq.fill(2)("write"), live)
+    assert(live == "fused" +: Seq.fill(2)("write"), live)
     // Three streams; beta re-emits its schema, so four epochs.
     val f = Files.createTempFile("core-passes", ".jsonl")
     Files.writeString(f, (golden.take(5) ++ Seq(schema("beta"), record("beta", 3)) ++
@@ -121,6 +129,49 @@ class IngestCoreSpec extends SparkSpec {
     val out = Files.createTempDirectory("core-passes-batch").toString
     val batch = traced(SingerPipeline.run(spark, f.toString, out, TargetConfig()))._2.map(_.kind)
     assert(batch.dropWhile(_ != "control plane").tail == "phase-1" +: Seq.fill(4)("write"), batch)
+  }
+
+  /** Every row under `dir`, merged by name, its columns in name order
+    * (the merged order follows whichever footer is read first), as
+    * sorted strings. */
+  private def rowsUnder(dir: String): Seq[String] = {
+    val df = spark.read.option("mergeSchema", "true").parquet(dir)
+    df.select(df.columns.sorted.map(org.apache.spark.sql.functions.col): _*)
+      .collect().map(_.toString).toSeq.sorted
+  }
+
+  test("a warm micro-batch with a SCHEMA for a stream with records takes the two-query path and writes what a batch run writes") {
+    val v2 = schema("s1").replace(""""v": {"maxLength": 8""", """"w": {"type": ["null", "string"]}, "v": {"maxLength": 8""")
+    val first = Seq(schema("s1"), schema("s2"), record("s1", 1), record("s2", 1))
+    val second = Seq(record("s1", 2), v2, """{"type": "RECORD", "stream": "s1", "record": {"pk": 3, "v": "r3", "w": "x"}}""",
+      record("s2", 2), """{"type": "STATE", "value": {"page": 2}}""")
+    val out = Files.createTempDirectory("core-reemit").toString
+    val ingest = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
+    ingest.processBatch(batchOf(first))
+    val kinds = traced(ingest.processBatch(batchOf(second)))._2.map(_.kind)
+    // s1's records span two epochs, so only s2's epoch is settled by the
+    // fused query; s1's are checked by the phase-1 query. One write per
+    // epoch: two for s1, one for s2.
+    assert(kinds == Seq("fused", "phase-1") ++ Seq.fill(3)("write"), kinds)
+    val f = Files.createTempFile("core-reemit", ".jsonl")
+    Files.writeString(f, (first ++ second).mkString("\n"))
+    val batchOut = Files.createTempDirectory("core-reemit-batch").toString
+    SingerPipeline.run(spark, f.toString, batchOut, TargetConfig(streamsInSeparateFolder = true))
+    Seq("s1", "s2").foreach(s => assert(rowsUnder(s"$out/$s") == rowsUnder(s"$batchOut/$s"), s))
+  }
+
+  test("a warm micro-batch raises the first failure in (stream, epoch) order, fused or not") {
+    val ingest = new StreamingIngest(spark, Files.createTempDirectory("core-order").toString,
+      TargetConfig(streamsInSeparateFolder = true))
+    ingest.processBatch(batchOf(Seq(schema("s1"), schema("s2"), record("s1", 1))))
+    def bad(s: String) = s"""{"type": "RECORD", "stream": "$s", "record": {"pk": 9, "v": "far too long"}}"""
+    // s1 settled by the fused query, s2 opened by a SCHEMA in the batch
+    val both = intercept[IllegalArgumentException](ingest.processBatch(
+      batchOf(Seq(schema("s2"), bad("s2"), bad("s1")))))
+    assert(both.getMessage.startsWith("Record validation failed for stream s1"), both.getMessage)
+    val fresh = intercept[IllegalArgumentException](ingest.processBatch(
+      batchOf(Seq(record("s1", 2), schema("s2"), bad("s2")))))
+    assert(fresh.getMessage.startsWith("Record validation failed for stream s2"), fresh.getMessage)
   }
 
   test("a warm micro-batch of about 200 lines runs every job as one task and lands one file per stream") {
@@ -136,15 +187,16 @@ class IngestCoreSpec extends SparkSpec {
     }
   }
 
-  test("a single-file batch input of 4 MB runs its phase-1 and write jobs with defaultParallelism tasks") {
-    val parallelism = spark.sparkContext.defaultParallelism
+  /** A one-file input of `big` records, at least `mb` MB, led by its
+    * SCHEMA when `withSchema`. */
+  private def bigInput(mb: Int, withSchema: Boolean): Path = {
     val rnd = new scala.util.Random(7)
-    val f = Files.createTempFile("core-size-batch", ".jsonl")
+    val f = Files.createTempFile("core-size", ".jsonl")
     val w = Files.newBufferedWriter(f)
     try {
-      w.write(schema("big")); w.newLine()
+      if (withSchema) { w.write(schema("big")); w.newLine() }
       var i = 0
-      while (Files.size(f) < (4L << 20) || i < 10) {
+      while (Files.size(f) < (mb.toLong << 20) || i < 10) {
         w.write(s"""{"type": "RECORD", "stream": "big", "record": {"pk": $i, "v": "r$i", """ +
           s""""payload": "${rnd.alphanumeric.take(200).mkString}"}}""")
         w.newLine(); i += 1
@@ -152,14 +204,41 @@ class IngestCoreSpec extends SparkSpec {
       }
     } finally w.close()
     info(s"${Files.size(f)} bytes")
+    f
+  }
+
+  /** The first stage of each `kind` query's first job: the scan of the
+    * envelope. */
+  private def tasksOf(kind: String, jobs: Seq[Job], queries: Seq[Query]): Seq[Int] =
+    queries.filter(_.kind == kind)
+      .flatMap(q => jobs.find(_.execution == q.execution)).flatMap(_.stageTasks.headOption)
+
+  test("a single-file batch input of 4 MB runs its phase-1 and write jobs with defaultParallelism tasks") {
+    val parallelism = spark.sparkContext.defaultParallelism
+    val f = bigInput(4, withSchema = true)
     val out = Files.createTempDirectory("core-size-batch").toString
     val (jobs, queries) = traced(SingerPipeline.run(spark, f.toString, out, TargetConfig()))
-    // The first stage of each query's first job: the scan of the envelope.
-    def tasksOf(kind: String): Seq[Int] = queries.filter(_.kind == kind)
-      .flatMap(q => jobs.find(_.execution == q.execution)).flatMap(_.stageTasks.headOption)
-    info(s"phase-1 ${tasksOf("phase-1")}, writes ${tasksOf("write")}")
-    assert(tasksOf("phase-1").nonEmpty && tasksOf("phase-1").forall(_ == parallelism), jobs)
-    assert(tasksOf("write").nonEmpty && tasksOf("write").forall(_ == parallelism), jobs)
+    val (phase1, writes) = (tasksOf("phase-1", jobs, queries), tasksOf("write", jobs, queries))
+    info(s"phase-1 $phase1, writes $writes")
+    assert(phase1.nonEmpty && phase1.forall(_ == parallelism), jobs)
+    assert(writes.nonEmpty && writes.forall(_ == parallelism), jobs)
+  }
+
+  test("a single-partition micro-batch above the advisory size spreads its phase-1 and write jobs over defaultParallelism tasks") {
+    val parallelism = spark.sparkContext.defaultParallelism
+    val f = bigInput(6, withSchema = false)
+    val ingest = new StreamingIngest(spark, Files.createTempDirectory("core-size-live").toString,
+      TargetConfig(streamsInSeparateFolder = true))
+    ingest.processBatch(batchOf(Seq(schema("big"), record("big", -1))))
+    // One partition, as a live batch is; its bytes are the file's.
+    val lines = IngestCore.fileLines(spark.read.text(f.toString)).coalesce(1)
+    assert(lines.rdd.getNumPartitions == 1)
+    val (jobs, queries) = traced(ingest.processBatch(lines))
+    // Warm, with no SCHEMA: phase 1 runs inside the fused query.
+    val (phase1, writes) = (tasksOf("fused", jobs, queries), tasksOf("write", jobs, queries))
+    info(s"fused ${phase1}, writes $writes")
+    assert(phase1.nonEmpty && phase1.forall(_ == parallelism), jobs)
+    assert(writes.nonEmpty && writes.forall(_ == parallelism), jobs)
   }
 
   private val golden = Seq(
@@ -208,8 +287,10 @@ class IngestCoreSpec extends SparkSpec {
     assert(after.size <= before.size, after.diff(before))
   }
 
-  /** The golden batch run: four jobs for the input scan, the envelope
-    * cache and the control-plane aggregate's two stages, two for the one
-    * phase-1 query, then one write per stream. */
+  /** The golden batch run's bound from its rebalanced plan: four jobs
+    * for the input scan, the envelope cache and the control-plane
+    * aggregate's two stages, two for the one phase-1 query, then one write
+    * per stream. Its one small split now stays one partition, which runs
+    * fewer. */
   private val MaxBatchJobs = 9
 }

@@ -4,9 +4,10 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryProgress, Trigger}
 import graft.SparkSpec
 import graft.model.TargetConfig
 
@@ -332,6 +333,130 @@ class StreamingIngestSpec extends SparkSpec {
         assert(messages(e).exists(_.contains("pipe broke")))
       } finally q.stop()
     } finally StdinStream.inputFactory = () => System.in
+  }
+
+  /** Start a live stream over `in`, drain it at EOF like graft.Main, and
+    * return the query's progress. */
+  private def drainLive(in: java.io.InputStream, out: String): Seq[StreamingQueryProgress] = {
+    StdinStream.inputFactory = () => in
+    try {
+      val q = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
+        .startLive(Files.createTempDirectory("live-cp").toString)
+      try StreamingIngest.drainAtEof(q, StdinStream.eofReached, pollMs = 10)
+      finally q.stop()
+      q.recentProgress.toSeq
+    } finally StdinStream.inputFactory = () => System.in
+  }
+
+  /** A pipe a writer thread fills with `ls` once `delayMs` has passed,
+    * then closes. */
+  private def latePipe(ls: Seq[String], delayMs: Long): java.io.InputStream = {
+    val in = new java.io.PipedInputStream(1 << 16)
+    val out = new java.io.PipedOutputStream(in)
+    val t = new Thread(() => {
+      Thread.sleep(delayMs)
+      try out.write(ls.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+    })
+    t.setDaemon(true)
+    t.start()
+    in
+  }
+
+  test("live stdin: a second live stream in one JVM ingests its whole pipe") {
+    val first = Files.createTempDirectory("live-first").toString
+    drainLive(new java.io.ByteArrayInputStream(
+      (Seq(schemaLine, rec("s1", 1)).mkString("\n") + "\n").getBytes("UTF-8")), first)
+    assert(StdinStream.eofReached) // the first stream's EOF, left set
+    val second = Files.createTempDirectory("live-second").toString
+    drainLive(latePipe(schemaLine +: (1 to 20).map(rec("s1", _)), delayMs = 1000), second)
+    assert(spark.read.parquet(s"$second/s1").count() == 20)
+  }
+
+  test("live stdin: each batch reads its lines once (numInputRows), and a warm batch runs at most 3 jobs") {
+    val out = Files.createTempDirectory("live-rows").toString
+    val batchJobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => batchJobs.merge(b, 1, (a: Integer, c: Integer) => a + c))
+    }
+    val pages = (0 until 5).map(p => (1 to 30).map(i => rec("s1", 100 * p + i)) :+
+      s"""{"type": "STATE", "value": {"page": $p}}""")
+    val lines = schemaLine +: pages.flatten
+    val in = new java.io.PipedInputStream(1 << 20)
+    val pipe = new java.io.PipedOutputStream(in)
+    val tap = new Thread(() => try pages.zipWithIndex.foreach { case (page, p) =>
+      pipe.write(((if (p == 0) schemaLine +: page else page).mkString("", "\n", "\n")).getBytes("UTF-8"))
+      pipe.flush()
+      Thread.sleep(300)
+    } finally pipe.close())
+    tap.setDaemon(true)
+    org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val progress = try { tap.start(); drainLive(in, out) } finally {
+      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val data = progress.filter(_.numInputRows > 0)
+    info(data.map(p => s"batch ${p.batchId}: ${p.numInputRows} rows, " +
+      s"${batchJobs.getOrDefault(p.batchId.toString, 0)} jobs").mkString("; "))
+    assert(data.map(_.numInputRows).sum == lines.size)
+    assert(spark.read.parquet(s"$out/s1").count() == 150)
+    // Every batch after the one that registered the schema is warm.
+    data.drop(1).foreach(p => assert(batchJobs.getOrDefault(p.batchId.toString, 0) <= 3, p.batchId))
+  }
+
+  test("live stdin: a commit past a 200k-line backlog evicts exactly the committed lines") {
+    val n = 250000
+    val src = new StdinMicroBatchStream(new java.io.ByteArrayInputStream(
+      (0 until n).map(i => s"line $i").mkString("", "\n", "\n").getBytes("UTF-8")))
+    try {
+      val end = System.currentTimeMillis + 60000
+      while (src.latestOffset() != StdinOffset(n) && System.currentTimeMillis < end) Thread.sleep(10)
+      assert(src.latestOffset() == StdinOffset(n))
+      def range(s: Long, e: Long): Seq[String] = src.planInputPartitions(StdinOffset(s), StdinOffset(e))
+        .toSeq.flatMap(_.asInstanceOf[StdinPartition].lines.toSeq)
+      src.commit(StdinOffset(200000))
+      assert(src.latestOffset() == StdinOffset(n))
+      assert(range(200000, n) == (200000 until n).map(i => s"line $i"))
+      intercept[IllegalStateException](range(199999, n))
+      src.commit(StdinOffset(n - 1))
+      assert(src.latestOffset() == StdinOffset(n))
+      assert(range(n - 1, n) == Seq(s"line ${n - 1}"))
+    } finally src.stop()
+  }
+
+  test("stream mode over the engine's own spool: committed chunk files are deleted") {
+    val watch = Files.createTempDirectory("spool-clean")
+    val out = Files.createTempDirectory("spool-clean-out").toString
+    val cp = Files.createTempDirectory("spool-clean-cp").toString
+    val pipeOut = new java.io.PipedOutputStream()
+    val pipeIn = new java.io.PipedInputStream(pipeOut, 1 << 16)
+    val tap = new java.io.PrintWriter(new java.io.OutputStreamWriter(pipeOut, "UTF-8"), true)
+    val spooler = new StdinSpooler(pipeIn, watch, maxLines = 3, maxIntervalMs = 60000).start()
+    val ingest = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
+    val q = ingest.start(watch.toString, cp, Trigger.ProcessingTime("100 milliseconds"),
+      deleteCommitted = true)
+    def chunks = Files.list(watch).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("chunk-")).toSeq.sorted
+    try {
+      tap.println(schemaLine)
+      (1 to 11).foreach { i =>
+        tap.println(rec("s1", i))
+        // one chunk, and so one batch, per three lines
+        if (i % 3 == 2) { while (spooler.chunksWritten < (i + 1) / 3) Thread.sleep(10); q.processAllAvailable() }
+      }
+      tap.close()
+      spooler.awaitEof()
+      q.processAllAvailable()
+      assert(spooler.chunksWritten == 4)
+      assert(spark.read.parquet(s"$out/s1").count() == 11)
+      // Deletion runs on the source's cleaner thread after each commit.
+      val end = System.currentTimeMillis + 30000
+      while (chunks.size > 1 && System.currentTimeMillis < end) Thread.sleep(50)
+      info(s"left: ${chunks.mkString(", ")}")
+      assert(chunks.size <= 1, chunks)
+    } finally q.stop()
   }
 
   test("drainAtEof: at EOF it drains every pending row, then stops the query") {

@@ -158,28 +158,30 @@ class ValidationJitSizeSpec extends SparkSpec {
     case other => other.children.flatMap(generated)
   }
 
-  test("fused phase-1 plan over a 20-epoch batch: every generated method is JIT-compilable") {
-    import spark.implicits._
-    // Four streams, five schema epochs each, the two wide schemas in turn.
-    val lines = (0 until 20).flatMap { k =>
-      val s = s"s${k % 4}"
-      Seq(s"""{"type": "SCHEMA", "stream": "$s", "schema": ${if (k % 2 == 0) customers else everyKeyword}, "key_properties": []}""",
-        s"""{"type": "RECORD", "stream": "$s", "record": {"c_custkey": $k, "i0": 3, "nested": {"in_i0": 3}}}""")
+  for (n <- Seq(20, 100)) {
+    test(s"fused phase-1 plan over a $n-epoch batch: every generated method is JIT-compilable") {
+      import spark.implicits._
+      // Four streams, n / 4 schema epochs each, the two wide schemas in turn.
+      val lines = (0 until n).flatMap { k =>
+        val s = s"s${k % 4}"
+        Seq(s"""{"type": "SCHEMA", "stream": "$s", "schema": ${if (k % 2 == 0) customers else everyKeyword}, "key_properties": []}""",
+          s"""{"type": "RECORD", "stream": "$s", "record": {"c_custkey": $k, "i0": 3, "nested": {"in_i0": 3}}}""")
+      }
+      val typed = IngestCore.envelope(spark.sparkContext.parallelize(lines, 1).toDF("value")).localCheckpoint()
+      val epochs = IngestCore.epochs(IngestCore.controlPlane(typed), Map.empty)
+      assert(epochs.size == n)
+      val compiled = epochs.map(e => IngestCore.compile(e.schema, TargetConfig()))
+      val key = "spark.sql.adaptive.enabled"
+      val aqe = conf.getConfString(key)
+      spark.conf.set(key, "false") // the plan as compiled, not AQE's initial plan
+      val plan = try IngestCore.phaseOne(IngestCore.records(typed), epochs, compiled, TargetConfig())
+        .get.queryExecution.executedPlan finally spark.conf.set(key, aqe)
+      val sizes = generated(plan)
+      assert(sizes.exists(_._1.exists(_.expressions.exists(_.exists(_.isInstanceOf[ValidateRecord])))),
+        s"no measured node validates in\n$plan")
+      info(sizes.map { case (p, b) => s"${p.nodeName} $b" }.mkString("largest method per node: ", ", ", ""))
+      val bytes = sizes.map(_._2).max
+      assert(bytes < HugeMethodLimit, s"largest generated method is $bytes bytes")
     }
-    val typed = IngestCore.envelope(spark.sparkContext.parallelize(lines, 1).toDF("value")).localCheckpoint()
-    val epochs = IngestCore.epochs(IngestCore.controlPlane(typed), Map.empty)
-    assert(epochs.size == 20)
-    val declared = epochs.map(e => JsonSchemaConverter.toStructType(e.schema.schema))
-    val key = "spark.sql.adaptive.enabled"
-    val aqe = conf.getConfString(key)
-    spark.conf.set(key, "false") // the plan as compiled, not AQE's initial plan
-    val plan = try IngestCore.phaseOne(IngestCore.records(typed), epochs, declared, TargetConfig())
-      .get.queryExecution.executedPlan finally spark.conf.set(key, aqe)
-    val sizes = generated(plan)
-    assert(sizes.exists(_._1.exists(_.expressions.exists(_.exists(_.isInstanceOf[ValidateRecord])))),
-      s"no measured node validates in\n$plan")
-    info(sizes.map { case (p, b) => s"${p.nodeName} $b" }.mkString("largest method per node: ", ", ", ""))
-    val bytes = sizes.map(_._2).max
-    assert(bytes < HugeMethodLimit, s"largest generated method is $bytes bytes")
   }
 }
