@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.TargetConfig
 import graft.pipeline.SingerPipeline
-import graft.streaming.{StdinSpooler, StdinStream, StreamingIngest}
+import graft.streaming.{StdinFeed, StdinSpooler, StreamingIngest}
 import graft.sources.S3Conf
 
 /** CLI entry point with the reference's UX (reference __init__.py:334-358,
@@ -165,9 +165,10 @@ object Main {
   private def runLive(spark: SparkSession, opts: Map[String, String],
                       output: String, config: TargetConfig): Unit = {
     def run(checkpoint: String): Unit = {
+      val feed = new StdinFeed(System.in)
       val query = new StreamingIngest(spark, output, config)
-        .startLive(checkpoint, Trigger.ProcessingTime("500 milliseconds"))
-      StreamingIngest.drainAtEof(query, StdinStream.eofReached, pollMs = 500)
+        .startLive(checkpoint, Trigger.ProcessingTime("500 milliseconds"), feed)
+      StreamingIngest.drainAtEof(query, feed.eofReached, pollMs = 500)
     }
     opts.get("checkpoint") match {
       case Some(checkpoint) => run(checkpoint)

@@ -136,7 +136,7 @@ object IngestQueries {
     * had only unit pins). A feeder thread streams the corpus file into
     * a pipe and closes it; the wait is `Main.runLive`'s
     * [[graft.streaming.StreamingIngest.drainAtEof]] (poll
-    * `StdinStream.eofReached`, drain, stop). Fresh output + checkpoint
+    * the stream's `StdinFeed.eofReached`, drain, stop). Fresh output + checkpoint
     * dirs per invocation: a pipe cannot replay across runs, the
     * source's own documented contract. The rows landed must match the
     * BATCH pipeline's oracle exactly — one ingest core, two delivery
@@ -161,55 +161,50 @@ object IngestQueries {
     val corpusBytes = Files.readAllBytes(Paths.get(corpus))
     val pipeIn = new java.io.PipedInputStream(corpusBytes.length + 1024)
     val pipeOut = new java.io.PipedOutputStream(pipeIn)
-    graft.streaming.StdinStream.inputFactory = () => pipeIn
-    try {
-      val ingest = new graft.streaming.StreamingIngest(s, out,
-        TargetConfig(inferExtraFields = false),
-        clock = () => "RT")
-      // Batch GRAIN discipline: the live source batches whatever
-      // arrived since the last trigger, and each micro-batch pays a
-      // fixed driver cost (epoch resolution, registry check, append
-      // commit) — measured 14-15 s at sf0.1 when a slow feed fragments
-      // this corpus into dozens of batches, vs ~4 s for the batch
-      // pipeline. So the feeder writes HALF the corpus before the
-      // query starts (one large opening batch — the backlog shape a
-      // real `tap | target` restart sees) and streams the rest while
-      // the query runs (at least one genuinely incremental live batch
-      // — the shape the unit spec pins wave-by-wave). Correctness is
-      // grain-invariant: the oracle hash only sees the landed rows.
-      val half = new java.util.concurrent.CountDownLatch(1)
-      val feeder = new Thread(() => {
-        try {
-          val bytes = corpusBytes
-          // split on the line boundary nearest the midpoint: partial
-          // lines must never straddle the latch (the source frames by
-          // newline, but the HALF signal must not bisect a record)
-          var mid = bytes.length / 2
-          while (mid < bytes.length && bytes(mid) != '\n') mid += 1
-          pipeOut.write(bytes, 0, mid + 1)
-          pipeOut.flush()
-          half.countDown()
-          pipeOut.write(bytes, mid + 1, bytes.length - mid - 1)
-          pipeOut.flush()
-        } finally { half.countDown(); pipeOut.close() }
-      }, "graft-live-feeder")
-      feeder.setDaemon(true)
-      feeder.start()
-      half.await()
-      // r17: the 1 s trigger STAYS — a 200 ms cadence was measured
-      // SLOWER (10.3 vs 7.4 s standalone: it fragments the live half
-      // into more micro-batches, each paying the fixed epoch/commit
-      // cost the batch-grain note above warns about). Only the EOF
-      // poll tightens (500 → 100 ms): it is pure exit latency after
-      // the tap closes, outside any batch.
-      val query = ingest.startLive(cp,
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-      graft.streaming.StreamingIngest.drainAtEof(query,
-        graft.streaming.StdinStream.eofReached, pollMs = 100)
-      feeder.join(10000)
-    } finally {
-      graft.streaming.StdinStream.inputFactory = () => System.in
-    }
+    val feed = new graft.streaming.StdinFeed(pipeIn)
+    val ingest = new graft.streaming.StreamingIngest(s, out,
+      TargetConfig(inferExtraFields = false),
+      clock = () => "RT")
+    // Batch GRAIN discipline: the live source batches whatever
+    // arrived since the last trigger, and each micro-batch pays a
+    // fixed driver cost (epoch resolution, registry check, append
+    // commit) — measured 14-15 s at sf0.1 when a slow feed fragments
+    // this corpus into dozens of batches, vs ~4 s for the batch
+    // pipeline. So the feeder writes HALF the corpus before the
+    // query starts (one large opening batch — the backlog shape a
+    // real `tap | target` restart sees) and streams the rest while
+    // the query runs (at least one genuinely incremental live batch
+    // — the shape the unit spec pins wave-by-wave). Correctness is
+    // grain-invariant: the oracle hash only sees the landed rows.
+    val half = new java.util.concurrent.CountDownLatch(1)
+    val feeder = new Thread(() => {
+      try {
+        val bytes = corpusBytes
+        // split on the line boundary nearest the midpoint: partial
+        // lines must never straddle the latch (the source frames by
+        // newline, but the HALF signal must not bisect a record)
+        var mid = bytes.length / 2
+        while (mid < bytes.length && bytes(mid) != '\n') mid += 1
+        pipeOut.write(bytes, 0, mid + 1)
+        pipeOut.flush()
+        half.countDown()
+        pipeOut.write(bytes, mid + 1, bytes.length - mid - 1)
+        pipeOut.flush()
+      } finally { half.countDown(); pipeOut.close() }
+    }, "graft-live-feeder")
+    feeder.setDaemon(true)
+    feeder.start()
+    half.await()
+    // r17: the 1 s trigger STAYS — a 200 ms cadence was measured
+    // SLOWER (10.3 vs 7.4 s standalone: it fragments the live half
+    // into more micro-batches, each paying the fixed epoch/commit
+    // cost the batch-grain note above warns about). Only the EOF
+    // poll tightens (500 → 100 ms): it is pure exit latency after
+    // the tap closes, outside any batch.
+    val query = ingest.startLive(cp,
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"), feed)
+    graft.streaming.StreamingIngest.drainAtEof(query, feed.eofReached, pollMs = 100)
+    feeder.join(10000)
     s.read.parquet(s"$out/events-RT.parquet")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .orderBy("event_id")

@@ -11,7 +11,6 @@ import graft.model._
 import graft.schema.JsonSchemaConverter
 import graft.functions.FlattenColumns
 import graft.validate.{Constraints, RecordValidator}
-import graft.validate.Constraints.CompiledConstraints
 
 /** The ingest core both delivery shapes run: [[SingerPipeline.run]] once
   * over a whole input, [[graft.streaming.StreamingIngest]] once per
@@ -23,10 +22,8 @@ import graft.validate.Constraints.CompiledConstraints
   *     the first unparseable line (P1), the unknown-type count (L6), the
   *     SCHEMA/STATE messages in file order, and each stream's RECORD
   *     extent for the order check (P4) and the state fold (P8). RECORD
-  *     lines never reach the driver. Given a baseline (the streaming
-  *     registry), the same aggregate also runs phase 1 for each
-  *     registered stream's baseline epoch.
-  *  3. [[writeEpochs]] checks every other (stream, schema epoch) in ONE
+  *     lines never reach the driver.
+  *  3. [[writeEpochs]] checks every (stream, schema epoch) in ONE
   *     phase-1 query (validation and inference), and writes only when
   *     all of them passed: concurrently across streams, in order within
   *     one.
@@ -40,19 +37,10 @@ object IngestCore {
   /** A stream's RECORD lines: first and last `idx`, and how many. */
   final case class Extent(minIdx: Long, maxIdx: Long, n: Long)
 
-  /** Phase 1's outcome for one epoch: the lowest-`idx` violation (strict
-    * validation) and the inferred record schema as JSON
-    * (`infer_extra_fields`), each None when not computed, or, for the
-    * violation, when every record passed. */
-  final case class Check(violation: Option[String], inferred: Option[String])
-
-  /** SCHEMA/STATE messages in `idx` order, each with its raw line, the
-    * extent of every stream that has records, and the [[Check]] of each
-    * registered stream's baseline epoch that has records
-    * ([[controlPlane]]'s fused phase 1). */
+  /** SCHEMA/STATE messages in `idx` order, each with its raw line, and
+    * the extent of every stream that has records. */
   final case class ControlPlane(control: Seq[(String, ControlMessage)],
-                                extents: Map[String, Extent],
-                                baselineChecks: Map[String, Check]) {
+                                extents: Map[String, Extent]) {
     def schemas: Seq[(String, SchemaMessage)] =
       control.collect { case (raw, m: SchemaMessage) => (raw, m) }
     def states: Seq[StateMessage] = control.collect { case (_, m: StateMessage) => m }
@@ -63,21 +51,6 @@ object IngestCore {
     * Schema registration is positional, as in the reference, which
     * replaces a stream's validator on every SCHEMA (__init__.py:239-245). */
   final case class Epoch(stream: String, schema: SchemaMessage, from: Long, until: Long)
-
-  /** A SCHEMA message compiled for phase 1, once: the struct its records
-    * parse to, its constraints, and its record validator, or the reason
-    * the validator does not compile. The streaming registry holds one per
-    * registered stream; a batch run compiles each of its schemas once. */
-  final case class Compiled(message: SchemaMessage, declared: StructType,
-                            constraints: CompiledConstraints,
-                            validator: Either[String, RecordValidator])
-
-  def compile(m: SchemaMessage, config: TargetConfig): Compiled = {
-    val declared = JsonSchemaConverter.toStructType(m.schema, config.decimalForMultipleOf)
-    val cc = Constraints.compile(m.schema)
-    Compiled(m, declared, cc, RecordValidator.compile(cc, declared,
-      SQLConf.get.ansiEnabled, SQLConf.get.sessionLocalTimeZone))
-  }
 
   /** A file scan's lines with the hidden columns [[envelope]] orders by. */
   def fileLines(scan: DataFrame): DataFrame = scan.select(col("value"),
@@ -140,48 +113,27 @@ object IngestCore {
     * without `$.type` is invalid JSON or not a Singer message), and
     * echoes unknown-type messages. Control rows ride along as a
     * conditional collect_list, which skips nulls, so RECORD groups
-    * collect nothing.
-    *
-    * `baseline` is the registry's compiled schema per stream. The same
-    * grouped aggregate runs phase 1 ([[phaseOne]]) for each registered
-    * stream's baseline epoch, bounds (MinValue, MaxValue): its RECORD
-    * group's lowest-`idx` violation and inferred schema, computed over
-    * RECORD rows only. The result is that epoch's [[Check]] whenever the
-    * input holds no SCHEMA for the stream; [[writeEpochs]] reuses it and
-    * queries only the other epochs. An empty baseline (a batch run)
-    * leaves the aggregate as it was. */
-  def controlPlane(typed: DataFrame, baseline: Map[String, Compiled] = Map.empty,
-                   config: TargetConfig = TargetConfig()): ControlPlane = {
-    val settled = baseline.toSeq.sortBy(_._1).map { case (s, c) =>
-      Epoch(s, c.message, Long.MinValue, Long.MaxValue) -> c }
-    val isRecord = col("mtype") === "RECORD"
-    val (rows, checks) = withChecks(
-      typed.withColumn("rec", when(isRecord, get_json_object(col("value"), "$.record"))),
-      isRecord, settled.map(_._1), settled.map(_._2), config)
-      .getOrElse((typed, Nil))
-    val groups = rows.groupBy("mtype", "stream")
-      .agg(min("idx"), Seq(max("idx"), count(lit(1)),
+    * collect nothing. */
+  def controlPlane(typed: DataFrame): ControlPlane = {
+    val groups = typed.groupBy("mtype", "stream")
+      .agg(min("idx"), max("idx"), count(lit(1)),
         min_by(col("value"), when(col("mtype").isNull, col("idx"))),
         collect_list(when(col("mtype").isin("SCHEMA", "STATE"),
-          struct(col("idx"), col("value"))))) ++ checks: _*)
+          struct(col("idx"), col("value")))))
       .collect()
-    // row layout: (mtype, stream, minIdx, maxIdx, n, firstUnparseable, ctrl,
-    // then the checks by name)
+    // row layout: (mtype, stream, minIdx, maxIdx, n, firstUnparseable, ctrl)
     groups.filter(_.isNullAt(0)).minByOption(_.getLong(2)).foreach { r =>
       throw new RuntimeException(Singer.unparseableError(r.getString(5)))
     }
     val nUnknown = groups.filterNot(r => Set("RECORD", "SCHEMA", "STATE")(r.getString(0)))
       .map(_.getLong(4)).sum
     if (nUnknown > 0) echoUnknown(typed, nUnknown)
-    val recordGroups = groups.filter(_.getString(0) == "RECORD")
     ControlPlane(
       groups.toSeq.flatMap(_.getSeq[Row](6))
         .map(r => (r.getString(1), Singer.parseControl(r.getLong(0), r.getString(1))))
         .sortBy(_._2.idx),
-      recordGroups.map(r => r.getString(1) -> Extent(r.getLong(2), r.getLong(3), r.getLong(4))).toMap,
-      if (checks.isEmpty) Map.empty
-      else recordGroups.filter(r => baseline.contains(r.getString(1)))
-        .map(r => r.getString(1) -> checkOf(r)).toMap)
+      groups.filter(_.getString(0) == "RECORD")
+        .map(r => r.getString(1) -> Extent(r.getLong(2), r.getLong(3), r.getLong(4))).toMap)
   }
 
   /** Echo unknown-type payloads like the reference does per message, but
@@ -234,41 +186,30 @@ object IngestCore {
 
   /** Validate every epoch, then write them all. Phase 1 is ONE grouped
     * query over the run's records ([[phaseOne]]): per epoch, the
-    * lowest-`idx` violation and the inferred record schema. An epoch
-    * equal to its stream's baseline epoch (the stream has records and no
-    * SCHEMA in this input) takes its [[Check]] from `settled`, the
-    * control plane's fused phase 1, and joins no query; with every epoch
-    * settled there is no phase-1 query at all. `baseline` supplies the
-    * compiled form of the registry's schemas; any other schema is
-    * compiled here, once. Phase 2 starts only if every epoch passed, so
-    * a bad record anywhere writes nothing; of several failures the first
-    * in (stream, epoch) order is raised, inference before validation.
-    * Phase 2 writes streams concurrently, each stream's epochs in order:
-    * the first replaces earlier output when `overwrite`, the rest append
-    * their (possibly differently shaped) files alongside, which parquet
-    * readers merge by footer schema (§1.4). */
+    * lowest-`idx` violation and the inferred record schema. Phase 2
+    * starts only if every epoch passed, so a bad record anywhere writes
+    * nothing; of several failures the first in (stream, epoch) order is
+    * raised, inference before validation. Phase 2 writes streams
+    * concurrently, each stream's epochs in order: the first replaces
+    * earlier output when `overwrite`, the rest append their (possibly
+    * differently shaped) files alongside, which parquet readers merge by
+    * footer schema (§1.4). */
   def writeEpochs(spark: SparkSession, records: DataFrame, epochs: Seq[Epoch],
                   config: TargetConfig, outputUri: String, timestamp: String,
-                  overwrite: Boolean, baseline: Map[String, Compiled] = Map.empty,
-                  settled: Map[String, Check] = Map.empty): Unit = {
-    val compiled = epochs.map(e => baseline.get(e.stream).filter(_.message eq e.schema)
-      .getOrElse(compile(e.schema, config)))
-    val reused = epochs.indices.filter { i =>
-      val e = epochs(i)
-      e.from == Long.MinValue && e.until == Long.MaxValue && settled.contains(e.stream)
-    }.map(i => i -> settled(epochs(i).stream)).toMap
-    val fresh = epochs.indices.filterNot(reused.contains)
-    val checks = reused ++ phaseOne(records, fresh.map(epochs), fresh.map(compiled), config)
-      .fold(Map.empty[Int, Check])(_.collect().map(r => fresh(r.getInt(0)) -> checkOf(r)).toMap)
+                  overwrite: Boolean): Unit = {
+    val declared = epochs.map(e =>
+      JsonSchemaConverter.toStructType(e.schema.schema, config.decimalForMultipleOf))
+    val checks = phaseOne(records, epochs, declared, config)
+      .fold(Map.empty[Int, Row])(_.collect().map(r => r.getInt(0) -> r).toMap)
     val schemas = epochs.indices.map { i =>
-      val check = checks.get(i)
+      val row = checks.get(i)
       // Union-schema passthrough (§1.4): record-only fields survive.
-      val schema = if (!config.inferExtraFields) compiled(i).declared
-        else JsonSchemaConverter.mergeSchemas(compiled(i).declared, check.flatMap(_.inferred)
-          .fold(StructType(Nil))(JsonSchemaConverter.inferredSchema))
+      val schema = if (!config.inferExtraFields) declared(i)
+        else JsonSchemaConverter.mergeSchemas(declared(i), row.fold(StructType(Nil))(r =>
+          JsonSchemaConverter.inferredSchema(r.getAs[String]("inferred"))))
       if (config.strictValidation) {
-        uncompiled(records, compiled(i)).foreach(e => throw e)
-        check.flatMap(_.violation).foreach(v =>
+        uncompiled(records, epochs(i), declared(i)).foreach(e => throw e)
+        row.flatMap(r => Option(r.getAs[String]("violation"))).foreach(v =>
           throw new IllegalArgumentException(
             s"Record validation failed for stream ${epochs(i).stream}: $v"))
       }
@@ -285,62 +226,42 @@ object IngestCore {
       })).foreach(_.get)
   }
 
+  private def inEpoch(e: Epoch): Column =
+    col("stream") === e.stream && col("idx") > e.from && col("idx") < e.until
+
   /** An epoch's records. */
-  private def slice(records: DataFrame, e: Epoch): DataFrame =
-    records.filter(col("stream") === e.stream && col("idx") > e.from && col("idx") < e.until)
+  private def slice(records: DataFrame, e: Epoch): DataFrame = records.filter(inEpoch(e))
 
-  /** A phase-1 result row's [[Check]], by column name. */
-  private def checkOf(r: Row): Check = {
-    def field(name: String) =
-      if (r.schema.fieldNames.contains(name)) Option(r.getAs[String](name)) else None
-    Check(field("violation"), field("inferred"))
-  }
-
-  /** Phase 1 of [[writeEpochs]], one row per epoch in `epochs` holding
-    * records: `epoch` (its position in `epochs`), and, as `config` asks
-    * for them, `violation` (strict validation: [[Constraints.firstViolation]] over
+  /** Phase 1 of [[writeEpochs]], one row per epoch holding records:
+    * `epoch` (its position in `epochs`), and, as `config` asks for them,
+    * `violation` (strict validation: [[Constraints.firstViolation]] over
     * [[Constraints.violation]], each record parsed by ONE `from_json`,
     * its epoch's) and `inferred` (`infer_extra_fields`:
-    * [[JsonSchemaConverter.inferRecords]] over the epoch's records).
-    * `compiled` holds each epoch's compiled schema; an epoch whose
-    * validator does not compile is left out of the validation, and
-    * [[uncompiled]] raises its error. None when there is nothing to
-    * compute: no epoch, or neither inference nor strict validation. */
-  private[graft] def phaseOne(records: DataFrame, epochs: Seq[Epoch], compiled: Seq[Compiled],
-                              config: TargetConfig): Option[DataFrame] =
-    withChecks(records, lit(true), epochs, compiled, config).map { case (rows, aggs) =>
-      // Records of epochs settled elsewhere carry no epoch.
-      rows.filter(col("epoch").isNotNull).groupBy("epoch").agg(aggs.head, aggs.tail: _*)
-    }
-
-  /** `rows` (with `idx`, `stream` and the record payload `rec`) with the
-    * phase-1 columns added for the rows where `isRecord` holds: `epoch`,
-    * each record's position in `epochs` ([[epochOf]]), and under strict
-    * validation `v`, its violation under its epoch's validator; plus the
-    * aggregates over them, `violation` and `inferred`, that [[phaseOne]]
-    * groups by epoch and [[controlPlane]] by (type, stream). None when
-    * there is nothing to compute. */
-  private def withChecks(rows: DataFrame, isRecord: Column, epochs: Seq[Epoch],
-                         compiled: Seq[Compiled], config: TargetConfig)
-  : Option[(DataFrame, Seq[Column])] = {
+    * [[JsonSchemaConverter.inferRecords]] over the epoch's records). An
+    * epoch whose validator does not compile against its struct is left
+    * out of the validation; [[uncompiled]] raises its error. None when
+    * there is nothing to compute: no epoch, or neither inference nor
+    * strict validation. */
+  private[graft] def phaseOne(records: DataFrame, epochs: Seq[Epoch], declared: Seq[StructType],
+                              config: TargetConfig): Option[DataFrame] = {
     // CASE WHEN cond(i) THEN value(i) ... for i in `is`, in order.
     def firstOf(is: Seq[Int])(cond: Int => Column, value: Int => Column): Column =
       is.tail.foldLeft(when(cond(is.head), value(is.head)))((c, i) => c.when(cond(i), value(i)))
     val validated =
-      if (config.strictValidation) epochs.indices.filter(compiled(_).validator.isRight) else Nil
+      if (config.strictValidation) epochs.indices.filter(i => compiles(epochs(i), declared(i)))
+      else Nil
     val aggs =
       (if (validated.nonEmpty)
         Seq(Constraints.firstViolation(col("v"), col("idx")).as("violation")) else Nil) ++
       (if (config.inferExtraFields && epochs.nonEmpty)
-        Seq(JsonSchemaConverter.inferRecords(when(col("epoch").isNotNull, col("rec")))
-          .as("inferred")) else Nil)
+        Seq(JsonSchemaConverter.inferRecords(col("rec")).as("inferred")) else Nil)
     if (aggs.isEmpty) None
     else {
-      val tagged = rows.withColumn("epoch", when(isRecord, epochOf(epochs)))
+      val tagged = records.select(col("idx"), col("rec"), epochOf(epochs).as("epoch"))
       val checked = if (validated.isEmpty) tagged
         else tagged.withColumn("v",
-          firstOf(validated)(col("epoch") === _, i => violation(compiled(i))))
-      Some((checked, aggs))
+          firstOf(validated)(col("epoch") === _, i => violation(epochs(i), declared(i))))
+      Some(checked.groupBy("epoch").agg(aggs.head, aggs.tail: _*))
     }
   }
 
@@ -376,16 +297,19 @@ object IngestCore {
     lookup(col("stream"), col("idx"))
   }
 
-  /** A record's violation under `c`'s validator, compiled ahead. */
-  private def violation(c: Compiled): Column = Constraints.violation(c.validator.toOption.get,
-    c.constraints, from_json(col("rec"), c.declared), col("rec"))
+  private def violation(e: Epoch, declared: StructType): Column =
+    Constraints.violation(Constraints.compile(e.schema.schema),
+      from_json(col("rec"), declared), col("rec"))
 
-  /** The analysis error of a schema whose validator does not compile:
+  private def compiles(e: Epoch, declared: StructType): Boolean =
+    RecordValidator.compile(Constraints.compile(e.schema.schema), declared,
+      SQLConf.get.ansiEnabled, SQLConf.get.sessionLocalTimeZone).isRight
+
+  /** The analysis error of an epoch whose validator does not compile:
     * the error its own validation query raises. */
-  private def uncompiled(records: DataFrame, c: Compiled): Option[Throwable] =
-    if (c.validator.isRight) None
-    else Try(records.select(Constraints.violation(c.constraints,
-      from_json(col("rec"), c.declared), col("rec")))).failed.toOption
+  private def uncompiled(records: DataFrame, e: Epoch, declared: StructType): Option[Throwable] =
+    if (compiles(e, declared)) None
+    else Try(records.select(violation(e, declared))).failed.toOption
 
   /** One epoch's records as the flat rows to write. */
   private def flatten(recs: DataFrame, schema: StructType,

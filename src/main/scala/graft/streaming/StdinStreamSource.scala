@@ -3,7 +3,8 @@ package graft.streaming
 import java.io.{BufferedReader, InputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util
-import java.util.OptionalLong
+import java.util.{OptionalLong, UUID}
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -42,21 +43,35 @@ import org.apache.spark.unsafe.types.UTF8String
   * query over it is one task and one stage with no exchange; a larger
   * one is rebalanced, and AQE spreads it over the cluster.
   *
-  * `StdinStream.inputFactory` injects the stream (tests feed a pipe;
-  * production leaves it at `System.in`).
+  * Each stream reads its own [[StdinFeed]] (production: `System.in`;
+  * tests feed a pipe), which [[StreamingIngest.startLive]] hands to the
+  * source its query builds.
   */
 object StdinStream {
   val schema: StructType =
     StructType(Seq(StructField("value", StringType, nullable = false)))
-  @volatile var inputFactory: () => InputStream = () => System.in
 
-  /** True once the CURRENT stream's input hit EOF (or failed) — the
-    * driver loop in [[graft.Main]] polls this to know when the tap
-    * closed the pipe (a pipe-fed query otherwise idles forever).
-    * [[StreamingIngest.startLive]] clears it before it starts a query, so
-    * a caller polling right after it never reads an earlier stream's
-    * EOF; stdin is one serial pipe, so at most one live stream exists at
-    * a time. */
+  // Feeds on their way from startLive to their query's source, by the
+  // source's `feed` option; each is taken once, when the source is built.
+  private val handoff = new ConcurrentHashMap[String, StdinFeed]()
+
+  private[streaming] def offer(feed: StdinFeed): String = {
+    val id = UUID.randomUUID().toString
+    handoff.put(id, feed)
+    id
+  }
+
+  private[streaming] def take(id: String): StdinFeed = Option(id).flatMap(i => Option(handoff.remove(i)))
+    .getOrElse(throw new IllegalStateException(
+      s"no stdin feed '$id': start a live stream with StreamingIngest.startLive"))
+}
+
+/** One live stream's input: the stream its source reads, and whether the
+  * source's reader has reached its end (or failed). The driver loop in
+  * [[graft.Main]] polls [[eofReached]] to know when the tap closed the
+  * pipe (a pipe-fed query otherwise idles forever). Each stream has its
+  * own, so no other stream's reader, early or late, can set it. */
+final class StdinFeed(val in: InputStream) {
   @volatile private[streaming] var eof = false
   def eofReached: Boolean = eof
 }
@@ -78,7 +93,7 @@ final class StdinTable extends Table with SupportsRead {
     () => new Scan {
       override def readSchema(): StructType = StdinStream.schema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new StdinMicroBatchStream(StdinStream.inputFactory())
+        new StdinMicroBatchStream(StdinStream.take(options.get("feed")))
     }
 }
 
@@ -87,7 +102,8 @@ final case class StdinOffset(n: Long) extends Offset {
   override def json(): String = n.toString
 }
 
-final class StdinMicroBatchStream(in: InputStream) extends MicroBatchStream {
+final class StdinMicroBatchStream(feed: StdinFeed) extends MicroBatchStream {
+  private val in = feed.in
   // Lines [evicted, evicted + buf.size); guarded by `this`.
   private val buf = new util.ArrayList[String]()
   private var evicted = 0L
@@ -102,7 +118,7 @@ final class StdinMicroBatchStream(in: InputStream) extends MicroBatchStream {
         line = br.readLine()
       }
     } catch { case t: Throwable => failure = t }
-    finally StdinStream.eof = true
+    finally feed.eof = true
   }, "graft-stdin-source")
   reader.setDaemon(true)
   reader.start()

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model._
 import graft.pipeline.{IngestCore, SingerPipeline}
@@ -14,26 +13,23 @@ import graft.pipeline.{IngestCore, SingerPipeline}
   * the streaming analogue of the reference's unbounded stdin loop, with
   * Spark's checkpointing replacing its ad-hoc resume bookkeeping.
   *
-  * Per micro-batch: one control-plane aggregate that also runs phase 1
-  * (validation and inference) for every stream the registry already
-  * holds, one phase-1 query only for the epochs a SCHEMA in the batch
-  * opened, then the epochs appended only once all of them passed, so a
-  * failing batch appends nothing. The envelope is checkpointed lazily:
-  * the batch's first query reads the source once and fills the
-  * checkpoint, the later ones read the checkpoint. A warm live page (one
-  * partition under the advisory size, no SCHEMA) is thus one fused query
-  * and one write per stream, each one task in one stage.
+  * Per micro-batch: one control-plane aggregate, one phase-1 query
+  * (validation and inference) over every epoch, then the epochs appended
+  * only once all of them passed, so a failing batch appends nothing. The
+  * envelope is checkpointed lazily: the control-plane query reads the
+  * source once and fills the checkpoint, the later ones read the
+  * checkpoint. A warm live page (one partition under the advisory size)
+  * is thus the control plane, phase 1 and one write per stream, each one
+  * job of one task in one stage.
   *
   * Cross-batch state (the schema registry and last bookmark) lives on the
   * driver, exactly like the reference's `schemas`/`state` dicts — SCHEMA
-  * and STATE are control-plane; RECORD data stays distributed. Each
-  * registered schema is compiled ([[IngestCore.compile]]) once, when it is
-  * registered. Because a Singer tap only re-sends SCHEMA at ITS restart,
-  * not at the target's, the registry is also persisted under
-  * `{outputUri}/_graft_registry/` (via the Hadoop FS API, so it works for
-  * local paths and s3a:// alike) and reloaded on construction — a resumed
-  * query must not fail on records whose SCHEMA arrived before the
-  * restart.
+  * and STATE are control-plane; RECORD data stays distributed. Because a
+  * Singer tap only re-sends SCHEMA at ITS restart, not at the target's,
+  * the registry is also persisted under `{outputUri}/_graft_registry/` (via
+  * the Hadoop FS API, so it works for local paths and s3a:// alike) and
+  * reloaded on construction — a resumed query must not fail on records
+  * whose SCHEMA arrived before the restart.
   *
   * Build `spark` with [[graft.GraftSession]]: it turns Spark 4.1's
   * checkpoint-file checksums off. Left on, every started query creates a
@@ -52,7 +48,7 @@ final class StreamingIngest(
   private def fs = new Path(outputUri).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def registryDir = new Path(outputUri, "_graft_registry")
 
-  private def loadRegistry(): Map[String, IngestCore.Compiled] = {
+  private def loadRegistry(): Map[String, SchemaMessage] = {
     val f = fs
     if (!f.exists(registryDir)) Map.empty
     else f.listStatus(registryDir).toSeq
@@ -61,7 +57,7 @@ final class StreamingIngest(
         val in = f.open(st.getPath)
         val line = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
         Singer.parseControl(-1L, line).asInstanceOf[SchemaMessage]
-      }.map(m => m.stream -> IngestCore.compile(m, config)).toMap
+      }.map(m => m.stream -> m).toMap
   }
 
   private def persistSchema(rawLine: String, stream: String): Unit = {
@@ -90,40 +86,36 @@ final class StreamingIngest(
     // live page stays one partition with no exchange, a large spooled
     // chunk is rebalanced. foreachBatch re-executes the source scan per
     // downstream action, so the envelope is checkpointed: lazily, filled
-    // by the control-plane query's one job, which therefore reads the
-    // source exactly once, and read by the later queries.
-    val typed = DatasetBridge.lazyLocalCheckpoint(IngestCore.envelope(lines))
+    // by the control-plane query's job, which therefore reads the source
+    // exactly once, and read by the later queries. Marking it runs a query
+    // that plans the envelope and, unless an exchange must run first,
+    // starts no job.
+    val typed = IngestCore.envelope(lines).localCheckpoint(eager = false)
     // The order check runs against the registry as of the previous batch,
     // BEFORE any schema is persisted or registered: a batch that fails it
-    // must fail identically when the restarted query retries it. The
-    // control plane also checks, in the same query, each registered
-    // stream's records against its registered schema.
-    val registry = schemas.get()
-    val plane = IngestCore.controlPlane(typed, registry, config)
-    val epochs = IngestCore.epochs(plane, registry.view.mapValues(_.message).toMap)
+    // must fail identically when the restarted query retries it.
+    val plane = IngestCore.controlPlane(typed)
+    val epochs = IngestCore.epochs(plane, schemas.get())
     // One timestamp per micro-batch: under the default naming each batch
     // lands in its own timestamped key, the streaming analogue of the
     // reference's one-file-per-batch output. Config parity with the batch
     // path: naming, §1.4 passthrough and L1 metadata apply here too.
-    // Epochs the control plane checked join no phase-1 query; one opened
-    // by a SCHEMA in this batch is checked by the phase-1 query.
     IngestCore.writeEpochs(spark, IngestCore.records(typed), epochs, config, outputUri,
-      clock(), overwrite = false, registry, plane.baselineChecks)
+      clock(), overwrite = false)
 
     // Last-wins registration, matching the reference's overwrite-on-every-
     // SCHEMA (__init__.py:239-245): the registry (and its on-disk persist)
-    // holds the LATEST schema per stream, compiled once here. Registered
-    // only AFTER the writes: a batch that fails is retried by the
-    // restarted query against the SAME baseline, so pre-SCHEMA records
-    // re-parse under the schema that actually governed them. A batch that
-    // fails validation has written nothing; only a write that fails
-    // midway can leave append-mode files that the retry duplicates — the
-    // trade the reference makes in the opposite direction (it LOSES
-    // everything since its last state on a crash).
+    // holds the LATEST schema per stream. Registered only AFTER the
+    // writes: a batch that fails is retried by the restarted query
+    // against the SAME baseline, so pre-SCHEMA records re-parse under the
+    // schema that actually governed them. A batch that fails validation
+    // has written nothing; only a write that fails midway can leave
+    // append-mode files that the retry duplicates — the trade the
+    // reference makes in the opposite direction (it LOSES everything
+    // since its last state on a crash).
     val latest = plane.schemas.groupBy(_._2.stream).view.mapValues(_.last).toMap
     latest.foreach { case (stream, (raw, _)) => persistSchema(raw, stream) }
-    schemas.updateAndGet(reg =>
-      reg ++ latest.map { case (k, (_, m)) => k -> IngestCore.compile(m, config) })
+    schemas.updateAndGet(reg => reg ++ latest.map { case (k, (_, m)) => k -> m })
 
     // P8 fold across batches: a batch with a STATE or a RECORD decides
     // the bookmark on its own (a record after its last STATE, or records
@@ -154,13 +146,13 @@ final class StreamingIngest(
   /** Start the streaming query over LIVE stdin via the DSv2
     * [[StdinMicroBatchStream]] — the unbounded `tap | target` pipe with
     * no pre-spool. Same per-micro-batch core; replay/restart semantics
-    * documented at [[StdinStream]]. Clears [[StdinStream.eofReached]]
-    * before the query starts, so a caller that polls it from here on
-    * sees this stream's EOF, not an earlier one's. */
+    * documented at [[StdinStream]]. The query reads `feed`, whose
+    * [[StdinFeed.eofReached]] then tells this stream's EOF. */
   def startLive(checkpointDir: String,
-                trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
-    StdinStream.eof = false
-    spark.readStream.format(classOf[StdinStreamProvider].getName).load()
+                trigger: Trigger = Trigger.ProcessingTime(0L),
+                feed: StdinFeed = new StdinFeed(System.in)): StreamingQuery = {
+    spark.readStream.format(classOf[StdinStreamProvider].getName)
+      .option("feed", StdinStream.offer(feed)).load()
       .toDF("value")
       .writeStream
       .option("checkpointLocation", checkpointDir)

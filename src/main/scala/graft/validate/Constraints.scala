@@ -121,19 +121,10 @@ object Constraints {
     * Checks run in this order and the first failure is the message:
     * missing `record`; `required` in `cc.required` order; then per leaf
     * type, string type, minimum, maximum, multipleOf, maxLength,
-    * minLength, pattern, enum. The expression compiles `cc` against
-    * `root`'s struct when it is analyzed. */
+    * minLength, pattern, enum. */
   def violation(cc: CompiledConstraints, root: Column, raw: Column): Column =
     ColumnBridge.column(ValidateRecord(
       ColumnBridge.expression(root), ColumnBridge.expression(raw), cc))
-
-  /** [[violation]] with `cc` already compiled against the struct `root`
-    * parses to ([[RecordValidator.compile]]), so analysis compiles
-    * nothing. */
-  def violation(compiled: RecordValidator, cc: CompiledConstraints, root: Column,
-                raw: Column): Column =
-    ColumnBridge.column(ValidateRecord(
-      ColumnBridge.expression(root), ColumnBridge.expression(raw), cc, prebuilt = Some(compiled)))
 
   /** Strict mode (reference behavior), as an aggregate: of the rows it
     * sees, the violation `v` (a [[violation]] column) of the lowest-`idx`

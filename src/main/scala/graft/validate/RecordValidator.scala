@@ -27,16 +27,14 @@ import graft.validate.Constraints.{CompiledConstraints, LeafConstraint}
   *
   * `ansi` and `timeZoneId` are the session's at construction, the same
   * inputs the analyzer would give the casts and the `IN` coercion the
-  * kernel evaluates. `prebuilt`, when given, is `cc` already compiled
-  * against `root`'s struct, and is used as is.
+  * kernel evaluates.
   */
 case class ValidateRecord(
     root: Expression,
     raw: Expression,
     cc: CompiledConstraints,
     ansi: Boolean = SQLConf.get.ansiEnabled,
-    timeZoneId: String = SQLConf.get.sessionLocalTimeZone,
-    prebuilt: Option[RecordValidator] = None)
+    timeZoneId: String = SQLConf.get.sessionLocalTimeZone)
     extends BinaryExpression {
 
   override def left: Expression = root
@@ -46,11 +44,10 @@ case class ValidateRecord(
   override def prettyName: String = "validate_record"
   override protected def flatArguments: Iterator[Any] = Iterator(root, raw)
 
-  @transient private lazy val compiled: Either[String, RecordValidator] =
-    prebuilt.map(Right(_)).getOrElse(root.dataType match {
-      case st: StructType => RecordValidator.compile(cc, st, ansi, timeZoneId)
-      case other => Left(s"validate_record expects the parsed record struct, got $other")
-    })
+  @transient private lazy val compiled: Either[String, RecordValidator] = root.dataType match {
+    case st: StructType => RecordValidator.compile(cc, st, ansi, timeZoneId)
+    case other => Left(s"validate_record expects the parsed record struct, got $other")
+  }
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (raw.dataType != StringType)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 import org.apache.spark.sql.connector.read.HasPartitionStatistics
-import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileScanRDD}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceRDD, DataSourceRDDPartition}
 
@@ -68,18 +68,6 @@ object DatasetBridge {
     val bytes = sources.map(_._2)
     ScanLayout(rdd.getNumPartitions, sources.flatMap(_._1),
       if (bytes.forall(_.isDefined)) Some(bytes.flatten.sum) else None)
-  }
-
-  /** `df.localCheckpoint(eager = false)` without the SQL execution
-    * `Dataset.checkpoint` wraps around planning: the lineage is marked for
-    * a local checkpoint, and the first job that reads the returned
-    * DataFrame computes it once, inside that job's own query. The plan is
-    * executed now, so an exchange in it runs its map stage here. */
-  def lazyLocalCheckpoint(df: DataFrame): DataFrame = {
-    val ds = df.asInstanceOf[CDataset[_]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    CDataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
   }
 
   /** Run `body` on `pool` with the caller's active session and

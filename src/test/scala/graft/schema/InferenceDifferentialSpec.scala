@@ -91,10 +91,9 @@ class InferenceDifferentialSpec extends SparkSpec {
         .localCheckpoint()
       val records = IngestCore.records(typed)
       val epochs = IngestCore.epochs(IngestCore.controlPlane(typed), Map.empty)
+      val declared = epochs.map(e => JsonSchemaConverter.toStructType(e.schema.schema))
       val config = TargetConfig(strictValidation = false)
-      val compiled = epochs.map(e => IngestCore.compile(e.schema, config))
-      val declared = compiled.map(_.declared)
-      val fused = IngestCore.phaseOne(records, epochs, compiled, config).get.collect()
+      val fused = IngestCore.phaseOne(records, epochs, declared, config).get.collect()
         .map(r => r.getInt(0) -> r.getAs[String]("inferred")).toMap
       epochs.zip(declared).zipWithIndex.foreach { case ((e, d), i) =>
         val slice: DataFrame = records.filter(col("stream") === e.stream &&

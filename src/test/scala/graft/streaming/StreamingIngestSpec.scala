@@ -174,11 +174,10 @@ class StreamingIngestSpec extends SparkSpec {
     val writer = new java.io.PrintWriter(
       new java.io.OutputStreamWriter(new java.io.PipedOutputStream(pipeIn),
         java.nio.charset.StandardCharsets.UTF_8), true)
-    StdinStream.inputFactory = () => pipeIn
     try {
       val ingest = new StreamingIngest(spark, out,
         TargetConfig(streamsInSeparateFolder = true))
-      val q = ingest.startLive(cp)
+      val q = ingest.startLive(cp, feed = new StdinFeed(pipeIn))
       def settle(cond: => Boolean): Unit = {
         val end = System.currentTimeMillis + 30000
         while (!cond && System.currentTimeMillis < end) {
@@ -206,10 +205,7 @@ class StreamingIngestSpec extends SparkSpec {
       val pks = spark.read.parquet(s"$out/s1").collect()
         .map(r => r.getAs[Long]("pk")).sorted.toSeq
       assert(pks == Seq(1L, 2L, 3L))
-    } finally {
-      StdinStream.inputFactory = () => System.in
-      writer.close()
-    }
+    } finally writer.close()
   }
 
   test("streaming: record for unknown stream fails the batch") {
@@ -318,34 +314,27 @@ class StreamingIngestSpec extends SparkSpec {
         if (b >= 0) b else throw new java.io.IOException("pipe broke")
       }
     }
-    StdinStream.inputFactory = () => failing
-    // eof is process-wide and a previous live stream may have left it set;
-    // the new source resets it only once its query builds the source.
-    StdinStream.eof = false
+    val feed = new StdinFeed(failing)
+    val q = new StreamingIngest(spark, out, TargetConfig()).startLive(cp, feed = feed)
     try {
-      val q = new StreamingIngest(spark, out, TargetConfig()).startLive(cp)
-      try {
-        val drain = Future(StreamingIngest.drainAtEof(q, StdinStream.eofReached, pollMs = 10))(
-          ExecutionContext.global)
-        val e = intercept[Exception](Await.result(drain, 2.minutes))
-        def messages(t: Throwable): Seq[String] =
-          Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-        assert(messages(e).exists(_.contains("pipe broke")))
-      } finally q.stop()
-    } finally StdinStream.inputFactory = () => System.in
+      val drain = Future(StreamingIngest.drainAtEof(q, feed.eofReached, pollMs = 10))(
+        ExecutionContext.global)
+      val e = intercept[Exception](Await.result(drain, 2.minutes))
+      def messages(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+      assert(messages(e).exists(_.contains("pipe broke")))
+    } finally q.stop()
   }
 
   /** Start a live stream over `in`, drain it at EOF like graft.Main, and
     * return the query's progress. */
   private def drainLive(in: java.io.InputStream, out: String): Seq[StreamingQueryProgress] = {
-    StdinStream.inputFactory = () => in
-    try {
-      val q = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
-        .startLive(Files.createTempDirectory("live-cp").toString)
-      try StreamingIngest.drainAtEof(q, StdinStream.eofReached, pollMs = 10)
-      finally q.stop()
-      q.recentProgress.toSeq
-    } finally StdinStream.inputFactory = () => System.in
+    val feed = new StdinFeed(in)
+    val q = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
+      .startLive(Files.createTempDirectory("live-cp").toString, feed = feed)
+    try StreamingIngest.drainAtEof(q, feed.eofReached, pollMs = 10)
+    finally q.stop()
+    q.recentProgress.toSeq
   }
 
   /** A pipe a writer thread fills with `ls` once `delayMs` has passed,
@@ -366,13 +355,42 @@ class StreamingIngestSpec extends SparkSpec {
     val first = Files.createTempDirectory("live-first").toString
     drainLive(new java.io.ByteArrayInputStream(
       (Seq(schemaLine, rec("s1", 1)).mkString("\n") + "\n").getBytes("UTF-8")), first)
-    assert(StdinStream.eofReached) // the first stream's EOF, left set
     val second = Files.createTempDirectory("live-second").toString
     drainLive(latePipe(schemaLine +: (1 to 20).map(rec("s1", _)), delayMs = 1000), second)
     assert(spark.read.parquet(s"$second/s1").count() == 20)
   }
 
-  test("live stdin: each batch reads its lines once (numInputRows), and a warm batch runs at most 3 jobs") {
+  test("live stdin: a stream stopped before its EOF does not end the next stream's input") {
+    // The first stream's pipe stays open: its reader is still blocked
+    // when the query stops, and ends only once the second stream runs.
+    val openIn = new java.io.PipedInputStream(1 << 16)
+    val openOut = new java.io.PipedOutputStream(openIn)
+    openOut.write((Seq(schemaLine, rec("s1", 1)).mkString("", "\n", "\n")).getBytes("UTF-8"))
+    openOut.flush()
+    val first = new StdinFeed(openIn)
+    val q1 = new StreamingIngest(spark, Files.createTempDirectory("live-open").toString,
+      TargetConfig(streamsInSeparateFolder = true))
+      .startLive(Files.createTempDirectory("live-cp").toString, feed = first)
+    q1.processAllAvailable()
+    q1.stop()
+    val (in, out) = (new java.io.PipedInputStream(1 << 16), Files.createTempDirectory("live-next"))
+    val pipe = new java.io.PipedOutputStream(in)
+    val second = new StdinFeed(in)
+    val q2 = new StreamingIngest(spark, out.toString, TargetConfig(streamsInSeparateFolder = true))
+      .startLive(Files.createTempDirectory("live-cp").toString, feed = second)
+    try {
+      openOut.close() // the first stream's reader now reaches its end
+      val end = System.currentTimeMillis + 10000
+      while (!first.eofReached && System.currentTimeMillis < end) Thread.sleep(10)
+      assert(first.eofReached && !second.eofReached)
+      pipe.write((schemaLine +: (1 to 20).map(rec("s1", _))).mkString("", "\n", "\n").getBytes("UTF-8"))
+      pipe.close()
+      StreamingIngest.drainAtEof(q2, second.eofReached, pollMs = 10)
+    } finally q2.stop()
+    assert(spark.read.parquet(s"$out/s1").count() == 20)
+  }
+
+  test("live stdin: each batch reads its lines once (numInputRows), and a warm batch runs at most 4 jobs") {
     val out = Files.createTempDirectory("live-rows").toString
     val batchJobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -403,13 +421,13 @@ class StreamingIngestSpec extends SparkSpec {
     assert(data.map(_.numInputRows).sum == lines.size)
     assert(spark.read.parquet(s"$out/s1").count() == 150)
     // Every batch after the one that registered the schema is warm.
-    data.drop(1).foreach(p => assert(batchJobs.getOrDefault(p.batchId.toString, 0) <= 3, p.batchId))
+    data.drop(1).foreach(p => assert(batchJobs.getOrDefault(p.batchId.toString, 0) <= 4, p.batchId))
   }
 
   test("live stdin: a commit past a 200k-line backlog evicts exactly the committed lines") {
     val n = 250000
-    val src = new StdinMicroBatchStream(new java.io.ByteArrayInputStream(
-      (0 until n).map(i => s"line $i").mkString("", "\n", "\n").getBytes("UTF-8")))
+    val src = new StdinMicroBatchStream(new StdinFeed(new java.io.ByteArrayInputStream(
+      (0 until n).map(i => s"line $i").mkString("", "\n", "\n").getBytes("UTF-8"))))
     try {
       val end = System.currentTimeMillis + 60000
       while (src.latestOffset() != StdinOffset(n) && System.currentTimeMillis < end) Thread.sleep(10)

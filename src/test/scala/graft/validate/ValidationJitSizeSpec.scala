@@ -170,11 +170,11 @@ class ValidationJitSizeSpec extends SparkSpec {
       val typed = IngestCore.envelope(spark.sparkContext.parallelize(lines, 1).toDF("value")).localCheckpoint()
       val epochs = IngestCore.epochs(IngestCore.controlPlane(typed), Map.empty)
       assert(epochs.size == n)
-      val compiled = epochs.map(e => IngestCore.compile(e.schema, TargetConfig()))
+      val declared = epochs.map(e => JsonSchemaConverter.toStructType(e.schema.schema))
       val key = "spark.sql.adaptive.enabled"
       val aqe = conf.getConfString(key)
       spark.conf.set(key, "false") // the plan as compiled, not AQE's initial plan
-      val plan = try IngestCore.phaseOne(IngestCore.records(typed), epochs, compiled, TargetConfig())
+      val plan = try IngestCore.phaseOne(IngestCore.records(typed), epochs, declared, TargetConfig())
         .get.queryExecution.executedPlan finally spark.conf.set(key, aqe)
       val sizes = generated(plan)
       assert(sizes.exists(_._1.exists(_.expressions.exists(_.exists(_.isInstanceOf[ValidateRecord])))),
