@@ -229,6 +229,30 @@ class StreamingIngestSpec extends SparkSpec {
   private def rec(stream: String, pk: Int, v: String = "ok") =
     s"""{"type": "RECORD", "stream": "$stream", "record": {"pk": $pk, "v": "$v"}}"""
 
+  test("without strict validation, constraints Java cannot compile do not stop a run, a micro-batch or a restart") {
+    // A Python-style named group and a non-numeric minimum: neither
+    // compiles, and neither matters unless records are validated.
+    val odd = """{"type": "SCHEMA", "stream": "s1", "schema": {"properties": {
+      |"pk": {"type": ["null", "integer"], "minimum": "low"},
+      |"v": {"pattern": "(?P<y>\\d{4})", "type": ["null", "string"]}}, "type": "object"},
+      |"key_properties": ["pk"]}""".stripMargin.replace("\n", " ")
+    val config = TargetConfig(strictValidation = false, streamsInSeparateFolder = true)
+    val f = Files.createTempFile("odd-run", ".jsonl")
+    Files.writeString(f, Seq(odd, rec("s1", 1), rec("s1", 2)).mkString("\n"))
+    val runOut = Files.createTempDirectory("odd-run").toString
+    graft.pipeline.SingerPipeline.run(spark, f.toString, runOut, config)
+    assert(spark.read.parquet(s"$runOut/s1").count() == 2)
+    // s1's SCHEMA arrives in a batch where only s2 has records; it is
+    // registered and persisted, and a restarted ingest reloads it.
+    val out = Files.createTempDirectory("odd-stream").toString
+    val ingest = new StreamingIngest(spark, out, config)
+    ingest.processBatch(lines(schemaLine.replace("\"s1\"", "\"s2\""), odd, rec("s2", 1)))
+    ingest.processBatch(lines(rec("s1", 1), rec("s2", 2)))
+    new StreamingIngest(spark, out, config).processBatch(lines(rec("s1", 2)))
+    assert(spark.read.parquet(s"$out/s1").count() == 2)
+    assert(spark.read.parquet(s"$out/s2").count() == 2)
+  }
+
   test("streaming: chunk files of different sizes are read in name order (SCHEMA in the smallest, first chunk)") {
     val in = Files.createTempDirectory("stream-in10")
     val out = Files.createTempDirectory("stream-out10").toString
