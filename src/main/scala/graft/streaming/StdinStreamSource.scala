@@ -61,8 +61,8 @@ object StdinStream {
     id
   }
 
-  private[streaming] def take(id: String): StdinFeed = Option(id).flatMap(i => Option(handoff.remove(i)))
-    .getOrElse(throw new IllegalStateException(
+  private[streaming] def take(id: String): StdinFeed =
+    Option(id).flatMap(i => Option(handoff.remove(i))).getOrElse(throw new IllegalStateException(
       s"no stdin feed '$id': start a live stream with StreamingIngest.startLive"))
 }
 
