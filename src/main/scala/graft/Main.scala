@@ -167,7 +167,7 @@ object Main {
     def run(checkpoint: String): Unit = {
       val feed = new StdinFeed(System.in)
       val query = new StreamingIngest(spark, output, config)
-        .startLive(checkpoint, Trigger.ProcessingTime("500 milliseconds"), feed)
+        .startLive(checkpoint, feed, Trigger.ProcessingTime("500 milliseconds"))
       StreamingIngest.drainAtEof(query, feed.eofReached, pollMs = 500)
     }
     opts.get("checkpoint") match {

@@ -201,8 +201,8 @@ object IngestQueries {
     // cost the batch-grain note above warns about). Only the EOF
     // poll tightens (500 → 100 ms): it is pure exit latency after
     // the tap closes, outside any batch.
-    val query = ingest.startLive(cp,
-      org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"), feed)
+    val query = ingest.startLive(cp, feed,
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
     graft.streaming.StreamingIngest.drainAtEof(query, feed.eofReached, pollMs = 100)
     feeder.join(10000)
     s.read.parquet(s"$out/events-RT.parquet")

@@ -148,9 +148,8 @@ final class StreamingIngest(
     * no pre-spool. Same per-micro-batch core; replay/restart semantics
     * documented at [[StdinStream]]. The query reads `feed`, whose
     * [[StdinFeed.eofReached]] then tells this stream's EOF. */
-  def startLive(checkpointDir: String,
-                trigger: Trigger = Trigger.ProcessingTime(0L),
-                feed: StdinFeed = new StdinFeed(System.in)): StreamingQuery = {
+  def startLive(checkpointDir: String, feed: StdinFeed,
+                trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
     spark.readStream.format(classOf[StdinStreamProvider].getName)
       .option("feed", StdinStream.offer(feed)).load()
       .toDF("value")

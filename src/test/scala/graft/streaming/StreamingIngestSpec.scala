@@ -177,7 +177,7 @@ class StreamingIngestSpec extends SparkSpec {
     try {
       val ingest = new StreamingIngest(spark, out,
         TargetConfig(streamsInSeparateFolder = true))
-      val q = ingest.startLive(cp, feed = new StdinFeed(pipeIn))
+      val q = ingest.startLive(cp, new StdinFeed(pipeIn))
       def settle(cond: => Boolean): Unit = {
         val end = System.currentTimeMillis + 30000
         while (!cond && System.currentTimeMillis < end) {
@@ -339,7 +339,7 @@ class StreamingIngestSpec extends SparkSpec {
       }
     }
     val feed = new StdinFeed(failing)
-    val q = new StreamingIngest(spark, out, TargetConfig()).startLive(cp, feed = feed)
+    val q = new StreamingIngest(spark, out, TargetConfig()).startLive(cp, feed)
     try {
       val drain = Future(StreamingIngest.drainAtEof(q, feed.eofReached, pollMs = 10))(
         ExecutionContext.global)
@@ -355,7 +355,7 @@ class StreamingIngestSpec extends SparkSpec {
   private def drainLive(in: java.io.InputStream, out: String): Seq[StreamingQueryProgress] = {
     val feed = new StdinFeed(in)
     val q = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
-      .startLive(Files.createTempDirectory("live-cp").toString, feed = feed)
+      .startLive(Files.createTempDirectory("live-cp").toString, feed)
     try StreamingIngest.drainAtEof(q, feed.eofReached, pollMs = 10)
     finally q.stop()
     q.recentProgress.toSeq
@@ -394,14 +394,14 @@ class StreamingIngestSpec extends SparkSpec {
     val first = new StdinFeed(openIn)
     val q1 = new StreamingIngest(spark, Files.createTempDirectory("live-open").toString,
       TargetConfig(streamsInSeparateFolder = true))
-      .startLive(Files.createTempDirectory("live-cp").toString, feed = first)
+      .startLive(Files.createTempDirectory("live-cp").toString, first)
     q1.processAllAvailable()
     q1.stop()
     val (in, out) = (new java.io.PipedInputStream(1 << 16), Files.createTempDirectory("live-next"))
     val pipe = new java.io.PipedOutputStream(in)
     val second = new StdinFeed(in)
     val q2 = new StreamingIngest(spark, out.toString, TargetConfig(streamsInSeparateFolder = true))
-      .startLive(Files.createTempDirectory("live-cp").toString, feed = second)
+      .startLive(Files.createTempDirectory("live-cp").toString, second)
     try {
       openOut.close() // the first stream's reader now reaches its end
       val end = System.currentTimeMillis + 10000
