@@ -3,10 +3,10 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import graft.model.TargetConfig
 import graft.pipeline.SingerPipeline
-import graft.streaming.{StdinFeed, StdinSpooler, StreamingIngest}
+import graft.streaming.{StdinFeed, StreamingIngest}
 import graft.sources.S3Conf
 
 /** CLI entry point with the reference's UX (reference __init__.py:334-358,
@@ -18,26 +18,28 @@ import graft.sources.S3Conf
   * Three consumption modes (`--mode`; any other value is a usage error):
   *  - `batch` (default): spool all of stdin, then one batch job — right
   *    for bounded extracts and for pointing `--input` at a landing zone.
-  *  - `stream`: incremental consumption — a Structured Streaming query
-  *    ([[StreamingIngest]]) appends per-stream parquet and emits a state
-  *    bookmark after every committed micro-batch, long before EOF, like
-  *    the reference's incremental loop (__init__.py:215). Fed from stdin,
-  *    the pipe is chunk-spooled ([[StdinSpooler]]) into a per-run watch
-  *    directory with a per-run checkpoint, so a restarted run resumes
-  *    nothing. Durable replay needs `--input <landing dir>`: that
-  *    directory is watched (stdin is not read) and the checkpoint is the
-  *    stable `<output>/_graft_checkpoint`, so a re-run resumes it.
-  *  - `live`: the same incremental loop with NO spool files — raw stdin
-  *    through the DSv2 micro-batch source
-  *    ([[graft.streaming.StdinStreamProvider]]). Zero-copy, but a pipe
-  *    cannot replay across a process restart (the source refuses a gap
-  *    rather than hiding it).
+  *  - `live`: incremental consumption — a Structured Streaming query
+  *    ([[StreamingIngest]]) reads raw stdin through the DSv2 micro-batch
+  *    source ([[graft.streaming.StdinStreamProvider]]), appends
+  *    per-stream parquet and emits a state bookmark after every committed
+  *    micro-batch, long before EOF, like the reference's incremental loop
+  *    (__init__.py:215). The source buffers a bounded backlog, so a fast
+  *    tap waits on the pipe. The checkpoint is per run by default: a pipe
+  *    cannot replay across a process restart (the source refuses a gap,
+  *    a reused checkpoint included, rather than hiding it).
+  *  - `stream`: the same incremental loop. Over stdin it IS `live`.
+  *    `--input <landing dir>` watches that directory instead (stdin is
+  *    not read) with the stable checkpoint `<output>/_graft_checkpoint`,
+  *    so a re-run after a crash resumes it: the durable deployment.
   *
-  * Per-run temp files (the batch stdin spool, the stream-mode spool and
-  * any per-run checkpoint) live in a per-run directory under `temp_dir`,
-  * deleted once the run succeeds; a failed run keeps it, and a failed
-  * batch run names its spool file on stderr. A `--checkpoint` or
-  * `--input` from the command line is never deleted.
+  * A flag the mode never reads is a usage error: `--input` in live mode,
+  * `--checkpoint` in batch mode.
+  *
+  * Per-run temp files (the batch stdin spool and any per-run checkpoint)
+  * live in a per-run directory under `temp_dir`, deleted once the run
+  * succeeds; a failed run keeps it, and a failed batch run names its
+  * spool file on stderr. A `--checkpoint` or `--input` from the command
+  * line is never deleted.
   *
   * Divergences (documented, SURVEY.md §7.4): `--output` allows a local/
   * hdfs URI instead of S3 (the reference requires a bucket); compression
@@ -52,9 +54,10 @@ object Main {
   private val Flags = Set("config", "output", "mode", "input", "checkpoint")
   private val Modes = Set("batch", "stream", "live")
 
-  /** The command line as flag -> value, with `mode` defaulted to batch;
-    * or the error for an unknown flag, a flag without a value, a repeated
-    * flag or a mode outside batch|stream|live. */
+  /** The command line as flag -> value, with `mode` defaulted to batch and
+    * stdin `stream` run as `live`; or the error for an unknown flag, a
+    * flag without a value, a repeated flag, a mode outside
+    * batch|stream|live or a flag the mode never reads. */
   private[graft] def parseArgs(args: Seq[String]): Either[String, Map[String, String]] = {
     @annotation.tailrec
     def loop(rest: List[String], acc: Map[String, String]): Either[String, Map[String, String]] =
@@ -68,9 +71,14 @@ object Main {
         case flag :: _ => Left(s"$flag needs a value")
       }
     loop(args.toList, Map.empty).flatMap { opts =>
-      val mode = opts.getOrElse("mode", "batch")
-      if (Modes(mode)) Right(opts + ("mode" -> mode))
-      else Left(s"unknown mode: $mode (expected batch, stream or live)")
+      opts.getOrElse("mode", "batch") match {
+        case mode if !Modes(mode) => Left(s"unknown mode: $mode (expected batch, stream or live)")
+        case "live" if opts.contains("input") =>
+          Left("--input is not read in live mode (it reads stdin; use --mode stream --input)")
+        case "batch" if opts.contains("checkpoint") => Left("--checkpoint is not read in batch mode")
+        case "stream" if !opts.contains("input") => Right(opts + ("mode" -> "live"))
+        case mode => Right(opts + ("mode" -> mode))
+      }
     }
   }
 
@@ -157,11 +165,11 @@ object Main {
     }
   }
 
-  /** Live mode: raw stdin through the DSv2 source — no spool directory,
-    * no chunk files; per-trigger parquet + bookmarks while the tap
-    * produces. The checkpoint is per-run by default: a pipe cannot be
+  /** Live mode (and stdin stream mode): raw stdin through the DSv2
+    * source — no spool files; per-trigger parquet + bookmarks while the
+    * tap produces. The checkpoint is per-run by default: a pipe cannot be
     * re-read after a crash, so resuming an old checkpoint would only
-    * trip the source's evicted-offset guard. */
+    * trip the source's resume guard. */
   private def runLive(spark: SparkSession, opts: Map[String, String],
                       output: String, config: TargetConfig): Unit = {
     def run(checkpoint: String): Unit = {
@@ -176,39 +184,14 @@ object Main {
     }
   }
 
-  /** Stream mode: consume the pipe incrementally — parquet and bookmarks
-    * appear per micro-batch while the tap is still producing. */
+  /** Stream mode over a landing directory: watch it, by default with a
+    * STABLE checkpoint under the output so a re-run after a crash resumes
+    * instead of re-ingesting every landing file into the append-mode
+    * output (duplicating all rows). */
   private def runStream(spark: SparkSession, opts: Map[String, String],
-                        output: String, config: TargetConfig): Unit = {
-    def run(watchDir: String, checkpoint: String, spooled: Boolean): StreamingQuery =
-      new StreamingIngest(spark, output, config).start(watchDir, checkpoint,
-        Trigger.ProcessingTime("500 milliseconds"), deleteCommitted = spooled)
-    opts.get("input") match {
-      // Watch an existing landing directory, by default with a STABLE
-      // checkpoint under the output so a re-run after a crash resumes
-      // instead of re-ingesting every landing file into the append-mode
-      // output (duplicating all rows).
-      case Some(dir) =>
-        run(dir, opts.getOrElse("checkpoint", s"$output/_graft_checkpoint"), spooled = false)
-          .awaitTermination()
-      // Stdin: a per-run spool directory and, by default, a per-run
-      // checkpoint next to it (a pipe is not replayable across process
-      // restarts anyway). The spool is ours, so the file source deletes
-      // each batch's chunk files once the batch commits.
-      case None => withRunDir(config, "graft-stdin-stream") { dir =>
-        // file_size is the OUTPUT records-per-file knob; reused here only
-        // as a rough spool granularity hint, clamped into int range (an
-        // unchecked .toInt of a >2^31 Long flips negative and crashes the
-        // spooler's require at launch).
-        val spoolLines =
-          if (config.fileSize > 0) config.fileSize.min(1000000L).toInt else 10000
-        val spoolDir = Files.createDirectory(dir.resolve("spool"))
-        val spooler = new StdinSpooler(System.in, spoolDir, maxLines = spoolLines).start()
-        val query = run(spoolDir.toString,
-          opts.getOrElse("checkpoint", dir.resolve("checkpoint").toString), spooled = true)
-        StreamingIngest.drainAtEof(query, spooler.eofReached, pollMs = 500)
-        spooler.rethrowIfFailed()
-      }
-    }
-  }
+                        output: String, config: TargetConfig): Unit =
+    new StreamingIngest(spark, output, config)
+      .start(opts("input"), opts.getOrElse("checkpoint", s"$output/_graft_checkpoint"),
+        Trigger.ProcessingTime("500 milliseconds"))
+      .awaitTermination()
 }

@@ -25,8 +25,8 @@ package graft.model
   *                        record's fields)
   * @param strictValidation abort on the first JSON-Schema violation (reference P5)
   * @param tempDir         local spool/staging directory (L7, reference
-  *                        __init__.py:46-50,91): batch stdin spool files, stream-mode
-  *                        watch/checkpoint dirs, and spark.local.dir all land here
+  *                        __init__.py:46-50,91): batch stdin spool files, per-run
+  *                        live checkpoints, and spark.local.dir all land here
   */
 final case class TargetConfig(
     s3Bucket: Option[String] = None,

@@ -83,13 +83,13 @@ final class StreamingIngest(
   def processBatch(lines: DataFrame): Unit = {
     // Arrival order is captured on the batch's ORIGINAL partitioning, and
     // the envelope is sized to the batch's bytes (IngestCore.envelope): a
-    // live page stays one partition with no exchange, a large spooled
-    // chunk is rebalanced. foreachBatch re-executes the source scan per
-    // downstream action, so the envelope is checkpointed: lazily, filled
-    // by the control-plane query's job, which therefore reads the source
-    // exactly once, and read by the later queries. Marking it runs a query
-    // that plans the envelope and, unless an exchange must run first,
-    // starts no job.
+    // live page stays one partition with no exchange, a large backlog or
+    // landing file is rebalanced. foreachBatch re-executes the source scan
+    // per downstream action, so the envelope is checkpointed: lazily,
+    // filled by the control-plane query's job, which therefore reads the
+    // source exactly once, and read by the later queries. Marking it runs
+    // a query that plans the envelope and, unless an exchange must run
+    // first, starts no job.
     val typed = IngestCore.envelope(lines).localCheckpoint(eager = false)
     // The order check runs against the registry as of the previous batch,
     // BEFORE any schema is persisted or registered: a batch that fails it
@@ -126,27 +126,22 @@ final class StreamingIngest(
     SingerPipeline.emitState(state.get())
   }
 
-  /** Start the streaming query over a directory of Singer message files.
-    * `deleteCommitted` makes the file source delete each batch's files
-    * once the batch commits (`cleanSource=delete`): only for a directory
-    * the engine spooled itself, never for a caller's landing directory. */
+  /** Start the streaming query over a directory of Singer message files
+    * (a landing directory: its files are only read, never deleted). */
   def start(inputDir: String, checkpointDir: String,
-            trigger: Trigger = Trigger.AvailableNow(),
-            deleteCommitted: Boolean = false): StreamingQuery = {
-    val reader = spark.readStream
-    if (deleteCommitted) reader.option("cleanSource", "delete")
-    IngestCore.fileLines(reader.text(inputDir))
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    IngestCore.fileLines(spark.readStream.text(inputDir))
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch((df: DataFrame, _: Long) => processBatch(df))
       .start()
-  }
 
   /** Start the streaming query over LIVE stdin via the DSv2
-    * [[StdinMicroBatchStream]] — the unbounded `tap | target` pipe with
-    * no pre-spool. Same per-micro-batch core; replay/restart semantics
-    * documented at [[StdinStream]]. The query reads `feed`, whose
+    * [[StdinMicroBatchStream]] — the unbounded `tap | target` pipe of
+    * `graft.Main --mode live` and stdin `--mode stream`, with no spool
+    * files. Same per-micro-batch core; buffer bound and replay/restart
+    * semantics documented at [[StdinStream]]. The query reads `feed`, whose
     * [[StdinFeed.eofReached]] then tells this stream's EOF. */
   def startLive(checkpointDir: String, feed: StdinFeed,
                 trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {

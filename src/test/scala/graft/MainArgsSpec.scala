@@ -11,10 +11,24 @@ class MainArgsSpec extends AnyFunSuite {
     assert(parseArgs(Seq("--config", "c.json", "--output", "/out")) ==
       Right(Map("config" -> "c.json", "output" -> "/out", "mode" -> "batch")))
     assert(parseArgs(Nil) == Right(Map("mode" -> "batch")))
-    Seq("batch", "stream", "live").foreach { m =>
-      assert(parseArgs(Seq("--mode", m, "--input", "d", "--checkpoint", "k")) ==
-        Right(Map("mode" -> m, "input" -> "d", "checkpoint" -> "k")))
-    }
+    assert(parseArgs(Seq("--mode", "batch", "--input", "d")) ==
+      Right(Map("mode" -> "batch", "input" -> "d")))
+    assert(parseArgs(Seq("--mode", "stream", "--input", "d", "--checkpoint", "k")) ==
+      Right(Map("mode" -> "stream", "input" -> "d", "checkpoint" -> "k")))
+    assert(parseArgs(Seq("--mode", "live", "--checkpoint", "k")) ==
+      Right(Map("mode" -> "live", "checkpoint" -> "k")))
+  }
+
+  test("stream mode without --input runs the live stdin path") {
+    assert(parseArgs(Seq("--mode", "stream")) == Right(Map("mode" -> "live")))
+    assert(parseArgs(Seq("--mode", "stream", "--checkpoint", "k")) ==
+      Right(Map("mode" -> "live", "checkpoint" -> "k")))
+  }
+
+  test("a flag the mode never reads is rejected, not dropped") {
+    assert(parseArgs(Seq("--mode", "live", "--input", "d")).left.exists(_.startsWith("--input")))
+    assert(parseArgs(Seq("--mode", "batch", "--checkpoint", "k")).left.exists(_.startsWith("--checkpoint")))
+    assert(parseArgs(Seq("--checkpoint", "k")).left.exists(_.startsWith("--checkpoint")))
   }
 
   test("a mode outside batch|stream|live is rejected") {

@@ -4,10 +4,9 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryProgress}
 import graft.SparkSpec
 import graft.model.TargetConfig
 
@@ -167,7 +166,7 @@ class StreamingIngestSpec extends SparkSpec {
     assert(spark.read.parquet(expected).count() == 1)
   }
 
-  test("live stdin DSv2 source: unbounded pipe, incremental micro-batches, spool-path parity") {
+  test("live stdin DSv2 source: unbounded pipe, incremental micro-batches before EOF") {
     val out = Files.createTempDirectory("live-out").toString
     val cp = Files.createTempDirectory("live-cp").toString
     val pipeIn = new java.io.PipedInputStream(1 << 16)
@@ -186,7 +185,6 @@ class StreamingIngestSpec extends SparkSpec {
         assert(cond)
       }
       // wave 1: schema + 2 records, while the pipe stays OPEN — the
-      // spooler path can only do this with a chunk flush; the DSv2
       // source batches whatever has arrived.
       writer.println(schemaLine)
       writer.println("""{"type": "RECORD", "stream": "s1", "record": {"pk": 1, "v": "a"}}""")
@@ -200,8 +198,8 @@ class StreamingIngestSpec extends SparkSpec {
       settle(spark.read.parquet(s"$out/s1").count() == 3 &&
         ingest.emittedState.contains("""{"bookmarks":{"s1":3}}"""))
       q.stop()
-      // Same rows the file-spool path would land (StreamingIngest's core
-      // is shared; this pins the new source end to end).
+      // Every row exactly once (StreamingIngest's core is shared with the
+      // landing-directory path; this pins the stdin source end to end).
       val pks = spark.read.parquet(s"$out/s1").collect()
         .map(r => r.getAs[Long]("pk")).sorted.toSeq
       assert(pks == Seq(1L, 2L, 3L))
@@ -458,6 +456,7 @@ class StreamingIngestSpec extends SparkSpec {
       assert(src.latestOffset() == StdinOffset(n))
       def range(s: Long, e: Long): Seq[String] = src.planInputPartitions(StdinOffset(s), StdinOffset(e))
         .toSeq.flatMap(_.asInstanceOf[StdinPartition].lines.toSeq)
+      assert(range(0, n).size == n) // the engine plans a batch before committing it
       src.commit(StdinOffset(200000))
       assert(src.latestOffset() == StdinOffset(n))
       assert(range(200000, n) == (200000 until n).map(i => s"line $i"))
@@ -468,37 +467,115 @@ class StreamingIngestSpec extends SparkSpec {
     } finally src.stop()
   }
 
-  test("stream mode over the engine's own spool: committed chunk files are deleted") {
-    val watch = Files.createTempDirectory("spool-clean")
-    val out = Files.createTempDirectory("spool-clean-out").toString
-    val cp = Files.createTempDirectory("spool-clean-cp").toString
-    val pipeOut = new java.io.PipedOutputStream()
-    val pipeIn = new java.io.PipedInputStream(pipeOut, 1 << 16)
-    val tap = new java.io.PrintWriter(new java.io.OutputStreamWriter(pipeOut, "UTF-8"), true)
-    val spooler = new StdinSpooler(pipeIn, watch, maxLines = 3, maxIntervalMs = 60000).start()
-    val ingest = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
-    val q = ingest.start(watch.toString, cp, Trigger.ProcessingTime("100 milliseconds"),
-      deleteCommitted = true)
-    def chunks = Files.list(watch).iterator().asScala.map(_.getFileName.toString)
-      .filter(_.startsWith("chunk-")).toSeq.sorted
-    try {
-      tap.println(schemaLine)
-      (1 to 11).foreach { i =>
-        tap.println(rec("s1", i))
-        // one chunk, and so one batch, per three lines
-        if (i % 3 == 2) { while (spooler.chunksWritten < (i + 1) / 3) Thread.sleep(10); q.processAllAvailable() }
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+
+  test("live stdin: a second stream over a used checkpoint fails, appending nothing and emitting no bookmark") {
+    val (out, cp) = (Files.createTempDirectory("live-reuse").toString,
+      Files.createTempDirectory("live-reuse-cp").toString)
+    def run(ls: String*): Option[String] = {
+      val feed = new StdinFeed(new java.io.ByteArrayInputStream(ls.mkString("", "\n", "\n").getBytes("UTF-8")))
+      val ingest = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
+      val q = ingest.startLive(cp, feed)
+      try StreamingIngest.drainAtEof(q, feed.eofReached, pollMs = 10) finally q.stop()
+      ingest.emittedState
+    }
+    def state(n: Int) = s"""{"type": "STATE", "value": {"n": $n}}"""
+    assert(run(schemaLine, rec("s1", 1), state(1)).contains("""{"n":1}"""))
+    // The checkpoint has committed lines [0, 3); each new pipe starts again
+    // at 0, whether it is longer than that or exactly as long.
+    val stdout = new java.io.ByteArrayOutputStream()
+    Seq(Seq(schemaLine, rec("s1", 2), rec("s1", 3), state(2)), Seq(schemaLine, rec("s1", 4), state(3)))
+      .foreach { ls =>
+        val e = intercept[Exception](Console.withOut(new java.io.PrintStream(stdout, true, "UTF-8")) {
+          run(ls: _*)
+        })
+        assert(messages(e).exists(_.contains("stdin cannot resume at line 3")), messages(e))
       }
-      tap.close()
-      spooler.awaitEof()
-      q.processAllAvailable()
-      assert(spooler.chunksWritten == 4)
-      assert(spark.read.parquet(s"$out/s1").count() == 11)
-      // Deletion runs on the source's cleaner thread after each commit.
-      val end = System.currentTimeMillis + 30000
-      while (chunks.size > 1 && System.currentTimeMillis < end) Thread.sleep(50)
-      info(s"left: ${chunks.mkString(", ")}")
-      assert(chunks.size <= 1, chunks)
-    } finally q.stop()
+    assert(stdout.toString("UTF-8").isEmpty)
+    assert(spark.read.parquet(s"$out/s1").collect().map(_.getAs[Long]("pk")).toSeq == Seq(1L))
+  }
+
+  private def capLine(i: Int) = f"line-$i%05d" // 11 bytes with its newline
+
+  /** A pipe that a tap thread fills with `ls` and then closes; the tap
+    * stops early if the pipe's reading end closes. */
+  private def tapInto(ls: Seq[String]): (java.io.InputStream, Thread) = {
+    val in = new java.io.PipedInputStream(1 << 10)
+    val out = new java.io.PipedOutputStream(in)
+    val tap = new Thread(() =>
+      try out.write(ls.mkString("", "\n", "\n").getBytes("UTF-8"))
+      catch { case _: java.io.IOException => () } finally out.close())
+    tap.setDaemon(true)
+    tap.start()
+    (in, tap)
+  }
+
+  private def awaitOffset(src: StdinMicroBatchStream, n: Long): Unit = {
+    val end = System.currentTimeMillis + 30000
+    while (src.latestOffset() != StdinOffset(n) && System.currentTimeMillis < end) Thread.sleep(5)
+    assert(src.latestOffset() == StdinOffset(n))
+  }
+
+  test("live stdin: at its byte cap the reader blocks the tap until commits free the buffer, and every line arrives once, in order") {
+    val n = 2000 // 22,000 bytes against a 110-byte cap
+    val all = (1 to n).map(capLine)
+    val (in, tap) = tapInto(all)
+    val src = new StdinMicroBatchStream(new StdinFeed(in), capBytes = 110)
+    try {
+      // Before any batch: ten lines fill the cap, and the reader stops.
+      awaitOffset(src, 10)
+      Thread.sleep(300)
+      assert(src.latestOffset() == StdinOffset(10) && src.bufferedBytes == 110)
+      assert(tap.isAlive) // the pipe pushes back on the tap
+      // Drive the source in the engine's order: commit the previous batch,
+      // then plan the lines that arrived since.
+      val got = Seq.newBuilder[String]
+      var (at, maxBuffered) = (0L, 0L)
+      val end = System.currentTimeMillis + 60000
+      while (at < n && System.currentTimeMillis < end) {
+        maxBuffered = maxBuffered.max(src.bufferedBytes)
+        val latest = src.latestOffset().asInstanceOf[StdinOffset].n
+        if (latest > at) {
+          src.commit(StdinOffset(at))
+          val p = src.planInputPartitions(StdinOffset(at), StdinOffset(latest)).head
+            .asInstanceOf[StdinPartition]
+          assert(p.sizeInBytes.getAsLong == p.lines.map(_.getBytes("UTF-8").length + 1L).sum)
+          got ++= p.lines
+          at = latest
+        } else Thread.sleep(1)
+      }
+      assert(got.result() == all)
+      // The cap, plus the one line a buffer of planned lines must take.
+      assert(maxBuffered <= 110 + 11, maxBuffered)
+    } finally src.stop()
+  }
+
+  test("live stdin: a line larger than the byte cap passes") {
+    val big = "x" * 500
+    val src = new StdinMicroBatchStream(new StdinFeed(new java.io.ByteArrayInputStream(
+      Seq(big, capLine(1), capLine(2)).mkString("", "\n", "\n").getBytes("UTF-8"))), capBytes = 110)
+    try {
+      awaitOffset(src, 1) // an empty buffer takes it whole
+      def lines(s: Long, e: Long) = src.planInputPartitions(StdinOffset(s), StdinOffset(e))
+        .head.asInstanceOf[StdinPartition].lines.toSeq
+      assert(lines(0, 1) == Seq(big))
+      awaitOffset(src, 2) // planned, it lets one more line in
+      src.commit(StdinOffset(1))
+      assert(lines(1, 2) == Seq(capLine(1)))
+      awaitOffset(src, 3)
+      assert(lines(2, 3) == Seq(capLine(2)))
+    } finally src.stop()
+  }
+
+  test("live stdin: stop() ends a reader blocked at the byte cap") {
+    val (in, _) = tapInto((1 to 2000).map(capLine))
+    val src = new StdinMicroBatchStream(new StdinFeed(in), capBytes = 110)
+    awaitOffset(src, 10)
+    src.stop()
+    val end = System.currentTimeMillis + 10000
+    while (src.readerAlive && System.currentTimeMillis < end) Thread.sleep(5)
+    assert(!src.readerAlive)
   }
 
   test("drainAtEof: at EOF it drains every pending row, then stops the query") {
