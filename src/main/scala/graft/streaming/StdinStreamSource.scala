@@ -131,25 +131,27 @@ final class StdinMicroBatchStream(feed: StdinFeed, capBytes: Long = StdinStream.
   private def bytesTo(offset: Long): Long =
     if (offset == evicted) evictedBytes else ends.get((offset - evicted - 1).toInt)
 
+  /** Buffers `line` once the cap lets it in; false once stopped. */
+  private def append(line: String): Boolean = {
+    val n = line.getBytes(UTF_8).length + 1L
+    synchronized {
+      def read = bytesTo(evicted + buf.size)
+      // At the cap, wait for a commit, but only while a buffered line
+      // waits for a batch: the engine commits a batch when it plans the
+      // next, so a full buffer of planned lines must take one more. An
+      // empty buffer thus always takes a line of any size.
+      while (!stopped && evicted + buf.size > planned && read - evictedBytes + n > capBytes)
+        wait()
+      if (!stopped) { ends.add(read + n); buf.add(line) }
+      !stopped
+    }
+  }
+
   private val reader = new Thread(() => {
     try {
       val br = new BufferedReader(new InputStreamReader(in, UTF_8))
       var line = br.readLine()
-      while (line != null) {
-        val n = line.getBytes(UTF_8).length + 1L
-        synchronized {
-          def read = bytesTo(evicted + buf.size)
-          // At the cap, wait for a commit, but only while a buffered line
-          // waits for a batch: the engine commits a batch when it plans
-          // the next, so a full buffer of planned lines must take one
-          // more. An empty buffer thus always takes a line of any size.
-          while (!stopped && evicted + buf.size > planned && read - evictedBytes + n > capBytes)
-            wait()
-          if (stopped) line = null
-          else { ends.add(read + n); buf.add(line) }
-        }
-        if (line != null) line = br.readLine()
-      }
+      while (line != null && append(line)) line = br.readLine()
     } catch { case t: Throwable => failure = t }
     finally feed.eof = true
   }, "graft-stdin-source")
