@@ -16,7 +16,9 @@
 # latency_s and setup_s per side, how many seeds HEAD won on latency_s,
 # and for each of the two metrics HEAD's median move relative to the
 # parent's median next to that metric's bound in BENCHMARK.json (a
-# relative worsening the benchmark rejects; the file is only read).
+# relative worsening the benchmark rejects; the file is only read), each
+# metric's verdict against its bound, and whether latency_s meets the gain
+# rule of the choosing-metrics guide (section 8).
 # A pair where either run is not correct or has a failed operation is left
 # out of the wins and the medians; the summary says how many were.
 # Per-run logs and the result lines stay in the printed work directory.
@@ -122,4 +124,47 @@ for name in ("latency_s", "setup_s"):
         % (bound, 100.0 * bound)))
 print("pairs left out (a run not correct or with failed operations): %d of %d"
       % (len(first) - len(kept), len(first)))
+
+def spread(xs):
+    if len(xs) < 2:
+        return 0.0
+    q = statistics.quantiles(xs, n=4)
+    return q[2] - q[0]
+
+# Each metric against its bound: a parent IQR wider than the bound (as a
+# share of the parent's median) cannot tell a move from noise, unless every
+# head run beats every parent run.
+for name in ("latency_s", "setup_s"):
+    par, head = values("parent", name), values("head", name)
+    bound = bounds.get(name)
+    if not par or not head or bound is None:
+        continue
+    mp, iqr = statistics.median(par), spread(par)
+    if max(head) < min(par):
+        verdict = "better in every run"
+    elif iqr > bound * mp:
+        verdict = "unresolved (parent IQR %.1f%% of its median exceeds the bound)" % (100.0 * iqr / mp)
+    elif statistics.median(head) > mp * (1 + bound):
+        verdict = "WORSE than the bound"
+    else:
+        verdict = "within the bound"
+    print("%-9s against its bound: %s" % (name, verdict))
+
+# The gain rule (choosing-metrics guide, section 8) on latency_s: head wins
+# at least nine tenths of the kept pairs, and its median beats the parent's
+# by more than the parent's IQR. Where the rule fails and the parent's
+# spread exceeds the bound, the runs cannot settle it: "unresolved".
+par, head = values("parent", "latency_s"), values("head", "latency_s")
+bound = bounds.get("latency_s")
+if par and head and pairs:
+    mp, iqr = statistics.median(par), spread(par)
+    gain = mp - statistics.median(head)
+    if 10 * wins >= 9 * pairs and gain > iqr:
+        verdict = "met"
+    elif bound is not None and iqr > bound * mp:
+        verdict = "unresolved"
+    else:
+        verdict = "not met"
+    print("latency_s gain rule: %s (head wins %d of %d pairs, needs %d; median gain %.3f vs parent IQR %.3f)"
+          % (verdict, wins, pairs, -(-9 * pairs // 10), gain, iqr))
 EOF

@@ -1,6 +1,5 @@
 package graft.functions
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -9,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import scala.jdk.CollectionConverters._
 
 /** Python `str(list)` rendering for flattened array columns.
   *
@@ -26,12 +24,10 @@ import scala.jdk.CollectionConverters._
   * descent rewrite with no intermediate tree. This keeps the whole flatten
   * select-list inside WholeStageCodegen; the previous Scala-UDF version
   * broke the codegen span and paid a Jackson tree parse plus the UDF
-  * encoder boundary per cell. The Jackson-based [[PyRepr.renderNode]] is
-  * kept as the independently-derived cross-check used by PyReprSpec.
+  * encoder boundary per cell. PyReprSpec cross-checks it against an
+  * independently derived Jackson-tree rendering.
   */
 object PyRepr {
-  private lazy val mapper = new ObjectMapper()
-
   /** Python repr of a string literal. */
   def reprString(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length + 2)
@@ -85,22 +81,6 @@ object PyRepr {
         f"$neg${mant}e$sign${Math.abs(exp10)}%02d"
       }
     }
-
-  /** Jackson-tree rendering — the reference formulation, retained as the
-    * test oracle for [[renderJson]] (PyReprSpec cross-checks them on
-    * generated JSON). Not on any query path. */
-  def renderNode(n: JsonNode): String =
-    if (n == null || n.isNull) "None"
-    else if (n.isTextual) reprString(n.asText())
-    else if (n.isBoolean) { if (n.asBoolean()) "True" else "False" }
-    else if (n.isIntegralNumber) n.asLong().toString
-    else if (n.isFloatingPointNumber) reprDouble(n.asDouble())
-    else if (n.isArray) n.elements().asScala.map(renderNode).mkString("[", ", ", "]")
-    else if (n.isObject)
-      n.properties().asScala.toSeq // toSeq first: keep insertion order
-        .map(e => reprString(e.getKey) + ": " + renderNode(e.getValue))
-        .mkString("{", ", ", "}")
-    else n.toString
 
   /** JSON text → Python-repr string, in one recursive-descent pass with no
     * tree. Accepts exactly the JSON `to_json` emits (standard escapes incl.
@@ -212,10 +192,6 @@ object PyRepr {
 
   /** JSON text of an array/object cell → its Python-repr string. */
   def jsonToPyRepr(json: String): String = renderJson(json)
-
-  /** Jackson-tree variant, only for the spec cross-check. */
-  def jsonToPyReprViaTree(json: String): String =
-    if (json == null) null else renderNode(mapper.readTree(json))
 
   /** Codegen entry point (called from [[PyReprJson]]'s generated code via
     * this object's static forwarder). */

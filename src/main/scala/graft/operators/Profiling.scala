@@ -105,23 +105,22 @@ object Profiling {
     * The sketch VALUE itself is engine-specific by nature and never
     * emitted. Determinism: Spark's HLL++ is hash-based and
     * merge-order-independent, so the boolean cannot flap across
-    * partitionings. */
+    * partitionings.
+    *
+    * The exact leg and the sketch leg each scan `t`. One shared scan
+    * would make the sketch aggregate read the melt's round-robin
+    * exchange, which carries every column of every row: at sf0.1 on 4
+    * cores that spelling ran about 0.3 s slower than the second scan,
+    * whose partial aggregate runs beside the exchange's stage. */
   def sketchProfile(t: DataFrame, rsd: Double = 0.05,
-                    tol: Double = 0.15): DataFrame = {
-    val cols = t.columns
-    val approx = t.agg(
-      approx_count_distinct(col(cols.head), rsd).as(cols.head),
-      cols.tail.map(c => approx_count_distinct(col(c), rsd).as(c)): _*)
-      .select(expr(s"stack(${cols.length}, " +
-        cols.map(c => s"'$c', $c").mkString(", ") + ") as (col_name, n_approx)"))
+                    tol: Double = 0.15): DataFrame =
     columnProfile(t)
-      .join(approx, "col_name")
+      .join(approxProfile(t, rsd), "col_name")
       .select(col("col_name"), col("n_distinct"),
         (col("n_distinct") === 0 && col("n_approx") === 0 ||
           abs(col("n_approx") - col("n_distinct")).cast("double") <=
             greatest(col("n_distinct") * tol, lit(2.0))).as("sketch_ok"))
       .orderBy("col_name")
-  }
 
   def lineitemSketchProfile(s: SparkSession, dir: String): DataFrame =
     sketchProfile(Tables.lineitem(s, dir))
@@ -334,18 +333,26 @@ object Profiling {
     * intersection is estimated directly on the sample:
     * θ = min(θ_A, θ_B), est = |{h ∈ A_k ∩ B_k : u(h) < θ}| / θ.
     *
-    * Scale shape: one distinct aggregate on (group, key) — the only
-    * data-scale exchange, map-side combined — then a per-group bottom-k
-    * window (WindowGroupLimit prunes map-side, so each partition
-    * forwards at most k hashes per group: the sketch property, k·groups
-    * rows through the exchange regardless of key cardinality). The
-    * k-hash sketches are control-plane (3 groups × 4096 longs — the
-    * CMS-blob/codebook collect pattern); pair estimates are driver
-    * arithmetic. The EXACT intersection join is this row's truth gate,
-    * same stance as profile_sketch paying the exact melt: a 100-TB
-    * deployment runs only the sketch pass and unions sketches across
-    * shards by keeping the k smallest of the merged sample — mergeable
-    * by construction.
+    * Scale shape: ONE scan. The distinct (group, key) relation is built
+    * once, hash-clustered by key: the table's rows cross one exchange on
+    * `defaultParallelism` tasks, the dedupe runs after it with no
+    * further exchange, and the relation is cached for the two collects
+    * below (released before returning). From it:
+    *  - the per-group bottom-k sketch, through [[graft.plans.TopKPerKey]]:
+    *    a k-bounded heap per group per partition BELOW its exchange, so
+    *    the exchange carries at most k·groups·partitions hashes whatever
+    *    the key cardinality, and no task sorts a group's keys. The k-hash
+    *    sketches are control-plane (3 groups × 4096 longs — the
+    *    CMS-blob/codebook collect pattern); pair estimates are driver
+    *    arithmetic;
+    *  - the EXACT pair counts, this row's truth gate (the stance of
+    *    profile_sketch paying the exact melt): a self-join on key that
+    *    needs no exchange, since both sides are already clustered by key.
+    *    A merge join, so a large relation sorts and spills instead of
+    *    being broadcast.
+    * A 100-TB deployment runs only the sketch pass and unions sketches
+    * across shards by keeping the k smallest of the merged sample —
+    * mergeable by construction.
     *
     * Output: per group pair, the exact BIGINT intersection (DuckDB
     * recomputes it from raw keys) and `theta_ok` — relative error
@@ -354,44 +361,43 @@ object Profiling {
     * are order-independent functions of the key set. */
   def thetaIntersection(s: SparkSession, dir: String, k: Int = 4096,
                         tol: Double = 0.15): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
     val pairs = Tables.lineitem(s, dir)
       .select(col("l_returnflag").as("grp"), col("l_orderkey").as("key"))
+      .repartition(s.sparkContext.defaultParallelism, col("key"))
       .distinct()
-    // bottom-k of xxhash64(key) per group: the KMV sample. Hash the KEY
-    // alone so identical keys collide across groups (that is what makes
-    // sample-set intersection meaningful).
-    val w = Window.partitionBy("grp").orderBy("h")
-    val sketchRows = pairs
-      .select(col("grp"), xxhash64(col("key")).as("h"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .groupBy("grp").agg(sort_array(collect_list("h")).as("ks"),
-        count(lit(1)).as("n_in"))
-      .collect()
-    val sketches: Map[String, Array[Long]] = sketchRows.map(r =>
-      r.getString(0) -> r.getSeq[Long](1).toArray).toMap
-    def u(h: Long): Double = // rank-preserving map of a signed-compared
-      (h.toDouble - Long.MinValue.toDouble) / math.pow(2, 64) // hash to (0,1)
-    def theta(a: Array[Long]): Double = if (a.length < k) 1.0 else u(a.last)
-    // truth gate: exact intersection per unordered group pair
-    val exact = pairs.as("a").join(pairs.as("b"),
-        col("a.key") === col("b.key") && col("a.grp") < col("b.grp"))
-      .groupBy(col("a.grp").as("grp_a"), col("b.grp").as("grp_b"))
-      .agg(count(lit(1)).as("n_exact"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    exact.toSeq.map { case (ga, gb, nExact) =>
-      val (sa, sb) = (sketches(ga), sketches(gb))
-      val th = math.min(theta(sa), theta(sb))
-      val inA = sa.iterator.filter(u(_) < th).toSet
-      val common = sb.iterator.filter(h => u(h) < th && inA(h)).length
-      val est = common / th
-      val ok = math.abs(est - nExact) <= math.max(tol * nExact, 8.0)
-      (ga, gb, nExact, ok)
-    }.toDF("grp_a", "grp_b", "n_exact", "theta_ok")
-      .orderBy("grp_a", "grp_b")
+      .cache()
+    try {
+      // bottom-k of xxhash64(key) per group: the KMV sample. Hash the KEY
+      // alone so identical keys collide across groups (that is what makes
+      // sample-set intersection meaningful).
+      val hashes = pairs.select(col("grp"), xxhash64(col("key")).as("h"))
+      val sketches: Map[String, Array[Long]] =
+        graft.plans.TopKPerKey(hashes, Seq(col("grp")), Seq(col("h")), k)
+          .groupBy("grp").agg(sort_array(collect_list("h")))
+          .collect()
+          .map(r => r.getString(0) -> r.getSeq[Long](1).toArray).toMap
+      def u(h: Long): Double = // rank-preserving map of a signed-compared
+        (h.toDouble - Long.MinValue.toDouble) / math.pow(2, 64) // hash to (0,1)
+      def theta(a: Array[Long]): Double = if (a.length < k) 1.0 else u(a.last)
+      // truth gate: exact intersection per unordered group pair
+      val exact = pairs.as("a").join(pairs.as("b").hint("merge"),
+          col("a.key") === col("b.key") && col("a.grp") < col("b.grp"))
+        .groupBy(col("a.grp").as("grp_a"), col("b.grp").as("grp_b"))
+        .agg(count(lit(1)).as("n_exact"))
+        .collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      exact.toSeq.map { case (ga, gb, nExact) =>
+        val (sa, sb) = (sketches(ga), sketches(gb))
+        val th = math.min(theta(sa), theta(sb))
+        val inA = sa.iterator.filter(u(_) < th).toSet
+        val common = sb.iterator.filter(h => u(h) < th && inA(h)).length
+        val est = common / th
+        val ok = math.abs(est - nExact) <= math.max(tol * nExact, 8.0)
+        (ga, gb, nExact, ok)
+      }.toDF("grp_a", "grp_b", "n_exact", "theta_ok")
+        .orderBy("grp_a", "grp_b")
+    } finally pairs.unpersist()
   }
 
   /** Approximate-QUANTILE sketch gate (Greenwald-Khanna via
@@ -406,18 +412,24 @@ object Profiling {
     * discrete percentiles at p ± 2/accuracy — the GK rank guarantee
     * with doubled slack, which holds for ANY merge order, so the
     * boolean is partitioning-stable even though the approximate VALUE
-    * itself need not be. Only exact cents and booleans are emitted. */
+    * itself need not be. Only exact cents and booleans are emitted.
+    *
+    * One scan: the rows cross one exchange, hash-clustered by cents on
+    * `defaultParallelism` tasks, and both the histogram (whose grouping
+    * that clustering already satisfies) and the sketch aggregate read
+    * that one exchange; the group totals are the histogram's Σc. */
   def quantileSketchGate(s: SparkSession, dir: String,
                          accuracy: Int = 10000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val li = Tables.lineitem(s, dir).select(col("l_returnflag"),
       (col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("long").as("cents"))
+      .repartition(s.sparkContext.defaultParallelism, col("cents"))
     val hist = li.groupBy("l_returnflag", "cents").agg(count(lit(1)).as("c"))
     val wcum = Window.partitionBy("l_returnflag").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = hist.withColumn("cum", sum("c").over(wcum))
-    val totals = li.groupBy("l_returnflag").agg(count(lit(1)).as("n"))
+    val totals = hist.groupBy("l_returnflag").agg(sum("c").as("n"))
     val slackPpm = 2000000L / accuracy // 2/accuracy in parts-per-million
     def cut(ppm: Long) =
       min(when(col("cum") * 1000000L >= col("n") * ppm, col("cents")))

@@ -20,7 +20,7 @@ import graft.validate.{Constraints, RecordValidator}
   *  2. [[controlPlane]] answers every driver-side question with ONE
   *     grouped aggregate whose output is O(streams + control messages):
   *     the first unparseable line (P1), the unknown-type count (L6), the
-  *     SCHEMA/STATE messages in file order, and each stream's RECORD
+  *     SCHEMA messages in file order, the last STATE, and each stream's RECORD
   *     extent for the order check (P4) and the state fold (P8). RECORD
   *     lines never reach the driver.
   *  3. [[writeEpochs]] checks every (stream, schema epoch) in ONE
@@ -37,8 +37,8 @@ object IngestCore {
   /** A stream's RECORD lines: first and last `idx`, and how many. */
   final case class Extent(minIdx: Long, maxIdx: Long, n: Long)
 
-  /** SCHEMA/STATE messages in `idx` order, each with its raw line, and
-    * the extent of every stream that has records. */
+  /** SCHEMA messages and the last STATE in `idx` order, each with its
+    * raw line, and the extent of every stream that has records. */
   final case class ControlPlane(control: Seq[(String, ControlMessage)],
                                 extents: Map[String, Extent]) {
     def schemas: Seq[(String, SchemaMessage)] =
@@ -111,26 +111,32 @@ object IngestCore {
   /** The one control-plane query over an [[envelope]]. Raises the
     * reference's error for the first unparseable line by `idx` (a line
     * without `$.type` is invalid JSON or not a Singer message), and
-    * echoes unknown-type messages. Control rows ride along as a
-    * conditional collect_list, which skips nulls, so RECORD groups
-    * collect nothing. */
+    * echoes unknown-type messages. SCHEMA rows ride along as a
+    * conditional collect_list, which skips nulls, so other groups
+    * collect nothing. Of the STATE rows only each group's last is kept
+    * (`max_by` on `idx`): the bookmark reads only the last STATE
+    * ([[StateFold.emittedState]]), and a tap may send one after every
+    * record, so collecting them all would hold the whole input on one
+    * task and the driver. */
   def controlPlane(typed: DataFrame): ControlPlane = {
     val groups = typed.groupBy("mtype", "stream")
       .agg(min("idx"), max("idx"), count(lit(1)),
         min_by(col("value"), when(col("mtype").isNull, col("idx"))),
-        collect_list(when(col("mtype").isin("SCHEMA", "STATE"),
-          struct(col("idx"), col("value")))))
+        collect_list(when(col("mtype") === "SCHEMA", struct(col("idx"), col("value")))),
+        max_by(col("value"), when(col("mtype") === "STATE", col("idx"))))
       .collect()
-    // row layout: (mtype, stream, minIdx, maxIdx, n, firstUnparseable, ctrl)
+    // row layout: (mtype, stream, minIdx, maxIdx, n, firstUnparseable,
+    // schemas, lastState); a STATE group's maxIdx is its last STATE's idx
     groups.filter(_.isNullAt(0)).minByOption(_.getLong(2)).foreach { r =>
       throw new RuntimeException(Singer.unparseableError(r.getString(5)))
     }
     val nUnknown = groups.filterNot(r => Set("RECORD", "SCHEMA", "STATE")(r.getString(0)))
       .map(_.getLong(4)).sum
     if (nUnknown > 0) echoUnknown(typed, nUnknown)
+    val schemas = groups.toSeq.flatMap(_.getSeq[Row](6)).map(r => (r.getLong(0), r.getString(1)))
+    val lastStates = groups.toSeq.filter(_.getString(0) == "STATE").map(r => (r.getLong(3), r.getString(7)))
     ControlPlane(
-      groups.toSeq.flatMap(_.getSeq[Row](6))
-        .map(r => (r.getString(1), Singer.parseControl(r.getLong(0), r.getString(1))))
+      (schemas ++ lastStates).map { case (idx, raw) => (raw, Singer.parseControl(idx, raw)) }
         .sortBy(_._2.idx),
       groups.filter(_.getString(0) == "RECORD")
         .map(r => r.getString(1) -> Extent(r.getLong(2), r.getLong(3), r.getLong(4))).toMap)

@@ -16,8 +16,10 @@ import graft.model._
   *    validation kernel → flatten select-list → parquet sink, all
   *    partition-parallel. At 100 TB the input splits across executors
   *    like any text scan.
-  *  - SCHEMA/STATE are control-plane (a handful of lines per run,
-  *    reference corpus has 13); only those are collected, in file order.
+  *  - SCHEMA/STATE are control-plane: every SCHEMA and only the last
+  *    STATE are collected, in file order. A tap may send a STATE after
+  *    every record, so STATE lines can be as many as RECORD lines; the
+  *    bookmark needs only the last.
   *  - The order constraint (record-before-schema → error, reference
   *    __init__.py:224-229) and the state fold (P8) need only per-stream
   *    `min(idx)` / global `max(idx)` — O(1)-output aggregates.

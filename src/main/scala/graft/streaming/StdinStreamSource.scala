@@ -24,7 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * takes the lines that arrived since the last one, and commit evicts
   * everything at or below the committed offset. The buffer holds at most
   * [[StdinStream.BufferCapBytes]] of lines (plus one line): at the cap the
-  * reader stops reading, so the pipe pushes back on the tap.
+  * reader stops reading, so the pipe pushes back on the tap. A batch
+  * takes at most half the cap, so a backlog runs as half-cap batches.
   *
   * Offsets are cumulative line counts — the natural exactly-once framing
   * for a serial byte stream. WITHIN a run any uncommitted range replays
@@ -57,8 +58,8 @@ object StdinStream {
 
   /** Bytes of lines a source buffers before its reader waits for a
     * commit: 64x the 1 MB advisory partition size, so a backlog still
-    * lands as one large rebalanced batch, yet a `cat huge.jsonl` pipe
-    * cannot fill the driver heap. */
+    * lands as large (half-cap) rebalanced batches, yet a `cat huge.jsonl`
+    * pipe cannot fill the driver heap. */
   val BufferCapBytes: Long = 64L << 20
 
   // Feeds on their way from startLive to their query's source, by the
@@ -178,9 +179,21 @@ final class StdinMicroBatchStream(feed: StdinFeed, capBytes: Long = StdinStream.
   // The engine asks here, with the offset its next batch starts at: a
   // reused checkpoint's shows before any batch is planned or committed,
   // even when the new pipe holds exactly as many lines.
+  //
+  // A batch ends at half the cap (at least one line, so a line over the
+  // cap still passes). The engine commits a batch only when it plans the
+  // next, so a batch of the whole buffer would leave the reader room for
+  // just one line: a backlog would run as cap-sized batches alternating
+  // with one-line ones. With half, the reader refills the other half
+  // while a batch runs.
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = synchronized {
-    requireDelivered(start.asInstanceOf[StdinOffset].n)
-    latestOffset()
+    rethrow()
+    val s = start.asInstanceOf[StdinOffset].n
+    requireDelivered(s)
+    val budget = bytesTo(s) + capBytes / 2
+    var e = s
+    while (e < evicted + buf.size && (e == s || bytesTo(e + 1) <= budget)) e += 1
+    StdinOffset(e)
   }
 
   /** Offsets this source is asked to start at or commit lie within what

@@ -2108,6 +2108,14 @@ class OperatorsSpec extends SparkSpec {
     assert(full.nonEmpty && full.forall(_._4), full.mkString(","))
     assert(full.map(t => (t._1, t._2)).distinct.length == full.length)
     full.foreach { case (a, b, n, _) => assert(a < b && n > 0) }
+    // the exact counts are the key-set intersections, counted in Scala
+    val keys = Tables.lineitem(spark, sf).select("l_returnflag", "l_orderkey").collect()
+      .groupBy(_.getString(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
+    val brute = for {
+      a <- keys.keys.toSeq.sorted; b <- keys.keys.toSeq.sorted if a < b
+      n = (keys(a) intersect keys(b)).size.toLong if n > 0
+    } yield (a, b, n)
+    assert(full.map(t => (t._1, t._2, t._3)).toSeq == brute)
     // genuinely sketched: k=64 over sf0.001 (hundreds of distinct keys
     // per flag) still lands inside the gate's max(tol*n, 8) envelope
     // for this fixture (pinned: a regression in the estimator or the

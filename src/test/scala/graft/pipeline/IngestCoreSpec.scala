@@ -286,6 +286,30 @@ class IngestCoreSpec extends SparkSpec {
     assert(after.size <= before.size, after.diff(before))
   }
 
+  // A tap may close every record with a STATE. The control plane keeps
+  // every SCHEMA but only the last STATE, so its output does not grow with
+  // the STATE count, and the bookmark is the one the reference's fold of
+  // every message gives.
+  test("a STATE after every record yields at most (schemas + 1) control rows and the same bookmark") {
+    val n = 500
+    def state(i: Int) = s"""{"type": "STATE", "value": {"page": $i}}"""
+    val closed = Seq(schema("s1"), schema("s2")) ++
+      (1 to n).flatMap(i => Seq(record(if (i % 2 == 0) "s1" else "s2", i), state(i)))
+    val open = closed :+ record("s1", n + 1)
+    Seq(closed -> Some(s"""{"page":$n}"""), open -> None).foreach { case (lines, bookmark) =>
+      val plane = IngestCore.controlPlane(IngestCore.envelope(batchOf(lines)))
+      assert(plane.control.size <= plane.schemas.size + 1, plane.control.map(_._1))
+      assert(plane.schemas.map(_._2.stream) == Seq("s1", "s2"))
+      // The reference's fold: every RECORD clears state, every STATE sets it.
+      val folded = lines.foldLeft(Option.empty[String]) { (st, l) =>
+        if (l.contains("\"STATE\"")) Some(l) else if (l.contains("\"RECORD\"")) None else st }
+      assert(folded.map(l => graft.model.Singer.toJsonString(graft.model.Singer.parseJson(l).get("value"))) ==
+        bookmark)
+      assert(graft.model.StateFold.emittedState(plane.states, plane.maxRecordIdx)
+        .map(graft.model.Singer.toJsonString) == bookmark)
+    }
+  }
+
   /** The golden batch run's bound from its rebalanced plan: four jobs
     * for the input scan, the envelope cache and the control-plane
     * aggregate's two stages, two for the one phase-1 query, then one write

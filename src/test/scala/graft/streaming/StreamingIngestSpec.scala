@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryProgress}
 import graft.SparkSpec
@@ -576,6 +577,42 @@ class StreamingIngestSpec extends SparkSpec {
     val end = System.currentTimeMillis + 10000
     while (src.readerAlive && System.currentTimeMillis < end) Thread.sleep(5)
     assert(!src.readerAlive)
+  }
+
+  // The engine plans a batch (latestOffset with the batch's start), then
+  // commits the one before. Each batch is planned only once the reader has
+  // settled: blocked at the cap, or at EOF.
+  test("live stdin: a backlog over the byte cap runs as half-cap batches, with no one-line batch but the last") {
+    val n = 2000 // 22,000 bytes against a 2 KB cap
+    val cap = 2048L
+    val all = (1 to n).map(capLine)
+    val (in, _) = tapInto(all)
+    val feed = new StdinFeed(in)
+    val src = new StdinMicroBatchStream(feed, capBytes = cap)
+    try {
+      val (batches, bytes) = (Seq.newBuilder[Seq[String]], Seq.newBuilder[Long])
+      var at = 0L
+      val end = System.currentTimeMillis + 60000
+      while (at < n && System.currentTimeMillis < end) {
+        while (!feed.eofReached && src.bufferedBytes + 11 <= cap &&
+          System.currentTimeMillis < end) Thread.sleep(1)
+        val e = src.latestOffset(StdinOffset(at), ReadLimit.allAvailable())
+          .asInstanceOf[StdinOffset].n
+        if (e > at) {
+          val p = src.planInputPartitions(StdinOffset(at), StdinOffset(e)).head
+            .asInstanceOf[StdinPartition]
+          batches += p.lines.toSeq
+          bytes += p.bytes
+          src.commit(StdinOffset(at))
+          at = e
+        } else Thread.sleep(1)
+      }
+      val sizes = batches.result().map(_.size)
+      info(sizes.mkString("lines per batch: ", ",", ""))
+      assert(batches.result().flatten == all)
+      assert(!sizes.init.contains(1), sizes)
+      assert(bytes.result().forall(_ <= cap / 2), bytes.result())
+    } finally src.stop()
   }
 
   test("drainAtEof: at EOF it drains every pending row, then stops the query") {
