@@ -341,10 +341,13 @@ object Profiling {
     *  - the per-group bottom-k sketch, through [[graft.plans.TopKPerKey]]:
     *    a k-bounded heap per group per partition BELOW its exchange, so
     *    the exchange carries at most k·groups·partitions hashes whatever
-    *    the key cardinality, and no task sorts a group's keys. The k-hash
-    *    sketches are control-plane (3 groups × 4096 longs — the
-    *    CMS-blob/codebook collect pattern); pair estimates are driver
-    *    arithmetic;
+    *    the key cardinality, and no task sorts a group's keys. (The
+    *    `row_number() <= k` window gets Spark's map-side WindowGroupLimit
+    *    only for k up to `spark.sql.optimizer.windowGroupLimitThreshold`,
+    *    1,000 by default: at k = 4096 it sorted every key of a group in
+    *    one task.) The k-hash sketches are control-plane (3 groups ×
+    *    4096 longs — the CMS-blob/codebook collect pattern); pair
+    *    estimates are driver arithmetic;
     *  - the EXACT pair counts, this row's truth gate (the stance of
     *    profile_sketch paying the exact melt): a self-join on key that
     *    needs no exchange, since both sides are already clustered by key.

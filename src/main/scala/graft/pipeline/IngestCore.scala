@@ -18,11 +18,11 @@ import graft.validate.{Constraints, RecordValidator}
   *  1. [[envelope]] tags every line with `idx` (its place in file order),
   *     `mtype` and `stream`. The full record payload is not parsed here.
   *  2. [[controlPlane]] answers every driver-side question with ONE
-  *     grouped aggregate whose output is O(streams + control messages):
+  *     grouped aggregate whose output is O(streams + SCHEMA messages):
   *     the first unparseable line (P1), the unknown-type count (L6), the
-  *     SCHEMA messages in file order, the last STATE, and each stream's RECORD
-  *     extent for the order check (P4) and the state fold (P8). RECORD
-  *     lines never reach the driver.
+  *     SCHEMA messages in file order, the last STATE, and each stream's
+  *     RECORD extent for the order check (P4) and the state fold (P8).
+  *     RECORD lines never reach the driver.
   *  3. [[writeEpochs]] checks every (stream, schema epoch) in ONE
   *     phase-1 query (validation and inference), and writes only when
   *     all of them passed: concurrently across streams, in order within
