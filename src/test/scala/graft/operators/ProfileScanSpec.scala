@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -20,15 +20,21 @@ import graft.plans.TopKPerKeyExec
 class ProfileScanSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
-  /** The file-scan stages `body` runs, and the executed plan of each of
-    * its queries. */
+  /** The file-scan stages the jobs of `body` run (its job group's), and
+    * the executed plan of each of its queries. */
   private def traced(body: => Unit): (Int, Seq[SparkPlan]) = {
     val sc = spark.sparkContext
+    val group = "profile-scan-spec"
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val scans = new java.util.concurrent.atomic.AtomicInteger
     val plans = ArrayBuffer.empty[SparkPlan]
     val stages = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(ours.add(_))
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.failureReason.isEmpty && e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+        if (ours.contains(e.stageInfo.stageId) && e.stageInfo.failureReason.isEmpty &&
+            e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
           scans.incrementAndGet()
     }
     val queries = new QueryExecutionListener {
@@ -39,7 +45,9 @@ class ProfileScanSpec extends SparkSpec {
     ListenerBridge.drain(sc)
     sc.addSparkListener(stages)
     spark.listenerManager.register(queries)
+    sc.setJobGroup(group, "counted", interruptOnCancel = false)
     try body finally {
+      sc.clearJobGroup()
       ListenerBridge.drain(sc)
       spark.listenerManager.unregister(queries)
       sc.removeSparkListener(stages)
@@ -69,9 +77,9 @@ class ProfileScanSpec extends SparkSpec {
   }
 
   test("profile_theta bounds its bottom-k below the exchange, joins with no exchange and releases its cache") {
-    val cached = spark.sparkContext.getPersistentRDDs.size
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val plans = traced(runRow("profile_theta"))._2.map(nodes)
-    assert(spark.sparkContext.getPersistentRDDs.size == cached)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
     val sketch = plans.filter(_.exists { case t: TopKPerKeyExec => t.partial; case _ => false })
     assert(sketch.size == 1, plans.map(_.head))
     // the partial heap feeds the exchange: at most k hashes per group per
