@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.model.TargetConfig
 import graft.pipeline.SingerPipeline
-import graft.streaming.{StdinFeed, StreamingIngest}
+import graft.streaming.StreamingIngest
 import graft.sources.S3Conf
 
 /** CLI entry point with the reference's UX (reference __init__.py:334-358,
@@ -18,26 +20,26 @@ import graft.sources.S3Conf
   * Three consumption modes (`--mode`; any other value is a usage error):
   *  - `batch` (default): spool all of stdin, then one batch job — right
   *    for bounded extracts and for pointing `--input` at a landing zone.
-  *  - `live`: incremental consumption — a Structured Streaming query
-  *    ([[StreamingIngest]]) reads raw stdin through the DSv2 micro-batch
-  *    source ([[graft.streaming.StdinStreamProvider]]), appends
-  *    per-stream parquet and emits a state bookmark after every committed
-  *    micro-batch, long before EOF, like the reference's incremental loop
-  *    (__init__.py:215). The source buffers a bounded backlog, so a fast
-  *    tap waits on the pipe. The checkpoint is per run by default: a pipe
-  *    cannot replay across a process restart (the source refuses a gap,
-  *    a reused checkpoint included, rather than hiding it).
+  *    The spool copy starts at launch, on its own thread, so the tap's
+  *    pipe drains while the Spark session starts.
+  *  - `live`: incremental consumption — one driver loop
+  *    ([[StreamingIngest.runStdin]]) takes the lines that arrived, appends
+  *    per-stream parquet and emits a state bookmark after each batch's
+  *    writes, long before EOF, like the reference's incremental loop
+  *    (__init__.py:215). It buffers a bounded backlog, so a fast tap
+  *    waits on the pipe. Nothing is checkpointed: a pipe cannot be
+  *    re-read after a crash.
   *  - `stream`: the same incremental loop. Over stdin it IS `live`.
   *    `--input <landing dir>` watches that directory instead (stdin is
-  *    not read) with the stable checkpoint `<output>/_graft_checkpoint`,
-  *    so a re-run after a crash resumes it: the durable deployment.
+  *    not read) with a Structured Streaming query whose stable checkpoint
+  *    `<output>/_graft_checkpoint` (or `--checkpoint`) lets a re-run
+  *    after a crash resume it: the durable deployment.
   *
   * A flag the mode never reads is a usage error: `--input` in live mode,
-  * `--checkpoint` in batch mode.
+  * `--checkpoint` in batch mode and wherever stdin is read.
   *
-  * Per-run temp files (the batch stdin spool and any per-run checkpoint)
-  * live in a per-run directory under `temp_dir`, deleted once the run
-  * succeeds; a failed run keeps it, and a failed batch run names its
+  * The batch stdin spool lives in a per-run directory under `temp_dir`,
+  * deleted once the run succeeds; a failed run keeps it, and names its
   * spool file on stderr. A `--checkpoint` or `--input` from the command
   * line is never deleted.
   *
@@ -57,7 +59,8 @@ object Main {
   /** The command line as flag -> value, with `mode` defaulted to batch and
     * stdin `stream` run as `live`; or the error for an unknown flag, a
     * flag without a value, a repeated flag, a mode outside
-    * batch|stream|live or a flag the mode never reads. */
+    * batch|stream|live or a flag the mode never reads. A pipe cannot be
+    * re-read, so no mode that reads stdin takes a checkpoint. */
   private[graft] def parseArgs(args: Seq[String]): Either[String, Map[String, String]] = {
     @annotation.tailrec
     def loop(rest: List[String], acc: Map[String, String]): Either[String, Map[String, String]] =
@@ -76,6 +79,8 @@ object Main {
         case "live" if opts.contains("input") =>
           Left("--input is not read in live mode (it reads stdin; use --mode stream --input)")
         case "batch" if opts.contains("checkpoint") => Left("--checkpoint is not read in batch mode")
+        case _ if opts.contains("checkpoint") && !opts.contains("input") =>
+          Left("--checkpoint is not read from stdin (a pipe cannot resume; use --mode stream --input)")
         case "stream" if !opts.contains("input") => Right(opts + ("mode" -> "live"))
         case mode => Right(opts + ("mode" -> mode))
       }
@@ -110,37 +115,44 @@ object Main {
         S3Conf.outputUri(config)
     }
 
+    val spool = if (opts("mode") == "batch" && !opts.contains("input")) Some(spoolStdin(config))
+      else None
     val spark = GraftSession(config.tempDir)
     S3Conf(spark, config)
 
     try {
       opts("mode") match {
         case "stream" => runStream(spark, opts, output, config)
-        case "live"   => runLive(spark, opts, output, config)
-        case _        => runBatch(spark, opts, output, config)
+        case "live"   => new StreamingIngest(spark, output, config).runStdin(System.in)
+        case _        => runBatch(spark, spool.toRight(opts("input")), output, config)
       }
     } finally spark.stop()
   }
 
-  /** Runs `body` over a fresh per-run directory under `temp_dir` (L7)
-    * or the system default, and deletes the directory once `body`
-    * returns; a run that throws keeps it. */
-  private def withRunDir[T](config: TargetConfig, prefix: String)(body: Path => T): T = {
-    val dir = config.tempDir match {
-      case Some(root) => Files.createTempDirectory(Files.createDirectories(Paths.get(root)), prefix)
-      case None => Files.createTempDirectory(prefix)
-    }
-    val result = body(dir)
-    FileUtils.deleteQuietly(dir.toFile)
-    result
+  /** Batch stdin on its way to `stdin.jsonl` in a fresh per-run
+    * directory under `temp_dir` (L7) or the system default: the copy's
+    * byte count, or its error. */
+  private final case class Spool(dir: Path, copied: Future[Long]) {
+    def file: Path = dir.resolve("stdin.jsonl")
   }
 
-  /** Batch mode: spool stdin to a file so the input is splittable/
-    * re-scannable (the batch pipeline makes several passes; a 100 TB
-    * deployment points --input at the durable landing zone instead). A
-    * failed run keeps the spool file and names it on stderr, so the run
-    * can be repeated with `--input`. */
-  private def runBatch(spark: SparkSession, opts: Map[String, String],
+  /** Starts copying stdin to a [[Spool]] now, on its own thread. */
+  private def spoolStdin(config: TargetConfig): Spool = {
+    val dir = config.tempDir match {
+      case Some(root) =>
+        Files.createTempDirectory(Files.createDirectories(Paths.get(root)), "singer-stdin")
+      case None => Files.createTempDirectory("singer-stdin")
+    }
+    Spool(dir, Future(Files.copy(System.in, dir.resolve("stdin.jsonl")))(ExecutionContext.global))
+  }
+
+  /** Batch mode over `--input` or the stdin [[Spool]]. Stdin is spooled
+    * to a file so the input is splittable/re-scannable (the batch
+    * pipeline makes several passes; a 100 TB deployment points --input at
+    * the durable landing zone instead). A run that succeeds deletes the
+    * spool's directory; a failed run keeps the spool file and names it on
+    * stderr, so the run can be repeated with `--input`. */
+  private def runBatch(spark: SparkSession, input: Either[String, Spool],
                        output: String, config: TargetConfig): Unit = {
     def ingest(input: String): Unit = {
       val result = SingerPipeline.run(spark, input, output, config)
@@ -148,39 +160,18 @@ object Main {
         System.err.println(s"[graft] wrote ${o.rows} rows -> ${o.path}"))
       SingerPipeline.emitState(result.state)
     }
-    opts.get("input") match {
-      case Some(input) => ingest(input)
-      case None => withRunDir(config, "singer-stdin") { dir =>
-        val spool = dir.resolve("stdin.jsonl")
-        Files.copy(System.in, spool)
-        if (Files.size(spool) == 0L)
+    input match {
+      case Left(path) => ingest(path)
+      case Right(sp) =>
+        if (Await.result(sp.copied, Duration.Inf) == 0L)
           System.err.println("[graft] warning: 0 bytes read from stdin — " +
             "is the tap connected? (zero-message input is not an error)")
-        try ingest(spool.toString) catch { case e: Throwable =>
-          System.err.println(s"[graft] run failed; stdin is kept at $spool " +
+        try ingest(sp.file.toString) catch { case e: Throwable =>
+          System.err.println(s"[graft] run failed; stdin is kept at ${sp.file} " +
             "(repeat the run with --input <that file>)")
           throw e
         }
-      }
-    }
-  }
-
-  /** Live mode (and stdin stream mode): raw stdin through the DSv2
-    * source — no spool files; per-trigger parquet + bookmarks while the
-    * tap produces. The checkpoint is per-run by default: a pipe cannot be
-    * re-read after a crash, so resuming an old checkpoint would only
-    * trip the source's resume guard. */
-  private def runLive(spark: SparkSession, opts: Map[String, String],
-                      output: String, config: TargetConfig): Unit = {
-    def run(checkpoint: String): Unit = {
-      val feed = new StdinFeed(System.in)
-      val query = new StreamingIngest(spark, output, config)
-        .startLive(checkpoint, feed, Trigger.ProcessingTime("500 milliseconds"))
-      StreamingIngest.drainAtEof(query, feed.eofReached, pollMs = 500)
-    }
-    opts.get("checkpoint") match {
-      case Some(checkpoint) => run(checkpoint)
-      case None => withRunDir(config, "graft-live-ckpt")(dir => run(dir.toString))
+        FileUtils.deleteQuietly(sp.dir.toFile)
     }
   }
 

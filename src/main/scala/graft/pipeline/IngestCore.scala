@@ -27,8 +27,23 @@ import graft.validate.{Constraints, RecordValidator}
   *     phase-1 query (validation and inference), and writes only when
   *     all of them passed: concurrently across streams, in order within
   *     one.
+  * Every job the core starts carries the Spark local property
+  * `graft.layer` ([[layer]]): `control`, `phase1` or `write`, and
+  * `envelope` where a caller materializes the envelope on its own.
   */
 object IngestCore {
+
+  /** The local property that names the ingest layer a job belongs to. */
+  val LayerKey = "graft.layer"
+
+  /** Runs `body` with [[LayerKey]] set to `name` on this thread; jobs on
+    * the `graft-ingest` write threads inherit it ([[concurrently]]). */
+  def layer[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(LayerKey)
+    sc.setLocalProperty(LayerKey, name)
+    try body finally sc.setLocalProperty(LayerKey, outer)
+  }
 
   /** Max unknown-type payloads echoed to stderr (the reference warns per
     * message, __init__.py:246-251; the echo here is capped). */
@@ -118,7 +133,7 @@ object IngestCore {
     * ([[StateFold.emittedState]]), and a tap may send one after every
     * record, so collecting them all would hold the whole input on one
     * task and the driver. */
-  def controlPlane(typed: DataFrame): ControlPlane = {
+  def controlPlane(typed: DataFrame): ControlPlane = layer(typed.sparkSession, "control") {
     val groups = typed.groupBy("mtype", "stream")
       .agg(min("idx"), max("idx"), count(lit(1)),
         min_by(col("value"), when(col("mtype").isNull, col("idx"))),
@@ -205,8 +220,8 @@ object IngestCore {
                   overwrite: Boolean): Unit = {
     val declared = epochs.map(e =>
       JsonSchemaConverter.toStructType(e.schema.schema, config.decimalForMultipleOf))
-    val checks = phaseOne(records, epochs, declared, config)
-      .fold(Map.empty[Int, Row])(_.collect().map(r => r.getInt(0) -> r).toMap)
+    val checks = layer(spark, "phase1")(phaseOne(records, epochs, declared, config)
+      .fold(Map.empty[Int, Row])(_.collect().map(r => r.getInt(0) -> r).toMap))
     val schemas = epochs.indices.map { i =>
       val row = checks.get(i)
       // Union-schema passthrough (§1.4): record-only fields survive.
@@ -223,13 +238,13 @@ object IngestCore {
     }
     val (codec, _) = config.compressionCodecAndExt
     val ready = epochs.zip(schemas)
-    concurrently(spark, epochs.map(_.stream).distinct.map(s => () =>
+    layer(spark, "write")(concurrently(spark, epochs.map(_.stream).distinct.map(s => () =>
       ready.filter(_._1.stream == s).zipWithIndex.foreach { case ((e, schema), i) =>
         var writer = flatten(slice(records, e), schema, config, timestamp).write
           .mode(if (overwrite && i == 0) "overwrite" else "append").option("compression", codec)
         if (config.fileSize > 0) writer = writer.option("maxRecordsPerFile", config.fileSize)
         writer.parquet(outputPath(outputUri, config, s, timestamp))
-      })).foreach(_.get)
+      }))).foreach(_.get)
   }
 
   private def inEpoch(e: Epoch): Column =
@@ -334,7 +349,7 @@ object IngestCore {
     * The pool lives for this call only, so threads never accumulate
     * across micro-batches, and each task gets the caller's session and
     * local properties as captured at its submission, so its jobs carry
-    * the caller's job group, streaming batch id and SQL execution. */
+    * the caller's job group, `graft.layer`, batch and SQL execution. */
   private def concurrently[T](spark: SparkSession, tasks: Seq[() => T]): Seq[Try[T]] = {
     val threads = new ConcurrentLinkedQueue[Thread]()
     val pool = Executors.newFixedThreadPool(

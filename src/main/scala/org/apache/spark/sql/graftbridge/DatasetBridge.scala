@@ -8,7 +8,6 @@ import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSpark
 import org.apache.spark.sql.connector.read.HasPartitionStatistics
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileScanRDD}
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceRDD, DataSourceRDDPartition}
 
 /** Access bridge for constructing DataFrames from custom logical plans
   * (`Dataset.ofRows` is `private[sql]`) — the [[ColumnBridge]] sibling
@@ -38,12 +37,12 @@ object DatasetBridge {
     * count, its file splits as (`_metadata.file_path`,
     * `_metadata.file_block_start`) pairs (none for a non-file source), and
     * its input bytes when every source in the lineage knows them: the
-    * file split lengths, or the sizes a DSv2 input partition reports
+    * file split lengths, or the sizes a source RDD's partitions report
     * through `HasPartitionStatistics`. */
   final case class ScanLayout(partitions: Int, splits: Seq[(String, Long)], bytes: Option[Long])
 
   /** The [[ScanLayout]] of a DataFrame, read from the FileScanRDD and
-    * DataSourceRDD in its lineage. Planning only, no job. */
+    * other source RDDs in its lineage. Planning only, no job. */
   def scanLayout(df: DataFrame): ScanLayout = {
     val path = FileFormat.BASE_METADATA_EXTRACTORS(FileFormat.FILE_PATH)
     // Each source RDD's splits, and its bytes when it knows them.
@@ -51,16 +50,12 @@ object DatasetBridge {
       case f: FileScanRDD =>
         val files = f.filePartitions.flatMap(_.files)
         Seq((files.map(pf => (path(pf).toString, pf.start)), Some(files.map(_.length).sum)))
-      case d: DataSourceRDD =>
-        val sizes = d.partitions.toSeq.flatMap {
-          case p: DataSourceRDDPartition => p.inputPartitions.map {
-            case s: HasPartitionStatistics if s.sizeInBytes.isPresent => Some(s.sizeInBytes.getAsLong)
-            case _ => None
-          }
-          case _ => Seq(None)
+      case r if r.dependencies.isEmpty =>
+        val sizes = r.partitions.toSeq.map {
+          case s: HasPartitionStatistics if s.sizeInBytes.isPresent => Some(s.sizeInBytes.getAsLong)
+          case _ => None
         }
         Seq((Nil, if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None))
-      case r if r.dependencies.isEmpty => Seq((Nil, None))
       case r => r.dependencies.flatMap(d => walk(d.rdd))
     }
     val rdd = df.asInstanceOf[CDataset[_]].queryExecution.toRdd

@@ -38,14 +38,18 @@ class IngestCoreSpec extends SparkSpec {
 
   /** Two streams, one schema epoch each, `n` records each, closed by a
     * STATE: the shape of a live page. */
-  private def twoStreamBatch(from: Int, n: Int = 50): DataFrame =
-    batchOf((if (from == 0) Seq(schema("s1"), schema("s2")) else Nil) ++
+  private def twoStreamLines(from: Int, n: Int = 50): Seq[String] =
+    (if (from == 0) Seq(schema("s1"), schema("s2")) else Nil) ++
       (from until from + n).flatMap(i => Seq(record("s1", i), record("s2", i))) :+
-      s"""{"type": "STATE", "value": {"page": $from}}""")
+      s"""{"type": "STATE", "value": {"page": $from}}"""
 
-  /** One job: its group, SQL execution and the task count of each stage
-    * it ran (AQE's skipped stages run none). */
-  private final case class Job(group: String, execution: Long, stageTasks: ArrayBuffer[Int])
+  private def twoStreamBatch(from: Int, n: Int = 50): DataFrame = batchOf(twoStreamLines(from, n))
+
+  /** One job: its group, SQL execution, `graft.layer` and `graft.batch`,
+    * and the task count of each stage it ran (AQE's skipped stages run
+    * none). */
+  private final case class Job(group: String, execution: Long, layer: String, batch: String,
+                               stageTasks: ArrayBuffer[Int])
 
   /** One query: its SQL execution, and what it is. */
   private final case class Query(execution: Long, kind: String)
@@ -69,7 +73,8 @@ class IngestCoreSpec extends SparkSpec {
         val props = Option(e.properties)
         val job = Job(props.map(_.getProperty("spark.jobGroup.id")).orNull,
           props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).fold(-1L)(_.toLong),
-          ArrayBuffer.empty)
+          props.map(_.getProperty(IngestCore.LayerKey)).orNull,
+          props.map(_.getProperty(StreamingIngest.BatchKey)).orNull, ArrayBuffer.empty)
         jobs += job
         e.stageIds.foreach(stageJob(_) = job)
       }
@@ -256,6 +261,23 @@ class IngestCoreSpec extends SparkSpec {
     info(s"${jobs.size} jobs")
     assert(jobs.size <= MaxBatchJobs, s"${jobs.size} jobs")
     assert(jobs.forall(_.group == "ingest-core-spec"), jobs)
+  }
+
+  test("every job of a golden batch run and of a warm two-stream loop batch carries graft.layer, and loop jobs carry graft.batch") {
+    val f = Files.createTempFile("core-layers", ".jsonl")
+    Files.writeString(f, golden.mkString("\n"))
+    val out = Files.createTempDirectory("core-layers").toString
+    val (batchJobs, _) = traced(SingerPipeline.run(spark, f.toString, out, TargetConfig()))
+    info(batchJobs.map(_.layer).mkString("batch run: ", ", ", ""))
+    assert(batchJobs.nonEmpty && batchJobs.forall(_.layer != null), batchJobs)
+    def pipe(lines: Seq[String]) =
+      new java.io.ByteArrayInputStream(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val ingest = new StreamingIngest(spark, Files.createTempDirectory("core-layers-live").toString,
+      TargetConfig(streamsInSeparateFolder = true))
+    ingest.runStdin(pipe(twoStreamLines(0))) // registers the schemas
+    val (loopJobs, _) = traced(ingest.runStdin(pipe(twoStreamLines(100))))
+    info(loopJobs.map(j => s"${j.batch}/${j.layer}").mkString("loop batch: ", ", ", ""))
+    assert(loopJobs.nonEmpty && loopJobs.forall(j => j.layer != null && j.batch != null), loopJobs)
   }
 
   /** Live threads, less those of Spark's and the JDK's cached pools

@@ -2,12 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.connector.read.streaming.ReadLimit
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryProgress}
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import graft.model.TargetConfig
 
@@ -167,44 +165,45 @@ class StreamingIngestSpec extends SparkSpec {
     assert(spark.read.parquet(expected).count() == 1)
   }
 
-  test("live stdin DSv2 source: unbounded pipe, incremental micro-batches before EOF") {
+  /** Runs the live loop over `in` on another thread, as graft.Main runs
+    * it on its own; the future completes once the loop returns. */
+  private def loop(ingest: StreamingIngest, in: java.io.InputStream): Future[Unit] =
+    Future(ingest.runStdin(in))(ExecutionContext.global)
+
+  test("live stdin: unbounded pipe, incremental batches before EOF") {
     val out = Files.createTempDirectory("live-out").toString
-    val cp = Files.createTempDirectory("live-cp").toString
     val pipeIn = new java.io.PipedInputStream(1 << 16)
     val writer = new java.io.PrintWriter(
       new java.io.OutputStreamWriter(new java.io.PipedOutputStream(pipeIn),
         java.nio.charset.StandardCharsets.UTF_8), true)
+    val ingest = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
+    val run = loop(ingest, pipeIn)
     try {
-      val ingest = new StreamingIngest(spark, out,
-        TargetConfig(streamsInSeparateFolder = true))
-      val q = ingest.startLive(cp, new StdinFeed(pipeIn))
+      // A read may meet a write in progress, whose output is not there yet.
       def settle(cond: => Boolean): Unit = {
+        def holds = scala.util.Try(cond).getOrElse(false)
         val end = System.currentTimeMillis + 30000
-        while (!cond && System.currentTimeMillis < end) {
-          q.processAllAvailable(); Thread.sleep(50)
-        }
-        assert(cond)
+        while (!holds && System.currentTimeMillis < end) Thread.sleep(50)
+        assert(holds)
       }
-      // wave 1: schema + 2 records, while the pipe stays OPEN — the
-      // source batches whatever has arrived.
+      // wave 1: schema + 2 records, while the pipe stays OPEN — the loop
+      // batches whatever has arrived.
       writer.println(schemaLine)
       writer.println("""{"type": "RECORD", "stream": "s1", "record": {"pk": 1, "v": "a"}}""")
       writer.println("""{"type": "RECORD", "stream": "s1", "record": {"pk": 2, "v": "b"}}""")
-      settle(new java.io.File(s"$out/s1").exists &&
-        spark.read.parquet(s"$out/s1").count() == 2)
+      settle(spark.read.parquet(s"$out/s1").count() == 2)
       // wave 2: a LATER record + trailing state — a genuinely
-      // incremental micro-batch against the same registry.
+      // incremental batch against the same registry.
       writer.println("""{"type": "RECORD", "stream": "s1", "record": {"pk": 3, "v": "c"}}""")
       writer.println("""{"type": "STATE", "value": {"bookmarks": {"s1": 3}}}""")
       settle(spark.read.parquet(s"$out/s1").count() == 3 &&
         ingest.emittedState.contains("""{"bookmarks":{"s1":3}}"""))
-      q.stop()
-      // Every row exactly once (StreamingIngest's core is shared with the
-      // landing-directory path; this pins the stdin source end to end).
-      val pks = spark.read.parquet(s"$out/s1").collect()
-        .map(r => r.getAs[Long]("pk")).sorted.toSeq
-      assert(pks == Seq(1L, 2L, 3L))
     } finally writer.close()
+    Await.result(run, 2.minutes)
+    // Every row exactly once.
+    val pks = spark.read.parquet(s"$out/s1").collect()
+      .map(r => r.getAs[Long]("pk")).sorted.toSeq
+    assert(pks == Seq(1L, 2L, 3L))
   }
 
   test("streaming: record for unknown stream fails the batch") {
@@ -250,6 +249,20 @@ class StreamingIngestSpec extends SparkSpec {
     new StreamingIngest(spark, out, config).processBatch(lines(rec("s1", 2)))
     assert(spark.read.parquet(s"$out/s1").count() == 2)
     assert(spark.read.parquet(s"$out/s2").count() == 2)
+  }
+
+  test("streaming: a partial registry temp file left by a crash beside a good registry still reloads the good schema") {
+    val out = Files.createTempDirectory("stream-registry").toString
+    val config = TargetConfig(streamsInSeparateFolder = true)
+    new StreamingIngest(spark, out, config).processBatch(lines(schemaLine, rec("s1", 1)))
+    // A re-emitted SCHEMA persists over the entry it replaces.
+    new StreamingIngest(spark, out, config).processBatch(lines(schemaLine, rec("s1", 2)))
+    val registry = java.nio.file.Paths.get(out, "_graft_registry")
+    assert(Files.readString(registry.resolve("s1.json")) == schemaLine)
+    // A crash while persisting s1's schema again leaves a partial temporary file.
+    Files.writeString(registry.resolve("s1.json.tmp"), schemaLine.take(20))
+    new StreamingIngest(spark, out, config).processBatch(lines(rec("s1", 3)))
+    assert(spark.read.parquet(s"$out/s1").count() == 3)
   }
 
   test("streaming: chunk files of different sizes are read in name order (SCHEMA in the smallest, first chunk)") {
@@ -325,40 +338,29 @@ class StreamingIngestSpec extends SparkSpec {
       Seq("""{"bookmarks":{"s1":1}}""", """{"bookmarks":{"s1":2}}"""))
   }
 
-  test("live stdin: a read error after some lines fails drainAtEof instead of passing for EOF") {
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+
+  private def bytesOf(ls: Seq[String]): Array[Byte] = ls.mkString("", "\n", "\n").getBytes("UTF-8")
+
+  test("live stdin: a read error after some lines fails the loop instead of passing for EOF") {
     val out = Files.createTempDirectory("live-out2").toString
-    val cp = Files.createTempDirectory("live-cp2").toString
     // Two lines, then the pipe breaks.
     val failing = new java.io.InputStream {
-      private val head = new java.io.ByteArrayInputStream(
-        (Seq(schemaLine, rec("s1", 1)).mkString("\n") + "\n").getBytes("UTF-8"))
+      private val head = new java.io.ByteArrayInputStream(bytesOf(Seq(schemaLine, rec("s1", 1))))
       override def read(): Int = {
         val b = head.read()
         if (b >= 0) b else throw new java.io.IOException("pipe broke")
       }
     }
-    val feed = new StdinFeed(failing)
-    val q = new StreamingIngest(spark, out, TargetConfig()).startLive(cp, feed)
-    try {
-      val drain = Future(StreamingIngest.drainAtEof(q, feed.eofReached, pollMs = 10))(
-        ExecutionContext.global)
-      val e = intercept[Exception](Await.result(drain, 2.minutes))
-      def messages(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-      assert(messages(e).exists(_.contains("pipe broke")))
-    } finally q.stop()
+    val run = loop(new StreamingIngest(spark, out, TargetConfig()), failing)
+    val e = intercept[Exception](Await.result(run, 2.minutes))
+    assert(messages(e).exists(_.contains("pipe broke")), messages(e))
   }
 
-  /** Start a live stream over `in`, drain it at EOF like graft.Main, and
-    * return the query's progress. */
-  private def drainLive(in: java.io.InputStream, out: String): Seq[StreamingQueryProgress] = {
-    val feed = new StdinFeed(in)
-    val q = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
-      .startLive(Files.createTempDirectory("live-cp").toString, feed)
-    try StreamingIngest.drainAtEof(q, feed.eofReached, pollMs = 10)
-    finally q.stop()
-    q.recentProgress.toSeq
-  }
+  /** Run the live loop over `in` to its end, like graft.Main. */
+  private def runLive(in: java.io.InputStream, out: String): Unit =
+    new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true)).runStdin(in)
 
   /** A pipe a writer thread fills with `ls` once `delayMs` has passed,
     * then closes. */
@@ -367,7 +369,7 @@ class StreamingIngestSpec extends SparkSpec {
     val out = new java.io.PipedOutputStream(in)
     val t = new Thread(() => {
       Thread.sleep(delayMs)
-      try out.write(ls.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+      try out.write(bytesOf(ls)) finally out.close()
     })
     t.setDaemon(true)
     t.start()
@@ -376,125 +378,106 @@ class StreamingIngestSpec extends SparkSpec {
 
   test("live stdin: a second live stream in one JVM ingests its whole pipe") {
     val first = Files.createTempDirectory("live-first").toString
-    drainLive(new java.io.ByteArrayInputStream(
-      (Seq(schemaLine, rec("s1", 1)).mkString("\n") + "\n").getBytes("UTF-8")), first)
+    runLive(new java.io.ByteArrayInputStream(bytesOf(Seq(schemaLine, rec("s1", 1)))), first)
     val second = Files.createTempDirectory("live-second").toString
-    drainLive(latePipe(schemaLine +: (1 to 20).map(rec("s1", _)), delayMs = 1000), second)
+    runLive(latePipe(schemaLine +: (1 to 20).map(rec("s1", _)), delayMs = 1000), second)
+    assert(spark.read.parquet(s"$first/s1").count() == 1)
     assert(spark.read.parquet(s"$second/s1").count() == 20)
   }
 
   test("live stdin: a stream stopped before its EOF does not end the next stream's input") {
-    // The first stream's pipe stays open: its reader is still blocked
-    // when the query stops, and ends only once the second stream runs.
+    // The first stream's pipe stays open: its first batch fails (a record
+    // of an unknown stream), which stops its reader before the tap closes.
     val openIn = new java.io.PipedInputStream(1 << 16)
     val openOut = new java.io.PipedOutputStream(openIn)
-    openOut.write((Seq(schemaLine, rec("s1", 1)).mkString("", "\n", "\n")).getBytes("UTF-8"))
+    openOut.write(bytesOf(Seq(schemaLine, rec("nope", 1))))
     openOut.flush()
-    val first = new StdinFeed(openIn)
-    val q1 = new StreamingIngest(spark, Files.createTempDirectory("live-open").toString,
-      TargetConfig(streamsInSeparateFolder = true))
-      .startLive(Files.createTempDirectory("live-cp").toString, first)
-    q1.processAllAvailable()
-    q1.stop()
-    val (in, out) = (new java.io.PipedInputStream(1 << 16), Files.createTempDirectory("live-next"))
-    val pipe = new java.io.PipedOutputStream(in)
-    val second = new StdinFeed(in)
-    val q2 = new StreamingIngest(spark, out.toString, TargetConfig(streamsInSeparateFolder = true))
-      .startLive(Files.createTempDirectory("live-cp").toString, second)
-    try {
-      openOut.close() // the first stream's reader now reaches its end
-      val end = System.currentTimeMillis + 10000
-      while (!first.eofReached && System.currentTimeMillis < end) Thread.sleep(10)
-      assert(first.eofReached && !second.eofReached)
-      pipe.write((schemaLine +: (1 to 20).map(rec("s1", _))).mkString("", "\n", "\n").getBytes("UTF-8"))
-      pipe.close()
-      StreamingIngest.drainAtEof(q2, second.eofReached, pollMs = 10)
-    } finally q2.stop()
+    val e = intercept[Exception](runLive(openIn, Files.createTempDirectory("live-open").toString))
+    assert(messages(e).exists(_.contains("nope")), messages(e))
+    // Its reader is gone: the first tap can no longer write.
+    intercept[java.io.IOException] { openOut.write(bytesOf(Seq(rec("s1", 2)))); openOut.flush() }
+    val out = Files.createTempDirectory("live-next").toString
+    runLive(latePipe(schemaLine +: (1 to 20).map(rec("s1", _)), delayMs = 500), out)
     assert(spark.read.parquet(s"$out/s1").count() == 20)
   }
 
-  test("live stdin: each batch reads its lines once (numInputRows), and a warm batch runs at most 4 jobs") {
+  // A warm batch reads the stdin lines in its first job only (the
+  // control plane fills the envelope's checkpoint), then runs phase 1
+  // and one write per stream.
+  test("live stdin: each batch reads its lines once, and a warm two-stream batch runs at most 4 jobs, each labelled with its layer and batch") {
     val out = Files.createTempDirectory("live-rows").toString
-    val batchJobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val jobs = new ConcurrentLinkedQueue[(String, String)]() // (batch, layer)
+    val reads = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val stageBatch = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach(b => batchJobs.merge(b, 1, (a: Integer, c: Integer) => a + c))
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val batch = Option(e.properties).map(_.getProperty(StreamingIngest.BatchKey)).orNull
+        jobs.add((batch, Option(e.properties).map(_.getProperty("graft.layer")).orNull))
+        if (batch != null) e.stageIds.foreach(stageBatch.put(_, batch))
+      }
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "StdinBatchRDD"))
+          Option(stageBatch.get(e.stageInfo.stageId))
+            .foreach(b => reads.merge(b, 1, (a: Integer, c: Integer) => a + c))
     }
-    val pages = (0 until 5).map(p => (1 to 30).map(i => rec("s1", 100 * p + i)) :+
-      s"""{"type": "STATE", "value": {"page": $p}}""")
-    val lines = schemaLine +: pages.flatten
+    val pages = (0 until 5).map(p =>
+      (1 to 15).flatMap(i => Seq(rec("s1", 100 * p + i), rec("s2", 100 * p + i))) :+
+        s"""{"type": "STATE", "value": {"page": $p}}""")
+    val schemas = Seq(schemaLine, schemaLine.replace("\"s1\"", "\"s2\""))
     val in = new java.io.PipedInputStream(1 << 20)
     val pipe = new java.io.PipedOutputStream(in)
+    // The tap writes each page at once, after the last one's bookmark is
+    // out: the loop takes each page whole, as a batch of its own.
+    val stdout = new java.io.ByteArrayOutputStream()
+    def printed(p: Int) = stdout.synchronized(stdout.toString("UTF-8")).contains(s"""{"page":$p}""")
     val tap = new Thread(() => try pages.zipWithIndex.foreach { case (page, p) =>
-      pipe.write(((if (p == 0) schemaLine +: page else page).mkString("", "\n", "\n")).getBytes("UTF-8"))
+      val end = System.currentTimeMillis + 60000
+      while (p > 0 && !printed(p - 1) && System.currentTimeMillis < end) Thread.sleep(10)
+      pipe.write(bytesOf(if (p == 0) schemas ++ page else page))
       pipe.flush()
-      Thread.sleep(300)
     } finally pipe.close())
     tap.setDaemon(true)
     org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
-    val progress = try { tap.start(); drainLive(in, out) } finally {
+    try {
+      tap.start()
+      Console.withOut(new java.io.PrintStream(stdout, true, "UTF-8"))(runLive(in, out))
+    } finally {
       org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
     }
-    val data = progress.filter(_.numInputRows > 0)
-    info(data.map(p => s"batch ${p.batchId}: ${p.numInputRows} rows, " +
-      s"${batchJobs.getOrDefault(p.batchId.toString, 0)} jobs").mkString("; "))
-    assert(data.map(_.numInputRows).sum == lines.size)
-    assert(spark.read.parquet(s"$out/s1").count() == 150)
-    // Every batch after the one that registered the schema is warm.
-    data.drop(1).foreach(p => assert(batchJobs.getOrDefault(p.batchId.toString, 0) <= 4, p.batchId))
+    val all = jobs.asScala.toSeq
+    val perBatch = all.groupBy(_._1).view.mapValues(_.size).toMap
+    info(perBatch.toSeq.sortBy(_._1.toInt).map { case (b, n) =>
+      s"batch $b: $n jobs, ${reads.getOrDefault(b, 0)} stdin reads" }.mkString("; "))
+    assert(all.nonEmpty && all.forall { case (b, l) => b != null && l != null }, all)
+    assert(perBatch.keySet.forall(b => reads.getOrDefault(b, 0) == 1), reads)
+    assert(spark.read.parquet(s"$out/s1").count() == 75 && spark.read.parquet(s"$out/s2").count() == 75)
+    assert(stdout.toString("UTF-8").linesIterator.toSeq.last == """{"page":4}""")
+    assert(perBatch.size == pages.size, perBatch)
+    // Every batch after the one that registered the schemas is warm.
+    perBatch.filter(_._1 != "0").foreach { case (b, n) => assert(n <= 4, s"batch $b: $n jobs") }
   }
 
-  test("live stdin: a commit past a 200k-line backlog evicts exactly the committed lines") {
-    val n = 250000
-    val src = new StdinMicroBatchStream(new StdinFeed(new java.io.ByteArrayInputStream(
-      (0 until n).map(i => s"line $i").mkString("", "\n", "\n").getBytes("UTF-8"))))
-    try {
-      val end = System.currentTimeMillis + 60000
-      while (src.latestOffset() != StdinOffset(n) && System.currentTimeMillis < end) Thread.sleep(10)
-      assert(src.latestOffset() == StdinOffset(n))
-      def range(s: Long, e: Long): Seq[String] = src.planInputPartitions(StdinOffset(s), StdinOffset(e))
-        .toSeq.flatMap(_.asInstanceOf[StdinPartition].lines.toSeq)
-      assert(range(0, n).size == n) // the engine plans a batch before committing it
-      src.commit(StdinOffset(200000))
-      assert(src.latestOffset() == StdinOffset(n))
-      assert(range(200000, n) == (200000 until n).map(i => s"line $i"))
-      intercept[IllegalStateException](range(199999, n))
-      src.commit(StdinOffset(n - 1))
-      assert(src.latestOffset() == StdinOffset(n))
-      assert(range(n - 1, n) == Seq(s"line ${n - 1}"))
-    } finally src.stop()
-  }
-
-  private def messages(t: Throwable): Seq[String] =
-    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-
-  test("live stdin: a second stream over a used checkpoint fails, appending nothing and emitting no bookmark") {
-    val (out, cp) = (Files.createTempDirectory("live-reuse").toString,
-      Files.createTempDirectory("live-reuse-cp").toString)
-    def run(ls: String*): Option[String] = {
-      val feed = new StdinFeed(new java.io.ByteArrayInputStream(ls.mkString("", "\n", "\n").getBytes("UTF-8")))
-      val ingest = new StreamingIngest(spark, out, TargetConfig(streamsInSeparateFolder = true))
-      val q = ingest.startLive(cp, feed)
-      try StreamingIngest.drainAtEof(q, feed.eofReached, pollMs = 10) finally q.stop()
-      ingest.emittedState
-    }
+  test("live stdin: a bookmark prints only after its batch's writes, and a failing batch appends nothing and prints none") {
+    val dir = Files.createTempDirectory("live-fail").toString
     def state(n: Int) = s"""{"type": "STATE", "value": {"n": $n}}"""
-    assert(run(schemaLine, rec("s1", 1), state(1)).contains("""{"n":1}"""))
-    // The checkpoint has committed lines [0, 3); each new pipe starts again
-    // at 0, whether it is longer than that or exactly as long.
-    val stdout = new java.io.ByteArrayOutputStream()
-    Seq(Seq(schemaLine, rec("s1", 2), rec("s1", 3), state(2)), Seq(schemaLine, rec("s1", 4), state(3)))
-      .foreach { ls =>
-        val e = intercept[Exception](Console.withOut(new java.io.PrintStream(stdout, true, "UTF-8")) {
-          run(ls: _*)
-        })
-        assert(messages(e).exists(_.contains("stdin cannot resume at line 3")), messages(e))
-      }
-    assert(stdout.toString("UTF-8").isEmpty)
-    assert(spark.read.parquet(s"$out/s1").collect().map(_.getAs[Long]("pk")).toSeq == Seq(1L))
+    // Each line printed, with the rows on disk when it was printed.
+    val printed = ArrayBuffer.empty[(String, Long)]
+    val stdout = new java.io.PrintStream(new java.io.ByteArrayOutputStream(), true, "UTF-8") {
+      override def println(x: String): Unit = printed += x -> spark.read.parquet(s"$dir/s1").count()
+    }
+    val ingest = new StreamingIngest(spark, dir, TargetConfig(streamsInSeparateFolder = true))
+    Console.withOut(stdout) {
+      ingest.runStdin(new java.io.ByteArrayInputStream(
+        bytesOf(Seq(schemaLine, rec("s1", 1), rec("s1", 2), state(1)))))
+      assert(printed.toSeq == Seq("""{"n":1}""" -> 2L))
+      val e = intercept[IllegalArgumentException](ingest.runStdin(new java.io.ByteArrayInputStream(
+        bytesOf(Seq(rec("s1", 3, "far too long for maxLength"), state(2))))))
+      assert(e.getMessage.startsWith("Record validation failed for stream s1"))
+    }
+    assert(printed.toSeq == Seq("""{"n":1}""" -> 2L))
+    assert(spark.read.parquet(s"$dir/s1").count() == 2)
   }
 
   private def capLine(i: Int) = f"line-$i%05d" // 11 bytes with its newline
@@ -505,149 +488,83 @@ class StreamingIngestSpec extends SparkSpec {
     val in = new java.io.PipedInputStream(1 << 10)
     val out = new java.io.PipedOutputStream(in)
     val tap = new Thread(() =>
-      try out.write(ls.mkString("", "\n", "\n").getBytes("UTF-8"))
+      try out.write(bytesOf(ls))
       catch { case _: java.io.IOException => () } finally out.close())
     tap.setDaemon(true)
     tap.start()
     (in, tap)
   }
 
-  private def awaitOffset(src: StdinMicroBatchStream, n: Long): Unit = {
+  /** Waits until `feed`'s reader has settled: its input ended, or the
+    * next line would pass `cap`. */
+  private def settled(feed: StdinFeed, cap: Long): Unit = {
     val end = System.currentTimeMillis + 30000
-    while (src.latestOffset() != StdinOffset(n) && System.currentTimeMillis < end) Thread.sleep(5)
-    assert(src.latestOffset() == StdinOffset(n))
+    while (!feed.readerDone && feed.bufferedBytes + 11 <= cap && System.currentTimeMillis < end)
+      Thread.sleep(1)
   }
 
-  test("live stdin: at its byte cap the reader blocks the tap until commits free the buffer, and every line arrives once, in order") {
+  /** Every batch `feed` hands out, to the end of its input. */
+  private def batches(feed: StdinFeed)(before: => Unit): Seq[(Array[String], Long)] =
+    Iterator.continually { before; feed.take() }.takeWhile(_.nonEmpty).flatten.toSeq
+
+  test("live stdin: at its byte cap the reader blocks the tap until the driver takes the buffer, and every line arrives once, in order") {
     val n = 2000 // 22,000 bytes against a 110-byte cap
     val all = (1 to n).map(capLine)
     val (in, tap) = tapInto(all)
-    val src = new StdinMicroBatchStream(new StdinFeed(in), capBytes = 110)
+    val feed = new StdinFeed(in, capBytes = 110)
     try {
-      // Before any batch: ten lines fill the cap, and the reader stops.
-      awaitOffset(src, 10)
+      // Before any take: ten lines fill the cap, and the reader stops.
+      settled(feed, 110)
       Thread.sleep(300)
-      assert(src.latestOffset() == StdinOffset(10) && src.bufferedBytes == 110)
+      assert(feed.bufferedBytes == 110)
       assert(tap.isAlive) // the pipe pushes back on the tap
-      // Drive the source in the engine's order: commit the previous batch,
-      // then plan the lines that arrived since.
-      val got = Seq.newBuilder[String]
-      var (at, maxBuffered) = (0L, 0L)
-      val end = System.currentTimeMillis + 60000
-      while (at < n && System.currentTimeMillis < end) {
-        maxBuffered = maxBuffered.max(src.bufferedBytes)
-        val latest = src.latestOffset().asInstanceOf[StdinOffset].n
-        if (latest > at) {
-          src.commit(StdinOffset(at))
-          val p = src.planInputPartitions(StdinOffset(at), StdinOffset(latest)).head
-            .asInstanceOf[StdinPartition]
-          assert(p.sizeInBytes.getAsLong == p.lines.map(_.getBytes("UTF-8").length + 1L).sum)
-          got ++= p.lines
-          at = latest
-        } else Thread.sleep(1)
+      val got = batches(feed)(())
+      got.foreach { case (lines, bytes) =>
+        assert(bytes == lines.map(_.getBytes("UTF-8").length + 1L).sum)
+        assert(bytes <= 110, bytes)
       }
-      assert(got.result() == all)
-      // The cap, plus the one line a buffer of planned lines must take.
-      assert(maxBuffered <= 110 + 11, maxBuffered)
-    } finally src.stop()
+      assert(got.flatMap(_._1) == all)
+    } finally feed.stop()
   }
 
   test("live stdin: a line larger than the byte cap passes") {
     val big = "x" * 500
-    val src = new StdinMicroBatchStream(new StdinFeed(new java.io.ByteArrayInputStream(
-      Seq(big, capLine(1), capLine(2)).mkString("", "\n", "\n").getBytes("UTF-8"))), capBytes = 110)
+    val feed = new StdinFeed(new java.io.ByteArrayInputStream(
+      bytesOf(Seq(big, capLine(1), capLine(2)))), capBytes = 110)
     try {
-      awaitOffset(src, 1) // an empty buffer takes it whole
-      def lines(s: Long, e: Long) = src.planInputPartitions(StdinOffset(s), StdinOffset(e))
-        .head.asInstanceOf[StdinPartition].lines.toSeq
-      assert(lines(0, 1) == Seq(big))
-      awaitOffset(src, 2) // planned, it lets one more line in
-      src.commit(StdinOffset(1))
-      assert(lines(1, 2) == Seq(capLine(1)))
-      awaitOffset(src, 3)
-      assert(lines(2, 3) == Seq(capLine(2)))
-    } finally src.stop()
+      val got = batches(feed)(())
+      assert(got.head._1.toSeq == Seq(big) && got.head._2 == 501) // an empty buffer takes it whole
+      assert(got.flatMap(_._1) == Seq(big, capLine(1), capLine(2)))
+    } finally feed.stop()
   }
 
   test("live stdin: stop() ends a reader blocked at the byte cap") {
     val (in, _) = tapInto((1 to 2000).map(capLine))
-    val src = new StdinMicroBatchStream(new StdinFeed(in), capBytes = 110)
-    awaitOffset(src, 10)
-    src.stop()
+    val feed = new StdinFeed(in, capBytes = 110)
+    settled(feed, 110)
+    assert(feed.bufferedBytes == 110)
+    feed.stop()
     val end = System.currentTimeMillis + 10000
-    while (src.readerAlive && System.currentTimeMillis < end) Thread.sleep(5)
-    assert(!src.readerAlive)
+    while (!feed.readerDone && System.currentTimeMillis < end) Thread.sleep(5)
+    assert(feed.readerDone)
   }
 
-  // The engine plans a batch (latestOffset with the batch's start), then
-  // commits the one before. Each batch is planned only once the reader has
-  // settled: blocked at the cap, or at EOF.
-  test("live stdin: a backlog over the byte cap runs as half-cap batches, with no one-line batch but the last") {
+  // The loop takes a batch while the last one runs; a settled reader
+  // stands in for a batch that runs long enough for it to fill the cap.
+  test("live stdin: a backlog over the byte cap runs as cap-sized batches, with no one-line batch but the last") {
     val n = 2000 // 22,000 bytes against a 2 KB cap
     val cap = 2048L
     val all = (1 to n).map(capLine)
     val (in, _) = tapInto(all)
-    val feed = new StdinFeed(in)
-    val src = new StdinMicroBatchStream(feed, capBytes = cap)
+    val feed = new StdinFeed(in, capBytes = cap)
     try {
-      val (batches, bytes) = (Seq.newBuilder[Seq[String]], Seq.newBuilder[Long])
-      var at = 0L
-      val end = System.currentTimeMillis + 60000
-      while (at < n && System.currentTimeMillis < end) {
-        while (!feed.eofReached && src.bufferedBytes + 11 <= cap &&
-          System.currentTimeMillis < end) Thread.sleep(1)
-        val e = src.latestOffset(StdinOffset(at), ReadLimit.allAvailable())
-          .asInstanceOf[StdinOffset].n
-        if (e > at) {
-          val p = src.planInputPartitions(StdinOffset(at), StdinOffset(e)).head
-            .asInstanceOf[StdinPartition]
-          batches += p.lines.toSeq
-          bytes += p.bytes
-          src.commit(StdinOffset(at))
-          at = e
-        } else Thread.sleep(1)
-      }
-      val sizes = batches.result().map(_.size)
+      val got = batches(feed)(settled(feed, cap))
+      val sizes = got.map(_._1.length)
       info(sizes.mkString("lines per batch: ", ",", ""))
-      assert(batches.result().flatten == all)
+      assert(got.flatMap(_._1) == all)
       assert(!sizes.init.contains(1), sizes)
-      assert(bytes.result().forall(_ <= cap / 2), bytes.result())
-    } finally src.stop()
-  }
-
-  test("drainAtEof: at EOF it drains every pending row, then stops the query") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Int]
-    val seen = new ConcurrentLinkedQueue[Int]()
-    val q = input.toDF().writeStream
-      .foreachBatch((df: DataFrame, _: Long) => df.collect().foreach(r => seen.add(r.getInt(0))))
-      .start()
-    try {
-      // The tap's last lines land together with EOF, on the third poll.
-      var polls = 0
-      def eof = { polls += 1; if (polls == 3) input.addData(1 to 100); polls == 3 }
-      StreamingIngest.drainAtEof(q, eof, pollMs = 10)
-      assert(polls == 3) // waited for EOF, then read the flag no more
-      assert(!q.isActive && seen.size == 100)
-    } finally q.stop()
-  }
-
-  test("drainAtEof: a query that dies before EOF raises its error without waiting") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[Int]
-    val q = input.toDF().writeStream
-      .foreachBatch((_: DataFrame, _: Long) => throw new IllegalStateException("sink down"))
-      .start()
-    try {
-      input.addData(1)
-      // EOF never comes: only the query's death can end the wait.
-      val drain = Future(StreamingIngest.drainAtEof(q, eof = false, pollMs = 10))(ExecutionContext.global)
-      val e = intercept[StreamingQueryException](Await.result(drain, 2.minutes))
-      def messages(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-      assert(messages(e).exists(_.contains("sink down")))
-    } finally q.stop()
+      assert(got.init.forall(_._2 > cap - 11), got.map(_._2)) // full: one more line would not fit
+      assert(got.forall(_._2 <= cap), got.map(_._2))
+    } finally feed.stop()
   }
 }
