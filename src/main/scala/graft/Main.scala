@@ -129,12 +129,10 @@ object Main {
     } finally spark.stop()
   }
 
-  /** Batch stdin on its way to `stdin.jsonl` in a fresh per-run
+  /** Batch stdin on its way to `file`, `stdin.jsonl` in a fresh per-run
     * directory under `temp_dir` (L7) or the system default: the copy's
     * byte count, or its error. */
-  private final case class Spool(dir: Path, copied: Future[Long]) {
-    def file: Path = dir.resolve("stdin.jsonl")
-  }
+  private final case class Spool(file: Path, copied: Future[Long])
 
   /** Starts copying stdin to a [[Spool]] now, on its own thread. */
   private def spoolStdin(config: TargetConfig): Spool = {
@@ -143,7 +141,8 @@ object Main {
         Files.createTempDirectory(Files.createDirectories(Paths.get(root)), "singer-stdin")
       case None => Files.createTempDirectory("singer-stdin")
     }
-    Spool(dir, Future(Files.copy(System.in, dir.resolve("stdin.jsonl")))(ExecutionContext.global))
+    val file = dir.resolve("stdin.jsonl")
+    Spool(file, Future(Files.copy(System.in, file))(ExecutionContext.global))
   }
 
   /** Batch mode over `--input` or the stdin [[Spool]]. Stdin is spooled
@@ -171,7 +170,7 @@ object Main {
             "(repeat the run with --input <that file>)")
           throw e
         }
-        FileUtils.deleteQuietly(sp.dir.toFile)
+        FileUtils.deleteQuietly(sp.file.getParent.toFile)
     }
   }
 

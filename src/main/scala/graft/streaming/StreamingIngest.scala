@@ -154,9 +154,9 @@ final class StreamingIngest(
 
   /** Ingest live stdin, `in`: the unbounded `tap | target` pipe of
     * `graft.Main --mode live` and stdin `--mode stream`. Each turn blocks
-    * until a line has arrived, then runs [[processBatch]] over every line
-    * buffered by then ([[StdinFeed]]), which writes and only then prints
-    * the bookmark. At the end of `in` it returns once the last batch is
+    * until lines have arrived, then runs [[processBatch]] over every line
+    * buffered once the reader has caught up ([[StdinFeed]]), which writes
+    * and only then prints the bookmark. At the end of `in` it returns once the last batch is
     * done; a read error or a failing batch ends it with that error.
     * Nothing is checkpointed: a pipe cannot be re-read after a crash, so
     * nothing could resume from one (the reference also loses everything
