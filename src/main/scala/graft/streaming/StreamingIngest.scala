@@ -183,7 +183,8 @@ object StreamingIngest {
   * a buffer of at most `capBytes` (UTF-8 bytes, newlines included), and
   * [[take]] hands the driver all of it once the reader has caught up
   * with the pipe, so a page the tap writes at once is one batch, not a
-  * few lines and then the rest. At the cap the reader stops reading, so
+  * few lines and then the rest (a line the tap has half written holds
+  * back the lines before it until its end arrives). At the cap the reader stops reading, so
   * the pipe pushes back on the tap; it reads on while the driver runs a
   * batch, so a backlog lands as cap-sized batches. An empty buffer takes
   * a line of any size, so a line over the cap passes. At most the cap
